@@ -1867,13 +1867,13 @@ object SparkEntry {
         .select(col("a").as("src"), col("b").as("dst"), lit(1L).as("w"))
       operators.Graph.componentsIncremental(priorE, priorL, delta)
     }),
-    // STREAMING component maintenance (sixth DeltaLayout instance —
-    // edges are the additive half, labels re-merge at serve/compact):
-    // seed from the sliced graph, stream the edge delta per batch,
-    // compact mid-stream, serve — hash-matches the SAME full-graph
-    // reachability oracle (stream == full, proven by the gate)
+    // STREAMING component maintenance on the signed graph machine
+    // (SignedGraphStream, every op `add`): seed from the persisted
+    // prior, stream full ∖ prior per batch, compact mid-stream,
+    // serve — hash-matches the SAME full-graph reachability oracle
+    // (stream == full, proven by the gate)
     "q_stream_components" -> ((s, d) =>
-      streaming.ComponentsStream.componentsMaintainRun(s, d)),
+      streaming.SignedGraphStream.componentsMaintainRun(s, d)),
     // INCREMENTAL triangles: counts are ADDITIVE under edge insertion
     // (every union triangle is prior-only or contains a delta edge),
     // so today's delta folds into yesterday's PERSISTED per-node
@@ -1904,14 +1904,14 @@ object SparkEntry {
         .select(col("a").as("src"), col("b").as("dst"), lit(1L).as("w"))
       operators.Graph.corenessIncremental(priorE, priorL, priorC, delta)
     }),
-    // STREAMING coreness maintenance (seventh DeltaLayout instance —
-    // edges additive, the decomposition re-derives at serve/compact
-    // via the touched-only incremental re-peel): seed from the
-    // persisted prior triple, stream the edge delta, compact
+    // STREAMING coreness maintenance on the signed graph machine
+    // (SignedGraphStream, every op `add`; the decomposition re-derives
+    // at serve/compact via the touched-only re-peel): seed from the
+    // persisted prior triple, stream full ∖ prior, compact
     // mid-stream, serve — hash-matches the SAME full-graph 23-CTE
     // peel-ladder oracle (stream == full, proven by the gate)
     "q_stream_coreness" -> ((s, d) =>
-      streaming.CorenessStream.corenessMaintainRun(s, d)),
+      streaming.SignedGraphStream.corenessMaintainRun(s, d)),
     // k-truss: the edge-analog of the k-core (every edge in >= k-2
     // triangles) — the densest rung of the graph-density family.
     // rows-only: the per-round per-edge support recomputation has no
@@ -2016,14 +2016,14 @@ object SparkEntry {
     // full, proven by the gate)
     "q_stream_triangles" -> ((s, d) =>
       streaming.TrianglesStream.trianglesMaintainRun(s, d)),
-    // STREAMING k-truss maintenance (ninth DeltaLayout instance —
-    // the coreness split one rung denser: edges additive, the truss
-    // re-derives at serve/compact via the touched-only incremental
-    // re-peel): seed from the persisted prior triple, stream the
-    // edge delta, compact mid-stream, serve. rows-only for the
-    // q_ktruss reason; stream == full peel spec-asserted
+    // STREAMING k-truss maintenance on the signed graph machine
+    // (SignedGraphStream, every op `add`; the truss re-derives at
+    // serve/compact via the touched-only re-peel): seed from the
+    // persisted prior triple, stream full ∖ prior, compact
+    // mid-stream, serve. rows-only for the q_ktruss reason; stream ==
+    // full peel spec-asserted
     "q_stream_ktruss" -> ((s, d) =>
-      streaming.KTrussStream.trussMaintainRun(s, d)),
+      streaming.SignedGraphStream.trussMaintainRun(s, d)),
     // STREAMING pagerank maintenance (tenth DeltaLayout instance,
     // completing the graph family's full lifecycle matrix): the
     // additive state is WEIGHTED (pair counts only grow — batches

@@ -539,7 +539,8 @@ object Graph {
       priorEdges: DataFrame, priorLabels: DataFrame,
       deltaEdges: DataFrame): DataFrame = {
     val d = canonicalUndirected(deltaEdges)
-    val labels = incrementalLabelsCanon(priorEdges, priorLabels, d)
+    val labels = labelsFromScope(priorLabels,
+      foldScope(priorEdges, priorLabels, d, None))
     val allE = priorEdges.select("a", "b")
       .unionAll(d.select("a", "b")).distinct()
     componentStats(labels, allE)
@@ -575,9 +576,9 @@ object Graph {
   }
 
   /** The merged (id, label) frame after folding a SIGNED delta into a
-    * prior labeling — the label half of [[componentsSigned]], exposed
-    * (like [[incrementalLabels]] for the grow-only path) so streaming
-    * compaction can persist the re-merged labeling of
+    * prior labeling — the label half of [[componentsSigned]] (and,
+    * with no removals, of [[componentsIncremental]]), exposed so
+    * streaming compaction can persist the re-merged labeling of
     * (prior − removals) ∪ adds. */
   def signedLabels(
       priorEdges: DataFrame, priorLabels: DataFrame,
@@ -589,7 +590,7 @@ object Graph {
       priorEdges: DataFrame, priorLabels: DataFrame,
       a: DataFrame, r: DataFrame): DataFrame =
     labelsFromScope(priorLabels,
-      foldScopeCanon(priorEdges, priorLabels, a, Some(r)))
+      foldScope(priorEdges, priorLabels, a, Some(r)))
 
   /** [[components]]' output contract straight from a consistent
     * (labels, edges) artifact pair — the EMPTY-DELTA serving fold of
@@ -615,21 +616,6 @@ object Graph {
       .select(col("label").as("component"), col("n_nodes"), col("n_edges"))
       .orderBy("component")
   }
-
-  /** The merged (id, label) frame after folding a delta into a prior
-    * labeling — the label half of [[componentsIncremental]], exposed
-    * so streaming compaction can persist the re-merged labeling. */
-  def incrementalLabels(
-      priorEdges: DataFrame, priorLabels: DataFrame,
-      deltaEdges: DataFrame): DataFrame =
-    incrementalLabelsCanon(priorEdges, priorLabels,
-      canonicalUndirected(deltaEdges))
-
-  private def incrementalLabelsCanon(
-      priorEdges: DataFrame, priorLabels: DataFrame,
-      d: DataFrame): DataFrame =
-    labelsFromScope(priorLabels,
-      foldScopeCanon(priorEdges, priorLabels, d, None))
 
   /** Attach each prior-artifact row's component label, FAILING LOUDLY
     * (raise_error) on a row whose `key` node is missing from the
@@ -709,15 +695,13 @@ object Graph {
   private[graft] final case class FoldScope(
       touched: DataFrame, sub: DataFrame, subLabels: DataFrame)
 
-  /** Build a [[FoldScope]] from RAW (src, dst[, w]) delta frames —
-    * the streaming-compaction entry point. */
+  /** Build a [[FoldScope]] from CANONICAL (a < b, distinct) delta
+    * frames — the shared entry point of the incremental operators
+    * (after their canonicalization) and of streaming compaction, whose
+    * net delta is canonical by construction (landing canonicalizes,
+    * net resolution groups by pair), so it pays no re-canonicalization
+    * job per compaction. */
   private[graft] def foldScope(
-      priorEdges: DataFrame, priorLabels: DataFrame,
-      addEdges: DataFrame, removeEdges: Option[DataFrame]): FoldScope =
-    foldScopeCanon(priorEdges, priorLabels,
-      canonicalUndirected(addEdges), removeEdges.map(canonicalUndirected))
-
-  private def foldScopeCanon(
       priorEdges: DataFrame, priorLabels: DataFrame,
       a: DataFrame, r: Option[DataFrame]): FoldScope = {
     val (touched, sub0) = signedScope(priorEdges, priorLabels, a, r)
@@ -729,8 +713,8 @@ object Graph {
   }
 
   /** The re-merged labels face from a shared [[FoldScope]] — the
-    * [[incrementalLabels]] / [[signedLabels]] body over the scope's
-    * already-computed star labeling. */
+    * [[componentsIncremental]] / [[signedLabels]] label body over the
+    * scope's already-computed star labeling. */
   private[graft] def labelsFromScope(
       priorLabels: DataFrame, s: FoldScope): DataFrame =
     priorLabels
@@ -841,7 +825,7 @@ object Graph {
       removals: Option[DataFrame], localMaxEdges: Long,
       maxK: Int, maxRounds: Int): DataFrame =
     corenessFromScope(priorLabels, priorCoreness,
-      foldScopeCanon(priorEdges, priorLabels, adds, removals),
+      foldScope(priorEdges, priorLabels, adds, removals),
       localMaxEdges, maxK, maxRounds)
 
   /** The canonical (a, b) edge frame [[components]] labels — exposed
@@ -1300,7 +1284,7 @@ object Graph {
     * PRECONDITIONS (shared with [[componentsIncremental]] /
     * [[corenessIncremental]]): `priorLabels` must be MIN-NODE-ID star
     * labels over exactly `priorEdges`' nodes — i.e. the output of
-    * [[duplicateLabelsStar]] / [[incrementalLabels]], where every
+    * [[duplicateLabelsStar]] / [[signedLabels]], where every
     * label is itself a node id present in the frame. The
     * coalesce(label, id) touched-set fallback treats a node absent
     * from the labels frame as its own singleton component, which is
@@ -1340,7 +1324,7 @@ object Graph {
       priorTruss: DataFrame, adds: DataFrame, removals: Option[DataFrame],
       k: Int, localMaxEdges: Long, maxRounds: Int): DataFrame =
     kTrussFromScope(priorLabels, priorTruss,
-      foldScopeCanon(priorEdges, priorLabels, adds, removals),
+      foldScope(priorEdges, priorLabels, adds, removals),
       k, localMaxEdges, maxRounds)
 
   /** The k-truss of an undirected edge list (Cohen 2008): the maximal
@@ -1528,7 +1512,7 @@ object Graph {
       priorTriangles: DataFrame, addEdges: DataFrame,
       removeEdges: DataFrame): DataFrame =
     trianglesFromScope(priorLabels, priorTriangles,
-      foldScopeCanon(priorEdges, priorLabels,
+      foldScope(priorEdges, priorLabels,
         canonicalUndirected(addEdges),
         Some(canonicalUndirected(removeEdges))))
 

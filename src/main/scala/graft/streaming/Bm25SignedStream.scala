@@ -107,13 +107,6 @@ object Bm25SignedStream {
     val src = root.resolve("src").toString
     val seedPath = root.resolve("seed").toString
     val deltaP = root.resolve("delta").toString
-    def rm(p: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(p)) {
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
     try {
       val staged = StreamMeter.timeSeed("q_stream_bm25_signed") {
         SignedIndexLayout.stageSignedCorpus(
@@ -134,6 +127,6 @@ object Bm25SignedStream {
         serveSearch(spark, seedPath, deltaP, queries, termsLiteral)
           .localCheckpoint()
       }
-    } finally rm(root)
+    } finally DeltaLayout.rmTree(root)
   }
 }

@@ -143,14 +143,7 @@ object CmsStream {
     compact(spark, seedP, deltaP)
 
     val result = liveCms(spark, seedP, deltaP).localCheckpoint()
-    def rm(p: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(p)) {
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
-    rm(root)
+    DeltaLayout.rmTree(root)
     result.orderBy("d", "bucket")
   }
 }

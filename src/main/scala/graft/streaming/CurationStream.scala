@@ -54,14 +54,7 @@ object CurationStream {
 
     // the memory sink holds the rows; staged source + checkpoint are
     // dead weight once the query stops
-    def rm(p: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(p)) {
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
-    rm(root)
+    DeltaLayout.rmTree(root)
 
     spark.table(name).orderBy("doc_id")
   }
@@ -93,14 +86,7 @@ object CurationStream {
       .start()
     try q.processAllAvailable() finally q.stop()
 
-    def rm(p: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(p)) {
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
-    rm(root)
+    DeltaLayout.rmTree(root)
 
     spark.table(name).orderBy("doc_id")
   }
@@ -144,14 +130,7 @@ object CurationStream {
     try q.processAllAvailable() finally q.stop()
 
     val result = spark.read.parquet(out).localCheckpoint()
-    def rm(p: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(p)) {
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
-    rm(root)
+    DeltaLayout.rmTree(root)
     result.orderBy("doc_id")
   }
 }

@@ -145,13 +145,6 @@ object DedupSignedStream {
     val src = root.resolve("src").toString
     val seedP = root.resolve("seed").toString
     val deltaP = root.resolve("delta").toString
-    def rm(p: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(p)) {
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
     val reversedText =
       concat_ws(" ", reverse(split(col("text"), " ", -1))).as("text")
     try {
@@ -192,6 +185,6 @@ object DedupSignedStream {
         gate(spark, seedP, deltaP, probe, threshold = threshold)
           .localCheckpoint()
       }.orderBy("doc_new", "doc_corpus")
-    } finally rm(root)
+    } finally DeltaLayout.rmTree(root)
   }
 }

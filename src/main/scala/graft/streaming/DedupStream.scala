@@ -140,14 +140,7 @@ object DedupStream {
       .select("doc_new", "doc_corpus", "est_jaccard")
       .localCheckpoint()
       .orderBy("doc_new", "doc_corpus")
-    def rm(p: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(p)) {
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
-    rm(root)
+    DeltaLayout.rmTree(root)
     result
   }
 

@@ -5,7 +5,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Shared primitives of the `seed artifact + per-batch delta
   * partitions` exactly-once state layout ([[RollupStream]],
-  * [[Bm25Stream]], [[CmsStream]]):
+  * [[Bm25Stream]], [[CmsStream]], [[SignedGraphStream]] and the
+  * other `*Stream` machines):
   *
   *  - the compaction watermark rides INSIDE the seed directory
   *    ("_"-prefixed: invisible to the parquet reader, like _SUCCESS),
@@ -45,6 +46,18 @@ private[graft] object DeltaLayout {
         scala.concurrent.duration.Duration.Inf): Unit
     finally pool.shutdown()
   }
+
+  /** Delete a local directory tree bottom-up (no-op when absent) —
+    * the cleanup of every bounded harness's private temp root. The
+    * `Files.walk` stream is closed before deleting: an open walk
+    * holds its directories open until it is closed. */
+  def rmTree(root: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.exists(root)) {
+      import scala.jdk.CollectionConverters._
+      val walk = java.nio.file.Files.walk(root)
+      val paths = try walk.iterator().asScala.toList finally walk.close()
+      paths.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
+    }
 
   private def foldedMarker(seedPath: String) =
     new Path(seedPath + "/_folded_through")

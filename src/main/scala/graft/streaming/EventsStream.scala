@@ -193,14 +193,7 @@ object EventsStream {
     // the memory sink holds the rows; the staged source and checkpoint
     // are dead weight once the query stops — delete them so repeated
     // runs (bench does 3) don't accrete temp data
-    def rm(p: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(p)) {
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
-    rm(root)
+    DeltaLayout.rmTree(root)
 
     spark.table(name)
       .filter(col("user_id") =!= -1L)

@@ -54,14 +54,7 @@ object ExpectationsStream {
       .start()
     try q.processAllAvailable() finally q.stop()
 
-    def rm(p: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(p)) {
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
-    rm(root)
+    DeltaLayout.rmTree(root)
 
     spark.table(name).orderBy(idCols.map(col) :+ col("violated"): _*)
   }
@@ -246,14 +239,7 @@ object ExpectationsStream {
     val result = StreamMeter.timePhase("q_stream_verdicts", "serve") {
       liveVerdicts(spark, seedP, deltaP, checks).localCheckpoint()
     }
-    def rm(p: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(p)) {
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
-    rm(root)
+    DeltaLayout.rmTree(root)
     result.orderBy("check_seq")
   }
 }

@@ -113,13 +113,6 @@ object ImageSignedStream {
     val src = root.resolve("src").toString
     val seedP = root.resolve("seed").toString
     val deltaP = root.resolve("delta").toString
-    def rm(p: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(p)) {
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
     try {
       val docs = graft.Tables.documents(spark, dir)
       val twinDocs = docs
@@ -163,6 +156,6 @@ object ImageSignedStream {
         gate(spark, seedP, deltaP, twins, maxHamming = 6, bucketCap = 1000L)
           .localCheckpoint()
       }.orderBy("media_new", "media_corpus")
-    } finally rm(root)
+    } finally DeltaLayout.rmTree(root)
   }
 }

@@ -124,13 +124,6 @@ object ImageStream {
     val src = root.resolve("src").toString
     val indexPath = root.resolve("index").toString
     val pairsPath = root.resolve("pairs").toString
-    def rm(p: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(p)) {
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
     try {
       StreamMeter.timeSeed("q_stream_image_gate") {
         val fps = graft.SparkEntry.imageFpShared(spark, dir)
@@ -161,6 +154,6 @@ object ImageStream {
         .select("media_new", "media_corpus", "hamming_d", "hamming_a")
         .localCheckpoint()
         .orderBy("media_new", "media_corpus")
-    } finally rm(root)
+    } finally DeltaLayout.rmTree(root)
   }
 }

@@ -91,13 +91,6 @@ object IvfSignedStream {
     val src = root.resolve("src").toString
     val seedP = root.resolve("seed").toString
     val deltaP = root.resolve("delta").toString
-    def rm(p: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(p)) {
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
     try {
       val staged = StreamMeter.timeSeed("q_stream_ivf_signed") {
         val stale = emb.filter(col("vec_id") % 3 === 1)
@@ -128,6 +121,6 @@ object IvfSignedStream {
       StreamMeter.timePhase("q_stream_ivf_signed", "serve") {
         searchLive(spark, seedP, deltaP, emb).localCheckpoint()
       }
-    } finally rm(root)
+    } finally DeltaLayout.rmTree(root)
   }
 }

@@ -160,14 +160,7 @@ object IvfStream {
     val result = StreamMeter.timePhase("q_stream_ivf", "serve") {
       searchLive(spark, seedP, deltaP, emb).localCheckpoint()
     }
-    def rm(p: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(p)) {
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
-    rm(root)
+    DeltaLayout.rmTree(root)
     result
   }
 }

@@ -157,14 +157,7 @@ object NbStream {
     val result = Classifier.nbScore(docs,
         Classifier.nbFromCounts(liveNbCounts(spark, seedP, deltaP)))
       .localCheckpoint()
-    def rm(p: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(p)) {
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
-    rm(root)
+    DeltaLayout.rmTree(root)
     result.orderBy("doc_id")
   }
 }

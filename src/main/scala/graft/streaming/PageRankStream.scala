@@ -180,13 +180,6 @@ object PageRankStream {
     val srcDir = root.resolve("src").toString
     val seedRoot = root.resolve("seed").toString
     val deltaP = root.resolve("delta").toString
-    def rm(p: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(p)) {
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
     try {
       val delta = StreamMeter.timeSeed("q_stream_pagerank") {
         val prior = graft.SparkEntry.cpWeightedShared(spark, dir)
@@ -221,10 +214,10 @@ object PageRankStream {
       }
       // localCheckpoint, NOT collect: one row per node is unbounded —
       // the materialized blocks keep the result off-driver and
-      // independent of the temp dirs rm() deletes
+      // independent of the temp dirs DeltaLayout.rmTree() deletes
       StreamMeter.timePhase("q_stream_pagerank", "serve") {
         serveRanks(spark, seedRoot, deltaP).localCheckpoint()
       }.orderBy(desc("rank_micro"), col("node"))
-    } finally rm(root)
+    } finally DeltaLayout.rmTree(root)
   }
 }

@@ -62,13 +62,6 @@ object PhraseSignedStream {
     val src = root.resolve("src").toString
     val seedPath = root.resolve("seed").toString
     val deltaP = root.resolve("delta").toString
-    def rm(p: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(p)) {
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
     try {
       val staged = StreamMeter.timeSeed("q_stream_phrase_signed") {
         SignedIndexLayout.stageSignedCorpus(
@@ -82,6 +75,6 @@ object PhraseSignedStream {
       compact(spark, seedPath, deltaP)
       serveSearch(spark, seedPath, deltaP, queries, termsLiteral)
         .localCheckpoint()
-    } finally rm(root)
+    } finally DeltaLayout.rmTree(root)
   }
 }

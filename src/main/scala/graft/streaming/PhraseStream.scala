@@ -142,14 +142,7 @@ object PhraseStream {
         root.resolve("seed").toString, root.resolve("delta").toString,
         queries, termsLiteral)
       .localCheckpoint()
-    def rm(p: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(p)) {
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
-    rm(root)
+    DeltaLayout.rmTree(root)
     result
   }
 }

@@ -50,14 +50,7 @@ object ResolutionStream {
     try q.processAllAvailable() finally q.stop()
 
     val result = spark.read.parquet(out).localCheckpoint()
-    def rm(p: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(p)) {
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
-    rm(root)
+    DeltaLayout.rmTree(root)
     result.orderBy("feed_id", "rank")
   }
 

@@ -134,7 +134,6 @@ object RollupStream {
     DeltaLayout.deleteFoldedPartitions(fs, dp, newFolded)
   }
 
-
   /** Bounded end-to-end run — the measured driver entry
     * (q_stream_rollup): even doc_ids seed the base rollup, odd ones
     * stream through maintenance, and the served merge must hash-match
@@ -161,14 +160,7 @@ object RollupStream {
         root.resolve("seed").toString, root.resolve("delta").toString)
       .localCheckpoint()
       .orderBy("source", "lang")
-    def rm(p: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(p)) {
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
-    rm(root)
+    DeltaLayout.rmTree(root)
     result
   }
 }

@@ -156,13 +156,6 @@ object SemDedupStream {
     val src = root.resolve("src").toString
     val seedP = root.resolve("seed").toString
     val deltaP = root.resolve("delta").toString
-    def rm(p: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(p)) {
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
     try {
       StreamMeter.timeSeed("q_stream_semdedup") {
         emb.filter(col("vec_id") % 2 =!= 0)
@@ -182,10 +175,10 @@ object SemDedupStream {
       }
       // localCheckpoint, NOT collect: one row per vector is unbounded —
       // the materialized blocks keep the result off-driver and
-      // independent of the temp dirs rm() deletes
+      // independent of the temp dirs DeltaLayout.rmTree() deletes
       StreamMeter.timePhase("q_stream_semdedup", "serve") {
         serveVerdict(spark, seedP, deltaP, emb).localCheckpoint()
       }.orderBy("vec_id")
-    } finally rm(root)
+    } finally DeltaLayout.rmTree(root)
   }
 }

@@ -40,13 +40,6 @@ object SignedDeleteCascade {
     val victims = docs.filter(victimCol).select("doc_id").localCheckpoint()
 
     val root = java.nio.file.Files.createTempDirectory("graft_del_cascade")
-    def rm(p: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(p)) {
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
     // the five machines are INDEPENDENT (disjoint temp dirs, disjoint
     // checkpoints) — their seeds, streams and probes overlap from a
     // small driver thread pool so one machine's straggler tail
@@ -162,7 +155,7 @@ object SignedDeleteCascade {
         .orderBy("family")
     } finally {
       pool.shutdown()
-      rm(root)
+      DeltaLayout.rmTree(root)
     }
   }
 }

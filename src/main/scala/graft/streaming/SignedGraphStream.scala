@@ -45,7 +45,15 @@ import graft.operators.Graph
   * and serves — which must hash-match the SAME full-graph
   * reachability oracle as q_components_delete over
   * (prior − removals) ∪ adds: stream-maintained == full recompute
-  * over the delisted graph, proven by the gate. */
+  * over the delisted graph, proven by the gate.
+  *
+  * An insert-only stream is the special case whose ops are all `add`,
+  * so this machine also serves the insert-only entries
+  * (q_stream_components, q_stream_coreness, q_stream_ktruss): they
+  * stage today's graph minus the persisted prior (full ∖ prior),
+  * tagged `add`, and must equal the full recompute over today's
+  * graph (the q_components / q_coreness oracles; the truss is
+  * rows-only, its stream == full-peel equality spec-asserted). */
 object SignedGraphStream {
 
   /** Launch maintenance over a streaming signed edge frame
@@ -115,18 +123,28 @@ object SignedGraphStream {
   /** The NET (adds, removals) pair over the live delta partitions:
     * per canonical pair, the LAST op in batch order wins (max_by on
     * the bounded live rows — landing guarantees one op per pair per
-    * batch, so the argmax is unique). Returned as raw (src, dst, w)
-    * frames, the signed operators' input contract. */
+    * batch, so the argmax is unique). Returned as canonical (a, b)
+    * frames: landing canonicalized every pair and the grouping makes
+    * them distinct. */
   private[streaming] def netDelta(
       spark: SparkSession, seedRoot: String, deltaPath: String,
       upTo: Long): (DataFrame, DataFrame) = {
     val net = liveOps(spark, seedRoot, deltaPath, upTo)
       .groupBy("a", "b").agg(expr("max_by(op, batch_id)").as("op"))
       .localCheckpoint()
-    def shape(d: DataFrame) = d
-      .select(col("a").as("src"), col("b").as("dst"), lit(1L).as("w"))
-    (shape(net.filter(col("op") === "add")),
-      shape(net.filter(col("op") === "remove")))
+    (net.filter(col("op") === "add").select("a", "b"),
+      net.filter(col("op") === "remove").select("a", "b"))
+  }
+
+  /** The net delta over every live batch as raw (src, dst, w) frames —
+    * the signed operators' input contract. */
+  private def liveNetDelta(
+      spark: SparkSession, seedRoot: String,
+      deltaPath: String): (DataFrame, DataFrame) = {
+    val (adds, removals) = netDelta(spark, seedRoot, deltaPath, Long.MaxValue)
+    def raw(d: DataFrame) =
+      d.select(col("a").as("src"), col("b").as("dst"), lit(1L).as("w"))
+    (raw(adds), raw(removals))
   }
 
   /** Live component stats over (seed − net removals) ∪ net adds —
@@ -141,8 +159,7 @@ object SignedGraphStream {
       return Graph.componentStatsOf(
         spark.read.parquet(s"$seedRoot/labels"),
         spark.read.parquet(s"$seedRoot/edges"))
-    val (adds, removals) =
-      netDelta(spark, seedRoot, deltaPath, Long.MaxValue)
+    val (adds, removals) = liveNetDelta(spark, seedRoot, deltaPath)
     Graph.componentsSigned(
       spark.read.parquet(s"$seedRoot/edges"),
       spark.read.parquet(s"$seedRoot/labels"), adds, removals)
@@ -157,8 +174,7 @@ object SignedGraphStream {
     if (!DeltaLayout.hasLiveBatches(spark, seedRoot, deltaPath))
       return spark.read.parquet(s"$seedRoot/coreness")
         .select("node", "coreness")
-    val (adds, removals) =
-      netDelta(spark, seedRoot, deltaPath, Long.MaxValue)
+    val (adds, removals) = liveNetDelta(spark, seedRoot, deltaPath)
     Graph.corenessSigned(
       spark.read.parquet(s"$seedRoot/edges"),
       spark.read.parquet(s"$seedRoot/labels"),
@@ -173,8 +189,7 @@ object SignedGraphStream {
     if (!DeltaLayout.hasLiveBatches(spark, seedRoot, deltaPath))
       return spark.read.parquet(s"$seedRoot/triangles")
         .select("node", "degree", "n_triangles", "cc_micro")
-    val (adds, removals) =
-      netDelta(spark, seedRoot, deltaPath, Long.MaxValue)
+    val (adds, removals) = liveNetDelta(spark, seedRoot, deltaPath)
     Graph.trianglesSigned(
       spark.read.parquet(s"$seedRoot/edges"),
       spark.read.parquet(s"$seedRoot/labels"),
@@ -190,8 +205,7 @@ object SignedGraphStream {
     if (!DeltaLayout.hasLiveBatches(spark, seedRoot, deltaPath))
       return spark.read.parquet(s"$seedRoot/truss")
         .select("a", "b", "support")
-    val (adds, removals) =
-      netDelta(spark, seedRoot, deltaPath, Long.MaxValue)
+    val (adds, removals) = liveNetDelta(spark, seedRoot, deltaPath)
     Graph.kTrussSigned(
       spark.read.parquet(s"$seedRoot/edges"),
       spark.read.parquet(s"$seedRoot/labels"),
@@ -214,18 +228,21 @@ object SignedGraphStream {
     val maxBatch = DeltaLayout.maxBatchId(spark, deltaPath)
     val seedE = spark.read.parquet(s"$seedRoot/edges")
     val seedL = spark.read.parquet(s"$seedRoot/labels")
-    val (adds, removals) = netDelta(spark, seedRoot, deltaPath, maxBatch)
+    val (adds, removals0) = netDelta(spark, seedRoot, deltaPath, maxBatch)
+    // no net removal (an insert-only stream, or every removal since
+    // netted out): fold as a pure insertion, without the anti-joins
+    // against an empty removal set — one cheap job over the
+    // checkpointed net delta saves several per compaction
+    val removals = Some(removals0).filterNot(_.isEmpty)
     // lazy — materialized by its face write below
-    val newE = seedE.select("a", "b")
-      .join(removals.select(col("src").as("a"), col("dst").as("b")),
-        Seq("a", "b"), "left_anti")
-      .unionByName(adds.select(col("src").as("a"), col("dst").as("b")))
-      .distinct()
+    val survivors = removals.fold(seedE.select("a", "b"))(r =>
+      seedE.select("a", "b").join(r, Seq("a", "b"), "left_anti"))
+    val newE = survivors.unionByName(adds).distinct()
     // ONE shared fold scope feeds every face present under the seed
     // root (guide §1.2): the labels face and each density face
     // previously recomputed the full-prior-edge semi-join per face,
     // and coreness/truss re-ran the star contraction a second time
-    val scope = Graph.foldScope(seedE, seedL, adds, Some(removals))
+    val scope = Graph.foldScope(seedE, seedL, adds, removals)
     val tmp = seedRoot + "__maint"
     // every face present is an independent job chain over the shared
     // scope — overlap them (guide §2.6)
@@ -253,42 +270,67 @@ object SignedGraphStream {
     DeltaLayout.deleteFoldedPartitions(fs, new Path(deltaPath), newFolded)
   }
 
-  /** Stage the measured entries' signed source: the persisted
-    * adds/removals artifact faces as one (src, dst, op) frame, split
-    * into two files so the stream sees more than one micro-batch.
-    * The two faces are DISJOINT pair sets (adds = today ∖ prior,
-    * removals = prior ∖ today), so no pair carries both ops and the
-    * batch split is free to mix them arbitrarily; cross-batch net
-    * resolution (add-then-remove, remove-then-re-add) is exercised by
-    * the spec's hand-ordered batches, not by this entry. */
-  private def stageSigned(
-      spark: SparkSession, dir: String, srcDir: String): DataFrame = {
-    val adds = graft.SparkEntry.cpAddsShared(spark, dir)
-      .select(col("src"), col("dst"), lit("add").as("op"))
-    val removals = graft.SparkEntry.cpRemovalsShared(spark, dir)
-      .select(col("src"), col("dst"), lit("remove").as("op"))
-    val d = removals.unionByName(adds)
-    d.repartition(2).write.mode("overwrite").parquet(srcDir)
-    d
-  }
-
-  private def rm(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(p)) {
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
+  /** Seed (or rebuild) a stream root from a raw (src, dst[, w]) edge
+    * frame — the artifact layout [[compact]] folds into: the canonical
+    * edges, their star labels, and each named density face
+    * ("coreness", "triangles", or "truss": the 3-truss, compact's
+    * default). */
+  def seed(edges: DataFrame, seedRoot: String, faces: Seq[String]): Unit = {
+    val canon = Graph.canonicalEdges(edges)
+    val und = canon.select(col("a").as("src"), col("b").as("dst"))
+    canon.write.mode("overwrite").parquet(s"$seedRoot/edges")
+    graft.operators.Dedup.duplicateLabelsStar(
+        canon.select(col("a").as("doc_a"), col("b").as("doc_b")))
+      .write.mode("overwrite").parquet(s"$seedRoot/labels")
+    faces.foreach {
+      case "coreness" => Graph.corenessSharded(und)
+        .write.mode("overwrite").parquet(s"$seedRoot/coreness")
+      case "triangles" => Graph.triangles(und)
+        .write.mode("overwrite").parquet(s"$seedRoot/triangles")
+      case "truss" => Graph.kTrussSharded(und, 3)
+        .write.mode("overwrite").parquet(s"$seedRoot/truss")
+      case other => throw new IllegalArgumentException(
+        s"seed: unknown face $other")
     }
   }
 
-  /** Shared lifecycle of the measured signed-stream entries: stage
-    * seed faces + signed source, stream every batch, compact
-    * mid-lifecycle, serve. `seedFaces` writes the face artifacts the
-    * served operator folds into; `serve` produces the final frame
-    * (localCheckpoint'd off the temp dirs before rm — the family's
-    * documented block-loss trade-off applies). */
+  /** The signed entries' source: the persisted adds/removals artifact
+    * faces as one (src, dst, op) frame. The two faces are DISJOINT
+    * pair sets (adds = today ∖ prior, removals = prior ∖ today), so
+    * no pair carries both ops and the batch split is free to mix them
+    * arbitrarily; cross-batch net resolution (add-then-remove,
+    * remove-then-re-add) is exercised by the spec's hand-ordered
+    * batches, not by these entries. */
+  private def signedSource(spark: SparkSession, dir: String): DataFrame =
+    graft.SparkEntry.cpRemovalsShared(spark, dir)
+      .select(col("src"), col("dst"), lit("remove").as("op"))
+      .unionByName(graft.SparkEntry.cpAddsShared(spark, dir)
+        .select(col("src"), col("dst"), lit("add").as("op")))
+
+  /** The insert-only entries' source: the full co-purchase graph minus
+    * the persisted prior (yesterday's graph — prior ⊆ full because
+    * pair counts only grow), every pair tagged `add`. */
+  private def addsSource(spark: SparkSession, dir: String): DataFrame = {
+    val (priorE, _) = graft.SparkEntry.cpIndexShared(spark, dir)
+    Graph.canonicalEdges(graft.operators.Purchases.coPurchaseGraph(
+        graft.Tables.lineitem(spark, dir), minCount = 2L))
+      .join(priorE.select("a", "b"), Seq("a", "b"), "left_anti")
+      .select(col("a").as("src"), col("b").as("dst"), lit("add").as("op"))
+  }
+
+  /** Shared lifecycle of the measured graph-stream entries: stage
+    * seed faces + the entry's (src, dst, op) `source`, split into two
+    * files so the stream sees more than one micro-batch, stream every
+    * batch, compact mid-lifecycle, serve. The stream owns a private
+    * COPY of the persisted prior because compaction rewrites it.
+    * `seedFaces` writes the face artifacts the served operator folds
+    * into; `serve` produces the final frame (localCheckpoint'd off the
+    * temp dirs before rmTree — the family's documented block-loss
+    * trade-off applies). */
   private def signedRun(
       spark: SparkSession, dir: String, entry: String, tmpPrefix: String,
-      seedFaces: Seq[String], serve: (String, String) => DataFrame): DataFrame = {
+      source: (SparkSession, String) => DataFrame, seedFaces: Seq[String],
+      serve: (String, String) => DataFrame): DataFrame = {
     val root = java.nio.file.Files.createTempDirectory(tmpPrefix)
     val srcDir = root.resolve("src").toString
     val seedRoot = root.resolve("seed").toString
@@ -308,13 +350,14 @@ object SignedGraphStream {
           case other => throw new IllegalArgumentException(
             s"signedRun: unknown seed face $other")
         }
-        var staged0: DataFrame = null
+        val staged0 = source(spark, dir)
         // the face copies and the source staging are independent
         // writes — overlap them (guide §2.6)
         DeltaLayout.overlap(Seq[() => Unit](
           () => priorE.write.mode("overwrite").parquet(s"$seedRoot/edges"),
           () => priorL.write.mode("overwrite").parquet(s"$seedRoot/labels"),
-          () => staged0 = stageSigned(spark, dir, srcDir)) ++ faceWrites)
+          () => staged0.repartition(2).write.mode("overwrite")
+            .parquet(srcDir)) ++ faceWrites)
         staged0
       }
       val q = signedMaintain(
@@ -332,34 +375,56 @@ object SignedGraphStream {
       StreamMeter.timePhase(entry, "serve") {
         serve(seedRoot, deltaP).localCheckpoint()
       }
-    } finally rm(root)
+    } finally DeltaLayout.rmTree(root)
   }
 
   /** q_stream_components_signed: hash-matches the q_components_delete
     * oracle — the full reachability CTE over the delisted graph. */
   def componentsSignedRun(spark: SparkSession, dir: String): DataFrame =
     signedRun(spark, dir, "q_stream_components_signed", "graft_ccs_stream",
-        Seq.empty, serveComponents(spark, _, _))
+        signedSource, Seq.empty, serveComponents(spark, _, _))
       .orderBy("component")
 
   /** q_stream_coreness_signed: hash-matches the q_coreness_delete
     * oracle — the 23-CTE peel ladder over the delisted graph. */
   def corenessSignedRun(spark: SparkSession, dir: String): DataFrame =
     signedRun(spark, dir, "q_stream_coreness_signed", "graft_cores_stream",
-        Seq("coreness"), serveCoreness(spark, _, _))
+        signedSource, Seq("coreness"), serveCoreness(spark, _, _))
       .orderBy("node")
 
   /** q_stream_triangles_signed: hash-matches the q_triangles_delete
     * oracle — the full wedge join over the delisted graph. */
   def trianglesSignedRun(spark: SparkSession, dir: String): DataFrame =
     signedRun(spark, dir, "q_stream_triangles_signed", "graft_tris_stream",
-        Seq("triangles"), serveTriangles(spark, _, _))
+        signedSource, Seq("triangles"), serveTriangles(spark, _, _))
       .orderBy("node")
 
   /** q_stream_ktruss_signed: rows-only for the q_ktruss reason;
     * stream == signed == full-peel equality spec-asserted. */
   def trussSignedRun(spark: SparkSession, dir: String): DataFrame =
     signedRun(spark, dir, "q_stream_ktruss_signed", "graft_trus_stream",
-        Seq("truss"), serveTruss(spark, _, _, 3))
+        signedSource, Seq("truss"), serveTruss(spark, _, _, 3))
+      .orderBy("a", "b")
+
+  /** q_stream_components: the insert-only stream (all-`add` ops of
+    * full ∖ prior) — hash-matches the full-graph q_components
+    * reachability oracle. */
+  def componentsMaintainRun(spark: SparkSession, dir: String): DataFrame =
+    signedRun(spark, dir, "q_stream_components", "graft_cc_stream",
+        addsSource, Seq.empty, serveComponents(spark, _, _))
+      .orderBy("component")
+
+  /** q_stream_coreness: the insert-only stream — hash-matches the
+    * full-graph q_coreness 23-CTE peel-ladder oracle. */
+  def corenessMaintainRun(spark: SparkSession, dir: String): DataFrame =
+    signedRun(spark, dir, "q_stream_coreness", "graft_core_stream",
+        addsSource, Seq("coreness"), serveCoreness(spark, _, _))
+      .orderBy("node")
+
+  /** q_stream_ktruss: the insert-only stream — rows-only for the
+    * q_ktruss reason; stream == full-peel equality spec-asserted. */
+  def trussMaintainRun(spark: SparkSession, dir: String): DataFrame =
+    signedRun(spark, dir, "q_stream_ktruss", "graft_truss_stream",
+        addsSource, Seq("truss"), serveTruss(spark, _, _, 3))
       .orderBy("a", "b")
 }

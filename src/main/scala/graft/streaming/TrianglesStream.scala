@@ -25,7 +25,12 @@ import graft.operators.Graph
   * recomputed), streams the remaining edges, compacts mid-stream,
   * and serves — which must hash-match the SAME full-graph wedge-join
   * oracle as q_triangles: stream-maintained == full recompute,
-  * proven by the gate. */
+  * proven by the gate.
+  *
+  * Unlike the other insert-only graph entries, this one does not run
+  * on [[SignedGraphStream]]: its arithmetic fold carries no labels
+  * face, while the signed triangle face re-runs the wedge join over
+  * every touched component — a compaction roughly twice as slow. */
 object TrianglesStream {
 
   /** Seed (or rebuild) the persisted (edges, triangles) pair. */
@@ -37,8 +42,8 @@ object TrianglesStream {
   }
 
   /** Launch maintenance over a streaming raw edge frame (src, dst, w):
-    * the [[CorenessStream.corenessMaintain]] contract — each batch
-    * canonicalizes ONLY its own edges; batches at or below the seed's
+    * the [[SignedGraphStream.signedMaintain]] landing contract with
+    * every op `add` — each batch canonicalizes ONLY its own edges; batches at or below the seed's
     * compaction watermark are skipped (already folded in). */
   def trianglesMaintain(
       newEdges: DataFrame, seedRoot: String, deltaPath: String,
@@ -127,13 +132,6 @@ object TrianglesStream {
     val srcDir = root.resolve("src").toString
     val seedRoot = root.resolve("seed").toString
     val deltaP = root.resolve("delta").toString
-    def rm(p: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(p)) {
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
     try {
       val delta = StreamMeter.timeSeed("q_stream_triangles") {
         val (priorE, _) = graft.SparkEntry.cpIndexShared(spark, dir)
@@ -161,10 +159,10 @@ object TrianglesStream {
       }
       // localCheckpoint, NOT collect: one row per node is unbounded —
       // the materialized blocks keep the result off-driver and
-      // independent of the temp dirs rm() deletes
+      // independent of the temp dirs DeltaLayout.rmTree() deletes
       StreamMeter.timePhase("q_stream_triangles", "serve") {
         serveTriangles(spark, seedRoot, deltaP).localCheckpoint()
       }.orderBy("node")
-    } finally rm(root)
+    } finally DeltaLayout.rmTree(root)
   }
 }

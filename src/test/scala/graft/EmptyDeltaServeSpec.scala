@@ -100,17 +100,10 @@ class EmptyDeltaServeSpec extends AnyFunSuite with SparkSessionTestBase {
   test("the empty-delta coreness serve is a PLAIN SCAN of the seed " +
       "face — no joins, no aggregation, no fold machinery in the plan") {
     val root = java.nio.file.Files.createTempDirectory("graft_eds_plan")
-    def rm(p: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(p)) {
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
     try {
       val seedRoot = root.resolve("seed").toString
-      CorenessStream.seedCoreness(edges, seedRoot)
-      val served = CorenessStream.serveCoreness(
+      SignedGraphStream.seed(edges, seedRoot, Seq("coreness"))
+      val served = SignedGraphStream.serveCoreness(
         spark, seedRoot, root.resolve("delta").toString)
       val p = served.queryExecution.executedPlan.toString
       assert(!p.contains("Join"), s"fast-path serve plan has a join:\n$p")
@@ -119,7 +112,7 @@ class EmptyDeltaServeSpec extends AnyFunSuite with SparkSessionTestBase {
       // and the rows are the seed face itself
       assert(sortedRows(served) == sortedRows(
         spark.read.parquet(s"$seedRoot/coreness").select("node", "coreness")))
-    } finally rm(root)
+    } finally DeltaLayout.rmTree(root)
   }
 
   test("empty-delta semdedup verdict == incremental fold over an " +
@@ -142,43 +135,36 @@ class EmptyDeltaServeSpec extends AnyFunSuite with SparkSessionTestBase {
   test("a served stream lifecycle takes the fast path after " +
       "compaction and the slow path mid-stream, same rows") {
     val root = java.nio.file.Files.createTempDirectory("graft_eds_spec")
-    def rm(p: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(p)) {
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
     try {
       val seedRoot = root.resolve("seed").toString
       val deltaP = root.resolve("delta").toString
       val srcDir = root.resolve("src").toString
       val prior = raw.dropRight(2)
       val delta = raw.takeRight(2)
-      ComponentsStream.seedComponents(
+      SignedGraphStream.seed(
         prior.map { case (a, b) => (a, b, 1L) }.toDF("src", "dst", "w"),
-        seedRoot)
-      delta.map { case (a, b) => (a, b, 1L) }.toDF("src", "dst", "w")
+        seedRoot, Seq.empty)
+      delta.map { case (a, b) => (a, b, "add") }.toDF("src", "dst", "op")
         .repartition(1).write.mode("overwrite").parquet(srcDir)
-      val q = ComponentsStream.componentsMaintain(
+      val q = SignedGraphStream.signedMaintain(
         spark.readStream
           .schema(org.apache.spark.sql.types.StructType.fromDDL(
-            "src BIGINT, dst BIGINT, w BIGINT"))
+            "src BIGINT, dst BIGINT, op STRING"))
           .parquet(srcDir),
         seedRoot, deltaP, root.resolve("ckpt").toString)
       try q.processAllAvailable() finally q.stop()
       // mid-stream: live delta present → the incremental (slow) path
       val mid = sortedRows(
-        ComponentsStream.serveComponents(spark, seedRoot, deltaP))
-      ComponentsStream.compact(spark, seedRoot, deltaP)
+        SignedGraphStream.serveComponents(spark, seedRoot, deltaP))
+      SignedGraphStream.compact(spark, seedRoot, deltaP)
       assert(!DeltaLayout.hasLiveBatches(spark, seedRoot, deltaP))
       // post-compaction: no live batch → the fast path; same stats
       val post = sortedRows(
-        ComponentsStream.serveComponents(spark, seedRoot, deltaP))
+        SignedGraphStream.serveComponents(spark, seedRoot, deltaP))
       assert(mid == post)
       // and both equal the full recompute over the whole graph
       val full = sortedRows(Graph.components(edges))
       assert(post == full)
-    } finally rm(root)
+    } finally DeltaLayout.rmTree(root)
   }
 }

@@ -201,15 +201,7 @@ class ImageNearDupSpec extends AnyFunSuite with SparkSessionTestBase {
           .select("media_new", "media_corpus").collect()
           .map(r => (r.getLong(0), r.getLong(1))).toSet
         assert(g2 === Set((999999L, 0L | Multimodal.TwinIdBit)))
-      } finally rmTree(root2)
-    } finally rmTree(root)
-  }
-
-  private def rmTree(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(p)) {
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+      } finally graft.streaming.DeltaLayout.rmTree(root2)
+    } finally graft.streaming.DeltaLayout.rmTree(root)
   }
 }

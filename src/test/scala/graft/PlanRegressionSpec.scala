@@ -779,13 +779,6 @@ class PlanRegressionSpec extends AnyFunSuite with SparkSessionTestBase {
     // kinds plus the net-ops joins.
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("plan_pushdown_spec")
-    def rm(p: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(p)) {
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
     def postingsScansPruned(plan: String, who: String): Unit = {
       val scans = plan.linesIterator
         .filter(l => l.contains("Scan parquet") && l.contains("postings"))
@@ -840,6 +833,6 @@ class PlanRegressionSpec extends AnyFunSuite with SparkSessionTestBase {
       postingsScansPruned(
         bmPlan.linesIterator.filterNot(_.contains("doclen")).mkString("\n"),
         "bm25 signed serve")
-    } finally rm(root)
+    } finally graft.streaming.DeltaLayout.rmTree(root)
   }
 }

@@ -32,14 +32,6 @@ class SignedGraphStreamSpec extends AnyFunSuite with SparkSessionTestBase {
   private def ops(rows: Seq[(Long, Long, String)]): DataFrame =
     rows.toDF("src", "dst", "op")
 
-  private def rm(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(p)) {
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
-  }
-
   test("signed stream: cross-batch net resolution, bridge split, " +
       "all four faces == full recompute, compaction invariance") {
     val root = java.nio.file.Files.createTempDirectory("graft_signed_spec")
@@ -112,7 +104,7 @@ class SignedGraphStreamSpec extends AnyFunSuite with SparkSessionTestBase {
         !java.nio.file.Files.list(deltaDir).iterator().hasNext ||
         java.nio.file.Files.list(deltaDir).iterator().asScala
           .forall(p => !p.getFileName.toString.startsWith("batch_id=")))
-    } finally rm(root)
+    } finally graft.streaming.DeltaLayout.rmTree(root)
   }
 
   test("landing guards: one pair carrying both ops in a batch raises; " +
@@ -132,7 +124,7 @@ class SignedGraphStreamSpec extends AnyFunSuite with SparkSessionTestBase {
           seedRoot, root.resolve("delta").toString,
           root.resolve("ckpt").toString)
         try q.processAllAvailable() finally q.stop()
-      } finally rm(root)
+      } finally graft.streaming.DeltaLayout.rmTree(root)
     }
     def rootMsg(t: Throwable): String =
       (Option(t.getMessage).getOrElse("")) +

@@ -15,14 +15,6 @@ import graft.streaming.{DedupSignedStream, ImageSignedStream,
   * doc's ghost suppresses nothing), and (c) compaction invariance. */
 class SignedStreamsSpec extends AnyFunSuite with SparkSessionTestBase {
 
-  private def rm(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(p)) {
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
-  }
-
   private def rows(df: DataFrame, sort: String*): Seq[String] =
     df.orderBy(sort.map(col): _*).collect().map(_.toString).toSeq
 
@@ -108,7 +100,7 @@ class SignedStreamsSpec extends AnyFunSuite with SparkSessionTestBase {
       checkFaces()
       assert(DedupSignedStream.gate(spark, seedP, deltaP, probeAlien)
         .collect().isEmpty)
-    } finally rm(root)
+    } finally graft.streaming.DeltaLayout.rmTree(root)
   }
 
   test("signed SemDeDup assignment: live == direct assignment of the " +
@@ -165,7 +157,7 @@ class SignedStreamsSpec extends AnyFunSuite with SparkSessionTestBase {
       check()
       assert(rows(spark.read.parquet(s"$seedP/centroids"), "cid")
         === rows(cents, "cid"))
-    } finally rm(root)
+    } finally graft.streaming.DeltaLayout.rmTree(root)
   }
 
   test("signed image index: a removed image's ghost gates nothing, a " +
@@ -226,7 +218,7 @@ class SignedStreamsSpec extends AnyFunSuite with SparkSessionTestBase {
       }
       ImageSignedStream.compact(spark, seedP, deltaP)
       checkFace()
-    } finally rm(root)
+    } finally graft.streaming.DeltaLayout.rmTree(root)
   }
 
   test("delete cascade: one victim set leaves ALL six live faces in " +
@@ -281,7 +273,7 @@ class SignedStreamsSpec extends AnyFunSuite with SparkSessionTestBase {
       checkBothFaces()
       runOnce(root.resolve("ckpt2").toString) // retry: same partitions
       checkBothFaces()
-    } finally rm(root)
+    } finally graft.streaming.DeltaLayout.rmTree(root)
   }
 
   test("livePostings serves only batches whose ops face landed: an " +
@@ -316,6 +308,6 @@ class SignedStreamsSpec extends AnyFunSuite with SparkSessionTestBase {
         "term", "doc_id", "pos")
       assert(afterOrphan === served,
         "orphan postings rows leaked into the served frame")
-    } finally rm(root)
+    } finally graft.streaming.DeltaLayout.rmTree(root)
   }
 }

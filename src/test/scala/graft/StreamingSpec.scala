@@ -573,13 +573,6 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
     val queries = Seq((0L, "bb cc"), (1L, "ee")).toDF("query_id", "query_text")
     val terms = Seq("bb", "cc", "ee")
     val root = java.nio.file.Files.createTempDirectory("bm25_signed_spec")
-    def rm(p: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(p)) {
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
     try {
       val src = root.resolve("src").toString
       val seedP = root.resolve("seed").toString
@@ -641,7 +634,7 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
             r2.resolve("seed").toString, r2.resolve("delta").toString,
             r2.resolve("ckpt").toString)
           try qq.processAllAvailable() finally qq.stop()
-        } finally rm(r2)
+        } finally graft.streaming.DeltaLayout.rmTree(r2)
       }
       val exDup = intercept[Exception] {
         runBatch(Seq((7L, "aa", "add"), (7L, "bb", "add")))
@@ -649,7 +642,7 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
       assert(rootMsg(exDup).contains("more than once in one batch"))
       val exOp = intercept[Exception] { runBatch(Seq((7L, "aa", "upsert"))) }
       assert(rootMsg(exOp).contains("op must be add|remove"))
-    } finally rm(root)
+    } finally graft.streaming.DeltaLayout.rmTree(root)
   }
 
   test("signed phrase stream: a replaced doc's old phrase stops " +
@@ -659,13 +652,6 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
     val queries = Seq((0L, "aa bb"), (1L, "zz zz"), (2L, "ee ff"))
       .toDF("query_id", "query_text")
     val root = java.nio.file.Files.createTempDirectory("phrase_signed_spec")
-    def rm(p: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(p)) {
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
     try {
       val src = root.resolve("src").toString
       val seedP = root.resolve("seed").toString
@@ -705,7 +691,7 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
       assert(hits.contains((0L, 2L)))
       PhraseSignedStream.compact(spark, seedP, deltaP)
       assert(serve() === expect)
-    } finally rm(root)
+    } finally graft.streaming.DeltaLayout.rmTree(root)
   }
 
   test("signed IVF stream: re-embeds move list assignments, removals " +
@@ -714,13 +700,6 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
     import org.apache.spark.sql.functions.col
     import graft.streaming.IvfSignedStream
     val root = java.nio.file.Files.createTempDirectory("ivf_signed_spec")
-    def rm(p: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(p)) {
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
     try {
       val src = root.resolve("src").toString
       val seedP = root.resolve("seed").toString
@@ -776,7 +755,7 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
       assert(spark.read.parquet(s"$seedP/centroids")
         .collect().map(_.toString).sorted
         === cents.collect().map(_.toString).sorted)
-    } finally rm(root)
+    } finally graft.streaming.DeltaLayout.rmTree(root)
   }
 
   test("signed index streams are restart- and retry-safe: a same-" +
@@ -787,13 +766,6 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
     val queries = Seq((0L, "bb cc")).toDF("query_id", "query_text")
     val terms = Seq("bb", "cc")
     val root = java.nio.file.Files.createTempDirectory("bm25_signed_retry")
-    def rm(p: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(p)) {
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
     try {
       val src = root.resolve("src").toString
       val seedP = root.resolve("seed").toString
@@ -860,8 +832,8 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
         assert(gserve() === g1)
         grun(groot.resolve("c2").toString) // retry: same partitions
         assert(gserve() === g1)
-      } finally rm(groot)
-    } finally rm(root)
+      } finally graft.streaming.DeltaLayout.rmTree(groot)
+    } finally graft.streaming.DeltaLayout.rmTree(root)
   }
 
   test("stream-maintained BM25 index serves identically to a full rebuild") {
@@ -1188,7 +1160,7 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
   }
 
   test("componentsMaintainRun (the measured driver entry) equals the full recompute") {
-    val served = graft.streaming.ComponentsStream
+    val served = graft.streaming.SignedGraphStream
       .componentsMaintainRun(spark, sfDir)
       .collect().map(_.toString).toSeq
     val full = graft.operators.Graph.components(
@@ -1200,7 +1172,7 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
   }
 
   test("corenessMaintainRun (the measured driver entry) equals the full recompute") {
-    val served = graft.streaming.CorenessStream
+    val served = graft.streaming.SignedGraphStream
       .corenessMaintainRun(spark, sfDir)
       .collect().map(_.toString).toSeq
     val full = graft.operators.Graph.coreness(
@@ -1257,7 +1229,7 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
   }
 
   test("trussMaintainRun (the measured driver entry) equals the full peel") {
-    val served = graft.streaming.KTrussStream
+    val served = graft.streaming.SignedGraphStream
       .trussMaintainRun(spark, sfDir)
       .collect().map(_.toString).toSeq
     val full = graft.operators.Graph.kTruss(
@@ -1269,25 +1241,26 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
 
   test("truss compact preserves the served truss") {
     import spark.implicits._
-    import graft.streaming.KTrussStream
+    import graft.streaming.SignedGraphStream
     val root = java.nio.file.Files.createTempDirectory("truss_compact")
     val seedRoot = root.resolve("seed").toString
     val deltaP = root.resolve("delta").toString
     // seed: a triangle (3-truss) and a disjoint edge (peeled)
-    KTrussStream.seedTruss(
+    SignedGraphStream.seed(
       Seq((1L, 2L, 1L), (2L, 3L, 1L), (1L, 3L, 1L), (10L, 11L, 1L))
-        .toDF("src", "dst", "w"), seedRoot, 3)
+        .toDF("src", "dst", "w"), seedRoot, Seq("truss"))
     // one hand-landed micro-batch: edges completing K4 on 1..4 (the
     // touched component's truss deepens to support 2) plus a pair
     graft.operators.Graph.canonicalEdges(
         Seq((1L, 4L, 1L), (2L, 4L, 1L), (3L, 4L, 1L), (30L, 31L, 1L))
           .toDF("src", "dst", "w"))
+      .withColumn("op", org.apache.spark.sql.functions.lit("add"))
       .withColumn("batch_id", org.apache.spark.sql.functions.lit(0L))
       .write.partitionBy("batch_id").mode("append").parquet(deltaP)
-    val before = KTrussStream.serveTruss(spark, seedRoot, deltaP, 3)
+    val before = SignedGraphStream.serveTruss(spark, seedRoot, deltaP, 3)
       .collect().map(_.toString).toSeq
-    KTrussStream.compact(spark, seedRoot, deltaP, 3)
-    val after = KTrussStream.serveTruss(spark, seedRoot, deltaP, 3)
+    SignedGraphStream.compact(spark, seedRoot, deltaP, 3)
+    val after = SignedGraphStream.serveTruss(spark, seedRoot, deltaP, 3)
       .collect().map(_.toString).toSeq
     assert(before === after)
     assert(!graft.streaming.DeltaLayout.hasDeltaPartitions(spark, deltaP))
@@ -1414,25 +1387,26 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
 
   test("coreness compact preserves the served decomposition") {
     import spark.implicits._
-    import graft.streaming.CorenessStream
+    import graft.streaming.SignedGraphStream
     val root = java.nio.file.Files.createTempDirectory("core_compact")
     val seedRoot = root.resolve("seed").toString
     val deltaP = root.resolve("delta").toString
     // seed: a triangle (coreness 2) and a disjoint edge (coreness 1)
-    CorenessStream.seedCoreness(
+    SignedGraphStream.seed(
       Seq((1L, 2L, 1L), (2L, 3L, 1L), (1L, 3L, 1L), (10L, 11L, 1L))
-        .toDF("src", "dst", "w"), seedRoot)
+        .toDF("src", "dst", "w"), seedRoot, Seq("coreness"))
     // one hand-landed micro-batch: edges completing K4 on 1..4 (the
     // TOUCHED component deepens to coreness 3) plus a fresh pair
     graft.operators.Graph.canonicalEdges(
         Seq((1L, 4L, 1L), (2L, 4L, 1L), (3L, 4L, 1L), (30L, 31L, 1L))
           .toDF("src", "dst", "w"))
+      .withColumn("op", org.apache.spark.sql.functions.lit("add"))
       .withColumn("batch_id", org.apache.spark.sql.functions.lit(0L))
       .write.partitionBy("batch_id").mode("append").parquet(deltaP)
-    val before = CorenessStream.serveCoreness(spark, seedRoot, deltaP)
+    val before = SignedGraphStream.serveCoreness(spark, seedRoot, deltaP)
       .collect().map(_.toString).toSeq
-    CorenessStream.compact(spark, seedRoot, deltaP)
-    val after = CorenessStream.serveCoreness(spark, seedRoot, deltaP)
+    SignedGraphStream.compact(spark, seedRoot, deltaP)
+    val after = SignedGraphStream.serveCoreness(spark, seedRoot, deltaP)
       .collect().map(_.toString).toSeq
     assert(before === after)
     assert(!graft.streaming.DeltaLayout.hasDeltaPartitions(spark, deltaP))
@@ -1447,24 +1421,25 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
 
   test("components compact preserves served stats; pre-compact serve equals too") {
     import spark.implicits._
-    import graft.streaming.ComponentsStream
+    import graft.streaming.SignedGraphStream
     val root = java.nio.file.Files.createTempDirectory("cc_compact")
     val seedRoot = root.resolve("seed").toString
     val deltaP = root.resolve("delta").toString
     // seed: two components {1,2,3} and {10,11}
-    ComponentsStream.seedComponents(
+    SignedGraphStream.seed(
       Seq((1L, 2L, 1L), (2L, 3L, 1L), (10L, 11L, 1L))
-        .toDF("src", "dst", "w"), seedRoot)
+        .toDF("src", "dst", "w"), seedRoot, Seq.empty)
     // one "micro-batch" landed by hand in the delta layout: a bridge
     // plus a new pair
     graft.operators.Graph.canonicalEdges(
         Seq((3L, 10L, 1L), (30L, 31L, 1L)).toDF("src", "dst", "w"))
+      .withColumn("op", org.apache.spark.sql.functions.lit("add"))
       .withColumn("batch_id", org.apache.spark.sql.functions.lit(0L))
       .write.partitionBy("batch_id").mode("append").parquet(deltaP)
-    val before = ComponentsStream.serveComponents(spark, seedRoot, deltaP)
+    val before = SignedGraphStream.serveComponents(spark, seedRoot, deltaP)
       .collect().map(_.toString).toSeq
-    ComponentsStream.compact(spark, seedRoot, deltaP)
-    val after = ComponentsStream.serveComponents(spark, seedRoot, deltaP)
+    SignedGraphStream.compact(spark, seedRoot, deltaP)
+    val after = SignedGraphStream.serveComponents(spark, seedRoot, deltaP)
       .collect().map(_.toString).toSeq
     assert(before === after)
     // the folded seed now answers alone (no delta partitions left)

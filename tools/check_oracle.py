@@ -7,8 +7,13 @@ stringified with no float rounding and no decimal-scale forgiveness,
 dtype mismatches fail — so local green predicts the driver's hash).
 
 Usage: python3 tools/check_oracle.py [sfdir] [outdir]
+
+With SPARK_GRAFT_VERIFY_ONLY set (the comma-separated subset graft.Verify
+then dumps), only the named entries are compared; a named entry whose
+result is missing still fails.
 """
 import json
+import os
 import sys
 import glob
 import duckdb
@@ -24,6 +29,10 @@ for p in glob.glob(f"{sfdir}/*.parquet"):
     con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{p}'")
 
 oracle = json.load(open(f"{outdir}/oracle_sql.json"))
+only = os.environ.get("SPARK_GRAFT_VERIFY_ONLY")
+if only is not None:
+    names = {n.strip() for n in only.split(",")}
+    oracle = {k: v for k, v in oracle.items() if k in names}
 fails = []
 for name, sql in sorted(oracle.items()):
     res_dir = f"{outdir}/{name}"
