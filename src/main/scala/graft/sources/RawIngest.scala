@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
 
 /** Raw feed ingestion: the price-transparency XML store files and the
   * JSON price-item feed the reference pipeline consumes.
@@ -70,13 +71,36 @@ object RawIngest {
     (ok, quarantined)
   }
 
-  /** Parse the JSON price feed (Root.{ChainId,StoreId,Items.Item[]})
-    * into one typed row per item with an idempotency hash — the
-    * s3→queue→db consumer's transform as one narrow plan. */
+  /** The JSON price feed's shape, Root.{ChainId,StoreId,Items.Item[]},
+    * every leaf a string as the feed writes it: the schema inference
+    * would produce, declared so the read runs no inference job. Item
+    * fields the feed carries beyond these are not read. */
+  private val priceFeedSchema: StructType = {
+    def strings(names: String*) = names.map(StructField(_, StringType))
+    val item = StructType(strings("ItemCode", "ItemName", "ManufacturerName",
+      "ItemPrice", "UnitOfMeasurePrice", "Quantity", "UnitQty",
+      "PriceUpdateDate", "ItemStatus", "IsWeighted"))
+    StructType(Seq(StructField("Root", StructType(
+      strings("ChainId", "StoreId") :+
+        StructField("Items", StructType(Seq(StructField("Item", ArrayType(item)))))))))
+  }
+
+  /** Parse the JSON price feed (`priceFeedSchema`) into one typed row
+    * per item with an idempotency hash — the s3→queue→db consumer's
+    * transform as one narrow plan. A malformed file fails the read
+    * (FAILFAST) instead of parsing to a null root that would yield no
+    * rows. */
   def priceItemsFromJson(spark: SparkSession, path: String): DataFrame =
-    spark.read
+    priceItems(spark.read
+      .schema(priceFeedSchema)
       .option("multiLine", "true")
-      .json(path)
+      .option("mode", "FAILFAST")
+      .json(path))
+
+  /** The feed transform over a read of the feed's JSON: the casts,
+    * the trims and the raw_hash. */
+  private[graft] def priceItems(feed: DataFrame): DataFrame =
+    feed
       .select(
         col("Root.ChainId").cast("string").as("chain_id"),
         col("Root.StoreId").cast("string").as("store_id"),

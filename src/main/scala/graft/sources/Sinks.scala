@@ -1,8 +1,11 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.streaming.DeltaLayout
 
 /** Write-side of the pipeline: partitioned parquet landing, upsert by
   * key (the reference's get-or-create / UNIQUE(supermarket, barcode,
@@ -12,9 +15,11 @@ import org.apache.spark.sql.functions._
   * Scale posture: partition columns are low-cardinality (date, store);
   * data is repartitioned on them before the write so each partition
   * directory is written by one task (no small-file explosion); upsert
-  * keeps the newest observation per key via one window; bucketed tables
-  * pre-shuffle once at write time so every later equi-join on the
-  * bucket key runs without an Exchange.
+  * keeps the newest observation per key via one window; upsert and
+  * compaction write their output once and rename it over the live
+  * directory ([[graft.streaming.DeltaLayout.swapLive]]); bucketed
+  * tables pre-shuffle once at write time so every later equi-join on
+  * the bucket key runs without an Exchange.
   */
 object Sinks {
 
@@ -29,27 +34,65 @@ object Sinks {
       .parquet(path)
 
   /** Upsert-by-key load: merge incoming rows into the existing parquet
-    * state keeping the newest row per key (ordered by `versionCol`,
-    * ties by the remaining sort columns). Reference semantics:
-    * rabbitmq-to-postgres get_or_create + collected_at versioning. */
+    * state keeping the newest row per key, ordered by `versionCol`. A
+    * tie on key and version goes to the incoming row — last write
+    * wins, like the reference's `ON CONFLICT DO UPDATE` — so an exact
+    * re-delivery leaves the state's content unchanged; rows of one
+    * incoming batch that tie with each other resolve arbitrarily.
+    * Reference semantics: rabbitmq-to-postgres get_or_create +
+    * collected_at versioning.
+    *
+    * One write per call: the state is read with `incoming.schema` (the
+    * schema the previous upsert wrote — no footer-inference job), the
+    * merged frame is written once to `path__staging`, and
+    * [[graft.streaming.DeltaLayout.swapLive]] renames it over `path`.
+    * Crash posture: a missing `path` is recovered before anything
+    * reads it — a complete `path__staging` (one with `_SUCCESS`) rolls
+    * forward, else `path__old` is restored — so a crash between the
+    * swap's renames never reads as an empty state; resetting the
+    * state therefore means deleting those two siblings with `path`.
+    * Only a state that is absent after that counts as empty; every
+    * other read error propagates and leaves `path` untouched. */
   def upsertByKey(
       spark: SparkSession, incoming: DataFrame, path: String,
       keyCols: Seq[String], versionCol: String): Unit = {
-    val existing =
-      try spark.read.parquet(path)
-      catch { case _: Throwable => spark.emptyDataFrame }
+    val f = DeltaLayout.fs(spark, path)
+    val tagged = incoming.withColumn("__incoming", lit(true))
     val unioned =
-      if (existing.columns.isEmpty) incoming
-      else existing.select(incoming.columns.map(col): _*).unionAll(incoming)
-    val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col(versionCol).desc)
-    val merged = unioned
+      if (!liveOrRecovered(f, path)) tagged
+      else spark.read.schema(incoming.schema).parquet(path)
+        .withColumn("__incoming", lit(false))
+        .unionAll(tagged)
+    val w = Window.partitionBy(keyCols.map(col): _*)
+      .orderBy(col(versionCol).desc, col("__incoming").desc)
+    val staging = path + "__staging"
+    unioned
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
-      .drop("__rn")
-    // two-phase write: parquet sources cannot overwrite themselves
-    val tmp = path + "__staging"
-    merged.write.mode(SaveMode.Overwrite).parquet(tmp)
-    spark.read.parquet(tmp).write.mode(SaveMode.Overwrite).parquet(path)
+      .drop("__rn", "__incoming")
+      .write.mode(SaveMode.Overwrite).parquet(staging)
+    DeltaLayout.swapLive(f, staging, path)
+  }
+
+  /** True iff `path` holds a state, after recovering a crash between
+    * [[graft.streaming.DeltaLayout.swapLive]]'s two renames: when
+    * `path` is missing, a complete `path__staging` (the new state)
+    * rolls forward, else `path__old` (the prior one) is restored. One
+    * driver-side `exists` when `path` is present. */
+  private def liveOrRecovered(f: FileSystem, path: String): Boolean = {
+    val live = new Path(path)
+    f.exists(live) || {
+      val staging = new Path(path + "__staging")
+      val old = new Path(path + "__old")
+      val from =
+        if (f.exists(new Path(staging, "_SUCCESS"))) Some(staging)
+        else Some(old).filter(f.exists)
+      from.foreach { p =>
+        if (!f.rename(p, live))
+          throw new java.io.IOException(s"rename $p -> $live failed; state not recovered")
+      }
+      from.nonEmpty
+    }
   }
 
   /** Small-file compaction: rewrite a parquet directory into
@@ -58,31 +101,24 @@ object Sinks {
     * file-open/footers overhead dominates scan cost long before data
     * volume does. File count = ceil(bytes-on-disk / target), measured
     * from the source files themselves (no count() job, no sampling
-    * pass); two-phase rewrite because a parquet source cannot
-    * overwrite itself. */
+    * pass). One write of exactly that many files to `path__compact`,
+    * then [[graft.streaming.DeltaLayout.swapLive]] renames it over
+    * `path`; a missing `path` is first recovered as in
+    * [[upsertByKey]]. */
   def compact(
       spark: SparkSession, path: String,
       targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
+    val f = DeltaLayout.fs(spark, path)
+    liveOrRecovered(f, path): Unit
     val df = spark.read.parquet(path)
     // size via the Hadoop FileSystem of the path (works on HDFS/S3/
     // local alike) — java.io.File would report 0 bytes for any remote
     // URI and silently funnel the whole dataset into one file
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val bytes = df.inputFiles.map { f =>
-      val p = new org.apache.hadoop.fs.Path(f)
-      p.getFileSystem(hconf).getFileStatus(p).getLen
-    }.sum
+    val bytes = df.inputFiles.map(p => f.getFileStatus(new Path(p)).getLen).sum
     val nFiles = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
     val tmp = path + "__compact"
     df.repartition(nFiles).write.mode(SaveMode.Overwrite).parquet(tmp)
-    // coalesce on the rewrite: the tmp read re-splits each file at
-    // spark.sql.files.maxPartitionBytes, so without it the final write
-    // would cap file sizes at the session split size instead of the
-    // requested target
-    spark.read.parquet(tmp).coalesce(nFiles)
-      .write.mode(SaveMode.Overwrite).parquet(path)
-    val tmpPath = new org.apache.hadoop.fs.Path(tmp)
-    tmpPath.getFileSystem(hconf).delete(tmpPath, true): Unit
+    DeltaLayout.swapLive(f, tmp, path)
   }
 
   /** Range-partitioned, sorted-within-file write: rows are range

@@ -138,7 +138,10 @@ private[graft] object DeltaLayout {
     * that the next swap clears. A failed second rename restores the
     * prior live before failing loudly. (Object-store renames are
     * copies — run this against a filesystem with atomic-ish rename or
-    * behind a path pointer.) */
+    * behind a path pointer.) Callers: the `*Stream` compactions,
+    * [[IndexMaintenance]], and `graft.sources.Sinks`' upsert and
+    * compaction, which also recover a crash between the renames before
+    * they read the live path. */
   def swapLive(f: FileSystem, tmp: String, live: String): Unit = {
     val liveP = new Path(live)
     val oldP = new Path(live + "__old")

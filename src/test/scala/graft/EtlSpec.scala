@@ -191,6 +191,20 @@ class EtlSpec extends AnyFunSuite with SparkSessionTestBase {
     assert(rows(0).getAs[String]("item_name") === "Milk 1L") // trimmed
     assert(rows(0).getAs[java.math.BigDecimal]("item_price").doubleValue === 5.90)
     assert(rows.map(_.getAs[String]("raw_hash")).distinct.length === 2)
+    // the declared schema reads exactly what schema inference read
+    val inferred = RawIngest.priceItems(
+      spark.read.option("multiLine", "true").json(fixture))
+    assert(df.schema === inferred.schema)
+    assert(rows.toSeq === inferred.orderBy("item_code").collect().toSeq) // raw_hash included
+  }
+
+  test("priceItemsFromJson fails a malformed feed file instead of dropping it") {
+    val fixture = java.nio.file.Files.createTempDirectory("items_bad").toString
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$fixture/feed.json"),
+      """{"Root": {"ChainId": "7290000000001", "StoreId": "042", "Items": {"Item": [""")
+    intercept[org.apache.spark.SparkException] {
+      RawIngest.priceItemsFromJson(spark, fixture).collect()
+    }
   }
 
   test("funnelConversion counts monotone first-touch chains only") {

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 import graft.sources.Sinks
 
 /** Write-side specs: partitioned landing, upsert-by-key, bucketed
@@ -35,6 +37,86 @@ class SinksSpec extends AnyFunSuite with SparkSessionTestBase {
     assert(state(0).getAs[Double]("price") === 10.0) // id=1 untouched
   }
 
+  test("upsertByKey: a key-and-version tie goes to the incoming row") {
+    import spark.implicits._
+    val path = java.nio.file.Files.createTempDirectory("upsert_tie").toString + "/state"
+    def load(price: Double) = Sinks.upsertByKey(spark,
+      Seq((1L, "2024-01-01", price), (2L, "2024-01-01", 7.0))
+        .toDF("id", "collected_at", "price"),
+      path, Seq("id"), "collected_at")
+    def prices = spark.read.parquet(path).orderBy("id").as[(Long, String, Double)]
+      .collect().toSeq
+    for (price <- Seq(10.0, 11.0, 10.0, 11.0, 11.0)) {
+      load(price)
+      assert(prices === Seq((1L, "2024-01-01", price), (2L, "2024-01-01", 7.0)))
+    }
+  }
+
+  test("upsertByKey reads the full state at every crash point of the swap") {
+    import spark.implicits._
+    import java.nio.file.{Files, Path, Paths}
+    def frame(ids: Long*) = ids.map(i => (i, "2024-01-01", i * 1.5))
+      .toDF("id", "collected_at", "price")
+    // the state before the crashed upsert holds 1, 2; the crashed one
+    // was adding 3 (its complete output sits in __staging); the next
+    // upsert adds 4
+    def crashed(at: String): Path = {
+      val base = Files.createTempDirectory("upsert_crash")
+      val live = base.resolve("state")
+      val staging = Paths.get(s"${live}__staging")
+      val old = Paths.get(s"${live}__old")
+      Sinks.upsertByKey(spark, frame(1, 2), live.toString, Seq("id"), "collected_at")
+      frame(1, 2, 3).write.mode("overwrite").parquet(staging.toString)
+      at match {
+        case "before the first rename" =>
+        case "between the renames" => Files.move(live, old)
+        case "between the renames, __staging incomplete" =>
+          Files.move(live, old)
+          Files.delete(staging.resolve("_SUCCESS"))
+        case "before the final delete" =>
+          Files.move(live, old); Files.move(staging, live)
+      }
+      live
+    }
+    for ((at, before) <- Seq(
+        "before the first rename" -> Seq(1L, 2L),
+        "between the renames" -> Seq(1L, 2L, 3L),
+        "between the renames, __staging incomplete" -> Seq(1L, 2L),
+        "before the final delete" -> Seq(1L, 2L, 3L))) {
+      val live = crashed(at)
+      Sinks.upsertByKey(spark, frame(4), live.toString, Seq("id"), "collected_at")
+      val ids = spark.read.parquet(live.toString).as[(Long, String, Double)]
+        .collect().map(_._1).sorted.toSeq
+      assert(ids === before :+ 4L, at)
+      val dir = Files.list(live.getParent)
+      try assert(dir.iterator().asScala.map(_.getFileName.toString).toList === List("state"),
+        s"$at: a sibling of the state remains")
+      finally dir.close()
+    }
+  }
+
+  test("upsertByKey propagates a state read error instead of truncating the state") {
+    import spark.implicits._
+    import java.nio.file.{Files, Paths}
+    val path = java.nio.file.Files.createTempDirectory("upsert_corrupt").toString + "/state"
+    Sinks.upsertByKey(spark, Seq((1L, "2024-01-01", 10.0)).toDF("id", "collected_at", "price"),
+      path, Seq("id"), "collected_at")
+    // a corrupt footer on the only data file (its checksum removed, so
+    // the parquet reader is what fails)
+    val dir = Files.list(Paths.get(path))
+    val part = try dir.iterator().asScala
+      .find(_.getFileName.toString.endsWith(".parquet")).get
+    finally dir.close()
+    Files.deleteIfExists(part.resolveSibling(s".${part.getFileName}.crc"))
+    val garbage = "not a parquet file".getBytes
+    Files.write(part, garbage)
+    intercept[Exception] {
+      Sinks.upsertByKey(spark, Seq((2L, "2024-01-02", 20.0)).toDF("id", "collected_at", "price"),
+        path, Seq("id"), "collected_at")
+    }
+    assert(Files.readAllBytes(part) === garbage) // the state was not replaced
+  }
+
   test("bucketed tables join without an Exchange") {
     val li = Tables.lineitem(spark, sfDir).select("l_orderkey", "l_extendedprice")
     val o = Tables.orders(spark, sfDir).select("o_orderkey", "o_totalprice")
@@ -65,6 +147,8 @@ class SinksSpec extends AnyFunSuite with SparkSessionTestBase {
     val checksum = xorsum(path)
     Sinks.compact(spark, path, targetFileBytes = 64L * 1024 * 1024)
     assert(files(path) < before)
+    for (sibling <- Seq("__compact", "__old"))
+      assert(!new java.io.File(path + sibling).exists(), s"$sibling left behind")
     val back = spark.read.parquet(path)
     assert(back.count() === rows)
     assert(xorsum(path) === checksum)
