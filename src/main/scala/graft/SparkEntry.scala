@@ -1069,7 +1069,7 @@ object SparkEntry {
     "q_event_windows" -> ((s, d) => Etl.eventWindows(Tables.events(s, d))),
     "q_ingest_stores_xml" -> ((s, _) =>
       graft.sources.RawIngest.storesFromXml(s,
-        "/root/reference/StoresFull7290700100008-000-000-20250821-002217")),
+        graft.sources.RawIngest.StoresFullReference)),
     // Section C — LLM-training-data operators
     "q_dedup_exact_docs" -> ((s, d) => Dedup.exactDocs(Tables.documents(s, d))),
     "q_dedup_minhash" -> ((s, d) => minhashPairsShared(s, d)),

@@ -24,6 +24,14 @@ import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructTyp
   */
 object RawIngest {
 
+  /** The reference checkout's StoresFull store file (PAPER.md §1 places
+    * the reference read-only at `/root/reference`); its gzip twin is
+    * this path plus `.gz`. The one place the path is spelled: the
+    * `q_ingest_stores_xml` entry reads it, and the XML parser specs and
+    * the driver-output lint test for it before they read it. */
+  val StoresFullReference: String =
+    "/root/reference/StoresFull7290700100008-000-000-20250821-002217"
+
   /** Parse price-transparency StoresFull XML (optionally .gz) into a
     * flat store dimension: one row per `<Store>` element, with the chain
     * id recovered from the feed's filename convention

