@@ -1282,13 +1282,16 @@ object SparkEntry {
       operators.Sketches.cmsCalibration(
         Tables.documents(s, d), cmsIndexShared(s, d))),
     // STREAMING index maintenance proven through the serving path:
-    // seed index from even doc_ids, stream the odd half as per-batch
-    // delta partitions (retried batches overwrite their own partition),
-    // then serve the driver's query set from seed ∪ deltas — the
-    // oracle is the SAME full-corpus BM25 SQL as q_bm25_search
+    // seed index from even doc_ids, stream the odd half as all-`add`
+    // ops through the signed index layout (retried batches overwrite
+    // their own partition), no compaction, then serve the driver's
+    // query set — the oracle is the SAME full-corpus BM25 SQL as
+    // q_bm25_search
     "q_stream_bm25" -> ((s, d) =>
-      graft.streaming.Bm25Stream.searchMaintainRun(
-        s, d, bm25QueriesDf(s), bm25QueryTermsLiteral)),
+      graft.streaming.Bm25SignedStream.searchMaintainRun(
+        s, d, bm25QueriesDf(s), bm25QueryTermsLiteral, "q_stream_bm25",
+        graft.streaming.SignedIndexLayout.stageAllAdds("doc_id"),
+        compacts = false)),
     // REMOVAL-AWARE index maintenance — the deletion lifecycle
     // extended beyond the graph family to retrieval (the reference's
     // upserts REPLACE rows and its deletes cascade): the seed index
@@ -1300,7 +1303,10 @@ object SparkEntry {
     // surviving corpus; removals subtract from df, idf, AND avgdl)
     "q_stream_bm25_signed" -> ((s, d) =>
       graft.streaming.Bm25SignedStream.searchMaintainRun(
-        s, d, bm25QueriesDf(s), bm25QueryTermsLiteral)),
+        s, d, bm25QueriesDf(s), bm25QueryTermsLiteral,
+        "q_stream_bm25_signed",
+        graft.streaming.SignedIndexLayout.stageSignedCorpus,
+        compacts = true)),
     // STREAMING sketch maintenance (the third DeltaLayout instance,
     // after the rollup and the inverted index): seed counters from
     // even doc_ids, stream the odd half as per-batch counter deltas,
@@ -1310,16 +1316,17 @@ object SparkEntry {
     // direct-built, proven by the hash gate)
     "q_stream_cms" -> ((s, d) =>
       graft.streaming.CmsStream.cmsMaintainRun(s, d)),
-    // STREAMING vector-index maintenance (the fourth DeltaLayout
-    // instance): centroids train once on the even-id seed, odd ids
-    // stream through assignment-only maintenance (a narrow broadcast
+    // STREAMING vector-index maintenance: centroids train once on the
+    // even-id seed, odd ids stream as all-`add` ops through the signed
+    // index layout's assignment-only maintenance (a narrow broadcast
     // map per batch — the FAISS add-after-train contract), compaction
     // runs inside the measured path, and the served top-k equals the
     // direct one-batch assignment twin (assignment at fixed centroids
     // is deterministic; rows-only — equality proven through serving
     // in spec, like the other ANN families)
     "q_stream_ivf" -> ((s, d) =>
-      graft.streaming.IvfStream.ivfMaintainRun(s, d)),
+      graft.streaming.IvfSignedStream.ivfMaintainRun(s, d, "q_stream_ivf",
+        graft.streaming.SignedIndexLayout.stageAllAdds("vec_id"))),
     // REMOVAL-AWARE vector-index maintenance: the SignedIndexLayout
     // machine's third instantiation (BM25, phrase, now ANN) — a
     // document deleted upstream must leave the ANN index too. Adds
@@ -1329,7 +1336,9 @@ object SparkEntry {
     // reason; signed == direct-assignment-of-surviving-corpus
     // equality proven through serving in spec
     "q_stream_ivf_signed" -> ((s, d) =>
-      graft.streaming.IvfSignedStream.ivfMaintainRun(s, d)),
+      graft.streaming.IvfSignedStream.ivfMaintainRun(s, d,
+        "q_stream_ivf_signed",
+        graft.streaming.IvfSignedStream.stageSignedVectors)),
     // STREAMING SemDeDup — the semantic-dedup verdict maintained
     // while embeddings arrive, completing the SemDeDup lifecycle
     // (batch / incremental / streaming): centroids train once on the
@@ -1578,13 +1587,15 @@ object SparkEntry {
         operators.Retrieval.positionalIndex(prev), prev, docs)
       operators.Retrieval.phraseFromIndex(maintained, phraseQueriesDf(s))
     }),
-    // measured STREAMING positional maintenance (the Bm25Stream layout
-    // minus the meta frame): seed from half the corpus, stream the
-    // rest, serve phrase search from seed ∪ deltas — hash-matches the
-    // same full-corpus phrase oracle
+    // measured STREAMING positional maintenance: seed from half the
+    // corpus, stream the rest as all-`add` ops through the signed
+    // index layout, no compaction, serve phrase search — hash-matches
+    // the same full-corpus phrase oracle
     "q_stream_phrase" -> ((s, d) =>
-      streaming.PhraseStream.searchMaintainRun(
-        s, d, phraseQueriesDf(s), phraseTermsLiteral)),
+      streaming.PhraseSignedStream.searchMaintainRun(
+        s, d, phraseQueriesDf(s), phraseTermsLiteral, "q_stream_phrase",
+        streaming.SignedIndexLayout.stageAllAdds("doc_id"),
+        compacts = false)),
     // REMOVAL-AWARE positional maintenance: the signed BM25 posture
     // on the phrase index, riding the SAME SignedIndexLayout state
     // machine (add/REPLACE/remove-by-id, last-writer-wins) — a
@@ -1593,7 +1604,10 @@ object SparkEntry {
     // surviving corpus: the hash gate IS the proof
     "q_stream_phrase_signed" -> ((s, d) =>
       streaming.PhraseSignedStream.searchMaintainRun(
-        s, d, phraseQueriesDf(s), phraseTermsLiteral)),
+        s, d, phraseQueriesDf(s), phraseTermsLiteral,
+        "q_stream_phrase_signed",
+        streaming.SignedIndexLayout.stageSignedCorpus,
+        compacts = true)),
     // verbatim-sequence decontamination: per-doc contains-the-exact-
     // benchmark-phrase verdict — the fifth face of the decontamination
     // matrix, full oracle; the indexed form probes the persisted

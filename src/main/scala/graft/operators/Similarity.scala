@@ -651,7 +651,7 @@ object Similarity {
     * so the rows are bit-identical to what ivfIndex would have
     * produced had these vectors been present at training time
     * (assignment at fixed centroids is deterministic — the equality
-    * [[graft.streaming.IvfStream]] serves and its spec proves). */
+    * [[graft.streaming.IvfSignedStream]] serves and its spec proves). */
   def ivfAssignAgainst(emb: DataFrame, cents: DataFrame): DataFrame = {
     graft.functions.VectorFunctions.register(emb.sparkSession)
     val e = withNorm(emb)

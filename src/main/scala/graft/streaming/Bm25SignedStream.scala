@@ -11,9 +11,8 @@ import graft.operators.Retrieval
   * (the reference's upserts REPLACE rows and its deletes cascade:
   * rabbitmq-to-postgres/app.py:98 — a document index over that data
   * model must honor replacement and deletion, not only arrival).
-  * Where [[Bm25Stream]] carries the append-only contract, this
-  * harness takes signed rows (doc_id, text, op ∈ add|remove) with
-  * last-writer-wins semantics through the shared
+  * The harness takes signed rows (doc_id, text, op ∈ add|remove)
+  * with last-writer-wins semantics through the shared
   * [[SignedIndexLayout]] state machine: an `add` of an existing id
   * REPLACES it, a `remove` deletes BY ID (deletion events carry
   * keys, not bodies), net state per doc resolves by LAST op in
@@ -28,9 +27,10 @@ import graft.operators.Retrieval
   * vanishes from df, idf, and avgdl because its doclen row leaves
   * the live face, while the scoring path stays a term-IN-pruned
   * scan — a search served from the signed state is provably
-  * identical to a full rebuild over the surviving corpus (the
-  * driver entry hash-matches the SAME full-corpus DuckDB oracle as
-  * q_bm25_search; the pushdown is pinned in PlanRegressionSpec). */
+  * identical to a full rebuild over the surviving corpus (both
+  * driver entries hash-match the SAME full-corpus DuckDB oracle as
+  * q_bm25_search; the pushdown is pinned in PlanRegressionSpec). An
+  * append-only stream is the all-`add` case of the same machine. */
 object Bm25SignedStream {
 
   private val Cols = Seq("term", "doc_id", "tf", "dl")
@@ -75,11 +75,12 @@ object Bm25SignedStream {
   def serveSearch(
       spark: SparkSession, seedPath: String, deltaPath: String,
       queries: DataFrame, termsLiteral: Seq[String], k: Int = 10): DataFrame = {
+    val live = SignedIndexLayout
+      .resolve(spark, seedPath, deltaPath, Long.MaxValue)
     val p = SignedIndexLayout
-      .livePostings(spark, seedPath, deltaPath, Long.MaxValue, Cols)
+      .liveFace(spark, seedPath, deltaPath, live, Cols)
     val meta = SignedIndexLayout
-      .livePostings(spark, seedPath, deltaPath, Long.MaxValue, DlCols,
-        face = "doclen")
+      .liveFace(spark, seedPath, deltaPath, live, DlCols, face = "doclen")
       .agg(count(lit(1)).as("n_docs"), sum("dl").as("tot_tokens"))
     Retrieval.bm25FromIndex(p, meta, queries, termsLiteral, k = k)
   }
@@ -89,44 +90,23 @@ object Bm25SignedStream {
     SignedIndexLayout.compact(spark, seedPath, deltaPath, Cols,
       extraFaces = Seq("doclen" -> DlCols))
 
-  /** Bounded end-to-end run — the measured driver entry
-    * (q_stream_bm25_signed): the seed index holds yesterday's corpus
-    * — a third of today's docs verbatim, a third with STALE text
-    * (the upsert-replace case), and an alien slice that today
-    * DELETES; the stream delivers today's adds (new + replacing) and
-    * the alien removals (by id, empty text), compacts mid-lifecycle,
-    * and serves the driver's query set — which must hash-match the
-    * SAME full-corpus DuckDB oracle as q_bm25_search: signed
-    * stream-maintained == full rebuild over the surviving corpus,
-    * proven by the gate. */
+  /** Bounded end-to-end run — the measured driver entries, whose
+    * served search must hash-match the SAME full-corpus DuckDB oracle
+    * as q_bm25_search (stream-maintained == full rebuild over the
+    * surviving corpus, proven by the gate). `stage` is the entry's
+    * lifecycle: q_stream_bm25_signed stages
+    * [[SignedIndexLayout.stageSignedCorpus]] (yesterday's corpus with
+    * a stale and a deleted slice; today's adds, replacements and
+    * removals by id) and compacts mid-lifecycle; q_stream_bm25 stages
+    * [[SignedIndexLayout.stageAllAdds]] (even ids seed, odd ids
+    * arrive) and serves without compacting. */
   def searchMaintainRun(
       spark: SparkSession, dir: String,
-      queries: DataFrame, termsLiteral: Seq[String]): DataFrame = {
-    val docs = graft.Tables.documents(spark, dir).select("doc_id", "text")
-    val root = java.nio.file.Files.createTempDirectory("graft_bm25s_stream")
-    val src = root.resolve("src").toString
-    val seedPath = root.resolve("seed").toString
-    val deltaP = root.resolve("delta").toString
-    try {
-      val staged = StreamMeter.timeSeed("q_stream_bm25_signed") {
-        SignedIndexLayout.stageSignedCorpus(
-          docs, seedIndex(_, seedPath), src)
-      }
-      val q = indexMaintain(
-        spark.readStream.schema(staged.schema)
-          .option("maxFilesPerTrigger", 1).parquet(src),
-        seedPath, deltaP, root.resolve("ckpt").toString)
-      StreamMeter.timePhase("q_stream_bm25_signed", "batch") {
-        try q.processAllAvailable() finally q.stop()
-      }
-      // mid-lifecycle compaction: the served search must be unchanged
-      StreamMeter.timePhase("q_stream_bm25_signed", "compact") {
-        compact(spark, seedPath, deltaP)
-      }
-      StreamMeter.timePhase("q_stream_bm25_signed", "serve") {
-        serveSearch(spark, seedPath, deltaP, queries, termsLiteral)
-          .localCheckpoint()
-      }
-    } finally DeltaLayout.rmTree(root)
-  }
+      queries: DataFrame, termsLiteral: Seq[String], entry: String,
+      stage: SignedIndexLayout.Staging, compacts: Boolean): DataFrame =
+    SignedIndexLayout.run(spark, entry,
+      graft.Tables.documents(spark, dir).select("doc_id", "text"),
+      stage, compacts, seedIndex, indexMaintain,
+      compact(spark, _, _),
+      serveSearch(spark, _, _, queries, termsLiteral))
 }

@@ -8,11 +8,10 @@ import graft.operators.Sketches
 
 /** Streaming count-min maintenance: keep the point-frequency sketch
   * current while documents ARRIVE, without ever re-tokenizing the
-  * lake — the streaming face of [[Sketches.cmsPartials]] and the third
+  * lake — the streaming face of [[Sketches.cmsPartials]] and an
   * instance of the [[DeltaLayout]] state pattern ([[RollupStream]] for
-  * additive rollups, [[Bm25Stream]] for the inverted index; CMS
-  * counters are linear, so the same `seed + per-batch delta
-  * partitions` layout serves exactly).
+  * additive rollups; CMS counters are linear, so the same
+  * `seed + per-batch delta partitions` layout serves exactly).
   *
   * Each micro-batch sketches ONLY its own documents and writes the
   * (d, bucket, cnt) counter deltas under its batch_id partition
@@ -99,11 +98,7 @@ object CmsStream {
     import org.apache.hadoop.fs.Path
     if (!DeltaLayout.hasDeltaPartitions(spark, deltaPath)) return // nothing to fold
     val fs = DeltaLayout.fs(spark, deltaPath)
-    val maxBatch = spark.read.parquet(deltaPath)
-      .agg(max(col("batch_id").cast("long"))).head() match {
-        case r if r.isNullAt(0) => -1L
-        case r => r.getLong(0)
-      }
+    val maxBatch = DeltaLayout.maxBatchId(spark, deltaPath)
     // fold ONLY batches ≤ maxBatch: one committed between this read and
     // the swap stays a live delta (> the new watermark) for next time
     val merged = liveCmsBounded(spark, seedPath, deltaPath, maxBatch)

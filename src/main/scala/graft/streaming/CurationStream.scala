@@ -101,8 +101,8 @@ object CurationStream {
     * scan and the entry shares q_decontaminate_phrase's FULL oracle.
     * The witness-count aggregation makes the projection stateful in
     * append mode, so the gate runs per-batch via foreachBatch — the
-    * Bm25Stream maintenance mechanics with a verdict sink instead of
-    * an index. */
+    * [[SignedIndexLayout]] maintenance mechanics with a verdict sink
+    * instead of an index. */
   def phraseGateRun(
       spark: SparkSession, dir: String,
       phrases: Seq[(Long, String)]): DataFrame = {

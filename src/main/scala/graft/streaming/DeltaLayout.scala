@@ -1,12 +1,13 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Shared primitives of the `seed artifact + per-batch delta
   * partitions` exactly-once state layout ([[RollupStream]],
-  * [[Bm25Stream]], [[CmsStream]], [[SignedGraphStream]] and the
-  * other `*Stream` machines):
+  * [[CmsStream]], [[SignedGraphStream]], [[SignedIndexLayout]] and
+  * the other `*Stream` machines):
   *
   *  - the compaction watermark rides INSIDE the seed directory
   *    ("_"-prefixed: invisible to the parquet reader, like _SUCCESS),
@@ -174,7 +175,7 @@ private[graft] object DeltaLayout {
   def liveDeltaRows(
       spark: SparkSession, seedPath: String, deltaPath: String,
       upTo: Long, cols: Seq[String], emptySchemaFrom: String,
-      distinctRows: Boolean): org.apache.spark.sql.DataFrame = {
+      distinctRows: Boolean): DataFrame = {
     import org.apache.spark.sql.functions.col
     val folded = foldedThrough(spark, seedPath)
     if (!hasDeltaPartitions(spark, deltaPath))
@@ -189,15 +190,42 @@ private[graft] object DeltaLayout {
     }
   }
 
-  /** Highest landed batch id in the delta directory (−1 when none). */
-  def maxBatchId(spark: SparkSession, deltaPath: String): Long =
-    spark.read.parquet(deltaPath)
-      .agg(org.apache.spark.sql.functions
-        .max(org.apache.spark.sql.functions.col("batch_id").cast("long")))
-      .head() match {
-        case r if r.isNullAt(0) => -1L
-        case r => r.getLong(0)
+  /** `spark.read.parquet(dir)` without its schema-inference Spark job:
+    * the schema is the one Spark stored in the footer of one part file,
+    * read on the driver. A `batch_id=` partitioned directory (a delta
+    * face) gets `batch_id` as a long column. Falls back to inference
+    * when no part file carries a Spark schema. */
+  def readParquet(spark: SparkSession, dir: String): DataFrame = {
+    val f = fs(spark, dir)
+    def parts(p: Path) = f.listStatus(p).toSeq
+      .filter(_.getPath.getName.startsWith("part-"))
+    val top = f.listStatus(new Path(dir)).toSeq
+    val partitions = top.filter(_.getPath.getName.startsWith("batch_id="))
+    val footerSchema = (parts(new Path(dir)) ++
+        partitions.headOption.toSeq.flatMap(st => parts(st.getPath)))
+      .headOption.flatMap { st =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(
+            st, spark.sparkContext.hadoopConfiguration))
+        try Option(r.getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata"))
+        finally r.close()
       }
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
+    footerSchema match {
+      case Some(s) =>
+        spark.read
+          .schema(if (partitions.isEmpty) s else s.add("batch_id", "long"))
+          .parquet(dir)
+      case None => spark.read.parquet(dir)
+    }
+  }
+
+  /** Highest landed batch id in the delta directory (−1 when none) —
+    * the [[batchIds]] listing, so a compaction learns its fold range
+    * without submitting a Spark job. */
+  def maxBatchId(spark: SparkSession, deltaPath: String): Long =
+    batchIds(spark, deltaPath).maxOption.getOrElse(-1L)
 
   /** Delete ONLY the delta partitions folded into the seed
     * (batch_id ≤ `upTo`) — see the class doc for why a blanket delete

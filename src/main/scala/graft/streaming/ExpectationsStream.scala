@@ -185,11 +185,7 @@ object ExpectationsStream {
     import org.apache.hadoop.fs.Path
     if (!DeltaLayout.hasDeltaPartitions(spark, deltaPath)) return
     val fs = DeltaLayout.fs(spark, deltaPath)
-    val maxBatch = spark.read.parquet(deltaPath)
-      .agg(max(col("batch_id").cast("long"))).head() match {
-        case r if r.isNullAt(0) => -1L
-        case r => r.getLong(0)
-      }
+    val maxBatch = DeltaLayout.maxBatchId(spark, deltaPath)
     // consumed once by the write — no checkpoint (it would merge to
     // blocks and then copy the blocks out); kind-partitioned like the
     // seed so post-compaction serves keep their partition pruning

@@ -19,13 +19,16 @@ import graft.operators.Similarity
   *
   * The FAISS train-once contract is untouched: centroids train at
   * seed time and stay FIXED; each batch's adds assign against the
-  * broadcast centroid table (a narrow map, no shuffle) exactly like
-  * the grow-only [[IvfStream]]; compaction carries the centroid face
-  * across the seed swap verbatim. Because assignment at fixed
-  * centroids is deterministic, the signed live index is bit-identical
-  * to a direct assignment of the SURVIVING corpus against the same
-  * centroids — proven through the serving path in spec; the driver
-  * entry is rows-only for the q_stream_ivf reason. */
+  * broadcast centroid table (a narrow map, no shuffle); compaction
+  * carries the centroid face across the seed swap verbatim. Because
+  * assignment at fixed centroids is deterministic, the signed live
+  * index is bit-identical to a direct assignment of the SURVIVING
+  * corpus against the same centroids — proven through the serving
+  * path in spec. An append-only stream (the FAISS add-after-train
+  * contract, q_stream_ivf) is the all-`add` case of the same
+  * machine. Both driver entries are rows-only: the served top-k's
+  * equality to the direct twin is spec-asserted, like the other ANN
+  * families. */
 object IvfSignedStream {
 
   private val Cols = Seq("vec_id", "cid")
@@ -47,7 +50,7 @@ object IvfSignedStream {
       checkpoint: String): StreamingQuery =
     SignedIndexLayout.maintain(newOps, seedPath, deltaPath, checkpoint,
       adds => Similarity.ivfAssignAgainst(adds,
-        adds.sparkSession.read.parquet(s"$seedPath/centroids")),
+        DeltaLayout.readParquet(adds.sparkSession, s"$seedPath/centroids")),
       "IvfSignedStream", idCol = "vec_id", payloadCols = Seq("embedding"))
 
   /** The live (vec_id, cid) assignment under last-writer-wins. */
@@ -66,7 +69,7 @@ object IvfSignedStream {
       nProbe: Int = 4): DataFrame =
     Similarity.embedIvfTopKFromIndex(
       liveAssign(spark, seedPath, deltaPath),
-      spark.read.parquet(s"$seedPath/centroids"),
+      DeltaLayout.readParquet(spark, s"$seedPath/centroids"),
       emb, nQueries, k, nProbe)
 
   /** Fold the net signed state into a fresh seed; the centroid face
@@ -75,52 +78,42 @@ object IvfSignedStream {
     SignedIndexLayout.compact(spark, seedPath, deltaPath, Cols,
       idCol = "vec_id", carryFaces = Seq("centroids"))
 
-  /** Bounded end-to-end run — the measured driver entry
-    * (q_stream_ivf_signed): the seed index holds yesterday's vectors
-    * (a third verbatim, a third STALE — negated, so today's re-embeds
-    * genuinely move list assignments — and an alien slice deleted
-    * today); the stream delivers today's adds (new + re-embedded) and
-    * the alien removals by id, compacts mid-lifecycle, and serves the
-    * standard top-k — which must equal the direct twin: the surviving
-    * corpus assigned in ONE batch against the same seed centroids
-    * (spec-asserted; rows-only at the driver for the q_stream_ivf
-    * reason). */
-  def ivfMaintainRun(spark: SparkSession, dir: String): DataFrame = {
+  /** The signed vector staging (q_stream_ivf_signed): the seed
+    * holds yesterday's vectors — a third verbatim, a third STALE
+    * (negated, so today's re-embeds genuinely move list assignments)
+    * and an alien slice deleted today — and the stream, split in two
+    * files, delivers today's adds (new + re-embedded) and the alien
+    * removals by id. */
+  val stageSignedVectors: SignedIndexLayout.Staging =
+    (emb, seedWith, src) => {
+      val stale = emb.filter(col("vec_id") % 3 === 1)
+        .withColumn("embedding", expr("transform(embedding, x -> -x)"))
+      val alien = emb.filter(col("vec_id") % 3 === 2)
+        .select(col("vec_id").bitwiseOR(SignedIndexLayout.AlienIdBit)
+          .as("vec_id"), col("embedding"))
+      seedWith(emb.filter(col("vec_id") % 3 === 0)
+        .unionByName(stale).unionByName(alien))
+      val d = emb.filter(col("vec_id") % 3 =!= 0)
+        .withColumn("op", lit("add"))
+        .unionByName(alien.withColumn("op", lit("remove")))
+      d.repartition(2).write.mode("overwrite").parquet(src)
+      d
+    }
+
+  /** Bounded end-to-end run — the measured driver entries: `stage`
+    * the seed and the op stream, compact mid-lifecycle (both entries
+    * do), and serve the standard top-k, which must equal the direct
+    * twin — the surviving corpus assigned in ONE batch against the
+    * same seed centroids. q_stream_ivf_signed stages
+    * [[stageSignedVectors]]; q_stream_ivf stages
+    * [[SignedIndexLayout.stageAllAdds]] (even ids train and seed the
+    * index, odd ids arrive). */
+  def ivfMaintainRun(
+      spark: SparkSession, dir: String, entry: String,
+      stage: SignedIndexLayout.Staging): DataFrame = {
     val emb = graft.Tables.embeddings(spark, dir).select("vec_id", "embedding")
-    val root = java.nio.file.Files.createTempDirectory("graft_ivfs_stream")
-    val src = root.resolve("src").toString
-    val seedP = root.resolve("seed").toString
-    val deltaP = root.resolve("delta").toString
-    try {
-      val staged = StreamMeter.timeSeed("q_stream_ivf_signed") {
-        val stale = emb.filter(col("vec_id") % 3 === 1)
-          .withColumn("embedding", expr("transform(embedding, x -> -x)"))
-        val alien = emb.filter(col("vec_id") % 3 === 2)
-          .select(col("vec_id").bitwiseOR(SignedIndexLayout.AlienIdBit)
-            .as("vec_id"), col("embedding"))
-        seedIndex(
-          emb.filter(col("vec_id") % 3 === 0)
-            .unionByName(stale).unionByName(alien),
-          seedP)
-        val d = emb.filter(col("vec_id") % 3 =!= 0)
-          .withColumn("op", lit("add"))
-          .unionByName(alien.withColumn("op", lit("remove")))
-        d.repartition(2).write.mode("overwrite").parquet(src)
-        d
-      }
-      val q = indexMaintain(
-        spark.readStream.schema(staged.schema)
-          .option("maxFilesPerTrigger", 1).parquet(src),
-        seedP, deltaP, root.resolve("ckpt").toString)
-      StreamMeter.timePhase("q_stream_ivf_signed", "batch") {
-        try q.processAllAvailable() finally q.stop()
-      }
-      StreamMeter.timePhase("q_stream_ivf_signed", "compact") {
-        compact(spark, seedP, deltaP)
-      }
-      StreamMeter.timePhase("q_stream_ivf_signed", "serve") {
-        searchLive(spark, seedP, deltaP, emb).localCheckpoint()
-      }
-    } finally DeltaLayout.rmTree(root)
+    SignedIndexLayout.run(spark, entry, emb, stage, compacts = true,
+      seedIndex(_, _), indexMaintain, compact(spark, _, _),
+      searchLive(spark, _, _, emb))
   }
 }

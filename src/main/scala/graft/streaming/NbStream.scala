@@ -10,10 +10,10 @@ import graft.operators.Classifier
   * current while labeled documents ARRIVE, without ever re-tokenizing
   * the lake — the streaming face of [[Classifier.nbCounts]] and
   * another instance of the [[DeltaLayout]] state pattern
-  * ([[RollupStream]] for additive rollups, [[Bm25Stream]] for the
-  * inverted index, [[CmsStream]] for count-min counters; NB per-class
-  * term counts are linear in documents, so the same `seed + per-batch
-  * delta partitions` layout serves exactly).
+  * ([[RollupStream]] for additive rollups, [[CmsStream]] for
+  * count-min counters; NB per-class term counts are linear in
+  * documents, so the same `seed + per-batch delta partitions` layout
+  * serves exactly).
   *
   * Each micro-batch tokenizes ONLY its own documents, labels them with
   * the caller's labeler, and writes its (term, n_pos, n_neg) count
@@ -102,11 +102,7 @@ object NbStream {
     import org.apache.hadoop.fs.Path
     if (!DeltaLayout.hasDeltaPartitions(spark, deltaPath)) return // nothing to fold
     val fs = DeltaLayout.fs(spark, deltaPath)
-    val maxBatch = spark.read.parquet(deltaPath)
-      .agg(max(col("batch_id").cast("long"))).head() match {
-        case r if r.isNullAt(0) => -1L
-        case r => r.getLong(0)
-      }
+    val maxBatch = DeltaLayout.maxBatchId(spark, deltaPath)
     // fold ONLY batches ≤ maxBatch: one committed between this read and
     // the swap stays a live delta (> the new watermark) for next time
     val merged = liveNbBounded(spark, seedPath, deltaPath, maxBatch)

@@ -13,8 +13,9 @@ import graft.operators.Retrieval
   * state, so removal-awareness is purely the layout's
   * last-writer-wins reconstruction — a replaced doc serves its new
   * positions, a removed doc's phrases stop matching, period.
-  * The measured driver entry hash-matches the SAME full-corpus
-  * DuckDB oracle as q_phrase_search over the surviving corpus. */
+  * Both measured driver entries hash-match the SAME full-corpus
+  * DuckDB oracle as q_phrase_search over the surviving corpus; the
+  * append-only one is the all-`add` case of the same machine. */
 object PhraseSignedStream {
 
   private val Cols = Seq("term", "doc_id", "pos")
@@ -46,35 +47,19 @@ object PhraseSignedStream {
   def compact(spark: SparkSession, seedPath: String, deltaPath: String): Unit =
     SignedIndexLayout.compact(spark, seedPath, deltaPath, Cols)
 
-  /** Bounded end-to-end run — the measured driver entry
-    * (q_stream_phrase_signed): same staging as the signed BM25 run
-    * (seed = yesterday's corpus with a stale third and an alien
-    * slice; stream = adds + replacements + removals by id), compact
-    * mid-lifecycle, serve the driver's phrase set — hash-matching
-    * the full-corpus q_phrase_search oracle over the surviving
-    * corpus. */
+  /** Bounded end-to-end run — the measured driver entries, which
+    * hash-match the full-corpus q_phrase_search oracle over the
+    * surviving corpus. `stage` is the entry's lifecycle, as in
+    * [[Bm25SignedStream.searchMaintainRun]]: q_stream_phrase_signed
+    * stages the signed corpus and compacts mid-lifecycle,
+    * q_stream_phrase stages all-`add` arrivals without compacting. */
   def searchMaintainRun(
       spark: SparkSession, dir: String,
-      queries: DataFrame, termsLiteral: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val docs = graft.Tables.documents(spark, dir).select("doc_id", "text")
-    val root = java.nio.file.Files.createTempDirectory("graft_phrs_stream")
-    val src = root.resolve("src").toString
-    val seedPath = root.resolve("seed").toString
-    val deltaP = root.resolve("delta").toString
-    try {
-      val staged = StreamMeter.timeSeed("q_stream_phrase_signed") {
-        SignedIndexLayout.stageSignedCorpus(
-          docs, seedIndex(_, seedPath), src)
-      }
-      val q = indexMaintain(
-        spark.readStream.schema(staged.schema)
-          .option("maxFilesPerTrigger", 1).parquet(src),
-        seedPath, deltaP, root.resolve("ckpt").toString)
-      try q.processAllAvailable() finally q.stop()
-      compact(spark, seedPath, deltaP)
-      serveSearch(spark, seedPath, deltaP, queries, termsLiteral)
-        .localCheckpoint()
-    } finally DeltaLayout.rmTree(root)
-  }
+      queries: DataFrame, termsLiteral: Seq[String], entry: String,
+      stage: SignedIndexLayout.Staging, compacts: Boolean): DataFrame =
+    SignedIndexLayout.run(spark, entry,
+      graft.Tables.documents(spark, dir).select("doc_id", "text"),
+      stage, compacts, seedIndex, indexMaintain,
+      compact(spark, _, _),
+      serveSearch(spark, _, _, queries, termsLiteral))
 }

@@ -109,12 +109,7 @@ object RollupStream {
     val dp = new Path(deltaPath)
     val fs = dp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!DeltaLayout.hasDeltaPartitions(spark, deltaPath)) return // nothing to fold
-    val deltas = spark.read.parquet(deltaPath)
-    // partition-column inference reads batch_id back as INT — cast
-    val maxBatch = deltas.agg(max(col("batch_id").cast("long"))).head() match {
-      case r if r.isNullAt(0) => -1L
-      case r => r.getLong(0)
-    }
+    val maxBatch = DeltaLayout.maxBatchId(spark, deltaPath)
     val prevFolded = DeltaLayout.foldedThrough(spark, seedPath)
     // fold ONLY batches ≤ maxBatch: one committed between this read and
     // the swap stays a live delta (> the new watermark) for next time

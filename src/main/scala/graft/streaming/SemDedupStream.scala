@@ -10,7 +10,7 @@ import graft.operators.Similarity
   * current while embeddings ARRIVE, completing the SemDeDup lifecycle
   * (batch [[Similarity.semDeDup]] / incremental
   * [[Similarity.semDeDupIncremental]] / streaming): the
-  * [[IvfStream]] train-once/add-forever posture applied to the
+  * [[IvfSignedStream]] train-once/add-forever posture applied to the
   * verdict artifact.
   *
   * Centroids train ONCE at seed time and are then FIXED; each
@@ -67,7 +67,7 @@ object SemDedupStream {
       .start()
 
   /** (live slim assignments, live DELTA slice) bounded at `upTo` —
-    * the [[IvfStream.liveIndex]] watermark discipline: a micro-batch
+    * the [[DeltaLayout]] watermark discipline: a micro-batch
     * committed while a compact is writing stays a live delta. */
   private def liveAssign(
       spark: SparkSession, seedPath: String, deltaPath: String,
@@ -120,11 +120,7 @@ object SemDedupStream {
     import org.apache.hadoop.fs.Path
     if (!DeltaLayout.hasDeltaPartitions(spark, deltaPath)) return
     val fs = DeltaLayout.fs(spark, deltaPath)
-    val maxBatch = spark.read.parquet(deltaPath)
-      .agg(max(col("batch_id").cast("long"))).head() match {
-        case r if r.isNullAt(0) => -1L
-        case r => r.getLong(0)
-      }
+    val maxBatch = DeltaLayout.maxBatchId(spark, deltaPath)
     val (assign, delta) = liveAssign(spark, seedPath, deltaPath, maxBatch)
     val folded = Similarity.semDeDupIncremental(
         emb, assign, spark.read.parquet(s"$seedPath/verdict"),

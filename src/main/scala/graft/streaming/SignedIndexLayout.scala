@@ -5,10 +5,12 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** The REMOVAL-AWARE document-index state machine shared by the
-  * signed retrieval streams ([[Bm25SignedStream]],
-  * [[PhraseSignedStream]]) — one machinery, two indexes, the same
-  * move as [[graft.operators.Dedup.fingerprintPairs]] carrying both
-  * text SimHash and image dHash. Signed rows (doc_id, text,
+  * index streams ([[Bm25SignedStream]], [[PhraseSignedStream]],
+  * [[IvfSignedStream]] and the signed dedup, image and SemDeDup
+  * streams) — one machinery, many indexes, the same move as
+  * [[graft.operators.Dedup.fingerprintPairs]] carrying both text
+  * SimHash and image dHash. An append-only stream is its all-`add`
+  * case ([[stageAllAdds]]). Signed rows (doc_id, text,
   * op ∈ add|remove) with LAST-WRITER-WINS semantics:
   *
   *  - batches land their guarded (doc_id, op) rows under
@@ -68,27 +70,7 @@ private[graft] object SignedIndexLayout {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         if (batchId > DeltaLayout.foldedThrough(batch.sparkSession, seedPath)) {
-          // ONE pass lands the dup guard (guide §2.4): a window count
-          // over idCol flags a doc_id appearing twice in this batch in
-          // the same exchange that groups it — the previous
-          // groupBy + join-back shape scanned the batch source twice
-          // and paid two exchanges for the same verdict.
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col(idCol))
-          val checked = batch.toDF()
-            .select((col(idCol) +: payloadCols.map(col)) :+
-              when(col("op").isin("add", "remove"), col("op"))
-                .otherwise(raise_error(concat(
-                  lit(s"$who: op must be add|remove, got "),
-                  col("op")))).as("op"): _*)
-            .withColumn("n_rows", count(lit(1)).over(w))
-            .select((col(idCol) +: payloadCols.map(col)) :+
-              when(col("n_rows") > 1, raise_error(concat(
-                  lit(s"$who: $idCol "), col(idCol).cast("string"),
-                  lit(" appears more than once in one batch — ambiguous"))))
-                .otherwise(col("op")).as("op"): _*)
-            .localCheckpoint()
-          val adds = checked.filter(col("op") === "add")
+          val adds = batch.toDF().filter(col("op") === "add")
             .select((idCol +: payloadCols).map(col): _*)
           // the primary face is computed ONCE: extra faces receive it
           // alongside the adds slice, so a face that is a projection
@@ -111,8 +93,25 @@ private[graft] object SignedIndexLayout {
                 .partitionBy("batch_id")
                 .parquet(s"$deltaPath/$face")
             })
-          // ops lands LAST — the batch's commit face
-          checked.select(col(idCol), col("op"))
+          // ops lands LAST — the batch's commit face — and carries the
+          // landing guards: a window count over the (id, op) rows alone
+          // flags a doc_id appearing twice in this batch. A batch that
+          // fails a guard leaves face partitions whose ops never landed,
+          // which never serve, exactly as after a crash before the commit
+          val w = org.apache.spark.sql.expressions.Window
+            .partitionBy(col(idCol))
+          batch.toDF()
+            .select(col(idCol),
+              when(col("op").isin("add", "remove"), col("op"))
+                .otherwise(raise_error(concat(
+                  lit(s"$who: op must be add|remove, got "), col("op"))))
+                .as("op"))
+            .withColumn("n_rows", count(lit(1)).over(w))
+            .select(col(idCol),
+              when(col("n_rows") > 1, raise_error(concat(
+                  lit(s"$who: $idCol "), col(idCol).cast("string"),
+                  lit(" appears more than once in one batch — ambiguous"))))
+                .otherwise(col("op")).as("op"))
             .withColumn("batch_id", lit(batchId))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
@@ -122,55 +121,91 @@ private[graft] object SignedIndexLayout {
       }
       .start()
 
-  /** The live rows of one face under last-writer-wins; `cols` is the
-    * instantiator's schema for that face (must contain `idCol`). */
+  /** The resolved live signed state of one layout: the compaction
+    * watermark, the fold bound `upTo`, the batches whose `ops` commit
+    * face landed in that range, and the last-writer-wins net op per id
+    * (`net` = None when no ops batch is live — the seed alone is live).
+    * Resolve it ONCE per serve or compaction and read every face
+    * against it ([[liveFace]]): faces of one layout share the net
+    * frame. */
+  final case class Live(
+      folded: Long, upTo: Long, landedOps: Seq[Long],
+      net: Option[DataFrame])
+
+  def resolve(
+      spark: SparkSession, seedPath: String, deltaPath: String,
+      upTo: Long, idCol: String = "doc_id"): Live = {
+    val folded = DeltaLayout.foldedThrough(spark, seedPath)
+    // trust only face partitions whose batch also landed its ops
+    // partition: maintenance writes the faces first and ops LAST (the
+    // commit face), so a crash between the two leaves an orphan face
+    // partition that must not serve until the batch replays. The id
+    // list is a driver-side partition listing, bounded by batch
+    // count, and `isin` on the partition column prunes the orphan at
+    // planning time.
+    val landedOps = DeltaLayout.batchIds(spark, s"$deltaPath/ops")
+      .filter(b => b > folded && b <= upTo)
+    if (landedOps.isEmpty) return Live(folded, upTo, Nil, None)
+    val ops = DeltaLayout.readParquet(spark, s"$deltaPath/ops")
+      .filter(liveBatch(folded, upTo))
+      .select(col(idCol), col("op"),
+        col("batch_id").cast("long").as("last_batch"))
+    // the landing guard keeps ids unique inside one batch, so the ops
+    // of a single live batch already are the net ops; across batches
+    // the last one wins, resolved once and checkpointed
+    val net =
+      if (landedOps.sizeIs == 1) ops
+      else ops.groupBy(idCol)
+        .agg(max(struct(col("last_batch"), col("op"))).as("last"))
+        .select(col(idCol), col("last.op").as("op"),
+          col("last.last_batch").as("last_batch"))
+        .localCheckpoint()
+    Live(folded, upTo, landedOps, Some(net))
+  }
+
+  private def liveBatch(folded: Long, upTo: Long) =
+    col("batch_id").cast("long") > folded &&
+      col("batch_id").cast("long") <= upTo
+
+  /** The live rows of one face under last-writer-wins against the
+    * resolved state `live`; `cols` is the instantiator's schema for
+    * that face (must contain `idCol`). */
+  def liveFace(
+      spark: SparkSession, seedPath: String, deltaPath: String,
+      live: Live, cols: Seq[String], idCol: String = "doc_id",
+      face: String = "postings"): DataFrame = {
+    val seedP = DeltaLayout.readParquet(spark, s"$seedPath/$face")
+      .select(cols.map(col): _*)
+    val net = live.net match {
+      case None => return seedP
+      case Some(n) => n
+    }
+    // a seed row serves only while no live op touches its id; a delta
+    // row serves only from its id's LAST add batch. Every landed delta
+    // row's id has an op in the same batch, so the seed alone feeds
+    // the anti-join and the delta alone the last-add join. Both joins
+    // take `net` whole, so one broadcast of it serves every join of a
+    // plan.
+    val untouched = seedP.join(net, Seq(idCol), "left_anti")
+    if (!DeltaLayout.hasDeltaPartitions(spark, s"$deltaPath/$face"))
+      return untouched
+    val lastAdds = DeltaLayout.readParquet(spark, s"$deltaPath/$face")
+      .filter(liveBatch(live.folded, live.upTo))
+      .filter(col("batch_id").isin(live.landedOps: _*))
+      .join(net, Seq(idCol))
+      .filter(col("op") === "add" && col("batch_id") === col("last_batch"))
+      .select(cols.map(col): _*)
+    untouched.unionByName(lastAdds)
+  }
+
+  /** The live rows of one face under last-writer-wins — [[resolve]]
+    * then [[liveFace]], for a caller that reads a single face. */
   def livePostings(
       spark: SparkSession, seedPath: String, deltaPath: String,
       upTo: Long, cols: Seq[String], idCol: String = "doc_id",
-      face: String = "postings"): DataFrame = {
-    val folded = DeltaLayout.foldedThrough(spark, seedPath)
-    val seedP = spark.read.parquet(s"$seedPath/$face")
-      .select(cols.map(col): _*)
-    if (!DeltaLayout.hasDeltaPartitions(spark, s"$deltaPath/ops"))
-      return seedP
-    def live = col("batch_id").cast("long") > folded &&
-      col("batch_id").cast("long") <= upTo
-    // trust only postings partitions whose batch also landed its ops
-    // partition: maintenance writes postings first and ops LAST (the
-    // commit face), so a crash between the two leaves an orphan
-    // postings partition — without this filter its docs would serve
-    // via the `untouched` anti-join ALONGSIDE the seed rows for the
-    // same doc (duplicate postings) until the batch replays. The id
-    // list is a driver-side partition listing, bounded by batch count,
-    // and `isin` on the partition column prunes at planning time.
-    val landedOps = DeltaLayout.batchIds(spark, s"$deltaPath/ops")
-      .filter(b => b > folded && b <= upTo)
-    val deltaP =
-      if (!DeltaLayout.hasDeltaPartitions(spark, s"$deltaPath/$face"))
-        seedP.withColumn("src_batch", lit(-1L)).limit(0)
-      else spark.read.parquet(s"$deltaPath/$face")
-        .filter(live)
-        .filter(col("batch_id").cast("long").isin(landedOps: _*))
-        .select((cols.map(col) :+
-          col("batch_id").cast("long").as("src_batch")): _*)
-    val allP = seedP.withColumn("src_batch", lit(-1L)).unionByName(deltaP)
-    val net = spark.read.parquet(s"$deltaPath/ops")
-      .filter(live)
-      .select(col(idCol), col("op"),
-        col("batch_id").cast("long").as("batch_id"))
-      .groupBy(idCol)
-      .agg(max(struct(col("batch_id"), col("op"))).as("last"))
-      .select(col(idCol), col("last.op").as("op"),
-        col("last.batch_id").as("last_batch"))
-      .localCheckpoint()
-    val untouched = allP.join(net, Seq(idCol), "left_anti")
-    val lastAdds = allP
-      .join(net.filter(col("op") === "add").select(idCol, "last_batch"),
-        Seq(idCol))
-      .filter(col("src_batch") === col("last_batch"))
-      .drop("last_batch")
-    untouched.unionByName(lastAdds).select(cols.map(col): _*)
-  }
+      face: String = "postings"): DataFrame =
+    liveFace(spark, seedPath, deltaPath,
+      resolve(spark, seedPath, deltaPath, upTo, idCol), cols, idCol, face)
 
   /** Fold the net signed state into a fresh seed (watermark +
     * crash-safe swap; a batch committed mid-compact stays live).
@@ -189,6 +224,7 @@ private[graft] object SignedIndexLayout {
     if (!DeltaLayout.hasDeltaPartitions(spark, s"$deltaPath/ops")) return
     val fs = DeltaLayout.fs(spark, seedPath)
     val maxBatch = DeltaLayout.maxBatchId(spark, s"$deltaPath/ops")
+    val live = resolve(spark, seedPath, deltaPath, maxBatch, idCol)
     val faces = ("postings" -> cols) +: extraFaces
     val tmp = seedPath + "__maint"
     // each face's reconstruction chain and each carried copy is an
@@ -197,11 +233,10 @@ private[graft] object SignedIndexLayout {
     // swaps after all writes land, so no checkpoint is needed
     DeltaLayout.overlap(
       faces.map { case (face, fcols) =>
-        () => livePostings(
-            spark, seedPath, deltaPath, maxBatch, fcols, idCol, face)
+        () => liveFace(spark, seedPath, deltaPath, live, fcols, idCol, face)
           .write.mode("overwrite").parquet(s"$tmp/$face")
       } ++ carryFaces.map { f =>
-        () => spark.read.parquet(s"$seedPath/$f")
+        () => DeltaLayout.readParquet(spark, s"$seedPath/$f")
           .write.mode("overwrite").parquet(s"$tmp/$f")
       })
     val newFolded = math.max(maxBatch,
@@ -213,6 +248,61 @@ private[graft] object SignedIndexLayout {
     faces.foreach { case (face, _) =>
       DeltaLayout.deleteFoldedPartitions(
         fs, new Path(s"$deltaPath/$face"), newFolded) }
+  }
+
+  /** A measured run's staging: seed the index through `seedWith`
+    * (the entry's `seedIndex`), land the signed (id, payload..., op)
+    * stream under `src` as one file per micro-batch, and return the
+    * staged frame (its schema seeds the file source). */
+  type Staging = (DataFrame, DataFrame => Unit, String) => DataFrame
+
+  /** The insert-only entries' staging: the seed indexes the even ids
+    * and ONE micro-batch adds the odd ids. An `add` of a new id
+    * serves exactly what the `seed ∪ deltas` union of an append-only
+    * index serves, so these runs match the same full-corpus oracles
+    * as a rebuild. */
+  def stageAllAdds(idCol: String): Staging = (rows, seedWith, src) => {
+    seedWith(rows.filter(col(idCol) % 2 === 0))
+    val d = rows.filter(col(idCol) % 2 =!= 0).withColumn("op", lit("add"))
+    d.coalesce(1).write.mode("overwrite").parquet(src)
+    d
+  }
+
+  /** The measured lifecycle every index stream entry shares: `stage`
+    * the seed and the op stream, drain the stream one file per
+    * micro-batch, compact mid-lifecycle when the entry `compacts`,
+    * and serve — each phase timed under `entry` in [[StreamMeter]].
+    * The served frame is checkpointed off the temp dirs before they
+    * are removed. */
+  def run(
+      spark: SparkSession, entry: String, rows: DataFrame,
+      stage: Staging, compacts: Boolean,
+      seedIndex: (DataFrame, String) => Unit,
+      maintain: (DataFrame, String, String, String) => StreamingQuery,
+      compact: (String, String) => Unit,
+      serve: (String, String) => DataFrame): DataFrame = {
+    val root = java.nio.file.Files.createTempDirectory(s"graft_$entry")
+    val src = root.resolve("src").toString
+    val seedPath = root.resolve("seed").toString
+    val deltaPath = root.resolve("delta").toString
+    try {
+      val staged = StreamMeter.timeSeed(entry) {
+        stage(rows, seedIndex(_, seedPath), src)
+      }
+      val q = maintain(
+        spark.readStream.schema(staged.schema)
+          .option("maxFilesPerTrigger", 1).parquet(src),
+        seedPath, deltaPath, root.resolve("ckpt").toString)
+      StreamMeter.timePhase(entry, "batch") {
+        try q.processAllAvailable() finally q.stop()
+      }
+      if (compacts) StreamMeter.timePhase(entry, "compact") {
+        compact(seedPath, deltaPath)
+      }
+      StreamMeter.timePhase(entry, "serve") {
+        serve(seedPath, deltaPath).localCheckpoint()
+      }
+    } finally DeltaLayout.rmTree(root)
   }
 
   /** The measured signed-run corpus staging shared by the driver

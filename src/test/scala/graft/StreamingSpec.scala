@@ -838,37 +838,40 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
 
   test("stream-maintained BM25 index serves identically to a full rebuild") {
     import spark.implicits._
-    import graft.streaming.Bm25Stream
+    import graft.streaming.{Bm25SignedStream, SignedIndexLayout}
     val qs = Seq((0L, "dup scan"), (1L, "hash join"))
       .toDF("query_id", "query_text")
     val terms = Seq("dup", "scan", "hash", "join")
-    // driver-entry shape: seed evens, stream odds, serve
-    val streamed = graft.streaming.Bm25Stream
-      .searchMaintainRun(spark, sfDir, qs, terms)
+    // driver-entry shape: seed evens, stream odds as all-`add` ops, serve
+    val streamed = Bm25SignedStream.searchMaintainRun(spark, sfDir, qs, terms,
+        "q_stream_bm25", SignedIndexLayout.stageAllAdds("doc_id"),
+        compacts = false)
       .collect().map(_.toString).toSeq
-    // the driver entry indexes the full documents schema; equality vs
-    // the online full-corpus search is the stream == rebuild claim
+    // equality vs the online full-corpus search is the stream ==
+    // rebuild claim
     val online = graft.operators.Retrieval
       .bm25Search(Tables.documents(spark, sfDir), qs)
       .collect().map(_.toString).toSeq
     assert(streamed === online)
     assert(streamed.nonEmpty)
     // restart safety on a planted mini-corpus: same checkpoint replays
-    // nothing; a re-run must not double-count postings or meta
+    // nothing; a re-run must not double-count postings or doc lengths
     val root = java.nio.file.Files.createTempDirectory("bm25_retry")
     val src = root.resolve("src").toString
     val mini = Seq((1L, "aa bb"), (2L, "bb cc"), (3L, "cc"))
       .toDF("doc_id", "text")
-    mini.write.mode("overwrite").parquet(src)
-    Bm25Stream.seedIndex(mini.limit(0), root.resolve("seed").toString)
+    def adds(docs: org.apache.spark.sql.DataFrame) =
+      docs.withColumn("op", lit("add"))
+    adds(mini).write.mode("overwrite").parquet(src)
+    Bm25SignedStream.seedIndex(mini.limit(0), root.resolve("seed").toString)
     def runOnce(ckpt: String = root.resolve("ckpt").toString): Unit = {
-      val q = Bm25Stream.indexMaintain(
-        spark.readStream.schema(mini.schema).parquet(src),
+      val q = Bm25SignedStream.indexMaintain(
+        spark.readStream.schema(adds(mini).schema).parquet(src),
         root.resolve("seed").toString,
         root.resolve("delta").toString, ckpt)
       try q.processAllAvailable() finally q.stop()
     }
-    def serve() = Bm25Stream.serveSearch(spark,
+    def serve() = Bm25SignedStream.serveSearch(spark,
         root.resolve("seed").toString, root.resolve("delta").toString,
         Seq((0L, "bb cc")).toDF("query_id", "query_text"), Seq("bb", "cc"))
       .collect().map(_.toString).toSeq
@@ -882,9 +885,10 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
     // compaction folds deltas into the seed without changing results;
     // only the FOLDED batch_id partitions are deleted (a batch landing
     // mid-compact must survive — the delta root itself stays)
-    Bm25Stream.compact(spark,
+    Bm25SignedStream.compact(spark,
       root.resolve("seed").toString, root.resolve("delta").toString)
     assert(serve() === first)
+    val faces = Seq("postings", "doclen", "ops")
     def deltaPartitions(sub: String): Seq[String] = {
       val d = root.resolve("delta").resolve(sub)
       if (!java.nio.file.Files.exists(d)) Seq.empty
@@ -894,14 +898,14 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
           .map(_.getFileName.toString).filter(_.startsWith("batch_id=")).toSeq
       }
     }
-    assert(deltaPartitions("postings").isEmpty && deltaPartitions("meta").isEmpty)
+    assert(faces.forall(deltaPartitions(_).isEmpty))
     // a replayed batch at or below the watermark (fresh checkpoint,
     // same files) is skipped — the folded seed already carries it
     runOnce(root.resolve("ckpt2").toString)
     assert(serve() === first)
     // genuinely new arrivals through the original lineage still count
     val extra = Seq((9L, "bb zz")).toDF("doc_id", "text")
-    extra.write.mode("append").parquet(src)
+    adds(extra).write.mode("append").parquet(src)
     runOnce()
     val withExtra = graft.operators.Retrieval
       .bm25Search(mini.unionByName(extra),
@@ -911,24 +915,26 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
     // a delta partition ABOVE the fold range (the state a batch
     // committed mid-compact leaves behind) serves exactly once and is
     // folded by the NEXT compact — never silently deleted: plant
-    // batch_id=100 alongside the live batch-1 delta, compact, re-check
+    // batch_id=100 alongside the live batch-1 delta on EVERY face
+    // (the layout serves only batches whose `ops` commit face
+    // landed), compact, re-check
     val lateDocs = Seq((42L, "bb late")).toDF("doc_id", "text")
-    val (lp, lm) = graft.operators.Retrieval.bm25Index(lateDocs)
-    lp.withColumn("batch_id", lit(100L)).write.mode("append")
-      .partitionBy("batch_id")
-      .parquet(root.resolve("delta").resolve("postings").toString)
-    lm.withColumn("batch_id", lit(100L)).write.mode("append")
-      .partitionBy("batch_id")
-      .parquet(root.resolve("delta").resolve("meta").toString)
+    val lp = graft.operators.Retrieval.bm25Index(lateDocs)._1
+    Seq("postings" -> lp, "doclen" -> lp.select("doc_id", "dl").distinct(),
+        "ops" -> adds(lateDocs).select("doc_id", "op")).foreach {
+      case (face, df) => df.withColumn("batch_id", lit(100L))
+        .write.mode("append").partitionBy("batch_id")
+        .parquet(root.resolve("delta").resolve(face).toString)
+    }
     val withLate = graft.operators.Retrieval
       .bm25Search(mini.unionByName(extra).unionByName(lateDocs),
         Seq((0L, "bb cc")).toDF("query_id", "query_text"))
       .collect().map(_.toString).toSeq
     assert(serve() === withLate)
-    Bm25Stream.compact(spark,
+    Bm25SignedStream.compact(spark,
       root.resolve("seed").toString, root.resolve("delta").toString)
     assert(serve() === withLate)
-    assert(deltaPartitions("postings").isEmpty && deltaPartitions("meta").isEmpty)
+    assert(faces.forall(deltaPartitions(_).isEmpty))
   }
 
   test("streaming phrase gate equals the batch decontamination scan") {
@@ -953,12 +959,14 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
 
   test("stream-maintained positional index serves phrases identically to a rebuild") {
     import spark.implicits._
-    import graft.streaming.PhraseStream
+    import graft.streaming.{PhraseSignedStream, SignedIndexLayout}
     val qs = Seq((0L, "dup scan"), (1L, "hash join"))
       .toDF("query_id", "query_text")
     val terms = Seq("dup", "scan", "hash", "join")
-    // driver-entry shape: seed evens, stream odds, serve
-    val streamed = PhraseStream.searchMaintainRun(spark, sfDir, qs, terms)
+    // driver-entry shape: seed evens, stream odds as all-`add` ops, serve
+    val streamed = PhraseSignedStream.searchMaintainRun(
+        spark, sfDir, qs, terms, "q_stream_phrase",
+        SignedIndexLayout.stageAllAdds("doc_id"), compacts = false)
       .collect().map(_.toString).toSeq
     val online = graft.operators.Retrieval
       .phraseSearch(Tables.documents(spark, sfDir), qs)
@@ -970,16 +978,18 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
     val src = root.resolve("src").toString
     val mini = Seq((1L, "aa bb"), (2L, "bb cc"), (3L, "cc"))
       .toDF("doc_id", "text")
-    mini.write.mode("overwrite").parquet(src)
-    PhraseStream.seedIndex(mini.limit(0), root.resolve("seed").toString)
+    def adds(docs: org.apache.spark.sql.DataFrame) =
+      docs.withColumn("op", lit("add"))
+    adds(mini).write.mode("overwrite").parquet(src)
+    PhraseSignedStream.seedIndex(mini.limit(0), root.resolve("seed").toString)
     def runOnce(ckpt: String = root.resolve("ckpt").toString): Unit = {
-      val q = PhraseStream.indexMaintain(
-        spark.readStream.schema(mini.schema).parquet(src),
+      val q = PhraseSignedStream.indexMaintain(
+        spark.readStream.schema(adds(mini).schema).parquet(src),
         root.resolve("seed").toString,
         root.resolve("delta").toString, ckpt)
       try q.processAllAvailable() finally q.stop()
     }
-    def serve() = PhraseStream.serveSearch(spark,
+    def serve() = PhraseSignedStream.serveSearch(spark,
         root.resolve("seed").toString, root.resolve("delta").toString,
         Seq((0L, "bb cc")).toDF("query_id", "query_text"), Seq("bb", "cc"))
       .collect().map(_.toString).toSeq
@@ -991,11 +1001,11 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
       .phraseSearch(mini, Seq((0L, "bb cc")).toDF("query_id", "query_text"))
       .collect().map(_.toString).toSeq)
     // compaction folds without changing results; folded partitions go
-    PhraseStream.compact(spark,
+    PhraseSignedStream.compact(spark,
       root.resolve("seed").toString, root.resolve("delta").toString)
     assert(serve() === first)
-    def deltaPartitions: Seq[String] = {
-      val d = root.resolve("delta").resolve("postings")
+    def deltaPartitions: Seq[String] = Seq("postings", "ops").flatMap { f =>
+      val d = root.resolve("delta").resolve(f)
       if (!java.nio.file.Files.exists(d)) Seq.empty
       else {
         import scala.jdk.CollectionConverters._
@@ -1009,7 +1019,7 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
     assert(serve() === first)
     // genuinely new arrivals still count
     val extra = Seq((9L, "bb cc zz")).toDF("doc_id", "text")
-    extra.write.mode("append").parquet(src)
+    adds(extra).write.mode("append").parquet(src)
     runOnce()
     val withExtra = graft.operators.Retrieval
       .phraseSearch(mini.unionByName(extra),
@@ -1017,21 +1027,70 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
       .collect().map(_.toString).toSeq
     assert(serve() === withExtra)
     // a delta above the fold range (committed mid-compact) survives
-    // the compact and folds next time — never silently deleted
+    // the compact and folds next time — never silently deleted; it is
+    // planted on the `ops` commit face too, or the layout would not
+    // serve it
     val lateDocs = Seq((42L, "bb cc late")).toDF("doc_id", "text")
-    graft.operators.Retrieval.positionalIndex(lateDocs)
-      .withColumn("batch_id", lit(100L)).write.mode("append")
-      .partitionBy("batch_id")
-      .parquet(root.resolve("delta").resolve("postings").toString)
+    Seq("postings" -> graft.operators.Retrieval.positionalIndex(lateDocs),
+        "ops" -> adds(lateDocs).select("doc_id", "op")).foreach {
+      case (face, df) => df.withColumn("batch_id", lit(100L))
+        .write.mode("append").partitionBy("batch_id")
+        .parquet(root.resolve("delta").resolve(face).toString)
+    }
     val withLate = graft.operators.Retrieval
       .phraseSearch(mini.unionByName(extra).unionByName(lateDocs),
         Seq((0L, "bb cc")).toDF("query_id", "query_text"))
       .collect().map(_.toString).toSeq
     assert(serve() === withLate)
-    PhraseStream.compact(spark,
+    PhraseSignedStream.compact(spark,
       root.resolve("seed").toString, root.resolve("delta").toString)
     assert(serve() === withLate)
     assert(deltaPartitions.isEmpty)
+  }
+
+  test("DeltaLayout.maxBatchId reads the highest batch id from the partition listing") {
+    import graft.streaming.DeltaLayout
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Files.createTempDirectory("max_batch")
+    val delta = root.resolve("delta")
+    val bare = java.nio.file.Files.createDirectories(root.resolve("bare"))
+    Seq(3L, 10L).foreach { b =>
+      java.nio.file.Files.createDirectories(delta.resolve(s"batch_id=$b"))
+    }
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        starts.add(String.valueOf(
+          e.properties.getProperty("spark.job.description"))): Unit
+    }
+    // listener events arrive asynchronously but in order, and a new
+    // listener may still be handed a job start queued before it was
+    // added: bracket the calls between two sentinel jobs and check only
+    // what started between them
+    def sentinel(name: String): Unit = {
+      spark.sparkContext.setJobDescription(name)
+      spark.sparkContext.parallelize(Seq(1), 1).count()
+      spark.sparkContext.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!starts.contains(name) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(starts.contains(name))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      sentinel("maxBatchId before")
+      // numeric, not lexical: "batch_id=3" sorts after "batch_id=10"
+      assert(DeltaLayout.maxBatchId(spark, delta.toString) === 10L)
+      assert(DeltaLayout.maxBatchId(spark, bare.toString) === -1L)
+      sentinel("maxBatchId after")
+      assert(starts.asScala.toSeq
+        .dropWhile(_ != "maxBatchId before").drop(1)
+        .takeWhile(_ != "maxBatchId after").isEmpty)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      DeltaLayout.rmTree(root)
+    }
   }
 
   test("rollupMaintain is per-batch idempotent and restart-safe") {
@@ -1514,20 +1573,23 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
   }
 
   test("ivfMaintain assigns at fixed centroids; stream == direct through serving") {
-    import graft.streaming.IvfStream
+    import graft.streaming.IvfSignedStream
     val emb = Tables.embeddings(spark, sfDir)
     val root = java.nio.file.Files.createTempDirectory("ivf_stream")
     val src = root.resolve("src").toString
     val seedP = root.resolve("seed").toString
     val deltaP = root.resolve("delta").toString
-    emb.filter(col("vec_id") % 2 =!= 0).write.mode("overwrite").parquet(src)
-    IvfStream.seedIndex(emb.filter(col("vec_id") % 2 === 0), seedP)
+    val arrivals = emb.filter(col("vec_id") % 2 =!= 0)
+      .withColumn("op", lit("add"))
+    arrivals.write.mode("overwrite").parquet(src)
+    IvfSignedStream.seedIndex(emb.filter(col("vec_id") % 2 === 0), seedP)
     def runOnce(ckpt: String = root.resolve("ckpt").toString): Unit = {
-      val q = IvfStream.indexMaintain(
-        spark.readStream.schema(emb.schema).parquet(src), seedP, deltaP, ckpt)
+      val q = IvfSignedStream.indexMaintain(
+        spark.readStream.schema(arrivals.schema).parquet(src),
+        seedP, deltaP, ckpt)
       try q.processAllAvailable() finally q.stop()
     }
-    def serve() = IvfStream.searchLive(spark, seedP, deltaP, emb)
+    def serve() = IvfSignedStream.searchLive(spark, seedP, deltaP, emb)
       .collect().map(_.toString).toSeq
     runOnce()
     val first = serve()
@@ -1546,7 +1608,7 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
     // compaction folds deltas into the seed without changing results;
     // centroids survive the swap bit-for-bit
     val centsBefore = cents.collect().map(_.toString).sorted.toSeq
-    IvfStream.compact(spark, seedP, deltaP)
+    IvfSignedStream.compact(spark, seedP, deltaP)
     assert(serve() === first)
     assert(spark.read.parquet(s"$seedP/centroids")
       .collect().map(_.toString).sorted.toSeq === centsBefore)
@@ -1556,7 +1618,7 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
   }
 
   test("ivfMaintainRun (the measured driver entry) equals the direct assignment twin") {
-    val got = graft.streaming.IvfStream.ivfMaintainRun(spark, sfDir)
+    val got = SparkEntry.queries("q_stream_ivf")(spark, sfDir)
       .collect().map(_.toString).toSeq
     assert(got.nonEmpty)
     // ten queries, k=5 — bounded output with atomic columns
