@@ -197,7 +197,7 @@ object Classifier {
     * maintainable core. Counts are LINEAR in documents (each doc
     * contributes an independent integer vector), which is what makes
     * the NB model incrementally maintainable ([[nbModelIncremental]])
-    * and streamable ([[graft.streaming.NbStream]]): merged counts are
+    * and streamable ([[graft.streaming.AdditiveStream.nb]]): merged counts are
     * a term-wise sum, and the smoothed weights re-derive from the
     * merged frame bit-identically. One partial-combined (term)
     * aggregation — the same shuffle shape as [[nbTrain]] itself. */

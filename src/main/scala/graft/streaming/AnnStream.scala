@@ -58,23 +58,14 @@ object AnnStream {
         val idx = spark.read.parquet(indexPath)
           .join(broadcast(emb.select("vec_id")), Seq("vec_id"), "left_anti")
           .select(col("vec_id"), col("qv"), col("scale"), col("norm"))
-        Similarity.sqNearDupAgainst(emb, idx, threshold, planes, tables)
-          // defense in depth against an out-of-band writer duplicating
-          // an index vec_id (the re-join fans candidates back out)
-          .dropDuplicates("vec_new", "vec_corpus")
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(pairsPath)
-        if (growIndex) {
-          Similarity.sqIndex(emb)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(indexPath)
-        }
+        DeltaLayout.landBatch(
+          Similarity.sqNearDupAgainst(emb, idx, threshold, planes, tables)
+            // defense in depth against an out-of-band writer duplicating
+            // an index vec_id (the re-join fans candidates back out)
+            .dropDuplicates("vec_new", "vec_corpus"),
+          batchId, pairsPath)
+        if (growIndex)
+          DeltaLayout.landBatch(Similarity.sqIndex(emb), batchId, indexPath)
       }
       .start()
 

@@ -141,50 +141,21 @@ object DedupSignedStream {
   def gateMaintainRun(
       spark: SparkSession, dir: String, threshold: Double = 0.5): DataFrame = {
     val docs = graft.Tables.documents(spark, dir).select("doc_id", "text")
-    val root = java.nio.file.Files.createTempDirectory("graft_dedup_signed")
-    val src = root.resolve("src").toString
-    val seedP = root.resolve("seed").toString
-    val deltaP = root.resolve("delta").toString
     val reversedText =
       concat_ws(" ", reverse(split(col("text"), " ", -1))).as("text")
-    try {
-      val staged = StreamMeter.timeSeed("q_stream_dedup_signed") {
-        val stale = docs.filter(col("doc_id") % 3 === 1)
-          .withColumn("text", concat(col("text"), lit(" stalecopy")))
-        val alien = docs.filter(col("doc_id") % 3 === 2)
-          .select(col("doc_id").bitwiseOR(SignedIndexLayout.AlienIdBit)
-            .as("doc_id"), reversedText)
-        seedIndex(docs.filter(col("doc_id") % 3 === 0)
-          .unionByName(stale).unionByName(alien), seedP)
-        val d = docs.filter(col("doc_id") % 3 =!= 0)
-          .withColumn("op", lit("add"))
-          .unionByName(alien.select(col("doc_id"),
-            lit("").as("text"), lit("remove").as("op")))
-        d.repartition(2).write.mode("overwrite").parquet(src)
-        d
-      }
-      val q = indexMaintain(
-        spark.readStream.schema(staged.schema)
-          .option("maxFilesPerTrigger", 1).parquet(src),
-        seedP, deltaP, root.resolve("ckpt").toString)
-      StreamMeter.timePhase("q_stream_dedup_signed", "batch") {
-        try q.processAllAvailable() finally q.stop()
-      }
-      StreamMeter.timePhase("q_stream_dedup_signed", "compact") {
-        compact(spark, seedP, deltaP)
-      }
-      // re-submissions: deleted-alien content (every 10th alien
-      // source) under fresh ids ∪ exact copies of surviving docs
-      val probe = docs.filter(col("doc_id") % 30 === 2)
+    // re-submissions: deleted-alien content (every 10th alien
+    // source) under fresh ids ∪ exact copies of surviving docs
+    val probe = docs.filter(col("doc_id") % 30 === 2)
+      .select(col("doc_id").bitwiseOR(ProbeIdBit).as("doc_id"),
+        reversedText)
+      .unionByName(docs.filter(col("doc_id") % 30 === 0)
         .select(col("doc_id").bitwiseOR(ProbeIdBit).as("doc_id"),
-          reversedText)
-        .unionByName(docs.filter(col("doc_id") % 30 === 0)
-          .select(col("doc_id").bitwiseOR(ProbeIdBit).as("doc_id"),
-            col("text")))
-      StreamMeter.timePhase("q_stream_dedup_signed", "serve") {
-        gate(spark, seedP, deltaP, probe, threshold = threshold)
-          .localCheckpoint()
-      }.orderBy("doc_new", "doc_corpus")
-    } finally DeltaLayout.rmTree(root)
+          col("text")))
+    DeltaLayout.run(spark, "q_stream_dedup_signed", compacts = true,
+      (seed, src) => SignedIndexLayout.stageSignedCorpus(reversedText)(
+        docs, seedIndex(_, seed), src),
+      indexMaintain(_, _, _, _), compact(spark, _, _),
+      gate(spark, _, _, probe, threshold = threshold))
+      .orderBy("doc_new", "doc_corpus")
   }
 }

@@ -77,28 +77,20 @@ object DedupStream {
         val idx = spark.read.parquet(indexPath)
           .join(broadcast(docs.select("doc_id")), Seq("doc_id"), "left_anti")
           .select(col("doc_id"), col("sig"))
-        Dedup.minhashPairsAgainst(docs, idx, shingleLen, numHashes, bands, threshold)
-          // defense in depth: a doc_id duplicated IN THE INDEX by an
-          // out-of-band writer duplicates its pair rows (candidate
-          // dedup runs before the signature re-join, so the re-join
-          // fans back out) — collapse at the sink boundary
-          .dropDuplicates("doc_new", "doc_corpus")
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(pairsPath)
-        if (growIndex) {
-          // idempotent growth, mirroring the pairs sink: the batch's
-          // signatures REPLACE their own batch_id partition on retry
-          // instead of double-appending
-          Dedup.minhashSignatures(docs, shingleLen, numHashes)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(indexPath)
-        }
+        DeltaLayout.landBatch(
+          Dedup.minhashPairsAgainst(docs, idx, shingleLen, numHashes, bands, threshold)
+            // defense in depth: a doc_id duplicated IN THE INDEX by an
+            // out-of-band writer duplicates its pair rows (candidate
+            // dedup runs before the signature re-join, so the re-join
+            // fans back out) — collapse at the sink boundary
+            .dropDuplicates("doc_new", "doc_corpus"),
+          batchId, pairsPath)
+        // idempotent growth, mirroring the pairs sink: the batch's
+        // signatures REPLACE their own batch_id partition on retry
+        // instead of double-appending
+        if (growIndex) DeltaLayout.landBatch(
+          Dedup.minhashSignatures(docs, shingleLen, numHashes),
+          batchId, indexPath)
       }
       .start()
 

@@ -1,26 +1,35 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{DataType, StructType}
 
-/** Shared primitives of the `seed artifact + per-batch delta
-  * partitions` exactly-once state layout ([[RollupStream]],
-  * [[CmsStream]], [[SignedGraphStream]], [[SignedIndexLayout]] and
-  * the other `*Stream` machines):
+/** The `seed artifact + per-batch delta partitions` exactly-once state
+  * layout every maintained `*Stream` shares ([[AdditiveStream]],
+  * [[SignedGraphStream]], [[SignedIndexLayout]], [[TrianglesStream]],
+  * [[PageRankStream]], [[SemDedupStream]], [[ExpectationsStream]]),
+  * and the one home of its protocol:
   *
+  *  - landing ([[maintain]], [[landBatch]]): a micro-batch at or below
+  *    the seed's watermark is skipped (already folded — a late retry
+  *    must not double-count); the rest land as a dynamic-overwrite
+  *    `batch_id` partition, so a retried batch replaces its own
+  *    attempt;
   *  - the compaction watermark rides INSIDE the seed directory
   *    ("_"-prefixed: invisible to the parquet reader, like _SUCCESS),
   *    so a compact's rename swap commits artifact + watermark
-  *    atomically;
-  *  - maintenance skips batches at or below the watermark (already
-  *    folded — a late retry must not double-count);
-  *  - serving excludes delta partitions at or below it (their content
-  *    lives in the seed);
-  *  - compaction deletes ONLY the folded partitions: a micro-batch the
+  *    atomically, and serving excludes delta partitions at or below
+  *    it (their content lives in the seed);
+  *  - folding ([[fold]]) writes the new seed for a FIXED batch range
+  *    and deletes ONLY the folded partitions: a micro-batch the
   *    stream commits mid-compact sits above the new watermark, the
   *    streaming checkpoint never replays a committed batch, and a
-  *    blanket delete of the delta root would lose it permanently.
+  *    blanket delete of the delta root would lose it permanently;
+  *  - the measured lifecycle ([[run]]): seed, one micro-batch per
+  *    staged file (one file for a table split in halves,
+  *    [[stageHalves]]), an optional compaction, serve.
   */
 private[graft] object DeltaLayout {
 
@@ -77,7 +86,7 @@ private[graft] object DeltaLayout {
   }
 
   /** Write the watermark marker into `dir` (the pre-swap tmp seed). */
-  def writeFoldedMarker(f: FileSystem, dir: String, value: Long): Unit = {
+  private def writeFoldedMarker(f: FileSystem, dir: String, value: Long): Unit = {
     val out = f.create(new Path(dir + "/_folded_through"), true)
     try out.write(value.toString
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -176,15 +185,13 @@ private[graft] object DeltaLayout {
       spark: SparkSession, seedPath: String, deltaPath: String,
       upTo: Long, cols: Seq[String], emptySchemaFrom: String,
       distinctRows: Boolean): DataFrame = {
-    import org.apache.spark.sql.functions.col
     val folded = foldedThrough(spark, seedPath)
     if (!hasDeltaPartitions(spark, deltaPath))
-      spark.read.parquet(emptySchemaFrom)
+      readParquet(spark, emptySchemaFrom)
         .select(cols.map(col): _*).limit(0)
     else {
-      val live = spark.read.parquet(deltaPath)
-        .filter(col("batch_id").cast("long") > folded
-          && col("batch_id").cast("long") <= upTo)
+      val live = readParquet(spark, deltaPath)
+        .filter(col("batch_id") > folded && col("batch_id") <= upTo)
         .select(cols.map(col): _*)
       if (distinctRows) live.distinct() else live
     }
@@ -230,7 +237,7 @@ private[graft] object DeltaLayout {
   /** Delete ONLY the delta partitions folded into the seed
     * (batch_id ≤ `upTo`) — see the class doc for why a blanket delete
     * is a data-loss bug. */
-  def deleteFoldedPartitions(f: FileSystem, dir: Path, upTo: Long): Unit =
+  private[graft] def deleteFoldedPartitions(f: FileSystem, dir: Path, upTo: Long): Unit =
     if (f.exists(dir)) {
       f.listStatus(dir).foreach { st =>
         val n = st.getPath.getName
@@ -240,4 +247,106 @@ private[graft] object DeltaLayout {
         if (folded) f.delete(st.getPath, true): Unit
       }
     }
+
+  /** Land one micro-batch's frame as its `batch_id` partition of
+    * `dir`, dynamic overwrite: a retried batch replaces its previous
+    * attempt instead of double-counting. */
+  def landBatch(df: DataFrame, batchId: Long, dir: String): Unit =
+    df.withColumn("batch_id", lit(batchId))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("batch_id")
+      .parquet(dir)
+
+  /** Launch maintenance over a streaming frame: every micro-batch
+    * above the seed's compaction watermark goes to `land` with its
+    * batch id; one at or below it is skipped (already folded in). */
+  def maintain(newRows: DataFrame, seedPath: String, checkpoint: String)(
+      land: (DataFrame, Long) => Unit): StreamingQuery =
+    newRows.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        if (batchId > foldedThrough(batch.sparkSession, seedPath))
+          land(batch.toDF(), batchId)
+      }
+      .start()
+
+  /** The compaction commit every stream shares: with at least one
+    * partition under the commit face (`deltaPath/commitFace`, or the
+    * delta root itself), `write(upTo, tmp)` writes the new seed faces
+    * under `seedPath__maint` for the fixed range batch_id ≤ `upTo`;
+    * the watermark marker lands beside them, [[swapLive]] commits
+    * both, and the folded partitions of every face directory under
+    * the delta root are deleted. A batch committed while `write` runs
+    * sits above `upTo` and stays live. */
+  def fold(
+      spark: SparkSession, seedPath: String, deltaPath: String,
+      commitFace: String = "")(write: (Long, String) => Unit): Unit = {
+    val commit = if (commitFace.isEmpty) deltaPath else s"$deltaPath/$commitFace"
+    if (!hasDeltaPartitions(spark, commit)) return
+    val upTo = maxBatchId(spark, commit)
+    val tmp = seedPath + "__maint"
+    write(upTo, tmp)
+    val f = fs(spark, seedPath)
+    val newFolded = math.max(upTo, foldedThrough(spark, seedPath))
+    if (newFolded >= 0) writeFoldedMarker(f, tmp, newFolded)
+    swapLive(f, tmp, seedPath)
+    val root = new Path(deltaPath)
+    val faces = f.listStatus(root).toSeq.filter { st =>
+      val n = st.getPath.getName
+      st.isDirectory && !n.startsWith("batch_id=") &&
+        !n.startsWith(".") && !n.startsWith("_")
+    }.map(_.getPath)
+    (root +: faces).foreach(deleteFoldedPartitions(f, _, newFolded))
+  }
+
+  /** The one-micro-batch staging of the measured entries that split a
+    * table in two: the rows with an even `idCol` go to `seedWith`, the
+    * odd ones are written under `src` as ONE file (one micro-batch of
+    * [[run]]) and returned. */
+  def stageHalves(
+      rows: DataFrame, idCol: String, seedWith: DataFrame => Unit,
+      src: String): DataFrame = {
+    seedWith(rows.filter(col(idCol) % 2 === 0))
+    val d = rows.filter(col(idCol) % 2 =!= 0)
+    d.coalesce(1).write.mode("overwrite").parquet(src)
+    d
+  }
+
+  /** The measured lifecycle every stream entry shares, each phase
+    * timed under `entry` in [[StreamMeter]]: `stage(seedPath, src)`
+    * writes the seed and the source files and returns a frame whose
+    * schema seeds the file source; `launch(source, seedPath,
+    * deltaPath, checkpoint)` starts the maintenance query, which
+    * drains one file per micro-batch (a staging decides the batch
+    * count by how many files it writes); the entry compacts when it
+    * `compacts`; and the served frame is checkpointed off the private
+    * temp root before the root is removed. */
+  def run(
+      spark: SparkSession, entry: String, compacts: Boolean,
+      stage: (String, String) => DataFrame,
+      launch: (DataFrame, String, String, String) => StreamingQuery,
+      compact: (String, String) => Unit,
+      serve: (String, String) => DataFrame): DataFrame = {
+    val root = java.nio.file.Files.createTempDirectory(s"graft_$entry")
+    val src = root.resolve("src").toString
+    val seedPath = root.resolve("seed").toString
+    val deltaPath = root.resolve("delta").toString
+    try {
+      val staged = StreamMeter.timeSeed(entry) { stage(seedPath, src) }
+      val q = launch(
+        spark.readStream.schema(staged.schema)
+          .option("maxFilesPerTrigger", 1).parquet(src),
+        seedPath, deltaPath, root.resolve("ckpt").toString)
+      StreamMeter.timePhase(entry, "batch") {
+        try q.processAllAvailable() finally q.stop()
+      }
+      if (compacts) StreamMeter.timePhase(entry, "compact") {
+        compact(seedPath, deltaPath)
+      }
+      StreamMeter.timePhase(entry, "serve") {
+        serve(seedPath, deltaPath).localCheckpoint()
+      }
+    } finally rmTree(root)
+  }
 }

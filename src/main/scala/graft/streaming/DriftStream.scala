@@ -41,13 +41,9 @@ object DriftStream {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val spark = batch.sparkSession
-        TextAnalysis
-          .divergenceAgainst(batch.toDF(), spark.read.parquet(refPath), threshold)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outPath)
+        DeltaLayout.landBatch(TextAnalysis
+            .divergenceAgainst(batch.toDF(), spark.read.parquet(refPath), threshold),
+          batchId, outPath)
       }
       .start()
 

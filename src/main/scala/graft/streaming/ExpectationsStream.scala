@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -59,12 +59,12 @@ object ExpectationsStream {
     spark.table(name).orderBy(idCols.map(col) :+ col("violated"): _*)
   }
 
-  // ---- Streaming VERDICT maintenance (fifth DeltaLayout instance) ----
+  // ---- Streaming VERDICT maintenance (a DeltaLayout stream) ----
   //
   // [[Expectations.partials]] counters are LINEAR (scalar/key/fkval
   // rows sum; the parentkey set merges idempotently — mergePartials
   // pins its cnt to 1), so the seed + per-batch delta partitions
-  // layout of [[CmsStream]]/[[RollupStream]] serves the whole-table
+  // layout of [[AdditiveStream]] serves the whole-table
   // verdicts exactly: a verdict table served mid-stream is provably
   // identical to verify() over everything ingested so far, and the
   // measured entry hash-matches the SAME full-battery oracle.
@@ -110,21 +110,12 @@ object ExpectationsStream {
     val subset = factChecks.map(_._1)
     val seqMap = map(factChecks.zipWithIndex.flatMap {
       case ((_, gi), j) => Seq(lit(j + 1), lit(gi + 1)) }: _*)
-    newFacts.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (batchId > DeltaLayout.foldedThrough(batch.sparkSession, seedPath)) {
-          Expectations.partials(
-              emptyTables + (factTable -> batch.toDF()), subset)
-            .withColumn("check_seq", element_at(seqMap, col("check_seq")))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(deltaPath)
-        }
-      }
-      .start()
+    DeltaLayout.maintain(newFacts, seedPath, checkpoint) { (batch, batchId) =>
+      DeltaLayout.landBatch(
+        Expectations.partials(emptyTables + (factTable -> batch), subset)
+          .withColumn("check_seq", element_at(seqMap, col("check_seq"))),
+        batchId, deltaPath)
+    }
   }
 
   /** The live verdict table: seed ⊕ delta partitions above the
@@ -133,46 +124,32 @@ object ExpectationsStream {
     * seed alone. */
   def liveVerdicts(
       spark: SparkSession, seedPath: String, deltaPath: String,
-      checks: Seq[(String, Check)]): DataFrame =
-    liveVerdictsBounded(spark, seedPath, deltaPath, checks, Long.MaxValue)
-
-  private def liveVerdictsBounded(
-      spark: SparkSession, seedPath: String, deltaPath: String,
-      checks: Seq[(String, Check)], upTo: Long): DataFrame = {
+      checks: Seq[(String, Check)]): DataFrame = {
     // SPLIT serving (guide §6 + §2.4): the seed artifact stays a LAZY
     // kind-partitioned scan — each verdict branch's kind filter prunes
     // at planning time — and the bounded delta rows ride the split's
     // one checkpoint; bit-equal to serveVerdicts(mergePartials(...))
     // (the serveVerdictsSplit contract, spec-asserted; the driver's
     // full-battery oracle proves it independently).
-    val seed = spark.read.parquet(seedPath)
-      .select("check_seq", "kind", "k", "cnt")
-    val delta =
-      if (!DeltaLayout.hasDeltaPartitions(spark, deltaPath)) seed.limit(0)
-      else {
-        val folded = DeltaLayout.foldedThrough(spark, seedPath)
-        spark.read.parquet(deltaPath)
-          .filter(col("batch_id").cast("long") > folded
-            && col("batch_id").cast("long") <= upTo)
-          .select("check_seq", "kind", "k", "cnt")
-      }
+    val (seed, delta) = seedAndDelta(spark, seedPath, deltaPath, Long.MaxValue)
     Expectations.serveVerdictsSplit(seed, delta, checks)
   }
 
-  private def mergedBounded(
+  /** The seed partials and the live delta partials at or below
+    * `upTo` (empty when no delta partition landed). */
+  private def seedAndDelta(
       spark: SparkSession, seedPath: String, deltaPath: String,
-      upTo: Long): DataFrame = {
+      upTo: Long): (DataFrame, DataFrame) = {
     val seed = spark.read.parquet(seedPath)
       .select("check_seq", "kind", "k", "cnt")
     if (!DeltaLayout.hasDeltaPartitions(spark, deltaPath))
-      Expectations.mergePartials(Seq(seed))
+      (seed, seed.limit(0))
     else {
       val folded = DeltaLayout.foldedThrough(spark, seedPath)
-      Expectations.mergePartials(Seq(seed,
-        spark.read.parquet(deltaPath)
-          .filter(col("batch_id").cast("long") > folded
-            && col("batch_id").cast("long") <= upTo)
-          .select("check_seq", "kind", "k", "cnt")))
+      (seed, spark.read.parquet(deltaPath)
+        .filter(col("batch_id").cast("long") > folded
+          && col("batch_id").cast("long") <= upTo)
+        .select("check_seq", "kind", "k", "cnt"))
     }
   }
 
@@ -182,21 +159,14 @@ object ExpectationsStream {
     * verdicts are unchanged by construction (spec asserts equality
     * across a compaction). */
   def compact(spark: SparkSession, seedPath: String, deltaPath: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    if (!DeltaLayout.hasDeltaPartitions(spark, deltaPath)) return
-    val fs = DeltaLayout.fs(spark, deltaPath)
-    val maxBatch = DeltaLayout.maxBatchId(spark, deltaPath)
     // consumed once by the write — no checkpoint (it would merge to
     // blocks and then copy the blocks out); kind-partitioned like the
     // seed so post-compaction serves keep their partition pruning
-    val merged = mergedBounded(spark, seedPath, deltaPath, maxBatch)
-    val tmp = seedPath + "__maint"
-    merged.write.mode("overwrite").partitionBy("kind").parquet(tmp)
-    val newFolded = math.max(maxBatch,
-      DeltaLayout.foldedThrough(spark, seedPath))
-    if (newFolded >= 0) DeltaLayout.writeFoldedMarker(fs, tmp, newFolded)
-    DeltaLayout.swapLive(fs, tmp, seedPath)
-    DeltaLayout.deleteFoldedPartitions(fs, new Path(deltaPath), newFolded)
+    DeltaLayout.fold(spark, seedPath, deltaPath) { (upTo, tmp) =>
+      val (seed, delta) = seedAndDelta(spark, seedPath, deltaPath, upTo)
+      Expectations.mergePartials(Seq(seed, delta))
+        .write.mode("overwrite").partitionBy("kind").parquet(tmp)
+    }
   }
 
   /** Bounded end-to-end run — the measured driver entry
@@ -209,33 +179,12 @@ object ExpectationsStream {
       spark: SparkSession, tables: Map[String, DataFrame],
       factTable: String, checks: Seq[(String, Check)]): DataFrame = {
     val facts = tables(factTable)
-    val root = java.nio.file.Files.createTempDirectory("graft_verd_stream")
-    val src = root.resolve("src").toString
-    val seedP = root.resolve("seed").toString
-    val deltaP = root.resolve("delta").toString
-    val splitKey = col(facts.columns.head)
-    StreamMeter.timeSeed("q_stream_verdicts") {
-      facts.filter(splitKey % 2 =!= 0).write.mode("overwrite").parquet(src)
-      seedPartials(
-        tables + (factTable -> facts.filter(splitKey % 2 === 0)), checks, seedP)
-    }
-
     val emptyTables = tables.map { case (n, df) => n -> df.limit(0) }
-    val q = partialsMaintain(
-      spark.readStream.schema(facts.schema).parquet(src),
-      factTable, emptyTables, checks,
-      seedP, deltaP, root.resolve("ckpt").toString)
-    StreamMeter.timePhase("q_stream_verdicts", "batch") {
-      try q.processAllAvailable() finally q.stop()
-    }
-    StreamMeter.timePhase("q_stream_verdicts", "compact") {
-      compact(spark, seedP, deltaP)
-    }
-
-    val result = StreamMeter.timePhase("q_stream_verdicts", "serve") {
-      liveVerdicts(spark, seedP, deltaP, checks).localCheckpoint()
-    }
-    DeltaLayout.rmTree(root)
-    result.orderBy("check_seq")
+    DeltaLayout.run(spark, "q_stream_verdicts", compacts = true,
+      (seed, src) => DeltaLayout.stageHalves(facts, facts.columns.head,
+        evens => seedPartials(tables + (factTable -> evens), checks, seed), src),
+      partialsMaintain(_, factTable, emptyTables, checks, _, _, _),
+      compact(spark, _, _), liveVerdicts(spark, _, _, checks))
+      .orderBy("check_seq")
   }
 }

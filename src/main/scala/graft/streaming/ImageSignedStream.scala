@@ -109,17 +109,15 @@ object ImageSignedStream {
     * suppression flip are spec-pinned. */
   def imageMaintainRun(spark: SparkSession, dir: String): DataFrame = {
     import Multimodal.TwinIdBit
-    val root = java.nio.file.Files.createTempDirectory("graft_imgs_stream")
-    val src = root.resolve("src").toString
-    val seedP = root.resolve("seed").toString
-    val deltaP = root.resolve("delta").toString
-    try {
-      val docs = graft.Tables.documents(spark, dir)
-      val twinDocs = docs
-        .filter(col("doc_id") % 50 === 0 || col("doc_id") % 50 === 10)
-      StreamMeter.timeSeed("q_stream_image_signed") {
+    val docs = graft.Tables.documents(spark, dir)
+    val twins = Multimodal.syntheticImages(docs
+        .filter(col("doc_id") % 50 === 0 || col("doc_id") % 50 === 10))
+      .filter(col("media_id") >= TwinIdBit)
+      .toDF()
+    DeltaLayout.run(spark, "q_stream_image_signed", compacts = true,
+      (seed, src) => {
         val fps = graft.SparkEntry.imageFpShared(spark, dir)
-        seedIndex(fps.filter(col("media_id") < TwinIdBit), seedP)
+        seedIndex(fps.filter(col("media_id") < TwinIdBit), seed)
         // ops: remove the %50==0 originals; re-add the %50==10
         // originals verbatim (replace — only their docs re-render);
         // two files so the stream sees more than one micro-batch
@@ -133,29 +131,12 @@ object ImageSignedStream {
             lit(Array.emptyByteArray).as("payload"), lit(0).as("width"),
             lit(0).as("height"), lit(0).as("sample_rate"),
             lit("remove").as("op"))
-        readds.unionByName(removes)
-          .repartition(2).write.mode("overwrite").parquet(src)
-      }
-      val schema = org.apache.spark.sql.Encoders
-        .product[Multimodal.MediaRecord].schema
-        .add("op", org.apache.spark.sql.types.StringType)
-      val q = indexMaintain(
-        spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(src),
-        seedP, deltaP, root.resolve("ckpt").toString)
-      StreamMeter.timePhase("q_stream_image_signed", "batch") {
-        try q.processAllAvailable() finally q.stop()
-      }
-      StreamMeter.timePhase("q_stream_image_signed", "compact") {
-        compact(spark, seedP, deltaP)
-      }
-      val twins = Multimodal.syntheticImages(twinDocs)
-        .filter(col("media_id") >= TwinIdBit)
-        .toDF()
-      StreamMeter.timePhase("q_stream_image_signed", "serve") {
-        gate(spark, seedP, deltaP, twins, maxHamming = 6, bucketCap = 1000L)
-          .localCheckpoint()
-      }.orderBy("media_new", "media_corpus")
-    } finally DeltaLayout.rmTree(root)
+        val ops = readds.unionByName(removes)
+        ops.repartition(2).write.mode("overwrite").parquet(src)
+        ops
+      },
+      indexMaintain, compact(spark, _, _),
+      gate(spark, _, _, twins, maxHamming = 6, bucketCap = 1000L))
+      .orderBy("media_new", "media_corpus")
   }
 }

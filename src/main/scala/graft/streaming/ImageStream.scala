@@ -83,27 +83,17 @@ object ImageStream {
           fps.select(col("media_id").as("doc_id"), col("dhash").as("fp")),
           idx.select(col("media_id").as("doc_id"), col("dhash").as("fp")),
           maxHamming, bucketCap)
-        pairs
-          .join(fps.select(col("media_id").as("doc_new"),
-            col("ahash").as("ah_n")), Seq("doc_new"))
-          .join(idx.select(col("media_id").as("doc_corpus"),
-            col("ahash").as("ah_c")), Seq("doc_corpus"))
-          .select(col("doc_new").as("media_new"),
-            col("doc_corpus").as("media_corpus"),
-            col("hamming").as("hamming_d"),
-            expr("bit_count(ah_n ^ ah_c)").as("hamming_a"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(pairsPath)
-        if (growIndex) {
-          fps.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(indexPath)
-        }
+        DeltaLayout.landBatch(pairs
+            .join(fps.select(col("media_id").as("doc_new"),
+              col("ahash").as("ah_n")), Seq("doc_new"))
+            .join(idx.select(col("media_id").as("doc_corpus"),
+              col("ahash").as("ah_c")), Seq("doc_corpus"))
+            .select(col("doc_new").as("media_new"),
+              col("doc_corpus").as("media_corpus"),
+              col("hamming").as("hamming_d"),
+              expr("bit_count(ah_n ^ ah_c)").as("hamming_a")),
+          batchId, pairsPath)
+        if (growIndex) DeltaLayout.landBatch(fps, batchId, indexPath)
       }
       .start()
 

@@ -112,8 +112,8 @@ object IvfSignedStream {
       spark: SparkSession, dir: String, entry: String,
       stage: SignedIndexLayout.Staging): DataFrame = {
     val emb = graft.Tables.embeddings(spark, dir).select("vec_id", "embedding")
-    SignedIndexLayout.run(spark, entry, emb, stage, compacts = true,
-      seedIndex(_, _), indexMaintain, compact(spark, _, _),
-      searchLive(spark, _, _, emb))
+    DeltaLayout.run(spark, entry, compacts = true,
+      (seed, src) => stage(emb, seedIndex(_, seed), src), indexMaintain,
+      compact(spark, _, _), searchLive(spark, _, _, emb))
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -58,24 +58,14 @@ object PageRankStream {
   def ranksMaintain(
       newEdges: DataFrame, seedRoot: String, deltaPath: String,
       checkpoint: String): StreamingQuery =
-    newEdges.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (batchId > DeltaLayout.foldedThrough(batch.sparkSession, seedRoot)) {
-          batch.toDF()
-            .select(
-              least(col("src"), col("dst")).as("a"),
-              greatest(col("src"), col("dst")).as("b"), col("w"))
-            .filter(col("a") =!= col("b"))
-            .groupBy("a", "b").agg(sum("w").as("w"))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(deltaPath)
-        }
-      }
-      .start()
+    DeltaLayout.maintain(newEdges, seedRoot, checkpoint) { (batch, batchId) =>
+      DeltaLayout.landBatch(batch
+        .select(
+          least(col("src"), col("dst")).as("a"),
+          greatest(col("src"), col("dst")).as("b"), col("w"))
+        .filter(col("a") =!= col("b"))
+        .groupBy("a", "b").agg(sum("w").as("w")), batchId, deltaPath)
+    }
 
   private def liveDeltaIncrements(
       spark: SparkSession, seedRoot: String, deltaPath: String,
@@ -139,28 +129,20 @@ object PageRankStream {
     * compacted seed serves strictly closer to stationarity than the
     * one it replaces); watermark + crash-safe swap. */
   def compact(spark: SparkSession, seedRoot: String, deltaPath: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    if (!DeltaLayout.hasDeltaPartitions(spark, deltaPath)) return
-    val fs = DeltaLayout.fs(spark, seedRoot)
-    val maxBatch = DeltaLayout.maxBatchId(spark, deltaPath)
-    // checkpointed: TWO consumers (the edges write and the warm sweep)
-    val newE = foldedGraph(spark, seedRoot, deltaPath, maxBatch)
-      .localCheckpoint()
-    val tmp = seedRoot + "__maint"
-    // the edges write and the warm rank sweep are independent job
-    // chains off the materialized fold — overlap them (guide §2.6)
-    DeltaLayout.overlap(Seq(
-      () => newE.write.mode("overwrite").parquet(s"$tmp/edges"),
-      () => Graph.pageRank(
-          newE.select(col("a").as("src"), col("b").as("dst"), col("w")),
-          startRanks = Some(spark.read.parquet(s"$seedRoot/ranks")))
-        .select("node", "rank_micro")
-        .write.mode("overwrite").parquet(s"$tmp/ranks")))
-    val newFolded = math.max(maxBatch,
-      DeltaLayout.foldedThrough(spark, seedRoot))
-    if (newFolded >= 0) DeltaLayout.writeFoldedMarker(fs, tmp, newFolded)
-    DeltaLayout.swapLive(fs, tmp, seedRoot)
-    DeltaLayout.deleteFoldedPartitions(fs, new Path(deltaPath), newFolded)
+    DeltaLayout.fold(spark, seedRoot, deltaPath) { (upTo, tmp) =>
+      // checkpointed: TWO consumers (the edges write and the warm sweep)
+      val newE = foldedGraph(spark, seedRoot, deltaPath, upTo)
+        .localCheckpoint()
+      // the edges write and the warm rank sweep are independent job
+      // chains off the materialized fold — overlap them (guide §2.6)
+      DeltaLayout.overlap(Seq(
+        () => newE.write.mode("overwrite").parquet(s"$tmp/edges"),
+        () => Graph.pageRank(
+            newE.select(col("a").as("src"), col("b").as("dst"), col("w")),
+            startRanks = Some(spark.read.parquet(s"$seedRoot/ranks")))
+          .select("node", "rank_micro")
+          .write.mode("overwrite").parquet(s"$tmp/ranks")))
+    }
   }
 
   /** Bounded end-to-end run — the measured driver entry
@@ -176,12 +158,8 @@ object PageRankStream {
     val full = graft.operators.Purchases.coPurchaseGraph(li, minCount = 2L)
       .select(col("src").as("a"), col("dst").as("b"), col("w"))
       .localCheckpoint()
-    val root = java.nio.file.Files.createTempDirectory("graft_rank_stream")
-    val srcDir = root.resolve("src").toString
-    val seedRoot = root.resolve("seed").toString
-    val deltaP = root.resolve("delta").toString
-    try {
-      val delta = StreamMeter.timeSeed("q_stream_pagerank") {
+    DeltaLayout.run(spark, "q_stream_pagerank", compacts = true,
+      (seedRoot, srcDir) => {
         val prior = graft.SparkEntry.cpWeightedShared(spark, dir)
         // per-pair INCREMENT: full − prior weight (new pairs land
         // whole) — strictly positive because pair counts only grow;
@@ -199,25 +177,10 @@ object PageRankStream {
             .write.mode("overwrite").parquet(s"$seedRoot/ranks"),
           () => d.repartition(2).write.mode("overwrite").parquet(srcDir)))
         d
-      }
-      val q = ranksMaintain(
-        spark.readStream.schema(delta.schema)
-          .option("maxFilesPerTrigger", 1).parquet(srcDir),
-        seedRoot, deltaP, root.resolve("ckpt").toString)
-      StreamMeter.timePhase("q_stream_pagerank", "batch") {
-        try q.processAllAvailable() finally q.stop()
-      }
-      // mid-lifecycle compaction ADVANCES the warm point; the final
-      // serve warm-starts from the compacted ranks over the full fold
-      StreamMeter.timePhase("q_stream_pagerank", "compact") {
-        compact(spark, seedRoot, deltaP)
-      }
-      // localCheckpoint, NOT collect: one row per node is unbounded —
-      // the materialized blocks keep the result off-driver and
-      // independent of the temp dirs DeltaLayout.rmTree() deletes
-      StreamMeter.timePhase("q_stream_pagerank", "serve") {
-        serveRanks(spark, seedRoot, deltaP).localCheckpoint()
-      }.orderBy(desc("rank_micro"), col("node"))
-    } finally DeltaLayout.rmTree(root)
+      },
+      ranksMaintain, compact(spark, _, _), serveRanks(spark, _, _))
+      // the compaction ADVANCES the warm point; the serve warm-starts
+      // from the compacted ranks over the full fold
+      .orderBy(desc("rank_micro"), col("node"))
   }
 }

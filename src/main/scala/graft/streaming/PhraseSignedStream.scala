@@ -56,10 +56,11 @@ object PhraseSignedStream {
   def searchMaintainRun(
       spark: SparkSession, dir: String,
       queries: DataFrame, termsLiteral: Seq[String], entry: String,
-      stage: SignedIndexLayout.Staging, compacts: Boolean): DataFrame =
-    SignedIndexLayout.run(spark, entry,
-      graft.Tables.documents(spark, dir).select("doc_id", "text"),
-      stage, compacts, seedIndex, indexMaintain,
+      stage: SignedIndexLayout.Staging, compacts: Boolean): DataFrame = {
+    val docs = graft.Tables.documents(spark, dir).select("doc_id", "text")
+    DeltaLayout.run(spark, entry, compacts,
+      (seed, src) => stage(docs, seedIndex(_, seed), src), indexMaintain,
       compact(spark, _, _),
       serveSearch(spark, _, _, queries, termsLiteral))
+  }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Similarity
@@ -78,49 +77,19 @@ object SemDedupSignedStream {
       idCol = "vec_id", carryFaces = Seq("centroids"))
 
   /** Bounded end-to-end run — the measured driver entry
-    * (q_stream_semdedup_signed): the [[IvfSignedStream.ivfMaintainRun]]
-    * staging (seed = a third verbatim, a third STALE — negated, so
-    * re-embeds genuinely move clusters — and an alien slice deleted
-    * today; stream = adds + re-embeds + removals by id), compaction
-    * mid-lifecycle, then the served verdict over the surviving
-    * corpus — spec-pinned equal to the direct twin at the same
-    * centroids. */
+    * (q_stream_semdedup_signed): the
+    * [[IvfSignedStream.stageSignedVectors]] staging (seed = a third
+    * verbatim, a third STALE — negated, so re-embeds genuinely move
+    * clusters — and an alien slice deleted today; stream = adds +
+    * re-embeds + removals by id), compaction mid-lifecycle, then the
+    * served verdict over the surviving corpus — spec-pinned equal to
+    * the direct twin at the same centroids. */
   def semDedupMaintainRun(spark: SparkSession, dir: String): DataFrame = {
     val emb = graft.Tables.embeddings(spark, dir).select("vec_id", "embedding")
-    val root = java.nio.file.Files.createTempDirectory("graft_sds_stream")
-    val src = root.resolve("src").toString
-    val seedP = root.resolve("seed").toString
-    val deltaP = root.resolve("delta").toString
-    try {
-      val staged = StreamMeter.timeSeed("q_stream_semdedup_signed") {
-        val stale = emb.filter(col("vec_id") % 3 === 1)
-          .withColumn("embedding", expr("transform(embedding, x -> -x)"))
-        val alien = emb.filter(col("vec_id") % 3 === 2)
-          .select(col("vec_id").bitwiseOR(SignedIndexLayout.AlienIdBit)
-            .as("vec_id"), col("embedding"))
-        seedIndex(
-          emb.filter(col("vec_id") % 3 === 0)
-            .unionByName(stale).unionByName(alien),
-          seedP)
-        val d = emb.filter(col("vec_id") % 3 =!= 0)
-          .withColumn("op", lit("add"))
-          .unionByName(alien.withColumn("op", lit("remove")))
-        d.repartition(2).write.mode("overwrite").parquet(src)
-        d
-      }
-      val q = indexMaintain(
-        spark.readStream.schema(staged.schema)
-          .option("maxFilesPerTrigger", 1).parquet(src),
-        seedP, deltaP, root.resolve("ckpt").toString)
-      StreamMeter.timePhase("q_stream_semdedup_signed", "batch") {
-        try q.processAllAvailable() finally q.stop()
-      }
-      StreamMeter.timePhase("q_stream_semdedup_signed", "compact") {
-        compact(spark, seedP, deltaP)
-      }
-      StreamMeter.timePhase("q_stream_semdedup_signed", "serve") {
-        serveVerdict(spark, seedP, deltaP, emb).localCheckpoint()
-      }.orderBy("vec_id")
-    } finally DeltaLayout.rmTree(root)
+    DeltaLayout.run(spark, "q_stream_semdedup_signed", compacts = true,
+      (seed, src) =>
+        IvfSignedStream.stageSignedVectors(emb, seedIndex(_, seed), src),
+      indexMaintain, compact(spark, _, _),
+      serveVerdict(spark, _, _, emb)).orderBy("vec_id")
   }
 }

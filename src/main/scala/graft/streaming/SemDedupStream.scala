@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -50,21 +50,11 @@ object SemDedupStream {
       seedPath: String,
       deltaPath: String,
       checkpoint: String): StreamingQuery =
-    newEmb.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        if (batchId > DeltaLayout.foldedThrough(spark, seedPath)) {
-          val cents = spark.read.parquet(s"$seedPath/centroids")
-          Similarity.semDeDupAssignAgainst(batch.toDF(), cents)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(deltaPath)
-        }
-      }
-      .start()
+    DeltaLayout.maintain(newEmb, seedPath, checkpoint) { (batch, batchId) =>
+      val cents = batch.sparkSession.read.parquet(s"$seedPath/centroids")
+      DeltaLayout.landBatch(
+        Similarity.semDeDupAssignAgainst(batch, cents), batchId, deltaPath)
+    }
 
   /** (live slim assignments, live DELTA slice) bounded at `upTo` —
     * the [[DeltaLayout]] watermark discipline: a micro-batch
@@ -117,26 +107,18 @@ object SemDedupStream {
     * compaction. */
   def compact(spark: SparkSession, seedPath: String, deltaPath: String,
       emb: DataFrame, tau: Double = 0.9): Unit = {
-    import org.apache.hadoop.fs.Path
-    if (!DeltaLayout.hasDeltaPartitions(spark, deltaPath)) return
-    val fs = DeltaLayout.fs(spark, deltaPath)
-    val maxBatch = DeltaLayout.maxBatchId(spark, deltaPath)
-    val (assign, delta) = liveAssign(spark, seedPath, deltaPath, maxBatch)
-    val folded = Similarity.semDeDupIncremental(
-        emb, assign, spark.read.parquet(s"$seedPath/verdict"),
-        delta.select("cid"), tau)
-      .localCheckpoint()
-    val ac = assign.localCheckpoint()
-    val cc = spark.read.parquet(s"$seedPath/centroids").localCheckpoint()
-    val tmp = seedPath + "__maint"
-    ac.write.mode("overwrite").parquet(s"$tmp/assign")
-    cc.write.mode("overwrite").parquet(s"$tmp/centroids")
-    folded.write.mode("overwrite").parquet(s"$tmp/verdict")
-    val newFolded = math.max(maxBatch,
-      DeltaLayout.foldedThrough(spark, seedPath))
-    if (newFolded >= 0) DeltaLayout.writeFoldedMarker(fs, tmp, newFolded)
-    DeltaLayout.swapLive(fs, tmp, seedPath)
-    DeltaLayout.deleteFoldedPartitions(fs, new Path(deltaPath), newFolded)
+    DeltaLayout.fold(spark, seedPath, deltaPath) { (upTo, tmp) =>
+      val (assign, delta) = liveAssign(spark, seedPath, deltaPath, upTo)
+      val folded = Similarity.semDeDupIncremental(
+          emb, assign, spark.read.parquet(s"$seedPath/verdict"),
+          delta.select("cid"), tau)
+        .localCheckpoint()
+      val ac = assign.localCheckpoint()
+      val cc = spark.read.parquet(s"$seedPath/centroids").localCheckpoint()
+      ac.write.mode("overwrite").parquet(s"$tmp/assign")
+      cc.write.mode("overwrite").parquet(s"$tmp/centroids")
+      folded.write.mode("overwrite").parquet(s"$tmp/verdict")
+    }
   }
 
   /** Bounded end-to-end run — the measured driver entry
@@ -148,33 +130,14 @@ object SemDedupStream {
     * spec-asserted. */
   def semDedupMaintainRun(spark: SparkSession, dir: String): DataFrame = {
     val emb = graft.Tables.embeddings(spark, dir)
-    val root = java.nio.file.Files.createTempDirectory("graft_semdedup_stream")
-    val src = root.resolve("src").toString
-    val seedP = root.resolve("seed").toString
-    val deltaP = root.resolve("delta").toString
-    try {
-      StreamMeter.timeSeed("q_stream_semdedup") {
-        emb.filter(col("vec_id") % 2 =!= 0)
-          .repartition(2).write.mode("overwrite").parquet(src)
-        seedIndex(emb.filter(col("vec_id") % 2 === 0), seedP)
-      }
-      val q = verdictMaintain(
-        spark.readStream.schema(emb.schema)
-          .option("maxFilesPerTrigger", 1).parquet(src),
-        seedP, deltaP, root.resolve("ckpt").toString)
-      StreamMeter.timePhase("q_stream_semdedup", "batch") {
-        try q.processAllAvailable() finally q.stop()
-      }
-      // mid-lifecycle compaction: served verdict must be unchanged
-      StreamMeter.timePhase("q_stream_semdedup", "compact") {
-        compact(spark, seedP, deltaP, emb)
-      }
-      // localCheckpoint, NOT collect: one row per vector is unbounded —
-      // the materialized blocks keep the result off-driver and
-      // independent of the temp dirs DeltaLayout.rmTree() deletes
-      StreamMeter.timePhase("q_stream_semdedup", "serve") {
-        serveVerdict(spark, seedP, deltaP, emb).localCheckpoint()
-      }.orderBy("vec_id")
-    } finally DeltaLayout.rmTree(root)
+    DeltaLayout.run(spark, "q_stream_semdedup", compacts = true,
+      (seed, src) => {
+        val d = emb.filter(col("vec_id") % 2 =!= 0)
+        d.repartition(2).write.mode("overwrite").parquet(src)
+        seedIndex(emb.filter(col("vec_id") % 2 === 0), seed)
+        d
+      },
+      verdictMaintain, compact(spark, _, _, emb),
+      serveVerdict(spark, _, _, emb)).orderBy("vec_id")
   }
 }

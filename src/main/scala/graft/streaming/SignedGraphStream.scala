@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -67,39 +67,30 @@ object SignedGraphStream {
   def signedMaintain(
       newOps: DataFrame, seedRoot: String, deltaPath: String,
       checkpoint: String): StreamingQuery =
-    newOps.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (batchId > DeltaLayout.foldedThrough(batch.sparkSession, seedRoot)) {
-          // ONE partial-combined aggregation lands the guarded rows
-          // (guide §2.4): collect_set dedups ops per pair map-side and
-          // a 2-element set IS the ambiguity — the previous
-          // dropDuplicates + count + join-back shape paid three
-          // exchanges per micro-batch for the same verdict.
-          batch.toDF()
-            .select(least(col("src"), col("dst")).as("a"),
-              greatest(col("src"), col("dst")).as("b"),
-              when(col("op").isin("add", "remove"), col("op"))
-                .otherwise(raise_error(concat(
-                  lit("signedMaintain: op must be add|remove, got "),
-                  col("op")))).as("op"))
-            .filter(col("a") =!= col("b"))
-            .groupBy("a", "b")
-            .agg(collect_set(col("op")).as("ops"))
-            .select(col("a"), col("b"),
-              when(size(col("ops")) > 1, raise_error(concat(
-                  lit("signedMaintain: pair ("), col("a").cast("string"),
-                  lit(","), col("b").cast("string"),
-                  lit(") carries both add AND remove in one batch"))))
-                .otherwise(element_at(col("ops"), 1)).as("op"))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(deltaPath)
-        }
-      }
-      .start()
+    DeltaLayout.maintain(newOps, seedRoot, checkpoint) { (batch, batchId) =>
+      // ONE partial-combined aggregation lands the guarded rows
+      // (guide §2.4): collect_set dedups ops per pair map-side and
+      // a 2-element set IS the ambiguity — the previous
+      // dropDuplicates + count + join-back shape paid three
+      // exchanges per micro-batch for the same verdict.
+      DeltaLayout.landBatch(batch
+        .select(least(col("src"), col("dst")).as("a"),
+          greatest(col("src"), col("dst")).as("b"),
+          when(col("op").isin("add", "remove"), col("op"))
+            .otherwise(raise_error(concat(
+              lit("signedMaintain: op must be add|remove, got "),
+              col("op")))).as("op"))
+        .filter(col("a") =!= col("b"))
+        .groupBy("a", "b")
+        .agg(collect_set(col("op")).as("ops"))
+        .select(col("a"), col("b"),
+          when(size(col("ops")) > 1, raise_error(concat(
+              lit("signedMaintain: pair ("), col("a").cast("string"),
+              lit(","), col("b").cast("string"),
+              lit(") carries both add AND remove in one batch"))))
+            .otherwise(element_at(col("ops"), 1)).as("op")),
+        batchId, deltaPath)
+    }
 
   /** The live signed rows (a, b, op, batch_id): batches above the
     * seed's watermark and at or below `upTo`. A missing/partition-less
@@ -223,51 +214,45 @@ object SignedGraphStream {
       spark: SparkSession, seedRoot: String, deltaPath: String,
       trussK: Int = 3): Unit = {
     import org.apache.hadoop.fs.Path
-    if (!DeltaLayout.hasDeltaPartitions(spark, deltaPath)) return
     val fs = DeltaLayout.fs(spark, seedRoot)
-    val maxBatch = DeltaLayout.maxBatchId(spark, deltaPath)
-    val seedE = spark.read.parquet(s"$seedRoot/edges")
-    val seedL = spark.read.parquet(s"$seedRoot/labels")
-    val (adds, removals0) = netDelta(spark, seedRoot, deltaPath, maxBatch)
-    // no net removal (an insert-only stream, or every removal since
-    // netted out): fold as a pure insertion, without the anti-joins
-    // against an empty removal set — one cheap job over the
-    // checkpointed net delta saves several per compaction
-    val removals = Some(removals0).filterNot(_.isEmpty)
-    // lazy — materialized by its face write below
-    val survivors = removals.fold(seedE.select("a", "b"))(r =>
-      seedE.select("a", "b").join(r, Seq("a", "b"), "left_anti"))
-    val newE = survivors.unionByName(adds).distinct()
-    // ONE shared fold scope feeds every face present under the seed
-    // root (guide §1.2): the labels face and each density face
-    // previously recomputed the full-prior-edge semi-join per face,
-    // and coreness/truss re-ran the star contraction a second time
-    val scope = Graph.foldScope(seedE, seedL, adds, removals)
-    val tmp = seedRoot + "__maint"
-    // every face present is an independent job chain over the shared
-    // scope — overlap them (guide §2.6)
-    val faceTasks = Seq.newBuilder[() => Unit]
-    faceTasks += (() => newE.write.mode("overwrite").parquet(s"$tmp/edges"))
-    faceTasks += (() => Graph.labelsFromScope(seedL, scope)
-      .write.mode("overwrite").parquet(s"$tmp/labels"))
-    if (fs.exists(new Path(s"$seedRoot/coreness")))
-      faceTasks += (() => Graph.corenessFromScope(seedL,
-          spark.read.parquet(s"$seedRoot/coreness"), scope)
-        .write.mode("overwrite").parquet(s"$tmp/coreness"))
-    if (fs.exists(new Path(s"$seedRoot/triangles")))
-      faceTasks += (() => Graph.trianglesFromScope(seedL,
-          spark.read.parquet(s"$seedRoot/triangles"), scope)
-        .write.mode("overwrite").parquet(s"$tmp/triangles"))
-    if (fs.exists(new Path(s"$seedRoot/truss")))
-      faceTasks += (() => Graph.kTrussFromScope(seedL,
-          spark.read.parquet(s"$seedRoot/truss"), scope, trussK)
-        .write.mode("overwrite").parquet(s"$tmp/truss"))
-    DeltaLayout.overlap(faceTasks.result())
-    val newFolded = math.max(maxBatch,
-      DeltaLayout.foldedThrough(spark, seedRoot))
-    if (newFolded >= 0) DeltaLayout.writeFoldedMarker(fs, tmp, newFolded)
-    DeltaLayout.swapLive(fs, tmp, seedRoot)
-    DeltaLayout.deleteFoldedPartitions(fs, new Path(deltaPath), newFolded)
+    DeltaLayout.fold(spark, seedRoot, deltaPath) { (upTo, tmp) =>
+      val seedE = spark.read.parquet(s"$seedRoot/edges")
+      val seedL = spark.read.parquet(s"$seedRoot/labels")
+      val (adds, removals0) = netDelta(spark, seedRoot, deltaPath, upTo)
+      // no net removal (an insert-only stream, or every removal since
+      // netted out): fold as a pure insertion, without the anti-joins
+      // against an empty removal set — one cheap job over the
+      // checkpointed net delta saves several per compaction
+      val removals = Some(removals0).filterNot(_.isEmpty)
+      // lazy — materialized by its face write below
+      val survivors = removals.fold(seedE.select("a", "b"))(r =>
+        seedE.select("a", "b").join(r, Seq("a", "b"), "left_anti"))
+      val newE = survivors.unionByName(adds).distinct()
+      // ONE shared fold scope feeds every face present under the seed
+      // root (guide §1.2): the labels face and each density face
+      // previously recomputed the full-prior-edge semi-join per face,
+      // and coreness/truss re-ran the star contraction a second time
+      val scope = Graph.foldScope(seedE, seedL, adds, removals)
+      // every face present is an independent job chain over the shared
+      // scope — overlap them (guide §2.6)
+      val faceTasks = Seq.newBuilder[() => Unit]
+      faceTasks += (() => newE.write.mode("overwrite").parquet(s"$tmp/edges"))
+      faceTasks += (() => Graph.labelsFromScope(seedL, scope)
+        .write.mode("overwrite").parquet(s"$tmp/labels"))
+      if (fs.exists(new Path(s"$seedRoot/coreness")))
+        faceTasks += (() => Graph.corenessFromScope(seedL,
+            spark.read.parquet(s"$seedRoot/coreness"), scope)
+          .write.mode("overwrite").parquet(s"$tmp/coreness"))
+      if (fs.exists(new Path(s"$seedRoot/triangles")))
+        faceTasks += (() => Graph.trianglesFromScope(seedL,
+            spark.read.parquet(s"$seedRoot/triangles"), scope)
+          .write.mode("overwrite").parquet(s"$tmp/triangles"))
+      if (fs.exists(new Path(s"$seedRoot/truss")))
+        faceTasks += (() => Graph.kTrussFromScope(seedL,
+            spark.read.parquet(s"$seedRoot/truss"), scope, trussK)
+          .write.mode("overwrite").parquet(s"$tmp/truss"))
+      DeltaLayout.overlap(faceTasks.result())
+    }
   }
 
   /** Seed (or rebuild) a stream root from a raw (src, dst[, w]) edge
@@ -318,25 +303,19 @@ object SignedGraphStream {
       .select(col("a").as("src"), col("b").as("dst"), lit("add").as("op"))
   }
 
-  /** Shared lifecycle of the measured graph-stream entries: stage
-    * seed faces + the entry's (src, dst, op) `source`, split into two
-    * files so the stream sees more than one micro-batch, stream every
-    * batch, compact mid-lifecycle, serve. The stream owns a private
-    * COPY of the persisted prior because compaction rewrites it.
-    * `seedFaces` writes the face artifacts the served operator folds
-    * into; `serve` produces the final frame (localCheckpoint'd off the
-    * temp dirs before rmTree — the family's documented block-loss
-    * trade-off applies). */
+  /** Shared lifecycle of the measured graph-stream entries on
+    * [[DeltaLayout.run]]: stage seed faces + the entry's
+    * (src, dst, op) `source`, split into two files so the stream sees
+    * more than one micro-batch, stream every batch, compact
+    * mid-lifecycle, serve. The stream owns a private COPY of the
+    * persisted prior because compaction rewrites it. `seedFaces`
+    * writes the face artifacts the served operator folds into. */
   private def signedRun(
-      spark: SparkSession, dir: String, entry: String, tmpPrefix: String,
+      spark: SparkSession, dir: String, entry: String,
       source: (SparkSession, String) => DataFrame, seedFaces: Seq[String],
-      serve: (String, String) => DataFrame): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory(tmpPrefix)
-    val srcDir = root.resolve("src").toString
-    val seedRoot = root.resolve("seed").toString
-    val deltaP = root.resolve("delta").toString
-    try {
-      val staged = StreamMeter.timeSeed(entry) {
+      serve: (String, String) => DataFrame): DataFrame =
+    DeltaLayout.run(spark, entry, compacts = true,
+      (seedRoot, srcDir) => {
         val (priorE, priorL) = graft.SparkEntry.cpIndexShared(spark, dir)
         // validate the face list BEFORE the pool: an unknown face must
         // raise on the caller's thread, not inside a Future
@@ -350,59 +329,43 @@ object SignedGraphStream {
           case other => throw new IllegalArgumentException(
             s"signedRun: unknown seed face $other")
         }
-        val staged0 = source(spark, dir)
+        val staged = source(spark, dir)
         // the face copies and the source staging are independent
         // writes — overlap them (guide §2.6)
         DeltaLayout.overlap(Seq[() => Unit](
           () => priorE.write.mode("overwrite").parquet(s"$seedRoot/edges"),
           () => priorL.write.mode("overwrite").parquet(s"$seedRoot/labels"),
-          () => staged0.repartition(2).write.mode("overwrite")
+          () => staged.repartition(2).write.mode("overwrite")
             .parquet(srcDir)) ++ faceWrites)
-        staged0
-      }
-      val q = signedMaintain(
-        spark.readStream.schema(staged.schema)
-          .option("maxFilesPerTrigger", 1).parquet(srcDir),
-        seedRoot, deltaP, root.resolve("ckpt").toString)
-      StreamMeter.timePhase(entry, "batch") {
-        try q.processAllAvailable() finally q.stop()
-      }
-      // mid-lifecycle compaction: the served result must be unchanged
-      // by it (the serve below reads the compacted seed + empty delta)
-      StreamMeter.timePhase(entry, "compact") {
-        compact(spark, seedRoot, deltaP)
-      }
-      StreamMeter.timePhase(entry, "serve") {
-        serve(seedRoot, deltaP).localCheckpoint()
-      }
-    } finally DeltaLayout.rmTree(root)
-  }
+        staged
+      },
+      signedMaintain, compact(spark, _, _), serve)
 
   /** q_stream_components_signed: hash-matches the q_components_delete
     * oracle — the full reachability CTE over the delisted graph. */
   def componentsSignedRun(spark: SparkSession, dir: String): DataFrame =
-    signedRun(spark, dir, "q_stream_components_signed", "graft_ccs_stream",
+    signedRun(spark, dir, "q_stream_components_signed",
         signedSource, Seq.empty, serveComponents(spark, _, _))
       .orderBy("component")
 
   /** q_stream_coreness_signed: hash-matches the q_coreness_delete
     * oracle — the 23-CTE peel ladder over the delisted graph. */
   def corenessSignedRun(spark: SparkSession, dir: String): DataFrame =
-    signedRun(spark, dir, "q_stream_coreness_signed", "graft_cores_stream",
+    signedRun(spark, dir, "q_stream_coreness_signed",
         signedSource, Seq("coreness"), serveCoreness(spark, _, _))
       .orderBy("node")
 
   /** q_stream_triangles_signed: hash-matches the q_triangles_delete
     * oracle — the full wedge join over the delisted graph. */
   def trianglesSignedRun(spark: SparkSession, dir: String): DataFrame =
-    signedRun(spark, dir, "q_stream_triangles_signed", "graft_tris_stream",
+    signedRun(spark, dir, "q_stream_triangles_signed",
         signedSource, Seq("triangles"), serveTriangles(spark, _, _))
       .orderBy("node")
 
   /** q_stream_ktruss_signed: rows-only for the q_ktruss reason;
     * stream == signed == full-peel equality spec-asserted. */
   def trussSignedRun(spark: SparkSession, dir: String): DataFrame =
-    signedRun(spark, dir, "q_stream_ktruss_signed", "graft_trus_stream",
+    signedRun(spark, dir, "q_stream_ktruss_signed",
         signedSource, Seq("truss"), serveTruss(spark, _, _, 3))
       .orderBy("a", "b")
 
@@ -410,21 +373,21 @@ object SignedGraphStream {
     * full ∖ prior) — hash-matches the full-graph q_components
     * reachability oracle. */
   def componentsMaintainRun(spark: SparkSession, dir: String): DataFrame =
-    signedRun(spark, dir, "q_stream_components", "graft_cc_stream",
+    signedRun(spark, dir, "q_stream_components",
         addsSource, Seq.empty, serveComponents(spark, _, _))
       .orderBy("component")
 
   /** q_stream_coreness: the insert-only stream — hash-matches the
     * full-graph q_coreness 23-CTE peel-ladder oracle. */
   def corenessMaintainRun(spark: SparkSession, dir: String): DataFrame =
-    signedRun(spark, dir, "q_stream_coreness", "graft_core_stream",
+    signedRun(spark, dir, "q_stream_coreness",
         addsSource, Seq("coreness"), serveCoreness(spark, _, _))
       .orderBy("node")
 
   /** q_stream_ktruss: the insert-only stream — rows-only for the
     * q_ktruss reason; stream == full-peel equality spec-asserted. */
   def trussMaintainRun(spark: SparkSession, dir: String): DataFrame =
-    signedRun(spark, dir, "q_stream_ktruss", "graft_truss_stream",
+    signedRun(spark, dir, "q_stream_ktruss",
         addsSource, Seq("truss"), serveTruss(spark, _, _, 3))
       .orderBy("a", "b")
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -66,60 +66,47 @@ private[graft] object SignedIndexLayout {
       payloadCols: Seq[String] = Seq("text"),
       extraFaces: Seq[(String, (DataFrame, DataFrame) => DataFrame)] = Nil)
       : StreamingQuery =
-    newOps.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (batchId > DeltaLayout.foldedThrough(batch.sparkSession, seedPath)) {
-          val adds = batch.toDF().filter(col("op") === "add")
-            .select((idCol +: payloadCols).map(col): _*)
-          // the primary face is computed ONCE: extra faces receive it
-          // alongside the adds slice, so a face that is a projection
-          // of the postings (BM25's doclen) reuses the materialized
-          // frame instead of re-deriving the whole index per batch
-          // (guide §1.2 — don't compute things twice)
-          val primary =
-            if (extraFaces.isEmpty) indexOf(adds)
-            else indexOf(adds).localCheckpoint()
-          // the non-commit faces are independent writes against
-          // disjoint paths — overlap them (guide §2.6); ops still
-          // lands strictly AFTER, it is the batch's commit face
-          DeltaLayout.overlap(
-            (("postings" -> primary) +: extraFaces.map { case (face, f) =>
-              face -> f(adds, primary)
-            }).map { case (face, df) =>
-              () => df.withColumn("batch_id", lit(batchId))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(s"$deltaPath/$face")
-            })
-          // ops lands LAST — the batch's commit face — and carries the
-          // landing guards: a window count over the (id, op) rows alone
-          // flags a doc_id appearing twice in this batch. A batch that
-          // fails a guard leaves face partitions whose ops never landed,
-          // which never serve, exactly as after a crash before the commit
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col(idCol))
-          batch.toDF()
-            .select(col(idCol),
-              when(col("op").isin("add", "remove"), col("op"))
-                .otherwise(raise_error(concat(
-                  lit(s"$who: op must be add|remove, got "), col("op"))))
-                .as("op"))
-            .withColumn("n_rows", count(lit(1)).over(w))
-            .select(col(idCol),
-              when(col("n_rows") > 1, raise_error(concat(
-                  lit(s"$who: $idCol "), col(idCol).cast("string"),
-                  lit(" appears more than once in one batch — ambiguous"))))
-                .otherwise(col("op")).as("op"))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(s"$deltaPath/ops")
-        }
-      }
-      .start()
+    DeltaLayout.maintain(newOps, seedPath, checkpoint) { (batch, batchId) =>
+      val adds = batch.filter(col("op") === "add")
+        .select((idCol +: payloadCols).map(col): _*)
+      // the primary face is computed ONCE: extra faces receive it
+      // alongside the adds slice, so a face that is a projection
+      // of the postings (BM25's doclen) reuses the materialized
+      // frame instead of re-deriving the whole index per batch
+      // (guide §1.2 — don't compute things twice)
+      val primary =
+        if (extraFaces.isEmpty) indexOf(adds)
+        else indexOf(adds).localCheckpoint()
+      // the non-commit faces are independent writes against
+      // disjoint paths — overlap them (guide §2.6); ops still
+      // lands strictly AFTER, it is the batch's commit face
+      DeltaLayout.overlap(
+        (("postings" -> primary) +: extraFaces.map { case (face, f) =>
+          face -> f(adds, primary)
+        }).map { case (face, df) =>
+          () => DeltaLayout.landBatch(df, batchId, s"$deltaPath/$face")
+        })
+      // ops lands LAST — the batch's commit face — and carries the
+      // landing guards: a window count over the (id, op) rows alone
+      // flags a doc_id appearing twice in this batch. A batch that
+      // fails a guard leaves face partitions whose ops never landed,
+      // which never serve, exactly as after a crash before the commit
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col(idCol))
+      DeltaLayout.landBatch(batch
+        .select(col(idCol),
+          when(col("op").isin("add", "remove"), col("op"))
+            .otherwise(raise_error(concat(
+              lit(s"$who: op must be add|remove, got "), col("op"))))
+            .as("op"))
+        .withColumn("n_rows", count(lit(1)).over(w))
+        .select(col(idCol),
+          when(col("n_rows") > 1, raise_error(concat(
+              lit(s"$who: $idCol "), col(idCol).cast("string"),
+              lit(" appears more than once in one batch — ambiguous"))))
+            .otherwise(col("op")).as("op")),
+        batchId, s"$deltaPath/ops")
+    }
 
   /** The resolved live signed state of one layout: the compaction
     * watermark, the fold bound `upTo`, the batches whose `ops` commit
@@ -220,34 +207,22 @@ private[graft] object SignedIndexLayout {
       cols: Seq[String], idCol: String = "doc_id",
       carryFaces: Seq[String] = Nil,
       extraFaces: Seq[(String, Seq[String])] = Nil): Unit = {
-    import org.apache.hadoop.fs.Path
-    if (!DeltaLayout.hasDeltaPartitions(spark, s"$deltaPath/ops")) return
-    val fs = DeltaLayout.fs(spark, seedPath)
-    val maxBatch = DeltaLayout.maxBatchId(spark, s"$deltaPath/ops")
-    val live = resolve(spark, seedPath, deltaPath, maxBatch, idCol)
     val faces = ("postings" -> cols) +: extraFaces
-    val tmp = seedPath + "__maint"
-    // each face's reconstruction chain and each carried copy is an
-    // independent job against a disjoint tmp path — overlap them
-    // (guide §2.6); everything reads the OLD seed root, which only
-    // swaps after all writes land, so no checkpoint is needed
-    DeltaLayout.overlap(
-      faces.map { case (face, fcols) =>
-        () => liveFace(spark, seedPath, deltaPath, live, fcols, idCol, face)
-          .write.mode("overwrite").parquet(s"$tmp/$face")
-      } ++ carryFaces.map { f =>
-        () => DeltaLayout.readParquet(spark, s"$seedPath/$f")
-          .write.mode("overwrite").parquet(s"$tmp/$f")
-      })
-    val newFolded = math.max(maxBatch,
-      DeltaLayout.foldedThrough(spark, seedPath))
-    if (newFolded >= 0) DeltaLayout.writeFoldedMarker(fs, tmp, newFolded)
-    DeltaLayout.swapLive(fs, tmp, seedPath)
-    DeltaLayout.deleteFoldedPartitions(
-      fs, new Path(s"$deltaPath/ops"), newFolded)
-    faces.foreach { case (face, _) =>
-      DeltaLayout.deleteFoldedPartitions(
-        fs, new Path(s"$deltaPath/$face"), newFolded) }
+    DeltaLayout.fold(spark, seedPath, deltaPath, "ops") { (upTo, tmp) =>
+      val live = resolve(spark, seedPath, deltaPath, upTo, idCol)
+      // each face's reconstruction chain and each carried copy is an
+      // independent job against a disjoint tmp path — overlap them
+      // (guide §2.6); everything reads the OLD seed root, which only
+      // swaps after all writes land, so no checkpoint is needed
+      DeltaLayout.overlap(
+        faces.map { case (face, fcols) =>
+          () => liveFace(spark, seedPath, deltaPath, live, fcols, idCol, face)
+            .write.mode("overwrite").parquet(s"$tmp/$face")
+        } ++ carryFaces.map { f =>
+          () => DeltaLayout.readParquet(spark, s"$seedPath/$f")
+            .write.mode("overwrite").parquet(s"$tmp/$f")
+        })
+    }
   }
 
   /** A measured run's staging: seed the index through `seedWith`
@@ -261,71 +236,31 @@ private[graft] object SignedIndexLayout {
     * serves exactly what the `seed ∪ deltas` union of an append-only
     * index serves, so these runs match the same full-corpus oracles
     * as a rebuild. */
-  def stageAllAdds(idCol: String): Staging = (rows, seedWith, src) => {
-    seedWith(rows.filter(col(idCol) % 2 === 0))
-    val d = rows.filter(col(idCol) % 2 =!= 0).withColumn("op", lit("add"))
-    d.coalesce(1).write.mode("overwrite").parquet(src)
-    d
-  }
-
-  /** The measured lifecycle every index stream entry shares: `stage`
-    * the seed and the op stream, drain the stream one file per
-    * micro-batch, compact mid-lifecycle when the entry `compacts`,
-    * and serve — each phase timed under `entry` in [[StreamMeter]].
-    * The served frame is checkpointed off the temp dirs before they
-    * are removed. */
-  def run(
-      spark: SparkSession, entry: String, rows: DataFrame,
-      stage: Staging, compacts: Boolean,
-      seedIndex: (DataFrame, String) => Unit,
-      maintain: (DataFrame, String, String, String) => StreamingQuery,
-      compact: (String, String) => Unit,
-      serve: (String, String) => DataFrame): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory(s"graft_$entry")
-    val src = root.resolve("src").toString
-    val seedPath = root.resolve("seed").toString
-    val deltaPath = root.resolve("delta").toString
-    try {
-      val staged = StreamMeter.timeSeed(entry) {
-        stage(rows, seedIndex(_, seedPath), src)
-      }
-      val q = maintain(
-        spark.readStream.schema(staged.schema)
-          .option("maxFilesPerTrigger", 1).parquet(src),
-        seedPath, deltaPath, root.resolve("ckpt").toString)
-      StreamMeter.timePhase(entry, "batch") {
-        try q.processAllAvailable() finally q.stop()
-      }
-      if (compacts) StreamMeter.timePhase(entry, "compact") {
-        compact(seedPath, deltaPath)
-      }
-      StreamMeter.timePhase(entry, "serve") {
-        serve(seedPath, deltaPath).localCheckpoint()
-      }
-    } finally DeltaLayout.rmTree(root)
-  }
+  def stageAllAdds(idCol: String): Staging = (rows, seedWith, src) =>
+    DeltaLayout.stageHalves(rows.withColumn("op", lit("add")), idCol,
+      even => seedWith(even.drop("op")), src)
 
   /** The measured signed-run corpus staging shared by the driver
     * entries: the seed indexes YESTERDAY'S corpus — doc_id %3==0
     * verbatim, %3==1 with STALE text (today's stream replaces them),
-    * and an id-shifted alien slice that today DELETES — and the
-    * staged stream delivers today's adds (new + replacing) plus the
-    * alien removals by id, split in two files so the stream sees
-    * more than one micro-batch. Returns the staged frame (its schema
-    * seeds the file source). */
-  def stageSignedCorpus(
-      docs: DataFrame, seedWith: DataFrame => Unit, src: String): DataFrame = {
-    val stale = docs.filter(col("doc_id") % 3 === 1)
-      .withColumn("text", concat(col("text"), lit(" stalecopy")))
-    val alien = docs.filter(col("doc_id") % 3 === 2)
-      .select(col("doc_id").bitwiseOR(AlienIdBit).as("doc_id"), col("text"))
-    seedWith(docs.filter(col("doc_id") % 3 === 0)
-      .unionByName(stale).unionByName(alien))
-    val d = docs.filter(col("doc_id") % 3 =!= 0)
-      .withColumn("op", lit("add"))
-      .unionByName(alien.select(col("doc_id"),
-        lit("").as("text"), lit("remove").as("op")))
-    d.repartition(2).write.mode("overwrite").parquet(src)
-    d
-  }
+    * and an id-shifted alien slice (text `alienText`) that today
+    * DELETES — and the staged stream delivers today's adds (new +
+    * replacing) plus the alien removals by id, split in two files so
+    * the stream sees more than one micro-batch. */
+  def stageSignedCorpus(alienText: Column = col("text")): Staging =
+    (docs, seedWith, src) => {
+      val stale = docs.filter(col("doc_id") % 3 === 1)
+        .withColumn("text", concat(col("text"), lit(" stalecopy")))
+      val alien = docs.filter(col("doc_id") % 3 === 2)
+        .select(col("doc_id").bitwiseOR(AlienIdBit).as("doc_id"),
+          alienText.as("text"))
+      seedWith(docs.filter(col("doc_id") % 3 === 0)
+        .unionByName(stale).unionByName(alien))
+      val d = docs.filter(col("doc_id") % 3 =!= 0)
+        .withColumn("op", lit("add"))
+        .unionByName(alien.select(col("doc_id"),
+          lit("").as("text"), lit("remove").as("op")))
+      d.repartition(2).write.mode("overwrite").parquet(src)
+      d
+    }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -48,19 +48,9 @@ object TrianglesStream {
   def trianglesMaintain(
       newEdges: DataFrame, seedRoot: String, deltaPath: String,
       checkpoint: String): StreamingQuery =
-    newEdges.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (batchId > DeltaLayout.foldedThrough(batch.sparkSession, seedRoot)) {
-          Graph.canonicalEdges(batch.toDF())
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(deltaPath)
-        }
-      }
-      .start()
+    DeltaLayout.maintain(newEdges, seedRoot, checkpoint) { (batch, batchId) =>
+      DeltaLayout.landBatch(Graph.canonicalEdges(batch), batchId, deltaPath)
+    }
 
   private def liveDeltaEdges(
       spark: SparkSession, seedRoot: String, deltaPath: String,
@@ -90,30 +80,22 @@ object TrianglesStream {
   /** Fold live deltas into the seed pair: edges union, counts through
     * the additive incremental fold; watermark + crash-safe swap. */
   def compact(spark: SparkSession, seedRoot: String, deltaPath: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    if (!DeltaLayout.hasDeltaPartitions(spark, deltaPath)) return
-    val fs = DeltaLayout.fs(spark, seedRoot)
-    val maxBatch = DeltaLayout.maxBatchId(spark, deltaPath)
-    val seedE = spark.read.parquet(s"$seedRoot/edges")
-    val seedT = spark.read.parquet(s"$seedRoot/triangles")
-    val delta = liveDeltaEdges(spark, seedRoot, deltaPath, maxBatch)
-      .localCheckpoint()
-    val dRaw = delta.select(col("a").as("src"), col("b").as("dst"),
-      lit(1L).as("w"))
-    // lazy — materialized by its face write below
-    val newE = seedE.select("a", "b").unionByName(delta.select("a", "b"))
-      .distinct()
-    val tmp = seedRoot + "__maint"
-    // the two faces are independent job chains — overlap them (§2.6)
-    DeltaLayout.overlap(Seq(
-      () => newE.write.mode("overwrite").parquet(s"$tmp/edges"),
-      () => Graph.trianglesIncremental(seedE, seedT, dRaw)
-        .write.mode("overwrite").parquet(s"$tmp/triangles")))
-    val newFolded = math.max(maxBatch,
-      DeltaLayout.foldedThrough(spark, seedRoot))
-    if (newFolded >= 0) DeltaLayout.writeFoldedMarker(fs, tmp, newFolded)
-    DeltaLayout.swapLive(fs, tmp, seedRoot)
-    DeltaLayout.deleteFoldedPartitions(fs, new Path(deltaPath), newFolded)
+    DeltaLayout.fold(spark, seedRoot, deltaPath) { (upTo, tmp) =>
+      val seedE = spark.read.parquet(s"$seedRoot/edges")
+      val seedT = spark.read.parquet(s"$seedRoot/triangles")
+      val delta = liveDeltaEdges(spark, seedRoot, deltaPath, upTo)
+        .localCheckpoint()
+      val dRaw = delta.select(col("a").as("src"), col("b").as("dst"),
+        lit(1L).as("w"))
+      // lazy — materialized by its face write below
+      val newE = seedE.select("a", "b").unionByName(delta.select("a", "b"))
+        .distinct()
+      // the two faces are independent job chains — overlap them (§2.6)
+      DeltaLayout.overlap(Seq(
+        () => newE.write.mode("overwrite").parquet(s"$tmp/edges"),
+        () => Graph.trianglesIncremental(seedE, seedT, dRaw)
+          .write.mode("overwrite").parquet(s"$tmp/triangles")))
+    }
   }
 
   /** Bounded end-to-end run — the measured driver entry
@@ -128,12 +110,8 @@ object TrianglesStream {
     val full = Graph.canonicalEdges(
       graft.operators.Purchases.coPurchaseGraph(li, minCount = 2L))
       .localCheckpoint()
-    val root = java.nio.file.Files.createTempDirectory("graft_tri_stream")
-    val srcDir = root.resolve("src").toString
-    val seedRoot = root.resolve("seed").toString
-    val deltaP = root.resolve("delta").toString
-    try {
-      val delta = StreamMeter.timeSeed("q_stream_triangles") {
+    DeltaLayout.run(spark, "q_stream_triangles", compacts = true,
+      (seedRoot, srcDir) => {
         val (priorE, _) = graft.SparkEntry.cpIndexShared(spark, dir)
         val d = full.join(
             priorE.select("a", "b"), Seq("a", "b"), "left_anti")
@@ -145,24 +123,8 @@ object TrianglesStream {
             .write.mode("overwrite").parquet(s"$seedRoot/triangles"),
           () => d.repartition(2).write.mode("overwrite").parquet(srcDir)))
         d
-      }
-      val q = trianglesMaintain(
-        spark.readStream.schema(delta.schema)
-          .option("maxFilesPerTrigger", 1).parquet(srcDir),
-        seedRoot, deltaP, root.resolve("ckpt").toString)
-      StreamMeter.timePhase("q_stream_triangles", "batch") {
-        try q.processAllAvailable() finally q.stop()
-      }
-      // mid-lifecycle compaction: served counts unchanged by it
-      StreamMeter.timePhase("q_stream_triangles", "compact") {
-        compact(spark, seedRoot, deltaP)
-      }
-      // localCheckpoint, NOT collect: one row per node is unbounded —
-      // the materialized blocks keep the result off-driver and
-      // independent of the temp dirs DeltaLayout.rmTree() deletes
-      StreamMeter.timePhase("q_stream_triangles", "serve") {
-        serveTriangles(spark, seedRoot, deltaP).localCheckpoint()
-      }.orderBy("node")
-    } finally DeltaLayout.rmTree(root)
+      },
+      trianglesMaintain, compact(spark, _, _), serveTriangles(spark, _, _))
+      .orderBy("node")
   }
 }

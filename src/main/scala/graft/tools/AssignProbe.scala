@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
@@ -16,14 +15,7 @@ object AssignProbe {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/tmp/graft_sf_rep100"
     val clusterSize = if (args.length > 1) args(1).toLong else 250L
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val n = emb.count()
     val k = math.max(1L, (n + clusterSize - 1L) / clusterSize).toInt

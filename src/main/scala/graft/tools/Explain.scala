@@ -1,17 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Dump formatted physical plans for selected queries (dev tool). */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local()
     val dir = "/root/testdata/sf0.01"
     val names = if (args.nonEmpty) args.toSeq else Seq(
       "q_search_products", "q_store_products", "q1_pricing_summary",

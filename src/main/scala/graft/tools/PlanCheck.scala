@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-off plan audit for the signed index serving path: does the
@@ -8,9 +7,7 @@ import org.apache.spark.sql.functions._
   * last-writer-wins reconstruction (union + net join)? */
 object PlanCheck {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .appName("plancheck").getOrCreate()
+    val spark = graft.Sessions.local()
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("plancheck")
     val seedP = root.resolve("seed").toString

@@ -164,15 +164,7 @@ object ScaleProbe {
     // optional trailing args: probe these queries instead of the
     // default headliners (e.g. the dedup family after a plan rewrite)
     val qs = if (args.length > 3) args.drop(3).toSeq else headliners
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
 
     if (out.endsWith("_graph")) buildGraphReplica(spark, base, out, rep)
     else {

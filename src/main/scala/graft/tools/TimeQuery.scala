@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 import graft.SparkEntry
 
@@ -15,15 +14,7 @@ object TimeQuery {
     val dir = args(0)
     val name = args(1)
     val runs = if (args.length > 2) args(2).toInt else 3
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     (1 to runs).foreach { i =>
       val t0 = System.nanoTime()
       val df = SparkEntry.queries(name)(spark, dir)

@@ -1095,22 +1095,23 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
 
   test("rollupMaintain is per-batch idempotent and restart-safe") {
     import spark.implicits._
-    import graft.streaming.RollupStream
+    val rollup = graft.streaming.AdditiveStream.rollup
     val root = java.nio.file.Files.createTempDirectory("rollup_retry")
     val src = root.resolve("src").toString
     val docs = Seq(
       (1L, "aa bb", "en", "s1"), (2L, "cc dd ee", "de", "s1"),
       (3L, "ff", "en", "s2")).toDF("doc_id", "text", "lang", "source")
     docs.write.mode("overwrite").parquet(src)
-    RollupStream.seedRollup(docs.limit(0), root.resolve("seed").toString)
+    rollup.seed(docs.limit(0), root.resolve("seed").toString)
     val seedP = root.resolve("seed").toString
     val deltaP = root.resolve("delta").toString
     def runOnce(ckpt: String = root.resolve("ckpt").toString): Unit = {
-      val q = RollupStream.rollupMaintain(
+      val q = rollup.maintain(
         spark.readStream.schema(docs.schema).parquet(src), seedP, deltaP, ckpt)
       try q.processAllAvailable() finally q.stop()
     }
-    def serve() = RollupStream.serveRollup(spark, seedP, deltaP)
+    def serve() = rollup.live(spark, seedP, deltaP)
+      .filter(col("n_docs") > 0).orderBy("source", "lang")
       .collect().map(_.toString).toSeq
     runOnce()
     val first = serve()
@@ -1124,7 +1125,7 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
     // compaction folds deltas into the seed without changing values,
     // deleting ONLY the folded batch_id partitions (scoped delete: a
     // batch committed mid-compact must survive; the root stays)
-    RollupStream.compact(spark, seedP, deltaP)
+    rollup.compact(spark, seedP, deltaP)
     assert(serve() === first)
     def deltaPartitions(): Seq[String] = {
       val d = root.resolve("delta")
@@ -1168,7 +1169,7 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
 
   test("cmsMaintain is per-batch idempotent; compact preserves served counters") {
     import spark.implicits._
-    import graft.streaming.CmsStream
+    val cms = graft.streaming.AdditiveStream.cms
     val root = java.nio.file.Files.createTempDirectory("cms_retry")
     val src = root.resolve("src").toString
     val docs = Seq((1L, "aa bb"), (2L, "bb cc cc"), (3L, "dd"))
@@ -1176,13 +1177,13 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
     docs.write.mode("overwrite").parquet(src)
     val seedP = root.resolve("seed").toString
     val deltaP = root.resolve("delta").toString
-    CmsStream.seedCms(docs.limit(0), seedP)
+    cms.seed(docs.limit(0), seedP)
     def runOnce(ckpt: String = root.resolve("ckpt").toString): Unit = {
-      val q = CmsStream.cmsMaintain(
+      val q = cms.maintain(
         spark.readStream.schema(docs.schema).parquet(src), seedP, deltaP, ckpt)
       try q.processAllAvailable() finally q.stop()
     }
-    def serve() = CmsStream.liveCms(spark, seedP, deltaP)
+    def serve() = cms.live(spark, seedP, deltaP).orderBy("d", "bucket")
       .collect().map(_.toString).toSeq
     def direct(d: org.apache.spark.sql.DataFrame) =
       graft.operators.Sketches.cmsPartials(d).collect().map(_.toString).toSeq
@@ -1191,7 +1192,7 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
     assert(first === direct(docs)) // stream-maintained == direct build
     runOnce() // restart over the same checkpoint: no double-counting
     assert(serve() === first)
-    CmsStream.compact(spark, seedP, deltaP)
+    cms.compact(spark, seedP, deltaP)
     assert(serve() === first)
     // a replayed batch at or below the watermark is skipped
     runOnce(root.resolve("ckpt2").toString)
@@ -1203,13 +1204,40 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
     assert(serve() === direct(docs.unionByName(extra)))
     // estimates from the maintained sketch answer like the direct one
     val est = graft.operators.Sketches.cmsEstimate(
-      CmsStream.liveCms(spark, seedP, deltaP), Seq("bb").toDF("term"))
+      cms.live(spark, seedP, deltaP), Seq("bb").toDF("term"))
       .collect().head
     assert(est.getLong(1) >= 3L) // bb occurs 3× across docs+extra
   }
 
+  test("DeltaLayout.fold keeps a batch landed mid-compact live above the watermark") {
+    import spark.implicits._
+    import graft.streaming.{AdditiveStream, DeltaLayout}
+    val cms = AdditiveStream.cms
+    val root = java.nio.file.Files.createTempDirectory("fold_race")
+    val seedP = root.resolve("seed").toString
+    val deltaP = root.resolve("delta").toString
+    val batches = Seq(Seq((1L, "aa bb")), Seq((2L, "bb cc")), Seq((3L, "cc dd")))
+      .map(_.toDF("doc_id", "text"))
+    try {
+      cms.seed(batches.head.limit(0), seedP)
+      DeltaLayout.landBatch(cms.partials(batches(0)), 0L, deltaP)
+      DeltaLayout.landBatch(cms.partials(batches(1)), 1L, deltaP)
+      // batch 2 commits while the fold is writing its new seed
+      DeltaLayout.fold(spark, seedP, deltaP) { (upTo, tmp) =>
+        cms.foldWrite(spark, seedP, deltaP)(upTo, tmp)
+        DeltaLayout.landBatch(cms.partials(batches(2)), 2L, deltaP)
+      }
+      assert(DeltaLayout.foldedThrough(spark, seedP) === 1L)
+      assert(DeltaLayout.batchIds(spark, deltaP) === Seq(2L))
+      assert(cms.live(spark, seedP, deltaP).orderBy("d", "bucket")
+        .collect().map(_.toString).toSeq ===
+        graft.operators.Sketches.cmsPartials(batches.reduce(_ unionByName _))
+          .collect().map(_.toString).toSeq)
+    } finally DeltaLayout.rmTree(root)
+  }
+
   test("cmsMaintainRun (the measured driver entry) equals the direct full-corpus sketch") {
-    val got = graft.streaming.CmsStream.cmsMaintainRun(spark, sfDir)
+    val got = graft.streaming.AdditiveStream.cmsMaintainRun(spark, sfDir)
       .collect().map(_.toString).toSeq
     val direct = graft.operators.Sketches
       .cmsPartials(Tables.documents(spark, sfDir))
@@ -1513,7 +1541,6 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
 
   test("nbMaintain is per-batch idempotent; compact preserves served counts") {
     import spark.implicits._
-    import graft.streaming.NbStream
     val root = java.nio.file.Files.createTempDirectory("nb_retry")
     val src = root.resolve("src").toString
     val docs = Seq((1L, "aa bb", "s0"), (2L, "bb cc cc", "s1"), (3L, "dd", "s0"))
@@ -1524,14 +1551,15 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
     docs.write.mode("overwrite").parquet(src)
     val seedP = root.resolve("seed").toString
     val deltaP = root.resolve("delta").toString
-    NbStream.seedNb(docs.limit(0), labeler(docs.limit(0)), seedP)
+    val nb = graft.streaming.AdditiveStream.nb(labeler)
+    nb.seed(docs.limit(0), seedP)
     def runOnce(ckpt: String = root.resolve("ckpt").toString): Unit = {
-      val q = NbStream.nbMaintain(
+      val q = nb.maintain(
         spark.readStream.schema(docs.schema).parquet(src),
-        labeler, seedP, deltaP, ckpt)
+        seedP, deltaP, ckpt)
       try q.processAllAvailable() finally q.stop()
     }
-    def serve() = NbStream.liveNbCounts(spark, seedP, deltaP)
+    def serve() = nb.live(spark, seedP, deltaP).orderBy("term")
       .collect().map(_.toString).toSeq
     def direct(d: org.apache.spark.sql.DataFrame) =
       graft.operators.Classifier.nbCounts(d, labeler(d))
@@ -1541,7 +1569,7 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
     assert(first === direct(docs)) // stream-maintained == direct counts
     runOnce() // restart over the same checkpoint: no double-counting
     assert(serve() === first)
-    NbStream.compact(spark, seedP, deltaP)
+    nb.compact(spark, seedP, deltaP)
     assert(serve() === first)
     // a replayed batch at or below the watermark is skipped
     runOnce(root.resolve("ckpt2").toString)
@@ -1554,7 +1582,7 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
     // the scoring model derived from maintained counts == direct train
     val all = docs.unionByName(extra)
     assert(graft.operators.Classifier
-      .nbFromCounts(NbStream.liveNbCounts(spark, seedP, deltaP))
+      .nbFromCounts(nb.live(spark, seedP, deltaP).orderBy("term"))
       .collect().map(_.toString).toSeq ===
       graft.operators.Classifier.nbTrain(all, labeler(all))
         .collect().map(_.toString).toSeq)
@@ -1562,8 +1590,8 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
 
   test("nbMaintainRun (the measured driver entry) equals direct full-corpus scoring") {
     val docs = Tables.documents(spark, sfDir)
-    val labels = graft.streaming.NbStream.domainLabels(docs)
-    val got = graft.streaming.NbStream.nbMaintainRun(spark, sfDir)
+    val labels = graft.streaming.AdditiveStream.domainLabels(docs)
+    val got = graft.streaming.AdditiveStream.nbMaintainRun(spark, sfDir)
       .collect().map(_.toString).toSeq
     val direct = graft.operators.Classifier
       .nbScore(docs, graft.operators.Classifier.nbTrain(docs, labels))
