@@ -2028,13 +2028,14 @@ object SparkEntry {
     "q_seq_pack" -> ((s, d) => TextCleaning.packSequences(Tables.documents(s, d))),
     "q_session_window" -> ((s, d) => Etl.sessionWindows(Tables.events(s, d))),
     // the STREAMING session_window formulation, run end-to-end (staged
-    // file source → watermark → append-mode session agg → memory sink)
-    // and returning the full session set — measured alongside the
+    // file source → watermark → append-mode session agg → per-batch
+    // landing) and returning the full session set — measured alongside the
     // batch twin, sharing its oracle
     "q_stream_session_window" -> ((s, d) =>
       graft.streaming.EventsStream.sessionWindowRun(s, d)),
     // the STREAMING per-row curation gate run end-to-end (staged file
-    // source → stateless curationSignals projection → memory sink);
+    // source → stateless curationSignals projection → per-batch
+    // landing);
     // row-identical to batch curationSignals, oracle-checked
     "q_stream_quality_gate" -> ((s, d) =>
       graft.streaming.CurationStream.qualityGateRun(s, d)),

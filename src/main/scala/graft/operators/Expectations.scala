@@ -471,7 +471,7 @@ object Expectations {
           size(split(col("violated"), ";", -1))).cast("integer"))
       .withColumn("passed", col("violated") === "")
     // a global sort is illegal in a streaming plan (append mode) —
-    // the streaming gate orders its memory-sink table instead
+    // the streaming gate orders its served verdicts instead
     if (ordered) base.orderBy(idCols.map(col) :+ col("violated"): _*) else base
   }
 }

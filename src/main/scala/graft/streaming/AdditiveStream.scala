@@ -40,9 +40,7 @@ final class AdditiveStream(
   def maintain(
       newRows: DataFrame, seedPath: String, deltaPath: String,
       checkpoint: String): StreamingQuery =
-    DeltaLayout.maintain(newRows, seedPath, checkpoint) { (batch, batchId) =>
-      DeltaLayout.landBatch(partials(batch), batchId, deltaPath)
-    }
+    DeltaLayout.landEach(newRows, seedPath, deltaPath, checkpoint)(partials)
 
   /** Seed ∪ the delta batches above the watermark and at or below
     * `upTo`, summed per key. A missing or partition-less delta

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -17,9 +17,10 @@ import graft.operators.Similarity
   *     batch/stream pair sets are identical by construction (asserted
   *     in spec), and the index (4× smaller than the fp corpus) is
   *     never re-encoded or shuffled;
-  *   - BOTH sinks partition by batch_id under dynamic partition
-  *     overwrite, so a retried micro-batch REPLACES its own pairs and
-  *     its own index growth partition instead of double-appending;
+  *   - BOTH sinks land as batch_id partitions through
+  *     [[DeltaLayout.maintain]] and [[DeltaLayout.landBatch]], so a
+  *     retried micro-batch REPLACES its own pairs and its own index
+  *     growth partition instead of double-appending;
   *   - the snapshot read anti-joins the batch's own vec_ids out, so a
   *     retry whose failed predecessor already grew the index cannot
   *     emit self-pairs or intra-batch pairs.
@@ -46,28 +47,23 @@ object AnnStream {
       planes: Int = 12,
       tables: Int = 4,
       growIndex: Boolean = true): StreamingQuery =
-    newEmb.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val emb = batch.toDF()
-        // index snapshot minus the batch's own ids (retry hygiene —
-        // see DedupStream.nearDupGate); a micro-batch's id set is
-        // small, so the anti-join broadcasts and the index never
-        // shuffles
-        val idx = spark.read.parquet(indexPath)
-          .join(broadcast(emb.select("vec_id")), Seq("vec_id"), "left_anti")
-          .select(col("vec_id"), col("qv"), col("scale"), col("norm"))
-        DeltaLayout.landBatch(
-          Similarity.sqNearDupAgainst(emb, idx, threshold, planes, tables)
-            // defense in depth against an out-of-band writer duplicating
-            // an index vec_id (the re-join fans candidates back out)
-            .dropDuplicates("vec_new", "vec_corpus"),
-          batchId, pairsPath)
-        if (growIndex)
-          DeltaLayout.landBatch(Similarity.sqIndex(emb), batchId, indexPath)
-      }
-      .start()
+    DeltaLayout.maintain(newEmb, indexPath, checkpoint) { (emb, batchId) =>
+      // index snapshot minus the batch's own ids (retry hygiene —
+      // see DedupStream.nearDupGate); a micro-batch's id set is
+      // small, so the anti-join broadcasts and the index never
+      // shuffles
+      val idx = DeltaLayout.readParquet(emb.sparkSession, indexPath)
+        .join(broadcast(emb.select("vec_id")), Seq("vec_id"), "left_anti")
+        .select(col("vec_id"), col("qv"), col("scale"), col("norm"))
+      DeltaLayout.landBatch(
+        Similarity.sqNearDupAgainst(emb, idx, threshold, planes, tables)
+          // defense in depth against an out-of-band writer duplicating
+          // an index vec_id (the re-join fans candidates back out)
+          .dropDuplicates("vec_new", "vec_corpus"),
+        batchId, pairsPath)
+      if (growIndex)
+        DeltaLayout.landBatch(Similarity.sqIndex(emb), batchId, indexPath)
+    }
 
   /** Index maintenance for a long-running gate — the
     * [[DedupStream.maintainIndex]] analog for the quantized layout:

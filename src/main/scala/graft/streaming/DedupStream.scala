@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -25,9 +25,10 @@ import graft.operators.Dedup
   *      against earlier stream arrivals — the index grows with the
   *      corpus, still without any re-sketch.
   *
-  * Exactly-once: BOTH sinks partition by batch_id with dynamic
-  * partition overwrite, so a retried micro-batch REPLACES its own
-  * pairs AND its own index partition instead of double-appending.
+  * Exactly-once: BOTH sinks land through [[DeltaLayout.maintain]] and
+  * [[DeltaLayout.landBatch]] as batch_id partitions, so a retried
+  * micro-batch REPLACES its own pairs AND its own index partition
+  * instead of double-appending.
   * Retry hygiene on the read side too: a failure landing between the
   * index write and the checkpoint commit leaves the batch's own
   * signatures in the snapshot the retry reads, so the gate anti-joins
@@ -63,77 +64,59 @@ object DedupStream {
       bands: Int = 16,
       threshold: Double = 0.5,
       growIndex: Boolean = true): StreamingQuery =
-    newDocs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val docs = batch.toDF()
-        // index snapshot for THIS batch, minus the batch's own ids: on
-        // a retry whose failed predecessor already wrote the growth
-        // partition, the snapshot contains this batch's signatures —
-        // joining against them would emit self-pairs and intra-batch
-        // pairs. A micro-batch's id set is small by definition, so the
-        // anti-join broadcasts and the index never shuffles.
-        val idx = spark.read.parquet(indexPath)
-          .join(broadcast(docs.select("doc_id")), Seq("doc_id"), "left_anti")
-          .select(col("doc_id"), col("sig"))
-        DeltaLayout.landBatch(
-          Dedup.minhashPairsAgainst(docs, idx, shingleLen, numHashes, bands, threshold)
-            // defense in depth: a doc_id duplicated IN THE INDEX by an
-            // out-of-band writer duplicates its pair rows (candidate
-            // dedup runs before the signature re-join, so the re-join
-            // fans back out) — collapse at the sink boundary
-            .dropDuplicates("doc_new", "doc_corpus"),
-          batchId, pairsPath)
-        // idempotent growth, mirroring the pairs sink: the batch's
-        // signatures REPLACE their own batch_id partition on retry
-        // instead of double-appending
-        if (growIndex) DeltaLayout.landBatch(
-          Dedup.minhashSignatures(docs, shingleLen, numHashes),
-          batchId, indexPath)
-      }
-      .start()
+    DeltaLayout.maintain(newDocs, indexPath, checkpoint) { (docs, batchId) =>
+      // index snapshot for THIS batch, minus the batch's own ids: on
+      // a retry whose failed predecessor already wrote the growth
+      // partition, the snapshot contains this batch's signatures —
+      // joining against them would emit self-pairs and intra-batch
+      // pairs. A micro-batch's id set is small by definition, so the
+      // anti-join broadcasts and the index never shuffles.
+      val idx = DeltaLayout.readParquet(docs.sparkSession, indexPath)
+        .join(broadcast(docs.select("doc_id")), Seq("doc_id"), "left_anti")
+        .select(col("doc_id"), col("sig"))
+      DeltaLayout.landBatch(
+        Dedup.minhashPairsAgainst(docs, idx, shingleLen, numHashes, bands, threshold)
+          // defense in depth: a doc_id duplicated IN THE INDEX by an
+          // out-of-band writer duplicates its pair rows (candidate
+          // dedup runs before the signature re-join, so the re-join
+          // fans back out) — collapse at the sink boundary
+          .dropDuplicates("doc_new", "doc_corpus"),
+        batchId, pairsPath)
+      // idempotent growth, mirroring the pairs sink: the batch's
+      // signatures REPLACE their own batch_id partition on retry
+      // instead of double-appending
+      if (growIndex) DeltaLayout.landBatch(
+        Dedup.minhashSignatures(docs, shingleLen, numHashes),
+        batchId, indexPath)
+    }
 
   /** Bounded end-to-end run over the documents table — the measured
     * driver entry for the streaming near-dup ingest gate
-    * (q_stream_neardup_gate), following the [[DriftStream
-    * .driftMonitorRun]] pattern: stage a deterministic micro-batch
-    * (the even doc_ids) as the stream source, seed the persisted
-    * signature index from the FULL corpus, run the gate to completion
-    * with the index frozen (growIndex=false — the serving
-    * measurement), and return the emitted pair set. With no trigger
-    * cap every staged file lands in micro-batch 0, so the output is
-    * one deterministic (doc_new, doc_corpus, est_jaccard) frame:
+    * (q_stream_neardup_gate), on the [[DeltaLayout.run]] lifecycle:
+    * the seed is the persisted signature index of the FULL corpus, a
+    * deterministic micro-batch (the even doc_ids, one staged file)
+    * runs through the gate with the index frozen (growIndex=false —
+    * the serving measurement), and the landed pair set is served:
     * exactly [[Dedup.minhashPairsAgainst]](batch, corpus − batch) by
     * the gate's construction (the spec asserts that equality). MinHash
     * estimates are not SQL-expressible, so the driver records this
-    * rows-only; accuracy is covered by the minhash calibration spec.
-    * The result is localCheckpoint'd so the staged source, index, and
-    * sink can be deleted before returning. */
+    * rows-only; accuracy is covered by the minhash calibration spec. */
   def nearDupGateRun(
       spark: SparkSession, dir: String, threshold: Double = 0.5): DataFrame = {
     val docs = graft.Tables.documents(spark, dir)
-    val root = java.nio.file.Files.createTempDirectory("graft_neardup_stream")
-    val src = root.resolve("src").toString
-    val indexPath = root.resolve("index").toString
-    val pairsPath = root.resolve("pairs").toString
-    StreamMeter.timeSeed("q_stream_neardup_gate") {
-      docs.filter(col("doc_id") % 2 === 0).write.mode("overwrite").parquet(src)
-      seedIndex(docs, indexPath)
-    }
-
-    val q = nearDupGate(
-      spark.readStream.schema(docs.schema).parquet(src),
-      indexPath, pairsPath, root.resolve("ckpt").toString,
-      threshold = threshold, growIndex = false)
-    try q.processAllAvailable() finally q.stop()
-
-    val result = spark.read.parquet(pairsPath)
-      .select("doc_new", "doc_corpus", "est_jaccard")
-      .localCheckpoint()
+    DeltaLayout.run(spark, "q_stream_neardup_gate", compacts = false,
+      (indexPath, src) => {
+        val batch = docs.filter(col("doc_id") % 2 === 0)
+        DeltaLayout.overlap(Seq(
+          () => seedIndex(docs, indexPath),
+          () => batch.coalesce(1).write.mode("overwrite").parquet(src)))
+        batch
+      },
+      nearDupGate(_, _, _, _, threshold = threshold, growIndex = false),
+      (_, _) => (),
+      (_, pairsPath) => DeltaLayout.readParquet(spark, pairsPath)
+        .select("doc_new", "doc_corpus", "est_jaccard"))
       .orderBy("doc_new", "doc_corpus")
-    DeltaLayout.rmTree(root)
-    result
   }
 
   /** Index maintenance for a long-running gate: collapse any doc_id

@@ -9,8 +9,12 @@ import org.apache.spark.sql.types.{DataType, StructType}
 /** The `seed artifact + per-batch delta partitions` exactly-once state
   * layout every maintained `*Stream` shares ([[AdditiveStream]],
   * [[SignedGraphStream]], [[SignedIndexLayout]], [[TrianglesStream]],
-  * [[PageRankStream]], [[SemDedupStream]], [[ExpectationsStream]]),
-  * and the one home of its protocol:
+  * [[PageRankStream]], [[SemDedupStream]], [[ExpectationsStream]],
+  * and the ingest gates: [[CurationStream]]'s quality, audit and
+  * phrase gates, [[ExpectationsStream.gateRun]], the
+  * [[EventsStream.sessionWindowRun]] sessions, [[DriftStream]],
+  * [[DedupStream]], [[ImageStream]], [[AnnStream]] and
+  * [[ResolutionStream]]), and the one home of its protocol:
   *
   *  - landing ([[maintain]], [[landBatch]]): a micro-batch at or below
   *    the seed's watermark is skipped (already folded — a late retry
@@ -29,7 +33,10 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    blanket delete of the delta root would lose it permanently;
   *  - the measured lifecycle ([[run]]): seed, one micro-batch per
   *    staged file (one file for a table split in halves,
-  *    [[stageHalves]]), an optional compaction, serve.
+  *    [[stageHalves]]), an optional compaction, serve. A gate is the
+  *    lifecycle with no compaction: its seed is the reference it
+  *    scores against (or nothing, [[gateRun]]), its batches land
+  *    their verdicts ([[landEach]]) and it serves the landed rows.
   */
 private[graft] object DeltaLayout {
 
@@ -271,6 +278,17 @@ private[graft] object DeltaLayout {
       }
       .start()
 
+  /** [[maintain]] with one face: every micro-batch lands `delta` of
+    * its own rows as its `batch_id` partition of `deltaPath` — so a
+    * replayed batch replaces its rows instead of appending them
+    * twice. */
+  def landEach(
+      newRows: DataFrame, seedPath: String, deltaPath: String,
+      checkpoint: String)(delta: DataFrame => DataFrame): StreamingQuery =
+    maintain(newRows, seedPath, checkpoint) { (batch, batchId) =>
+      landBatch(delta(batch), batchId, deltaPath)
+    }
+
   /** The compaction commit every stream shares: with at least one
     * partition under the commit face (`deltaPath/commitFace`, or the
     * delta root itself), `write(upTo, tmp)` writes the new seed faces
@@ -349,4 +367,15 @@ private[graft] object DeltaLayout {
       }
     } finally rmTree(root)
   }
+
+  /** The measured lifecycle of a gate that seeds nothing: `rows` are
+    * staged as ONE file (one micro-batch, as the whole table), each
+    * batch lands `verdict` of its rows through [[landEach]], and the
+    * landed verdicts are served. */
+  def gateRun(spark: SparkSession, entry: String, rows: DataFrame)(
+      verdict: DataFrame => DataFrame): DataFrame =
+    run(spark, entry, compacts = false,
+      (_, src) => { rows.coalesce(1).write.mode("overwrite").parquet(src); rows },
+      landEach(_, _, _, _)(verdict), (_, _) => (),
+      (_, delta) => readParquet(spark, delta).drop("batch_id"))
 }

@@ -16,11 +16,6 @@ import org.apache.spark.sql.types._
   */
 object EventsStream {
 
-  /** Last sessionWindowRun memory-sink view per session — see the drop
-    * in [[sessionWindowRun]] (bounds driver memory across runs). */
-  private val lastSessionTables =
-    scala.collection.concurrent.TrieMap.empty[SparkSession, String]
-
   val eventSchema: StructType = StructType(Seq(
     StructField("event_id", LongType),
     StructField("ts", TimestampType),
@@ -127,20 +122,22 @@ object EventsStream {
       .dropDuplicatesWithinWatermark("event_id")
 
   /** Bounded end-to-end run of the STREAMING session_window
-    * aggregation, returning the complete session set — the measured
-    * driver entry for the streaming surface (q_stream_session_window),
-    * result equal to the batch Etl.sessionWindows so the two share one
-    * oracle.
+    * aggregation on the [[DeltaLayout.run]] lifecycle, returning the
+    * complete session set — the measured driver entry for the
+    * streaming surface (q_stream_session_window), result equal to the
+    * batch Etl.sessionWindows so the two share one oracle.
     *
     * Append-mode session aggregations only emit a session once the
     * watermark passes its end, so a bounded run would otherwise hold
     * its tail sessions in state forever (the watermark stalls at
     * max(ts) − delay). The staged source therefore carries one
-    * far-future SENTINEL event (user_id −1, +2 h): after the data
-    * batch the watermark advances past every real session end and the
-    * no-data batch flushes them all; only the sentinel's own session
-    * stays open, filtered from the result. State is O(open sessions)
-    * throughout — the same bound a production stream has. */
+    * far-future SENTINEL event (user_id −1) in the same file as the
+    * events: after the data batch the watermark advances past every
+    * real session end and the no-data batch flushes them all; only the
+    * sentinel's own session stays open, filtered from the result. The
+    * file must be ONE: a second file would be a later micro-batch,
+    * whose events could fall behind the watermark. State is O(open
+    * sessions) throughout — the same bound a production stream has. */
   def sessionWindowRun(
       spark: SparkSession, dir: String, gapMinutes: Int = 30): DataFrame = {
     // watermarks reject TIMESTAMP_NTZ event time — cast to TIMESTAMP
@@ -148,35 +145,18 @@ object EventsStream {
     val ev = graft.Tables.events(spark, dir)
       .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
         col("user_id"), col("event_type"), col("value"))
-    val root = java.nio.file.Files.createTempDirectory("graft_sess_stream")
-    val src = root.resolve("src").toString
-    StreamMeter.timeSeed("q_stream_session_window") {
-      ev.write.mode("overwrite").parquet(src)
-    }
     // the sentinel must push the final watermark PAST every real
     // session end: a user's last session ends at max(ts) + gap, the
     // watermark reaches sentinel − 10 min (the delay below), so the
     // offset is gap + delay + 10 min slack — a fixed constant would
     // silently drop every tail session once gap approaches it
     val sentinelOffsetMin = gapMinutes + 10 + 10
-    ev.agg(max("ts").as("ts"))
+    val sentinel = ev.agg(max("ts").as("ts"))
       .select(lit(-1L).as("event_id"),
         (col("ts") + expr(s"INTERVAL $sentinelOffsetMin MINUTES")).as("ts"),
         lit(-1L).as("user_id"), lit("sentinel").as("event_type"),
         lit(0.0).as("value"))
-      .write.mode("append").parquet(src)
-
-    val name = "graft_sess_stream_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    // bound driver memory across repeated runs (bench does 3, probes
-    // more): the memory sink pins its rows until the view is dropped,
-    // so at most ONE result table per session stays registered — the
-    // previous run's view is dropped here, which invalidates the frame
-    // THAT call returned (callers consume results before re-running)
-    lastSessionTables.put(spark, name)
-      .foreach(old => spark.catalog.dropTempView(old))
-    val q = spark.readStream
-      .schema(ev.schema)
-      .parquet(src)
+    def sessions(events: DataFrame): DataFrame = events
       .withWatermark("ts", "10 minutes")
       .groupBy(col("user_id"), session_window(col("ts"), s"$gapMinutes minutes").as("w"))
       .agg(
@@ -184,18 +164,16 @@ object EventsStream {
         graft.functions.StableStats.stableSum(col("value"), 2).as("total_value"))
       .select(col("user_id"), col("w.start").as("session_start"),
         col("w.end").as("session_end"), col("n_events"), col("total_value"))
-      .writeStream.outputMode("append")
-      .format("memory").queryName(name)
-      .option("checkpointLocation", root.resolve("ckpt").toString)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-
-    // the memory sink holds the rows; the staged source and checkpoint
-    // are dead weight once the query stops — delete them so repeated
-    // runs (bench does 3) don't accrete temp data
-    DeltaLayout.rmTree(root)
-
-    spark.table(name)
+    DeltaLayout.run(spark, "q_stream_session_window", compacts = false,
+      (_, src) => {
+        ev.unionByName(sentinel).coalesce(1)
+          .write.mode("overwrite").parquet(src)
+        ev
+      },
+      (events, seedPath, deltaPath, checkpoint) => DeltaLayout.landEach(
+        sessions(events), seedPath, deltaPath, checkpoint)(identity),
+      (_, _) => (),
+      (_, deltaPath) => DeltaLayout.readParquet(spark, deltaPath).drop("batch_id"))
       .filter(col("user_id") =!= -1L)
       .orderBy("user_id", "session_start")
   }

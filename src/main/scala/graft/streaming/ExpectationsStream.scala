@@ -12,7 +12,7 @@ import graft.operators.Expectations.Check
   * on an ingest stream exactly as in batch — NotNull / InRange /
   * AcceptedValues are pure projections and the referential check is a
   * stream-static join against the (broadcast) parent key set, so the
-  * frame is legal in append mode with no watermark and no state. This
+  * verdicts of a micro-batch depend on its own rows alone. This
   * is the gate a warehouse load puts in front of a landing sink:
   * every arriving row reports which declared constraints it violates
   * BEFORE it lands, instead of poisoning downstream aggregates
@@ -22,42 +22,17 @@ import graft.operators.Expectations.Check
   * oracle (equality asserted in StreamingSpec). */
 object ExpectationsStream {
 
-  /** Last memory-sink view per session (the CurationStream convention:
-    * at most one result table stays registered). */
-  private val lastGateTables =
-    scala.collection.concurrent.TrieMap.empty[SparkSession, String]
-
-  /** Bounded end-to-end run: stage the fact table as a parquet source,
-    * stream it through [[Expectations.rowAudit]] with static parents,
-    * return the complete per-row verdict set (ordered — the sink table
-    * is bounded). */
+  /** Bounded end-to-end run ([[DeltaLayout.gateRun]]): stage the fact
+    * table as one file, run each micro-batch through
+    * [[Expectations.rowAudit]] with static parents, and serve the
+    * complete per-row verdict set (ordered). */
   def gateRun(
       spark: SparkSession, facts: DataFrame,
       parents: Map[String, DataFrame], idCols: Seq[String],
-      checks: Seq[Check]): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val root = java.nio.file.Files.createTempDirectory("graft_expect_stream")
-    val src = root.resolve("src").toString
-    StreamMeter.timeSeed("q_stream_expectations") {
-      facts.write.mode("overwrite").parquet(src)
-    }
-
-    val name = "graft_expect_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    lastGateTables.put(spark, name)
-      .foreach(old => spark.catalog.dropTempView(old))
-    val q = Expectations.rowAudit(
-        spark.readStream.schema(facts.schema).parquet(src),
-        parents, idCols, checks, ordered = false)
-      .writeStream.outputMode("append")
-      .format("memory").queryName(name)
-      .option("checkpointLocation", root.resolve("ckpt").toString)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-
-    DeltaLayout.rmTree(root)
-
-    spark.table(name).orderBy(idCols.map(col) :+ col("violated"): _*)
-  }
+      checks: Seq[Check]): DataFrame =
+    DeltaLayout.gateRun(spark, "q_stream_expectations", facts) {
+      Expectations.rowAudit(_, parents, idCols, checks, ordered = false)
+    }.orderBy(idCols.map(col) :+ col("violated"): _*)
 
   // ---- Streaming VERDICT maintenance (a DeltaLayout stream) ----
   //
@@ -110,11 +85,9 @@ object ExpectationsStream {
     val subset = factChecks.map(_._1)
     val seqMap = map(factChecks.zipWithIndex.flatMap {
       case ((_, gi), j) => Seq(lit(j + 1), lit(gi + 1)) }: _*)
-    DeltaLayout.maintain(newFacts, seedPath, checkpoint) { (batch, batchId) =>
-      DeltaLayout.landBatch(
-        Expectations.partials(emptyTables + (factTable -> batch), subset)
-          .withColumn("check_seq", element_at(seqMap, col("check_seq"))),
-        batchId, deltaPath)
+    DeltaLayout.landEach(newFacts, seedPath, deltaPath, checkpoint) { batch =>
+      Expectations.partials(emptyTables + (factTable -> batch), subset)
+        .withColumn("check_seq", element_at(seqMap, col("check_seq")))
     }
   }
 

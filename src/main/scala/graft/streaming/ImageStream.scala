@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -19,11 +19,12 @@ import graft.sources.Multimodal
   * corroboration exactly like the batch face.
   *
   * Exactly-once mechanics are the text gate's verbatim: pairs and
-  * (optional) index growth both land per batch_id under dynamic
-  * partition overwrite, so a retried micro-batch REPLACES its own
-  * output; the index snapshot anti-joins the batch's own media_ids
-  * so a retry whose failed predecessor already wrote the growth
-  * partition emits no self-pairs. */
+  * (optional) index growth both land per batch_id through
+  * [[DeltaLayout.maintain]] and [[DeltaLayout.landBatch]], so a
+  * retried micro-batch REPLACES its own output; the index snapshot
+  * anti-joins the batch's own media_ids so a retry whose failed
+  * predecessor already wrote the growth partition emits no
+  * self-pairs. */
 object ImageStream {
 
   /** Seed (or re-seed) the persisted fingerprint index from a
@@ -45,105 +46,87 @@ object ImageStream {
       maxHamming: Int = 6,
       bucketCap: Long = Long.MaxValue,
       growIndex: Boolean = true): StreamingQuery =
-    newMedia.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        // fingerprint the arrivals: one narrow decode pass, then the
-        // payloads are DONE — everything downstream joins slim
-        // integer frames
-        val fps = Multimodal.imageFingerprints(
-            batch.toDF().as[Multimodal.MediaRecord])
-          .toDF().localCheckpoint()
-        // index snapshot minus the batch's own ids (retry hygiene —
-        // see DedupStream.nearDupGate); the batch id set is small by
-        // definition, so the anti-join broadcasts. An EMPTY index (a
-        // gate starting from an empty corpus: zero parquet files under
-        // the partition layout) reads as an empty frame in the batch's
-        // own fingerprint schema instead of failing schema inference.
-        val idxRaw =
-          if (DeltaLayout.hasDeltaPartitions(spark, indexPath))
-            spark.read.parquet(indexPath)
-          else fps.limit(0).withColumn("batch_id", lit(-1L))
-        // last-writer-wins per media_id: growIndex lands a re-arrival
-        // in a LATER batch partition without retracting the earlier
-        // one, so the snapshot can hold two fp rows for one id —
-        // probing both would compute the verdict against a stale
-        // fingerprint (and fan out the ahash re-join below). The
-        // latest batch's row is the serving truth.
-        val idx = idxRaw
-          .join(broadcast(fps.select("media_id")), Seq("media_id"), "left_anti")
-          .groupBy("media_id")
-          .agg(max(struct(col("batch_id").cast("long").as("batch_id"),
-            col("codec"), col("ahash"), col("dhash"))).as("m"))
-          .select(col("media_id"), col("m.codec").as("codec"),
-            col("m.ahash").as("ahash"), col("m.dhash").as("dhash"))
-        val pairs = Dedup.fingerprintPairsAgainst(
-          fps.select(col("media_id").as("doc_id"), col("dhash").as("fp")),
-          idx.select(col("media_id").as("doc_id"), col("dhash").as("fp")),
-          maxHamming, bucketCap)
-        DeltaLayout.landBatch(pairs
-            .join(fps.select(col("media_id").as("doc_new"),
-              col("ahash").as("ah_n")), Seq("doc_new"))
-            .join(idx.select(col("media_id").as("doc_corpus"),
-              col("ahash").as("ah_c")), Seq("doc_corpus"))
-            .select(col("doc_new").as("media_new"),
-              col("doc_corpus").as("media_corpus"),
-              col("hamming").as("hamming_d"),
-              expr("bit_count(ah_n ^ ah_c)").as("hamming_a")),
-          batchId, pairsPath)
-        if (growIndex) DeltaLayout.landBatch(fps, batchId, indexPath)
-      }
-      .start()
+    DeltaLayout.maintain(newMedia, indexPath, checkpoint) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      import spark.implicits._
+      // fingerprint the arrivals: one narrow decode pass, then the
+      // payloads are DONE — everything downstream joins slim
+      // integer frames
+      val fps = Multimodal.imageFingerprints(batch.as[Multimodal.MediaRecord])
+        .toDF().localCheckpoint()
+      // index snapshot minus the batch's own ids (retry hygiene —
+      // see DedupStream.nearDupGate); the batch id set is small by
+      // definition, so the anti-join broadcasts. An EMPTY index (a
+      // gate starting from an empty corpus: zero parquet files under
+      // the partition layout) reads as an empty frame in the batch's
+      // own fingerprint schema instead of failing schema inference.
+      val idxRaw =
+        if (DeltaLayout.hasDeltaPartitions(spark, indexPath))
+          DeltaLayout.readParquet(spark, indexPath)
+        else fps.limit(0).withColumn("batch_id", lit(-1L))
+      // last-writer-wins per media_id: growIndex lands a re-arrival
+      // in a LATER batch partition without retracting the earlier
+      // one, so the snapshot can hold two fp rows for one id —
+      // probing both would compute the verdict against a stale
+      // fingerprint (and fan out the ahash re-join below). The
+      // latest batch's row is the serving truth.
+      val idx = idxRaw
+        .join(broadcast(fps.select("media_id")), Seq("media_id"), "left_anti")
+        .groupBy("media_id")
+        .agg(max(struct(col("batch_id").cast("long").as("batch_id"),
+          col("codec"), col("ahash"), col("dhash"))).as("m"))
+        .select(col("media_id"), col("m.codec").as("codec"),
+          col("m.ahash").as("ahash"), col("m.dhash").as("dhash"))
+      val pairs = Dedup.fingerprintPairsAgainst(
+        fps.select(col("media_id").as("doc_id"), col("dhash").as("fp")),
+        idx.select(col("media_id").as("doc_id"), col("dhash").as("fp")),
+        maxHamming, bucketCap)
+      DeltaLayout.landBatch(pairs
+          .join(fps.select(col("media_id").as("doc_new"),
+            col("ahash").as("ah_n")), Seq("doc_new"))
+          .join(idx.select(col("media_id").as("doc_corpus"),
+            col("ahash").as("ah_c")), Seq("doc_corpus"))
+          .select(col("doc_new").as("media_new"),
+            col("doc_corpus").as("media_corpus"),
+            col("hamming").as("hamming_d"),
+            expr("bit_count(ah_n ^ ah_c)").as("hamming_a")),
+        batchId, pairsPath)
+      if (growIndex) DeltaLayout.landBatch(fps, batchId, indexPath)
+    }
 
   /** Bounded end-to-end run — the measured driver entry
-    * (q_stream_image_gate): seed the fingerprint index with the BASE
-    * images' fingerprints (a projection of the persisted imageFpShared
-    * artifact — the corpus is never re-decoded), stage the planted
-    * perceptual twins as the arriving stream (only their source docs
-    * re-render — the arrivals are the images a crawler would deliver),
-    * run the gate with the index frozen (the serving measurement), and
-    * return the emitted pair frame: every planted twin must match its
-    * original at hamming 0 WITHOUT exact-hash help (different bytes).
-    * rows-only (DuckDB cannot decode PNGs); stream == batch operator
-    * equality and mid-stream twin capture are spec-pinned. */
+    * (q_stream_image_gate), on the [[DeltaLayout.run]] lifecycle: seed
+    * the fingerprint index with the BASE images' fingerprints (a
+    * projection of the persisted imageFpShared artifact — the corpus
+    * is never re-decoded), stage the planted perceptual twins as the
+    * arriving stream (only their source docs re-render — the arrivals
+    * are the images a crawler would deliver) in two files, so the
+    * stream sees two micro-batches, run the gate with the index frozen
+    * (the serving measurement), and serve the landed pair frame: every
+    * planted twin must match its original at hamming 0 WITHOUT
+    * exact-hash help (different bytes). rows-only (DuckDB cannot
+    * decode PNGs); stream == batch operator equality, index growth and
+    * mid-stream twin capture are spec-pinned. */
   def imageGateRun(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.Multimodal.TwinIdBit
-    val root = java.nio.file.Files.createTempDirectory("graft_img_stream")
-    val src = root.resolve("src").toString
-    val indexPath = root.resolve("index").toString
-    val pairsPath = root.resolve("pairs").toString
-    try {
-      StreamMeter.timeSeed("q_stream_image_gate") {
+    DeltaLayout.run(spark, "q_stream_image_gate", compacts = false,
+      (indexPath, src) => {
         val fps = graft.SparkEntry.imageFpShared(spark, dir)
-        seedIndex(fps.filter(col("media_id") < TwinIdBit), indexPath)
         // arrivals: the twin images themselves — re-rendered from
-        // only the twin-bearing docs (4 % of the corpus), in two
-        // files so the stream sees more than one micro-batch
+        // only the twin-bearing docs (4 % of the corpus)
         val docs = graft.Tables.documents(spark, dir)
           .filter(col("doc_id") % 50 === 0 || col("doc_id") % 50 === 10)
-        Multimodal.syntheticImages(docs)
-          .filter(col("media_id") >= TwinIdBit)
-          .toDF()
-          .repartition(2).write.mode("overwrite").parquet(src)
-      }
-      val schema = org.apache.spark.sql.Encoders
-        .product[Multimodal.MediaRecord].schema
-      // growIndex=false is the serving measurement (the published
-      // bench entry); SPARK_GRAFT_IMAGE_GROW=true turns the growth
-      // face's index writes on for scale probes of the write path
-      val q = imageGate(
-        spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(src),
-        indexPath, pairsPath, root.resolve("ckpt").toString,
-        maxHamming = 6, bucketCap = 1000L,
-        growIndex = sys.env.get("SPARK_GRAFT_IMAGE_GROW").contains("true"))
-      try q.processAllAvailable() finally q.stop()
-      spark.read.parquet(pairsPath)
-        .select("media_new", "media_corpus", "hamming_d", "hamming_a")
-        .localCheckpoint()
-        .orderBy("media_new", "media_corpus")
-    } finally DeltaLayout.rmTree(root)
+        val twins = Multimodal.syntheticImages(docs)
+          .filter(col("media_id") >= TwinIdBit).toDF()
+        DeltaLayout.overlap(Seq(
+          () => seedIndex(fps.filter(col("media_id") < TwinIdBit), indexPath),
+          () => twins.repartition(2).write.mode("overwrite").parquet(src)))
+        twins
+      },
+      imageGate(_, _, _, _, maxHamming = 6, bucketCap = 1000L, growIndex = false),
+      (_, _) => (),
+      (_, pairsPath) => DeltaLayout.readParquet(spark, pairsPath)
+        .select("media_new", "media_corpus", "hamming_d", "hamming_a"))
+      .orderBy("media_new", "media_corpus")
   }
 }

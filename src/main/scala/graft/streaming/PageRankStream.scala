@@ -58,13 +58,12 @@ object PageRankStream {
   def ranksMaintain(
       newEdges: DataFrame, seedRoot: String, deltaPath: String,
       checkpoint: String): StreamingQuery =
-    DeltaLayout.maintain(newEdges, seedRoot, checkpoint) { (batch, batchId) =>
-      DeltaLayout.landBatch(batch
-        .select(
+    DeltaLayout.landEach(newEdges, seedRoot, deltaPath, checkpoint) {
+      _.select(
           least(col("src"), col("dst")).as("a"),
           greatest(col("src"), col("dst")).as("b"), col("w"))
         .filter(col("a") =!= col("b"))
-        .groupBy("a", "b").agg(sum("w").as("w")), batchId, deltaPath)
+        .groupBy("a", "b").agg(sum("w").as("w"))
     }
 
   private def liveDeltaIncrements(

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.Resolution
 
@@ -14,44 +13,38 @@ import graft.operators.Resolution
   * the union of per-micro-batch matches is exactly the whole-feed
   * batch match and the measured driver entry shares q_entity_match's
   * FULL DuckDB oracle. The best-match ranking is a window over
-  * feed_id, stateful in append mode, so the gate runs per batch via
-  * foreachBatch (the phraseGateRun mechanics); the df-capped blocking
-  * index and the catalog both broadcast-scale (dictionary-sized). */
+  * feed_id, so the gate runs per micro-batch
+  * ([[DeltaLayout.landEach]]); the df-capped blocking index and the
+  * catalog both broadcast-scale (dictionary-sized). */
 object ResolutionStream {
 
-  /** Bounded end-to-end run for the measured driver entry: stage the
-    * feed as files, stream it through the match gate against the
-    * persisted blocking index, return the union of per-batch match
-    * verdicts. */
+  /** Bounded end-to-end run for the measured driver entry, on the
+    * [[DeltaLayout.run]] lifecycle: stage the feed as one file and the
+    * static dictionary side (catalog and blocking index) at the seed —
+    * a production gate holds those artifacts open instead of
+    * rebuilding them per micro-batch — match each micro-batch against
+    * them, and serve the union of per-batch match verdicts. */
   def entityGateRun(
       feed: DataFrame, catalog: DataFrame, index: DataFrame,
       minScoreMicro: Long = 500000L, k: Int = 1): DataFrame = {
     val spark = feed.sparkSession
-    val root = java.nio.file.Files.createTempDirectory("graft_er_stream")
-    val src = root.resolve("src").toString
-    val out = root.resolve("out").toString
-    // seed phase = feed staging + pinning the static dictionary side
-    // (a production gate holds the artifacts open, it doesn't re-read
-    // them per micro-batch)
-    val (cat, idx) = StreamMeter.timeSeed("q_stream_entity_match") {
-      feed.write.mode("overwrite").parquet(src)
-      (catalog.localCheckpoint(), index.localCheckpoint())
-    }
-
-    val q = spark.readStream.schema(feed.schema).parquet(src)
-      .writeStream
-      .option("checkpointLocation", root.resolve("ckpt").toString)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        Resolution.entityMatchWithIndex(
-            batch.toDF(), cat, idx, minScoreMicro, k)
-          .write.mode("append").parquet(out)
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-
-    val result = spark.read.parquet(out).localCheckpoint()
-    DeltaLayout.rmTree(root)
-    result.orderBy("feed_id", "rank")
+    DeltaLayout.run(spark, "q_stream_entity_match", compacts = false,
+      (seedPath, src) => {
+        DeltaLayout.overlap(Seq(
+          () => catalog.write.mode("overwrite").parquet(s"$seedPath/catalog"),
+          () => index.write.mode("overwrite").parquet(s"$seedPath/index"),
+          () => feed.coalesce(1).write.mode("overwrite").parquet(src)))
+        feed
+      },
+      (feeds, seedPath, deltaPath, checkpoint) =>
+        DeltaLayout.landEach(feeds, seedPath, deltaPath, checkpoint) {
+          Resolution.entityMatchWithIndex(_,
+            DeltaLayout.readParquet(spark, s"$seedPath/catalog"),
+            DeltaLayout.readParquet(spark, s"$seedPath/index"), minScoreMicro, k)
+        },
+      (_, _) => (),
+      (_, deltaPath) => DeltaLayout.readParquet(spark, deltaPath).drop("batch_id"))
+      .orderBy("feed_id", "rank")
   }
 
   /** Driver-entry form: the corrupted part feed resolved against the

@@ -50,10 +50,9 @@ object SemDedupStream {
       seedPath: String,
       deltaPath: String,
       checkpoint: String): StreamingQuery =
-    DeltaLayout.maintain(newEmb, seedPath, checkpoint) { (batch, batchId) =>
-      val cents = batch.sparkSession.read.parquet(s"$seedPath/centroids")
-      DeltaLayout.landBatch(
-        Similarity.semDeDupAssignAgainst(batch, cents), batchId, deltaPath)
+    DeltaLayout.landEach(newEmb, seedPath, deltaPath, checkpoint) { batch =>
+      Similarity.semDeDupAssignAgainst(batch,
+        batch.sparkSession.read.parquet(s"$seedPath/centroids"))
     }
 
   /** (live slim assignments, live DELTA slice) bounded at `upTo` —

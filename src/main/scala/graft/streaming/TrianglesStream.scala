@@ -48,9 +48,8 @@ object TrianglesStream {
   def trianglesMaintain(
       newEdges: DataFrame, seedRoot: String, deltaPath: String,
       checkpoint: String): StreamingQuery =
-    DeltaLayout.maintain(newEdges, seedRoot, checkpoint) { (batch, batchId) =>
-      DeltaLayout.landBatch(Graph.canonicalEdges(batch), batchId, deltaPath)
-    }
+    DeltaLayout.landEach(newEdges, seedRoot, deltaPath, checkpoint)(
+      Graph.canonicalEdges)
 
   private def liveDeltaEdges(
       spark: SparkSession, seedRoot: String, deltaPath: String,

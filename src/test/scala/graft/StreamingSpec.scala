@@ -9,9 +9,26 @@ import graft.streaming.EventsStream
   * via the memory sink, compared against the batch twin. */
 class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
 
+  /** Temp roots made by the running test: removed when it ends,
+    * however it ends. */
+  private val roots =
+    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
+
+  /** A private temp root for the running test. */
+  private def tempRoot(prefix: String): java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory(prefix)
+    roots.add(root)
+    root
+  }
+
+  override def withFixture(test: NoArgTest): org.scalatest.Outcome =
+    try super.withFixture(test)
+    finally while (!roots.isEmpty)
+      graft.streaming.DeltaLayout.rmTree(roots.poll())
+
   test("windowedAgg over a stream matches the batch aggregation") {
     // Stage the events parquet into a clean stream-source dir.
-    val dir = java.nio.file.Files.createTempDirectory("evstream").toString
+    val dir = tempRoot("evstream").toString
     Tables.events(spark, sfDir)
       .withColumn("ts", col("ts").cast("timestamp"))
       .write.mode("overwrite").parquet(dir)
@@ -32,7 +49,7 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
   }
 
   test("dedupStream drops replayed events within the watermark horizon") {
-    val dir = java.nio.file.Files.createTempDirectory("dedupstream").toString
+    val dir = tempRoot("dedupstream").toString
     val events = Tables.events(spark, sfDir)
       .withColumn("ts", col("ts").cast("timestamp"))
       .limit(500)
@@ -52,7 +69,7 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
 
   test("enrichStream joins the static dimension per micro-batch, keeping misses") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("enrichstream").toString
+    val dir = tempRoot("enrichstream").toString
     Tables.events(spark, sfDir)
       .withColumn("ts", col("ts").cast("timestamp"))
       .limit(200)
@@ -78,7 +95,7 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
   }
 
   test("attributionJoin matches purchases to in-horizon views only") {
-    val dir = java.nio.file.Files.createTempDirectory("attrstream").toString
+    val dir = tempRoot("attrstream").toString
     val ev = Tables.events(spark, sfDir)
       .withColumn("ts", col("ts").cast("timestamp"))
     ev.write.mode("overwrite").parquet(dir)
@@ -111,7 +128,7 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
   }
 
   test("curationSignals is stream-safe and matches its batch twin exactly") {
-    val dir = java.nio.file.Files.createTempDirectory("curatestream").toString
+    val dir = tempRoot("curatestream").toString
     Tables.documents(spark, sfDir).write.mode("overwrite").parquet(dir)
     val schema = spark.read.parquet(dir).schema
     val q = graft.operators.Curation
@@ -145,7 +162,7 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
         .withColumn("embedding",
           expr("transform(embedding, x -> cast(x * 1.001 as float))")))
 
-    val root = Files.createTempDirectory("semgate").toString
+    val root = tempRoot("semgate").toString
     val indexDir = s"$root/index"
     val pairsDir = s"$root/pairs"
     val srcDir = s"$root/src"
@@ -218,7 +235,7 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
       .unionAll(docs.filter(col("doc_id") >= 400 && col("doc_id") < 403)
         .withColumn("doc_id", col("doc_id") + 1000))
 
-    val root = Files.createTempDirectory("neardupgate").toString
+    val root = tempRoot("neardupgate").toString
     val indexDir = s"$root/index"
     val pairsDir = s"$root/pairs"
     val srcDir = s"$root/src"
@@ -288,13 +305,12 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
   }
 
   test("nearDupGate with growIndex=false leaves the index frozen") {
-    import java.nio.file.Files
     import graft.operators.Dedup
     val docs = Tables.documents(spark, "/root/testdata/sf0.01")
     val corpus = docs.filter(col("doc_id") < 400)
     val incoming = docs.filter(col("doc_id") >= 400)
 
-    val root = Files.createTempDirectory("neardupfrozen").toString
+    val root = tempRoot("neardupfrozen").toString
     graft.streaming.DedupStream.seedIndex(corpus, s"$root/index")
     incoming.write.parquet(s"$root/src")
     val idxCountBefore = spark.read.parquet(s"$root/index").count()
@@ -317,13 +333,12 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
   }
 
   test("nearDupGate retry: a pre-grown index yields no self or intra-batch pairs") {
-    import java.nio.file.Files
     import graft.operators.Dedup
     val docs = Tables.documents(spark, "/root/testdata/sf0.01")
     val corpus = docs.filter(col("doc_id") < 400)
     val b1 = docs.filter(col("doc_id") >= 400 && col("doc_id") < 450)
 
-    val root = Files.createTempDirectory("neardupretry").toString
+    val root = tempRoot("neardupretry").toString
     graft.streaming.DedupStream.seedIndex(corpus, s"$root/index")
     // simulate the failure window: the original attempt wrote its
     // growth partition (batch_id=0) but died before the checkpoint
@@ -354,13 +369,12 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
   }
 
   test("maintainIndex collapses duplicate doc_ids and shrinks files, pairs unchanged") {
-    import java.nio.file.Files
     import graft.operators.Dedup
     val docs = Tables.documents(spark, "/root/testdata/sf0.01")
     val corpus = docs.filter(col("doc_id") < 400)
     val probe = docs.filter(col("doc_id") >= 400 && col("doc_id") < 450)
 
-    val root = Files.createTempDirectory("neardupmaint").toString
+    val root = tempRoot("neardupmaint").toString
     val indexDir = s"$root/index"
     graft.streaming.DedupStream.seedIndex(corpus, indexDir)
     // legacy double-append: the same docs land again in a later batch
@@ -394,7 +408,13 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
     assert(fileCount() < filesBefore)
   }
 
+  /** The measured lifecycles' temp roots now in the JVM temp dir. */
+  private def streamRoots(): Set[String] =
+    Option(new java.io.File(System.getProperty("java.io.tmpdir")).list())
+      .toSet.flatten.filter(_.startsWith("graft_q_stream_"))
+
   test("sessionWindowRun (streaming) equals the batch session_window twin") {
+    val rootsBefore = streamRoots()
     val streamed = SparkEntry.queries("q_stream_session_window")(spark, sfDir)
       .withColumn("session_start", col("session_start").cast("timestamp_ntz"))
       .withColumn("session_end", col("session_end").cast("timestamp_ntz"))
@@ -416,14 +436,16 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
       .collect().map(_.toString).toSeq
     assert(wideGap === wideBatch)
     assert(wideGap.nonEmpty)
-    // repeated runs keep at most ONE memory-sink view registered
-    // (driver memory is bounded across bench/probe loops)
+    // after two runs no result view is registered (no rows pinned in
+    // driver memory) and no lifecycle root is left behind
     val sessTables = spark.catalog.listTables().collect()
       .map(_.name).filter(_.startsWith("graft_sess_stream_"))
-    assert(sessTables.length === 1, sessTables.mkString(","))
+    assert(sessTables.isEmpty, sessTables.mkString(","))
+    assert(streamRoots() -- rootsBefore === Set.empty[String])
   }
 
   test("qualityGateRun (streaming) equals the batch curationSignals twin") {
+    val rootsBefore = streamRoots()
     val streamed = SparkEntry.queries("q_stream_quality_gate")(spark, sfDir)
       .collect().map(_.toString).toSeq
     val batch = graft.operators.Curation
@@ -433,11 +455,15 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
       .collect().map(_.toString).toSeq
     assert(streamed === batch)
     assert(streamed.nonEmpty)
-    // repeated runs keep at most ONE memory-sink view registered
+    // after two runs no result view is registered, no lifecycle root
+    // is left behind, and the gate's phases were timed
     graft.streaming.CurationStream.qualityGateRun(spark, sfDir).collect()
     val gateTables = spark.catalog.listTables().collect()
       .map(_.name).filter(_.startsWith("graft_qgate_"))
-    assert(gateTables.length === 1, gateTables.mkString(","))
+    assert(gateTables.isEmpty, gateTables.mkString(","))
+    assert(streamRoots() -- rootsBefore === Set.empty[String])
+    assert(Set("seed", "batch", "serve").subsetOf(graft.streaming.StreamMeter
+      .phaseSnapshot("q_stream_quality_gate").keySet))
   }
 
   test("driftMonitorRun (streaming) equals the batch divergenceAgainst twin") {
@@ -540,7 +566,7 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
       .collect().map(_.toString).toSeq
     assert(streamed === batch)
     // manual pre/post-compaction equality on the live serve path
-    val root = java.nio.file.Files.createTempDirectory("graft_verd_spec")
+    val root = tempRoot("graft_verd_spec")
     val li = tables("lineitem")
     val src = root.resolve("src").toString
     li.filter(col("l_orderkey") % 2 =!= 0).write.mode("overwrite").parquet(src)
@@ -572,77 +598,73 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
     import graft.streaming.Bm25SignedStream
     val queries = Seq((0L, "bb cc"), (1L, "ee")).toDF("query_id", "query_text")
     val terms = Seq("bb", "cc", "ee")
-    val root = java.nio.file.Files.createTempDirectory("bm25_signed_spec")
+    val root = tempRoot("bm25_signed_spec")
+    val src = root.resolve("src").toString
+    val seedP = root.resolve("seed").toString
+    val deltaP = root.resolve("delta").toString
+    // yesterday: doc1 verbatim, doc2 STALE, doc5 alien (deleted today)
+    Bm25SignedStream.seedIndex(
+      Seq((1L, "aa bb"), (2L, "zz zz"), (5L, "aa aa"))
+        .toDF("doc_id", "text"), seedP)
+    def ops(rows: Seq[(Long, String, String)]) =
+      rows.toDF("doc_id", "text", "op")
+    // batch 0: REPLACE doc2, add doc3, add doc6 (retracted in b1)
+    val b0 = ops(Seq((2L, "bb cc", "add"), (3L, "cc dd", "add"),
+      (6L, "ee ff", "add")))
+    b0.write.mode("overwrite").parquet(src)
+    val q = Bm25SignedStream.indexMaintain(
+      spark.readStream.schema(b0.schema).parquet(src),
+      seedP, deltaP, root.resolve("ckpt").toString)
     try {
-      val src = root.resolve("src").toString
-      val seedP = root.resolve("seed").toString
-      val deltaP = root.resolve("delta").toString
-      // yesterday: doc1 verbatim, doc2 STALE, doc5 alien (deleted today)
+      q.processAllAvailable()
+      // batch 1: remove the alien AND the batch-0 add (nets out),
+      // add doc4; batch 2: RE-ADD doc5 with new text (remove-then-
+      // re-add serves the re-add)
+      ops(Seq((5L, "", "remove"), (6L, "", "remove"), (4L, "dd ee", "add")))
+        .write.mode("append").parquet(src)
+      q.processAllAvailable()
+      ops(Seq((5L, "ee ff", "add")))
+        .write.mode("append").parquet(src)
+      q.processAllAvailable()
+    } finally q.stop()
+    val surviving = Seq((1L, "aa bb"), (2L, "bb cc"), (3L, "cc dd"),
+      (4L, "dd ee"), (5L, "ee ff")).toDF("doc_id", "text")
+    val expect = graft.operators.Retrieval.bm25Search(surviving, queries)
+      .collect().map(_.toString).toSeq
+    val before = Bm25SignedStream.serveSearch(
+        spark, seedP, deltaP, queries, terms)
+      .collect().map(_.toString).toSeq
+    assert(before === expect)
+    // doc6 netted out and the stale doc2 text is gone: "zz"/"ff"
+    // terms must not surface doc2-old or doc6 for any query probing
+    // them (df/avgdl already proven by the exact equality above)
+    Bm25SignedStream.compact(spark, seedP, deltaP)
+    assert(Bm25SignedStream.serveSearch(
+        spark, seedP, deltaP, queries, terms)
+      .collect().map(_.toString).toSeq === expect)
+    // landing guards
+    def rootMsg(t: Throwable): String =
+      (Option(t.getMessage).getOrElse("")) +
+        Option(t.getCause).map(rootMsg).getOrElse("")
+    def runBatch(rows: Seq[(Long, String, String)]): Unit = {
+      val r2 = tempRoot("bm25_signed_guard")
+      val s2 = r2.resolve("src").toString
       Bm25SignedStream.seedIndex(
-        Seq((1L, "aa bb"), (2L, "zz zz"), (5L, "aa aa"))
-          .toDF("doc_id", "text"), seedP)
-      def ops(rows: Seq[(Long, String, String)]) =
-        rows.toDF("doc_id", "text", "op")
-      // batch 0: REPLACE doc2, add doc3, add doc6 (retracted in b1)
-      val b0 = ops(Seq((2L, "bb cc", "add"), (3L, "cc dd", "add"),
-        (6L, "ee ff", "add")))
-      b0.write.mode("overwrite").parquet(src)
-      val q = Bm25SignedStream.indexMaintain(
-        spark.readStream.schema(b0.schema).parquet(src),
-        seedP, deltaP, root.resolve("ckpt").toString)
-      try {
-        q.processAllAvailable()
-        // batch 1: remove the alien AND the batch-0 add (nets out),
-        // add doc4; batch 2: RE-ADD doc5 with new text (remove-then-
-        // re-add serves the re-add)
-        ops(Seq((5L, "", "remove"), (6L, "", "remove"), (4L, "dd ee", "add")))
-          .write.mode("append").parquet(src)
-        q.processAllAvailable()
-        ops(Seq((5L, "ee ff", "add")))
-          .write.mode("append").parquet(src)
-        q.processAllAvailable()
-      } finally q.stop()
-      val surviving = Seq((1L, "aa bb"), (2L, "bb cc"), (3L, "cc dd"),
-        (4L, "dd ee"), (5L, "ee ff")).toDF("doc_id", "text")
-      val expect = graft.operators.Retrieval.bm25Search(surviving, queries)
-        .collect().map(_.toString).toSeq
-      val before = Bm25SignedStream.serveSearch(
-          spark, seedP, deltaP, queries, terms)
-        .collect().map(_.toString).toSeq
-      assert(before === expect)
-      // doc6 netted out and the stale doc2 text is gone: "zz"/"ff"
-      // terms must not surface doc2-old or doc6 for any query probing
-      // them (df/avgdl already proven by the exact equality above)
-      Bm25SignedStream.compact(spark, seedP, deltaP)
-      assert(Bm25SignedStream.serveSearch(
-          spark, seedP, deltaP, queries, terms)
-        .collect().map(_.toString).toSeq === expect)
-      // landing guards
-      def rootMsg(t: Throwable): String =
-        (Option(t.getMessage).getOrElse("")) +
-          Option(t.getCause).map(rootMsg).getOrElse("")
-      def runBatch(rows: Seq[(Long, String, String)]): Unit = {
-        val r2 = java.nio.file.Files.createTempDirectory("bm25_signed_guard")
-        try {
-          val s2 = r2.resolve("src").toString
-          Bm25SignedStream.seedIndex(
-            Seq((1L, "aa")).toDF("doc_id", "text"), r2.resolve("seed").toString)
-          val b = ops(rows)
-          b.write.mode("overwrite").parquet(s2)
-          val qq = Bm25SignedStream.indexMaintain(
-            spark.readStream.schema(b.schema).parquet(s2),
-            r2.resolve("seed").toString, r2.resolve("delta").toString,
-            r2.resolve("ckpt").toString)
-          try qq.processAllAvailable() finally qq.stop()
-        } finally graft.streaming.DeltaLayout.rmTree(r2)
-      }
-      val exDup = intercept[Exception] {
-        runBatch(Seq((7L, "aa", "add"), (7L, "bb", "add")))
-      }
-      assert(rootMsg(exDup).contains("more than once in one batch"))
-      val exOp = intercept[Exception] { runBatch(Seq((7L, "aa", "upsert"))) }
-      assert(rootMsg(exOp).contains("op must be add|remove"))
-    } finally graft.streaming.DeltaLayout.rmTree(root)
+        Seq((1L, "aa")).toDF("doc_id", "text"), r2.resolve("seed").toString)
+      val b = ops(rows)
+      b.write.mode("overwrite").parquet(s2)
+      val qq = Bm25SignedStream.indexMaintain(
+        spark.readStream.schema(b.schema).parquet(s2),
+        r2.resolve("seed").toString, r2.resolve("delta").toString,
+        r2.resolve("ckpt").toString)
+      try qq.processAllAvailable() finally qq.stop()
+    }
+    val exDup = intercept[Exception] {
+      runBatch(Seq((7L, "aa", "add"), (7L, "bb", "add")))
+    }
+    assert(rootMsg(exDup).contains("more than once in one batch"))
+    val exOp = intercept[Exception] { runBatch(Seq((7L, "aa", "upsert"))) }
+    assert(rootMsg(exOp).contains("op must be add|remove"))
   }
 
   test("signed phrase stream: a replaced doc's old phrase stops " +
@@ -651,47 +673,45 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
     import graft.streaming.PhraseSignedStream
     val queries = Seq((0L, "aa bb"), (1L, "zz zz"), (2L, "ee ff"))
       .toDF("query_id", "query_text")
-    val root = java.nio.file.Files.createTempDirectory("phrase_signed_spec")
+    val root = tempRoot("phrase_signed_spec")
+    val src = root.resolve("src").toString
+    val seedP = root.resolve("seed").toString
+    val deltaP = root.resolve("delta").toString
+    // yesterday: doc1 verbatim, doc2 STALE ("zz zz" — today's
+    // replace kills that phrase), doc5 alien (deleted today)
+    PhraseSignedStream.seedIndex(
+      Seq((1L, "aa bb cc"), (2L, "zz zz"), (5L, "ee ff"))
+        .toDF("doc_id", "text"), seedP)
+    val b0 = Seq((2L, "aa bb dd", "add"), (3L, "bb cc", "add"))
+      .toDF("doc_id", "text", "op")
+    b0.write.mode("overwrite").parquet(src)
+    val q = PhraseSignedStream.indexMaintain(
+      spark.readStream.schema(b0.schema).parquet(src),
+      seedP, deltaP, root.resolve("ckpt").toString)
     try {
-      val src = root.resolve("src").toString
-      val seedP = root.resolve("seed").toString
-      val deltaP = root.resolve("delta").toString
-      // yesterday: doc1 verbatim, doc2 STALE ("zz zz" — today's
-      // replace kills that phrase), doc5 alien (deleted today)
-      PhraseSignedStream.seedIndex(
-        Seq((1L, "aa bb cc"), (2L, "zz zz"), (5L, "ee ff"))
-          .toDF("doc_id", "text"), seedP)
-      val b0 = Seq((2L, "aa bb dd", "add"), (3L, "bb cc", "add"))
-        .toDF("doc_id", "text", "op")
-      b0.write.mode("overwrite").parquet(src)
-      val q = PhraseSignedStream.indexMaintain(
-        spark.readStream.schema(b0.schema).parquet(src),
-        seedP, deltaP, root.resolve("ckpt").toString)
-      try {
-        q.processAllAvailable()
-        Seq((5L, "", "remove")).toDF("doc_id", "text", "op")
-          .write.mode("append").parquet(src)
-        q.processAllAvailable()
-      } finally q.stop()
-      val surviving = Seq((1L, "aa bb cc"), (2L, "aa bb dd"), (3L, "bb cc"))
-        .toDF("doc_id", "text")
-      val expect = graft.operators.Retrieval.phraseSearch(surviving, queries)
-        .collect().map(_.toString).toSeq
-      def serve() = PhraseSignedStream.serveSearch(
-          spark, seedP, deltaP, queries)
-        .collect().map(_.toString).toSeq
-      val before = serve()
-      assert(before === expect)
-      // the stale phrase ("zz zz") and the removed doc's ("ee ff")
-      // match NOTHING; the replace's new text matches "aa bb"
-      val hits = PhraseSignedStream.serveSearch(spark, seedP, deltaP, queries)
-        .select("query_id", "doc_id")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
-      assert(!hits.exists(_._1 == 1L) && !hits.exists(_._1 == 2L))
-      assert(hits.contains((0L, 2L)))
-      PhraseSignedStream.compact(spark, seedP, deltaP)
-      assert(serve() === expect)
-    } finally graft.streaming.DeltaLayout.rmTree(root)
+      q.processAllAvailable()
+      Seq((5L, "", "remove")).toDF("doc_id", "text", "op")
+        .write.mode("append").parquet(src)
+      q.processAllAvailable()
+    } finally q.stop()
+    val surviving = Seq((1L, "aa bb cc"), (2L, "aa bb dd"), (3L, "bb cc"))
+      .toDF("doc_id", "text")
+    val expect = graft.operators.Retrieval.phraseSearch(surviving, queries)
+      .collect().map(_.toString).toSeq
+    def serve() = PhraseSignedStream.serveSearch(
+        spark, seedP, deltaP, queries)
+      .collect().map(_.toString).toSeq
+    val before = serve()
+    assert(before === expect)
+    // the stale phrase ("zz zz") and the removed doc's ("ee ff")
+    // match NOTHING; the replace's new text matches "aa bb"
+    val hits = PhraseSignedStream.serveSearch(spark, seedP, deltaP, queries)
+      .select("query_id", "doc_id")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
+    assert(!hits.exists(_._1 == 1L) && !hits.exists(_._1 == 2L))
+    assert(hits.contains((0L, 2L)))
+    PhraseSignedStream.compact(spark, seedP, deltaP)
+    assert(serve() === expect)
   }
 
   test("signed IVF stream: re-embeds move list assignments, removals " +
@@ -699,63 +719,61 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     import graft.streaming.IvfSignedStream
-    val root = java.nio.file.Files.createTempDirectory("ivf_signed_spec")
+    val root = tempRoot("ivf_signed_spec")
+    val src = root.resolve("src").toString
+    val seedP = root.resolve("seed").toString
+    val deltaP = root.resolve("delta").toString
+    def vecs(rows: Seq[(Long, Seq[Float])]) = rows
+      .map { case (id, v) => (id, v.toArray) }.toDF("vec_id", "embedding")
+    // two well-separated clusters on the unit circle
+    val cluster1 = Seq(1.0f, 0.0f)
+    val cluster2 = Seq(0.0f, 1.0f)
+    val truth = vecs(Seq(
+      (0L, cluster1), (1L, Seq(0.9f, 0.1f)), (2L, Seq(0.95f, 0.05f)),
+      (3L, cluster2), (4L, Seq(0.1f, 0.9f)), (5L, Seq(0.05f, 0.95f))))
+    // yesterday: vec 1 STALE (negated — other side of the sphere),
+    // vec 99 alien (deleted today); 2 and 5 arrive only today
+    val staleSeed = vecs(Seq(
+      (0L, cluster1), (1L, Seq(-0.9f, -0.1f)), (3L, cluster2),
+      (4L, Seq(0.1f, 0.9f)), (99L, Seq(0.7f, 0.7f))))
+    IvfSignedStream.seedIndex(staleSeed, seedP, nCentroids = 2,
+      lloydIters = 2)
+    val b0 = vecs(Seq((1L, Seq(0.9f, 0.1f)), (2L, Seq(0.95f, 0.05f))))
+      .withColumn("op", org.apache.spark.sql.functions.lit("add"))
+    b0.write.mode("overwrite").parquet(src)
+    val q = IvfSignedStream.indexMaintain(
+      spark.readStream.schema(b0.schema).parquet(src),
+      seedP, deltaP, root.resolve("ckpt").toString)
     try {
-      val src = root.resolve("src").toString
-      val seedP = root.resolve("seed").toString
-      val deltaP = root.resolve("delta").toString
-      def vecs(rows: Seq[(Long, Seq[Float])]) = rows
-        .map { case (id, v) => (id, v.toArray) }.toDF("vec_id", "embedding")
-      // two well-separated clusters on the unit circle
-      val cluster1 = Seq(1.0f, 0.0f)
-      val cluster2 = Seq(0.0f, 1.0f)
-      val truth = vecs(Seq(
-        (0L, cluster1), (1L, Seq(0.9f, 0.1f)), (2L, Seq(0.95f, 0.05f)),
-        (3L, cluster2), (4L, Seq(0.1f, 0.9f)), (5L, Seq(0.05f, 0.95f))))
-      // yesterday: vec 1 STALE (negated — other side of the sphere),
-      // vec 99 alien (deleted today); 2 and 5 arrive only today
-      val staleSeed = vecs(Seq(
-        (0L, cluster1), (1L, Seq(-0.9f, -0.1f)), (3L, cluster2),
-        (4L, Seq(0.1f, 0.9f)), (99L, Seq(0.7f, 0.7f))))
-      IvfSignedStream.seedIndex(staleSeed, seedP, nCentroids = 2,
-        lloydIters = 2)
-      val b0 = vecs(Seq((1L, Seq(0.9f, 0.1f)), (2L, Seq(0.95f, 0.05f))))
-        .withColumn("op", org.apache.spark.sql.functions.lit("add"))
-      b0.write.mode("overwrite").parquet(src)
-      val q = IvfSignedStream.indexMaintain(
-        spark.readStream.schema(b0.schema).parquet(src),
-        seedP, deltaP, root.resolve("ckpt").toString)
-      try {
-        q.processAllAvailable()
-        vecs(Seq((5L, Seq(0.05f, 0.95f)), (99L, Seq(0f, 0f))))
-          .withColumn("op", org.apache.spark.sql.functions
-            .when(col("vec_id") === 99L, "remove").otherwise("add"))
-          .write.mode("append").parquet(src)
-        q.processAllAvailable()
-      } finally q.stop()
-      val cents = spark.read.parquet(s"$seedP/centroids").localCheckpoint()
-      def assignRows(d: org.apache.spark.sql.DataFrame) = d
-        .orderBy("vec_id").collect().map(_.toString).toSeq
-      val direct = graft.operators.Similarity.ivfAssignAgainst(truth, cents)
-      val live = IvfSignedStream.liveAssign(spark, seedP, deltaP)
-      // bit-identical: the signed live index == one-batch assignment
-      // of the SURVIVING corpus at the same centroids — the alien is
-      // gone, the re-embedded vec 1 sits in its NEW list
-      assert(assignRows(live) === assignRows(direct))
-      val served = IvfSignedStream.searchLive(
-          spark, seedP, deltaP, truth, nQueries = 3, k = 2, nProbe = 1)
-        .collect().map(_.toString).toSeq
-      assert(served === graft.operators.Similarity.embedIvfTopKFromIndex(
-        direct, cents, truth, nQueries = 3, k = 2, nProbe = 1)
-        .collect().map(_.toString).toSeq)
-      // compaction carries the centroid face and changes nothing
-      IvfSignedStream.compact(spark, seedP, deltaP)
-      assert(assignRows(IvfSignedStream.liveAssign(spark, seedP, deltaP))
-        === assignRows(direct))
-      assert(spark.read.parquet(s"$seedP/centroids")
-        .collect().map(_.toString).sorted
-        === cents.collect().map(_.toString).sorted)
-    } finally graft.streaming.DeltaLayout.rmTree(root)
+      q.processAllAvailable()
+      vecs(Seq((5L, Seq(0.05f, 0.95f)), (99L, Seq(0f, 0f))))
+        .withColumn("op", org.apache.spark.sql.functions
+          .when(col("vec_id") === 99L, "remove").otherwise("add"))
+        .write.mode("append").parquet(src)
+      q.processAllAvailable()
+    } finally q.stop()
+    val cents = spark.read.parquet(s"$seedP/centroids").localCheckpoint()
+    def assignRows(d: org.apache.spark.sql.DataFrame) = d
+      .orderBy("vec_id").collect().map(_.toString).toSeq
+    val direct = graft.operators.Similarity.ivfAssignAgainst(truth, cents)
+    val live = IvfSignedStream.liveAssign(spark, seedP, deltaP)
+    // bit-identical: the signed live index == one-batch assignment
+    // of the SURVIVING corpus at the same centroids — the alien is
+    // gone, the re-embedded vec 1 sits in its NEW list
+    assert(assignRows(live) === assignRows(direct))
+    val served = IvfSignedStream.searchLive(
+        spark, seedP, deltaP, truth, nQueries = 3, k = 2, nProbe = 1)
+      .collect().map(_.toString).toSeq
+    assert(served === graft.operators.Similarity.embedIvfTopKFromIndex(
+      direct, cents, truth, nQueries = 3, k = 2, nProbe = 1)
+      .collect().map(_.toString).toSeq)
+    // compaction carries the centroid face and changes nothing
+    IvfSignedStream.compact(spark, seedP, deltaP)
+    assert(assignRows(IvfSignedStream.liveAssign(spark, seedP, deltaP))
+      === assignRows(direct))
+    assert(spark.read.parquet(s"$seedP/centroids")
+      .collect().map(_.toString).sorted
+      === cents.collect().map(_.toString).sorted)
   }
 
   test("signed index streams are restart- and retry-safe: a same-" +
@@ -765,75 +783,71 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
     import graft.streaming.Bm25SignedStream
     val queries = Seq((0L, "bb cc")).toDF("query_id", "query_text")
     val terms = Seq("bb", "cc")
-    val root = java.nio.file.Files.createTempDirectory("bm25_signed_retry")
-    try {
-      val src = root.resolve("src").toString
-      val seedP = root.resolve("seed").toString
-      val deltaP = root.resolve("delta").toString
-      Bm25SignedStream.seedIndex(
-        Seq((1L, "aa bb"), (2L, "zz zz"), (5L, "cc cc")).toDF("doc_id", "text"),
-        seedP)
-      val b = Seq((2L, "bb cc", "add"), (3L, "cc", "add"), (5L, "", "remove"))
-        .toDF("doc_id", "text", "op")
-      b.write.mode("overwrite").parquet(src)
-      def runOnce(ckpt: String): Unit = {
-        val q = Bm25SignedStream.indexMaintain(
-          spark.readStream.schema(b.schema).parquet(src),
-          seedP, deltaP, ckpt)
-        try q.processAllAvailable() finally q.stop()
-      }
-      def serve() = Bm25SignedStream.serveSearch(
-          spark, seedP, deltaP, queries, terms)
-        .collect().map(_.toString).toSeq
-      runOnce(root.resolve("ckpt").toString)
-      val first = serve()
-      assert(first === graft.operators.Retrieval.bm25Search(
-        Seq((1L, "aa bb"), (2L, "bb cc"), (3L, "cc")).toDF("doc_id", "text"),
-        queries).collect().map(_.toString).toSeq)
-      // RESTART: the same checkpoint replays nothing
-      runOnce(root.resolve("ckpt").toString)
-      assert(serve() === first)
-      // RETRY: a fresh checkpoint re-processes the same source files —
-      // ops and postings land under the SAME batch_id partitions with
-      // dynamic overwrite, so the net state (and the serve) cannot
-      // double-count or duplicate
-      runOnce(root.resolve("ckpt2").toString)
-      assert(serve() === first)
-      // the signed GRAPH harness shares the guarantee: re-landing the
-      // same signed edge batches leaves the served components frame
-      // bit-identical
-      val groot = java.nio.file.Files.createTempDirectory("sgs_retry")
-      try {
-        import graft.streaming.SignedGraphStream
-        val gsrc = groot.resolve("src").toString
-        val gseed = groot.resolve("seed").toString
-        val gdelta = groot.resolve("delta").toString
-        val prior = Seq((1L, 2L, 1L), (2L, 3L, 1L), (10L, 11L, 1L))
-          .toDF("src", "dst", "w")
-        operators.Graph.canonicalEdges(prior)
-          .write.mode("overwrite").parquet(s"$gseed/edges")
-        operators.Graph.componentLabels(prior)
-          .write.mode("overwrite").parquet(s"$gseed/labels")
-        val gb = Seq((2L, 3L, "remove"), (3L, 4L, "add"))
-          .toDF("src", "dst", "op")
-        gb.write.mode("overwrite").parquet(gsrc)
-        def grun(ckpt: String): Unit = {
-          val q = SignedGraphStream.signedMaintain(
-            spark.readStream.schema(gb.schema).parquet(gsrc),
-            gseed, gdelta, ckpt)
-          try q.processAllAvailable() finally q.stop()
-        }
-        def gserve() = SignedGraphStream
-          .serveComponents(spark, gseed, gdelta)
-          .collect().map(_.toString).toSeq
-        grun(groot.resolve("c1").toString)
-        val g1 = gserve()
-        grun(groot.resolve("c1").toString) // restart: no replay
-        assert(gserve() === g1)
-        grun(groot.resolve("c2").toString) // retry: same partitions
-        assert(gserve() === g1)
-      } finally graft.streaming.DeltaLayout.rmTree(groot)
-    } finally graft.streaming.DeltaLayout.rmTree(root)
+    val root = tempRoot("bm25_signed_retry")
+    val src = root.resolve("src").toString
+    val seedP = root.resolve("seed").toString
+    val deltaP = root.resolve("delta").toString
+    Bm25SignedStream.seedIndex(
+      Seq((1L, "aa bb"), (2L, "zz zz"), (5L, "cc cc")).toDF("doc_id", "text"),
+      seedP)
+    val b = Seq((2L, "bb cc", "add"), (3L, "cc", "add"), (5L, "", "remove"))
+      .toDF("doc_id", "text", "op")
+    b.write.mode("overwrite").parquet(src)
+    def runOnce(ckpt: String): Unit = {
+      val q = Bm25SignedStream.indexMaintain(
+        spark.readStream.schema(b.schema).parquet(src),
+        seedP, deltaP, ckpt)
+      try q.processAllAvailable() finally q.stop()
+    }
+    def serve() = Bm25SignedStream.serveSearch(
+        spark, seedP, deltaP, queries, terms)
+      .collect().map(_.toString).toSeq
+    runOnce(root.resolve("ckpt").toString)
+    val first = serve()
+    assert(first === graft.operators.Retrieval.bm25Search(
+      Seq((1L, "aa bb"), (2L, "bb cc"), (3L, "cc")).toDF("doc_id", "text"),
+      queries).collect().map(_.toString).toSeq)
+    // RESTART: the same checkpoint replays nothing
+    runOnce(root.resolve("ckpt").toString)
+    assert(serve() === first)
+    // RETRY: a fresh checkpoint re-processes the same source files —
+    // ops and postings land under the SAME batch_id partitions with
+    // dynamic overwrite, so the net state (and the serve) cannot
+    // double-count or duplicate
+    runOnce(root.resolve("ckpt2").toString)
+    assert(serve() === first)
+    // the signed GRAPH harness shares the guarantee: re-landing the
+    // same signed edge batches leaves the served components frame
+    // bit-identical
+    val groot = tempRoot("sgs_retry")
+    import graft.streaming.SignedGraphStream
+    val gsrc = groot.resolve("src").toString
+    val gseed = groot.resolve("seed").toString
+    val gdelta = groot.resolve("delta").toString
+    val prior = Seq((1L, 2L, 1L), (2L, 3L, 1L), (10L, 11L, 1L))
+      .toDF("src", "dst", "w")
+    operators.Graph.canonicalEdges(prior)
+      .write.mode("overwrite").parquet(s"$gseed/edges")
+    operators.Graph.componentLabels(prior)
+      .write.mode("overwrite").parquet(s"$gseed/labels")
+    val gb = Seq((2L, 3L, "remove"), (3L, 4L, "add"))
+      .toDF("src", "dst", "op")
+    gb.write.mode("overwrite").parquet(gsrc)
+    def grun(ckpt: String): Unit = {
+      val q = SignedGraphStream.signedMaintain(
+        spark.readStream.schema(gb.schema).parquet(gsrc),
+        gseed, gdelta, ckpt)
+      try q.processAllAvailable() finally q.stop()
+    }
+    def gserve() = SignedGraphStream
+      .serveComponents(spark, gseed, gdelta)
+      .collect().map(_.toString).toSeq
+    grun(groot.resolve("c1").toString)
+    val g1 = gserve()
+    grun(groot.resolve("c1").toString) // restart: no replay
+    assert(gserve() === g1)
+    grun(groot.resolve("c2").toString) // retry: same partitions
+    assert(gserve() === g1)
   }
 
   test("stream-maintained BM25 index serves identically to a full rebuild") {
@@ -856,7 +870,7 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
     assert(streamed.nonEmpty)
     // restart safety on a planted mini-corpus: same checkpoint replays
     // nothing; a re-run must not double-count postings or doc lengths
-    val root = java.nio.file.Files.createTempDirectory("bm25_retry")
+    val root = tempRoot("bm25_retry")
     val src = root.resolve("src").toString
     val mini = Seq((1L, "aa bb"), (2L, "bb cc"), (3L, "cc"))
       .toDF("doc_id", "text")
@@ -957,6 +971,45 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
     assert(keeps.keySet === Set(true, false))
   }
 
+  test("phrase gate replay: a batch re-run after a lost commit lands once") {
+    import spark.implicits._
+    import graft.streaming.{CurationStream, DeltaLayout}
+    val phrases = Seq(0L -> "table hash", 1L -> "bloom bloom")
+    val docs = Tables.documents(spark, sfDir)
+    val root = tempRoot("phrase_gate_replay")
+    val src = root.resolve("src").toString
+    val delta = root.resolve("delta").toString
+    val commits = root.resolve("ckpt").resolve("commits")
+    // two staged files, one micro-batch each
+    docs.filter(col("doc_id") % 2 === 0).coalesce(1).write.parquet(src)
+    docs.filter(col("doc_id") % 2 =!= 0).coalesce(1)
+      .write.mode("append").parquet(src)
+    def drain(): Unit = {
+      val q = DeltaLayout.landEach(
+          spark.readStream.schema(docs.schema)
+            .option("maxFilesPerTrigger", 1).parquet(src),
+          root.resolve("seed").toString, delta,
+          root.resolve("ckpt").toString)(
+        CurationStream.phraseVerdicts(phrases))
+      try q.processAllAvailable() finally q.stop()
+    }
+    drain()
+    // a crash after batch 1 landed but before its commit: the restart
+    // replays batch 1 from its logged offsets
+    val last = commits.resolve("1").toFile
+    assert(last.delete())
+    java.nio.file.Files.deleteIfExists(commits.resolve(".1.crc"))
+    drain()
+    assert(last.exists(), "the restart re-ran and re-committed batch 1")
+    val served = DeltaLayout.readParquet(spark, delta).drop("batch_id")
+      .orderBy("doc_id").collect().map(_.toString).toSeq
+    val batch = graft.operators.Retrieval.decontaminatePhrase(
+        docs, phrases.toDF("phrase_id", "phrase_text"))
+      .orderBy("doc_id").collect().map(_.toString).toSeq
+    assert(served === batch)
+    assert(served.nonEmpty)
+  }
+
   test("stream-maintained positional index serves phrases identically to a rebuild") {
     import spark.implicits._
     import graft.streaming.{PhraseSignedStream, SignedIndexLayout}
@@ -974,7 +1027,7 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
     assert(streamed === online)
     assert(streamed.nonEmpty)
     // restart/idempotence + compaction on a planted mini-corpus
-    val root = java.nio.file.Files.createTempDirectory("phrase_retry")
+    val root = tempRoot("phrase_retry")
     val src = root.resolve("src").toString
     val mini = Seq((1L, "aa bb"), (2L, "bb cc"), (3L, "cc"))
       .toDF("doc_id", "text")
@@ -1051,7 +1104,7 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
   test("DeltaLayout.maxBatchId reads the highest batch id from the partition listing") {
     import graft.streaming.DeltaLayout
     import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Files.createTempDirectory("max_batch")
+    val root = tempRoot("max_batch")
     val delta = root.resolve("delta")
     val bare = java.nio.file.Files.createDirectories(root.resolve("bare"))
     Seq(3L, 10L).foreach { b =>
@@ -1087,16 +1140,13 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
       assert(starts.asScala.toSeq
         .dropWhile(_ != "maxBatchId before").drop(1)
         .takeWhile(_ != "maxBatchId after").isEmpty)
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      DeltaLayout.rmTree(root)
-    }
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("rollupMaintain is per-batch idempotent and restart-safe") {
     import spark.implicits._
     val rollup = graft.streaming.AdditiveStream.rollup
-    val root = java.nio.file.Files.createTempDirectory("rollup_retry")
+    val root = tempRoot("rollup_retry")
     val src = root.resolve("src").toString
     val docs = Seq(
       (1L, "aa bb", "en", "s1"), (2L, "cc dd ee", "de", "s1"),
@@ -1170,7 +1220,7 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
   test("cmsMaintain is per-batch idempotent; compact preserves served counters") {
     import spark.implicits._
     val cms = graft.streaming.AdditiveStream.cms
-    val root = java.nio.file.Files.createTempDirectory("cms_retry")
+    val root = tempRoot("cms_retry")
     val src = root.resolve("src").toString
     val docs = Seq((1L, "aa bb"), (2L, "bb cc cc"), (3L, "dd"))
       .toDF("doc_id", "text")
@@ -1213,27 +1263,25 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
     import spark.implicits._
     import graft.streaming.{AdditiveStream, DeltaLayout}
     val cms = AdditiveStream.cms
-    val root = java.nio.file.Files.createTempDirectory("fold_race")
+    val root = tempRoot("fold_race")
     val seedP = root.resolve("seed").toString
     val deltaP = root.resolve("delta").toString
     val batches = Seq(Seq((1L, "aa bb")), Seq((2L, "bb cc")), Seq((3L, "cc dd")))
       .map(_.toDF("doc_id", "text"))
-    try {
-      cms.seed(batches.head.limit(0), seedP)
-      DeltaLayout.landBatch(cms.partials(batches(0)), 0L, deltaP)
-      DeltaLayout.landBatch(cms.partials(batches(1)), 1L, deltaP)
-      // batch 2 commits while the fold is writing its new seed
-      DeltaLayout.fold(spark, seedP, deltaP) { (upTo, tmp) =>
-        cms.foldWrite(spark, seedP, deltaP)(upTo, tmp)
-        DeltaLayout.landBatch(cms.partials(batches(2)), 2L, deltaP)
-      }
-      assert(DeltaLayout.foldedThrough(spark, seedP) === 1L)
-      assert(DeltaLayout.batchIds(spark, deltaP) === Seq(2L))
-      assert(cms.live(spark, seedP, deltaP).orderBy("d", "bucket")
-        .collect().map(_.toString).toSeq ===
-        graft.operators.Sketches.cmsPartials(batches.reduce(_ unionByName _))
-          .collect().map(_.toString).toSeq)
-    } finally DeltaLayout.rmTree(root)
+    cms.seed(batches.head.limit(0), seedP)
+    DeltaLayout.landBatch(cms.partials(batches(0)), 0L, deltaP)
+    DeltaLayout.landBatch(cms.partials(batches(1)), 1L, deltaP)
+    // batch 2 commits while the fold is writing its new seed
+    DeltaLayout.fold(spark, seedP, deltaP) { (upTo, tmp) =>
+      cms.foldWrite(spark, seedP, deltaP)(upTo, tmp)
+      DeltaLayout.landBatch(cms.partials(batches(2)), 2L, deltaP)
+    }
+    assert(DeltaLayout.foldedThrough(spark, seedP) === 1L)
+    assert(DeltaLayout.batchIds(spark, deltaP) === Seq(2L))
+    assert(cms.live(spark, seedP, deltaP).orderBy("d", "bucket")
+      .collect().map(_.toString).toSeq ===
+      graft.operators.Sketches.cmsPartials(batches.reduce(_ unionByName _))
+        .collect().map(_.toString).toSeq)
   }
 
   test("cmsMaintainRun (the measured driver entry) equals the direct full-corpus sketch") {
@@ -1285,7 +1333,7 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
   test("triangles compact preserves the served counts") {
     import spark.implicits._
     import graft.streaming.TrianglesStream
-    val root = java.nio.file.Files.createTempDirectory("tri_compact")
+    val root = tempRoot("tri_compact")
     val seedRoot = root.resolve("seed").toString
     val deltaP = root.resolve("delta").toString
     // seed: a triangle and a disjoint edge
@@ -1329,7 +1377,7 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
   test("truss compact preserves the served truss") {
     import spark.implicits._
     import graft.streaming.SignedGraphStream
-    val root = java.nio.file.Files.createTempDirectory("truss_compact")
+    val root = tempRoot("truss_compact")
     val seedRoot = root.resolve("seed").toString
     val deltaP = root.resolve("delta").toString
     // seed: a triangle (3-truss) and a disjoint edge (peeled)
@@ -1387,7 +1435,7 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, lit}
     import graft.streaming.PageRankStream
-    val root = java.nio.file.Files.createTempDirectory("rank_compact")
+    val root = tempRoot("rank_compact")
     val seedRoot = root.resolve("seed").toString
     val deltaP = root.resolve("delta").toString
     val seedEdges = Seq((1L, 2L, 3L), (2L, 3L, 1L), (1L, 3L, 2L), (10L, 11L, 5L))
@@ -1426,7 +1474,7 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, lit}
     import graft.streaming.PageRankStream
-    val root = java.nio.file.Files.createTempDirectory("rank_signed")
+    val root = tempRoot("rank_signed")
     val seedRoot = root.resolve("seed").toString
     val deltaP = root.resolve("delta").toString
     PageRankStream.seedRanks(
@@ -1475,7 +1523,7 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
   test("coreness compact preserves the served decomposition") {
     import spark.implicits._
     import graft.streaming.SignedGraphStream
-    val root = java.nio.file.Files.createTempDirectory("core_compact")
+    val root = tempRoot("core_compact")
     val seedRoot = root.resolve("seed").toString
     val deltaP = root.resolve("delta").toString
     // seed: a triangle (coreness 2) and a disjoint edge (coreness 1)
@@ -1509,7 +1557,7 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
   test("components compact preserves served stats; pre-compact serve equals too") {
     import spark.implicits._
     import graft.streaming.SignedGraphStream
-    val root = java.nio.file.Files.createTempDirectory("cc_compact")
+    val root = tempRoot("cc_compact")
     val seedRoot = root.resolve("seed").toString
     val deltaP = root.resolve("delta").toString
     // seed: two components {1,2,3} and {10,11}
@@ -1541,7 +1589,7 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
 
   test("nbMaintain is per-batch idempotent; compact preserves served counts") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("nb_retry")
+    val root = tempRoot("nb_retry")
     val src = root.resolve("src").toString
     val docs = Seq((1L, "aa bb", "s0"), (2L, "bb cc cc", "s1"), (3L, "dd", "s0"))
       .toDF("doc_id", "text", "source")
@@ -1603,7 +1651,7 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
   test("ivfMaintain assigns at fixed centroids; stream == direct through serving") {
     import graft.streaming.IvfSignedStream
     val emb = Tables.embeddings(spark, sfDir)
-    val root = java.nio.file.Files.createTempDirectory("ivf_stream")
+    val root = tempRoot("ivf_stream")
     val src = root.resolve("src").toString
     val seedP = root.resolve("seed").toString
     val deltaP = root.resolve("delta").toString
@@ -1655,7 +1703,7 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
 
   test("driftMonitor flags a planted off-distribution batch") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("driftstream")
+    val root = tempRoot("driftstream")
     val ref = Seq((1L, "ok", "alpha beta gamma delta alpha beta gamma delta"))
       .toDF("doc_id", "source", "text")
     graft.streaming.DriftStream.seedReference(ref, root.resolve("ref").toString)
@@ -1680,7 +1728,7 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
 
   test("sessionizeStream emits gap-closed sessions") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("sessstream").toString
+    val dir = tempRoot("sessstream").toString
     Tables.events(spark, sfDir)
       .withColumn("ts", col("ts").cast("timestamp"))
       .select("event_id", "ts", "user_id", "event_type", "value")
