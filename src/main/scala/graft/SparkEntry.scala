@@ -523,8 +523,9 @@ object SparkEntry {
   private val annMeterMethods =
     Seq("lsh", "ivf", "sq", "pq", "ivf_sq", "ivf_pq", "opq")
 
-  /** Persisted-artifact serving hooks shared by q_ann_recall and
-    * q_ann_metrics: every trained family serves from its
+  /** Persisted-artifact serving hooks shared by q_ann_recall,
+    * q_ann_metrics and the six `q_embed_*_indexed` entries: every
+    * trained family serves from its
     * fingerprint-keyed parquet artifact (bit-equal to inline —
     * spec-asserted — so the meters never retrain what already
     * persists; lsh alone has nothing to train or persist). */
@@ -1046,37 +1047,17 @@ object SparkEntry {
     // default because the testdata embeddings are isotropic)
     "q_embed_opq_topk" -> ((s, d) =>
       Similarity.embedOpqPqTopK(Tables.embeddings(s, d))),
-    "q_embed_opq_indexed" -> ((s, d) => {
-      val (codes, cents, rot) = opqIndexShared(s, d)
-      Similarity.embedOpqPqTopKFromIndex(
-        codes, cents, rot, Tables.embeddings(s, d))
-    }),
-    "q_embed_sq_topk_indexed" -> ((s, d) =>
-      Similarity.embedSqTopKFromIndex(sqIndexShared(s, d), Tables.embeddings(s, d))),
-    "q_embed_pq_topk_indexed" -> ((s, d) => {
-      val (codes, cents) = pqIndexShared(s, d)
-      Similarity.embedPqTopKFromIndex(codes, cents, Tables.embeddings(s, d))
-    }),
-    // IVF serving path: probe the persisted posting lists + centroid
-    // table — no Lloyd pass or re-assignment in the plan
-    "q_embed_ivf_topk_indexed" -> ((s, d) => {
-      val (assign, cents) = ivfIndexShared(s, d)
-      Similarity.embedIvfTopKFromIndex(assign, cents, Tables.embeddings(s, d))
-    }),
-    // the composed serving shapes: IVF posting lists × the SHARED
-    // int8/PQ code artifacts, joined at serve time — the payoff of
-    // flat (non-residual) fine codes
-    "q_embed_ivf_sq_indexed" -> ((s, d) => {
-      val (assign, cents) = ivfIndexShared(s, d)
-      Similarity.embedIvfSqTopKFromIndex(
-        assign, cents, sqIndexShared(s, d), Tables.embeddings(s, d))
-    }),
-    "q_embed_ivf_pq_indexed" -> ((s, d) => {
-      val (assign, coarse) = ivfIndexShared(s, d)
-      val (codes, cbooks) = pqIndexShared(s, d)
-      Similarity.embedIvfPqTopKFromIndex(
-        assign, coarse, codes, cbooks, Tables.embeddings(s, d))
-    }),
+    // the artifact-served forms: each serves the persisted index of
+    // its family through the meters' serving hook (IVF: no Lloyd pass
+    // or re-assignment in the plan; the composed IVF × SQ/PQ shapes
+    // join the SHARED int8/PQ code artifacts at serve time — the
+    // payoff of flat (non-residual) fine codes)
+    "q_embed_opq_indexed" -> ((s, d) => annServingImpls(s, d)("opq")()),
+    "q_embed_sq_topk_indexed" -> ((s, d) => annServingImpls(s, d)("sq")()),
+    "q_embed_pq_topk_indexed" -> ((s, d) => annServingImpls(s, d)("pq")()),
+    "q_embed_ivf_topk_indexed" -> ((s, d) => annServingImpls(s, d)("ivf")()),
+    "q_embed_ivf_sq_indexed" -> ((s, d) => annServingImpls(s, d)("ivf_sq")()),
+    "q_embed_ivf_pq_indexed" -> ((s, d) => annServingImpls(s, d)("ivf_pq")()),
     // the full index-family matrix; every trained family serves from
     // the PERSISTED artifacts (bit-equal to inline — no retraining in
     // the meter; lsh alone has nothing to train or persist)

@@ -380,31 +380,13 @@ object Retrieval {
       postings: DataFrame, queries: DataFrame, k: Int = 10,
       queryTermsLiteral: Seq[String] = Nil): DataFrame = {
     graft.functions.VectorFunctions.register(postings.sparkSession)
-    // a LITERAL term set pushes `term IN (...)` to the postings scan
-    // (file/row-group pruning on the term-range-partitioned artifact —
-    // the bm25FromIndex posture); the join itself restricts to query
-    // terms either way, so the literal only changes the plan, never
-    // the result (spec-asserted)
-    val probed =
-      if (queryTermsLiteral.isEmpty) postings
-      else postings.filter(col("term").isin(queryTermsLiteral: _*))
-    // qt and the matches frame each feed two consumers UNCHECKPOINTED:
-    // both are tiny (query tokens; full-phrase docs) and a
-    // localCheckpoint here would hide the pushed postings scan behind
-    // an ExistingRDD in the serving plan (the plan-lock ethos:
-    // serving plans stay readable and re-derivable)
-    val qt = queries.select(col("query_id"),
-        posexplode(split(lower(col("query_text")), " ", -1))
-          .as(Seq("qpos", "term")))
-    val plen = qt.groupBy("query_id").agg(count(lit(1)).as("plen"))
-    val matches = probed.join(broadcast(qt), Seq("term"))
-      .select(col("query_id"), col("doc_id"),
-        (col("pos") - col("qpos")).as("start"), col("qpos"))
-      .filter(col("start") >= 0)
-      .groupBy("query_id", "doc_id", "start")
-      .agg(count(lit(1)).as("nq"))
-      .join(broadcast(plen), Seq("query_id"))
-      .filter(col("nq") === col("plen"))
+    // the matches frame feeds two consumers UNCHECKPOINTED: it is tiny
+    // (full-phrase docs) and a localCheckpoint here would hide the
+    // pushed postings scan behind an ExistingRDD in the serving plan
+    // (the plan-lock ethos: serving plans stay readable and
+    // re-derivable)
+    val matches = phraseStarts(postings, queries, "query_id", "query_text",
+        queryTermsLiteral)
       .groupBy("query_id", "doc_id")
       .agg(count(lit(1)).as("n_matches"),
         min("start").cast("long").as("first_pos"))
@@ -420,14 +402,46 @@ object Retrieval {
       .orderBy("query_id", "rank")
   }
 
+  /** The phrase witness-count core shared by [[phraseFromIndex]] and
+    * [[decontaminatePhraseFromIndex]]: one (id, doc_id, start) row per
+    * occurrence of a phrase's FULL token sequence — every matched
+    * posting proposes the start it would witness (start = pos − qpos),
+    * and a start witnessed by all plen query positions is a match.
+    * A LITERAL term set pushes `term IN (...)` to the postings scan
+    * (file/row-group pruning on the term-range-partitioned artifact —
+    * the bm25FromIndex posture); the join itself restricts to query
+    * terms either way, so the literal only changes the plan, never
+    * the result (spec-asserted). The query tokens feed the join and
+    * the plen count uncheckpointed: they are tiny. */
+  private def phraseStarts(
+      postings: DataFrame, phrases: DataFrame, idCol: String,
+      textCol: String, termsLiteral: Seq[String]): DataFrame = {
+    val probed =
+      if (termsLiteral.isEmpty) postings
+      else postings.filter(col("term").isin(termsLiteral: _*))
+    val qt = phrases.select(col(idCol),
+        posexplode(split(lower(col(textCol)), " ", -1))
+          .as(Seq("qpos", "term")))
+    val plen = qt.groupBy(idCol).agg(count(lit(1)).as("plen"))
+    probed.join(broadcast(qt), Seq("term"))
+      .select(col(idCol), col("doc_id"),
+        (col("pos") - col("qpos")).as("start"))
+      .filter(col("start") >= 0)
+      .groupBy(idCol, "doc_id", "start")
+      .agg(count(lit(1)).as("nq"))
+      .join(broadcast(plen), Seq(idCol))
+      .filter(col("nq") === col("plen"))
+      .select(col(idCol), col("doc_id"), col("start"))
+  }
+
   /** PHRASE decontamination — the verbatim-token-sequence face of the
     * decontamination matrix (exact-ngram / Bloom / semantic / fuzzy
     * already exist): flag every corpus doc CONTAINING any benchmark
     * phrase as an exact token sequence, the check eval-set leakage
     * audits actually want (an n-gram-overlap screen says "shares
     * vocabulary"; a verbatim quote of the benchmark says
-    * "contaminated"). Reuses [[phraseFromIndex]]'s witness-count
-    * core — one probe join + one aggregation for ANY number of
+    * "contaminated"). Shares [[phraseFromIndex]]'s witness-count
+    * core ([[phraseStarts]]) — one probe join + one aggregation for ANY number of
     * phrases of any length — then rolls matches up per doc:
     * (doc_id, n_phrases, n_occurrences, keep). Exact integers end to
     * end — FULL DuckDB oracle twin. */
@@ -445,23 +459,10 @@ object Retrieval {
   def decontaminatePhraseFromIndex(
       postings: DataFrame, docs: DataFrame, phrases: DataFrame,
       phraseTermsLiteral: Seq[String] = Nil): DataFrame = {
-    val probed =
-      if (phraseTermsLiteral.isEmpty) postings
-      else postings.filter(col("term").isin(phraseTermsLiteral: _*))
-    val qt = phrases.select(col("phrase_id"),
-      posexplode(split(lower(col("phrase_text")), " ", -1))
-        .as(Seq("qpos", "term")))
-    val plen = qt.groupBy("phrase_id").agg(count(lit(1)).as("plen"))
     // one row per (phrase, doc) that contains the full sequence —
     // unique by construction, so the per-doc phrase count is count(1)
-    val perPhrase = probed.join(broadcast(qt), Seq("term"))
-      .select(col("phrase_id"), col("doc_id"),
-        (col("pos") - col("qpos")).as("start"))
-      .filter(col("start") >= 0)
-      .groupBy("phrase_id", "doc_id", "start")
-      .agg(count(lit(1)).as("nq"))
-      .join(broadcast(plen), Seq("phrase_id"))
-      .filter(col("nq") === col("plen"))
+    val perPhrase = phraseStarts(postings, phrases, "phrase_id",
+        "phrase_text", phraseTermsLiteral)
       .groupBy("phrase_id", "doc_id")
       .agg(count(lit(1)).as("n_occ"))
     val byDoc = perPhrase.groupBy("doc_id")

@@ -41,6 +41,13 @@ object Similarity {
       .withColumn("norm", expr("sqrt(graft_dot(v, v))"))
   }
 
+  /** vec_id + the unit-normalized vector `vn`: the frame every IVF, PQ
+    * and SemDeDup path trains on, assigns, probes and reranks. */
+  private def normalized(emb: DataFrame): DataFrame =
+    withNorm(emb)
+      .withColumn("vn", expr("transform(v, x -> x / norm)"))
+      .select("vec_id", "vn")
+
   /** Exact cosine top-k: neighbors of each query vector (vec_id <
     * nQueries) over the whole corpus, ranked by snapped cosine.
     *
@@ -191,9 +198,9 @@ object Similarity {
   }
 
   /** Normalized corpus + deterministic Lloyd-refined centroids — the
-    * shared IVF model behind [[embedIvfTopK]] and
-    * [[embedClusterStats]]. Returns (corpus (vec_id, vn), centroids
-    * (cid, cvec)).
+    * shared IVF model behind [[ivfIndex]] (and so every IVF top-k
+    * form), [[embedClusterStats]], [[clusterQuality]] and SemDeDup.
+    * Returns (corpus (vec_id, vn), centroids (cid, cvec)).
     *
     * Lloyd trains on a SAMPLE (the FAISS-style train/add split):
     * centroid statistics converge on ~tens of vectors per centroid
@@ -210,10 +217,7 @@ object Similarity {
     // < 1 would make the training frame empty (or smaller than the
     // seed set) and every assignment null downstream
     require(trainFactor >= 1, "trainFactor must be >= 1")
-    graft.functions.VectorFunctions.register(emb.sparkSession)
-    val e = withNorm(emb)
-      .withColumn("vn", expr("transform(v, x -> x / norm)"))
-      .select("vec_id", "vn")
+    val e = normalized(emb)
       // localCheckpoint per the persistence contract: eager,
       // ContextCleaner-released — an internal .cache() would pin
       // blocks across repeated index builds in a long-lived session
@@ -270,88 +274,6 @@ object Similarity {
       .withColumn("cid",
         expr("element_at(cents, CAST(array_position(sims, sim) AS INT)).cid"))
       .select("vec_id", "vn", "cid", "sim")
-  }
-
-  /** COARSE-THEN-FINE assignment — [[assignTo]]'s scale path when the
-    * centroid count k itself grows with the corpus (the SemDeDup k ∝ n
-    * contract): the flat broadcast argmax scans all k centroids per
-    * vector — an n·k term, the dominant cost of the probe at 100×
-    * scale — while this form groups the fine centroids under `kCoarse`
-    * (≈√k) COARSE cells (the IVF train/assign machinery applied to the
-    * bounded centroid frame itself) and resolves each vector in two
-    * narrow phases, EXACTLY:
-    *
-    *  1. nearest coarse cell by dot, then the best fine centroid
-    *     INSIDE it — a lower bound s* on the true max;
-    *  2. every cell whose upper bound dot(v, c_j) + r_j can reach s*
-    *     is scanned in full; all other cells are provably beaten —
-    *     for any fine f in cell j, dot(v, f) = dot(v, c_j) +
-    *     dot(v, f − c_j) ≤ dot(v, c_j) + ‖f − c_j‖ (Cauchy–Schwarz,
-    *     ‖v‖ = 1), and r_j = max over the cell's fines of ‖f − c_j‖.
-    *
-    * The bound carries a 1e-9 slack absorbing float rounding (the
-    * corpus vector's norm is 1 only to an ulp; slack only ADDS
-    * candidate cells, never drops the true argmax). The winning
-    * (cid, sim) — including the smallest-cid tie rule — is therefore
-    * BIT-IDENTICAL to the flat scan's (spec-asserted): the same
-    * graft_dot values decide, only the subset of centroids examined
-    * shrinks. Per-vector work drops from k dots to ~√k + the best
-    * cell + any candidate cells. Empty coarse cells never materialize
-    * (cells are built FROM the fine→coarse assignment).
-    *
-    * MEASURED CAVEAT (why [[semDeDup]] does NOT default to this): on
-    * the 64-dim 100× embedding replica the radius bound prunes almost
-    * nothing — high-dimensional k-means cells overlap, so most cells
-    * survive the filter and the candidate machinery costs more per
-    * dot than the flat scan's tight transform (26.2 vs 3.8 s).
-    * Exact two-level assignment pays off only on genuinely separated
-    * corpora (low intrinsic dimension, cluster gaps wider than cell
-    * radii); the flat scan is the safe default, and the real n·k
-    * training bottleneck was fixed in [[ivfTrainingSample]]. */
-  private[graft] def assignToHier(
-      vectors: DataFrame, centroids: DataFrame, kCoarse: Int): DataFrame = {
-    require(kCoarse >= 1, s"assignToHier: kCoarse must be >= 1, got $kCoarse")
-    // group the fine centroids: deterministic Lloyd over the bounded
-    // (cid, cvec) frame, then each fine assigns to its coarse cell.
-    // The fines stored in the cells are the ORIGINAL cvec arrays (the
-    // model's internal re-normalization would perturb them by an ulp
-    // and break bit-equality with the flat scan).
-    val (fn, coarse) = ivfModel(
-      centroids.select(col("cid").as("vec_id"), col("cvec").as("embedding")),
-      kCoarse, lloydIters = 2)
-    val f2c = assignTo(fn, coarse)
-      .select(col("vec_id").as("fcid"), col("cid").as("ccid"))
-    val cells = f2c
-      .join(centroids.select(col("cid").as("fcid"), col("cvec")), Seq("fcid"))
-      .join(coarse.select(col("cid").as("ccid"), col("cvec").as("ccvec")),
-        Seq("ccid"))
-      .groupBy("ccid")
-      .agg(
-        expr("array_sort(collect_list(struct(fcid AS cid, cvec)))").as("fines"),
-        max(expr("sqrt(aggregate(zip_with(cvec, ccvec, " +
-          "(x, y) -> (x-y)*(x-y)), 0D, (acc, z) -> acc + z))")).as("r"),
-        first(col("ccvec")).as("ccvec"))
-    val cellsAgg = cells.agg(
-      expr("array_sort(collect_list(struct(ccid, ccvec, r, fines)))").as("cells"))
-    vectors.crossJoin(broadcast(cellsAgg))
-      .withColumn("cs", expr("transform(cells, c -> graft_dot(vn, c.ccvec))"))
-      .withColumn("bc", expr(
-        "element_at(cells, CAST(array_position(cs, array_max(cs)) AS INT))"))
-      // struct max orders by (sim, ncid): highest sim, then highest
-      // -cid = SMALLEST cid — the flat scan's first-max tie rule
-      .withColumn("lower", expr(
-        "array_max(transform(bc.fines, " +
-          "f -> struct(graft_dot(vn, f.cvec) AS sim, -f.cid AS ncid)))"))
-      .withColumn("best", expr(
-        """array_max(flatten(transform(
-          |  filter(zip_with(cells, cs,
-          |           (c, s) -> struct(c.fines AS fines, s + c.r + 1e-9d AS ub)),
-          |         x -> x.ub >= lower.sim),
-          |  x -> transform(x.fines,
-          |         f -> struct(graft_dot(vn, f.cvec) AS sim, -f.cid AS ncid)))))"""
-          .stripMargin))
-      .select(col("vec_id"), col("vn"),
-        expr("-best.ncid").as("cid"), col("best.sim").as("sim"))
   }
 
   /** IVF cluster occupancy report (the diversity/coverage summary a
@@ -439,9 +361,7 @@ object Similarity {
     * in the corpus — instead of n²/2k at fixed k (a fixed k=16 at
     * 100× data turns the pair join into 7.8e9 candidates; observed
     * mid-probe, which is why the default is the paper's). The
-    * remaining n·k assignment term is the piece a centroid-ANN
-    * (hierarchical assignment) removes at extreme scale; at probe
-    * scales it is a narrow broadcast map.
+    * remaining n·k assignment term is a narrow broadcast map.
     *
     * Spark shape: deterministic sample-trained Lloyd ([[ivfModel]]),
     * narrow broadcast assignment, ONE cid-keyed self-join (the only
@@ -453,25 +373,24 @@ object Similarity {
   def semDeDup(
       emb: DataFrame, nCentroids: Option[Int] = None, tau: Double = 0.9,
       clusterSize: Long = 250L, keepFarthest: Boolean = false,
-      lloydIters: Int = 2, trainFactor: Int = 64): DataFrame =
-    semDeDupFromAssignment(
-      semDeDupAssignFull(emb, nCentroids, clusterSize, lloydIters, trainFactor),
-      tau, keepFarthest)
+      lloydIters: Int = 2, trainFactor: Int = 64): DataFrame = {
+    val (e, centroids) =
+      semDeDupModel(emb, nCentroids, clusterSize, lloydIters, trainFactor)
+    semDeDupFromAssignment(assignTo(e, centroids), tau, keepFarthest)
+  }
 
-  /** The SemDeDup cluster assignment WITH vectors — inline form.
-    * Assignment is the FLAT broadcast scan: the coarse-then-fine
-    * [[assignToHier]] was measured 6× SLOWER on the 64-dim 100×
-    * replica (26.2 vs 3.8 s — in high dimension k-means cells
-    * overlap, the exact radius bound prunes almost nothing, and the
-    * candidate machinery costs more per dot), while the ACTUAL n·k
-    * bottleneck was the Lloyd training passes running single-threaded
-    * off the one-partition sample — fixed in [[ivfTrainingSample]] /
-    * [[ivfModel]] (13.5 → ~1 s per pass). Callers with genuinely
-    * separated low-dimensional corpora can use [[assignToHier]]
-    * directly; it is exact. */
-  private def semDeDupAssignFull(
+  /** The SemDeDup model — [[ivfModel]] with k sized by the paper's
+    * k ∝ n rule unless given. Every SemDeDup form assigns against it
+    * with the FLAT broadcast scan: an exact coarse-then-fine
+    * assignment was measured 6× SLOWER on the 64-dim 100× replica
+    * (26.2 vs 3.8 s — in high dimension k-means cells overlap, the
+    * radius bound pruned almost nothing, and the candidate machinery
+    * cost more per dot), while the ACTUAL n·k bottleneck was the Lloyd
+    * training passes running single-threaded off the one-partition
+    * sample — fixed in [[ivfTrainingSample]] (13.5 → ~1 s per pass). */
+  private def semDeDupModel(
       emb: DataFrame, nCentroids: Option[Int], clusterSize: Long,
-      lloydIters: Int, trainFactor: Int): DataFrame = {
+      lloydIters: Int, trainFactor: Int): (DataFrame, DataFrame) = {
     require(clusterSize >= 1L,
       s"semDeDup: clusterSize must be >= 1, got $clusterSize")
     val k = nCentroids.getOrElse {
@@ -480,8 +399,7 @@ object Similarity {
       val n = emb.count()
       math.max(1L, (n + clusterSize - 1L) / clusterSize).toInt
     }
-    val (e, centroids) = ivfModel(emb, k, lloydIters, trainFactor)
-    assignTo(e, centroids)
+    ivfModel(emb, k, lloydIters, trainFactor)
   }
 
   /** The PERSISTABLE slim assignment artifact (vec_id, cid, sim) —
@@ -492,8 +410,7 @@ object Similarity {
       emb: DataFrame, nCentroids: Option[Int] = None,
       clusterSize: Long = 250L,
       lloydIters: Int = 2, trainFactor: Int = 64): DataFrame =
-    semDeDupAssignFull(emb, nCentroids, clusterSize, lloydIters, trainFactor)
-      .select("vec_id", "cid", "sim")
+    semDeDupIndex(emb, nCentroids, clusterSize, lloydIters, trainFactor)._1
 
   /** Serve the SemDeDup verdict from a persisted slim assignment:
     * vectors re-normalize NARROWLY from the corpus (no training, no
@@ -502,15 +419,10 @@ object Similarity {
     * centroids is deterministic (spec-asserted). */
   def semDeDupFromIndex(
       emb: DataFrame, assignments: DataFrame, tau: Double = 0.9,
-      keepFarthest: Boolean = false): DataFrame = {
-    graft.functions.VectorFunctions.register(emb.sparkSession)
-    val e = withNorm(emb)
-      .withColumn("vn", expr("transform(v, x -> x / norm)"))
-      .select("vec_id", "vn")
+      keepFarthest: Boolean = false): DataFrame =
     semDeDupFromAssignment(
-      e.join(assignments.select("vec_id", "cid", "sim"), Seq("vec_id")),
+      normalized(emb).join(assignments.select("vec_id", "cid", "sim"), Seq("vec_id")),
       tau, keepFarthest)
-  }
 
   /** The SemDeDup index pair — (slim (vec_id, cid, sim) assignment,
     * centroids) trained ONCE on this corpus with the paper's k ∝ n
@@ -523,13 +435,8 @@ object Similarity {
       emb: DataFrame, nCentroids: Option[Int] = None,
       clusterSize: Long = 250L, lloydIters: Int = 2,
       trainFactor: Int = 64): (DataFrame, DataFrame) = {
-    require(clusterSize >= 1L,
-      s"semDeDupIndex: clusterSize must be >= 1, got $clusterSize")
-    val k = nCentroids.getOrElse {
-      val n = emb.count()
-      math.max(1L, (n + clusterSize - 1L) / clusterSize).toInt
-    }
-    val (e, centroids) = ivfModel(emb, k, lloydIters, trainFactor)
+    val (e, centroids) =
+      semDeDupModel(emb, nCentroids, clusterSize, lloydIters, trainFactor)
     (assignTo(e, centroids).select("vec_id", "cid", "sim"), centroids)
   }
 
@@ -539,13 +446,8 @@ object Similarity {
     * narrow broadcast map, bit-identical to what [[semDeDupIndex]]
     * would have produced had these vectors been present (assignment
     * at fixed centroids is deterministic). */
-  def semDeDupAssignAgainst(emb: DataFrame, cents: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(emb.sparkSession)
-    val e = withNorm(emb)
-      .withColumn("vn", expr("transform(v, x -> x / norm)"))
-      .select("vec_id", "vn")
-    assignTo(e, cents).select("vec_id", "cid", "sim")
-  }
+  def semDeDupAssignAgainst(emb: DataFrame, cents: DataFrame): DataFrame =
+    assignTo(normalized(emb), cents).select("vec_id", "cid", "sim")
 
   /** INCREMENTAL SemDeDup — fold newly-assigned vectors into a prior
     * verdict without re-resolving the whole corpus: connected
@@ -569,11 +471,8 @@ object Similarity {
     val untouched = priorVerdict
       .join(t, Seq("cid"), "left_anti")
       .select("vec_id", "cid", "kept")
-    val e = withNorm(emb)
-      .withColumn("vn", expr("transform(v, x -> x / norm)"))
-      .select("vec_id", "vn")
     val refreshed = semDeDupFromAssignment(
-      e.join(assignments.join(t, Seq("cid"), "left_semi")
+      normalized(emb).join(assignments.join(t, Seq("cid"), "left_semi")
         .select("vec_id", "cid", "sim"), Seq("vec_id")),
       tau, keepFarthest)
     untouched.unionByName(refreshed.select("vec_id", "cid", "kept"))
@@ -622,14 +521,6 @@ object Similarity {
     }
   }
 
-  /** IVF (inverted-file) ANN index: deterministic seed centroids
-    * (hash-ranked corpus vectors), Lloyd refinement via relational
-    * aggregation (posexplode → per-dimension mean → re-assemble), then
-    * probe: each query searches only the `nProbe` nearest centroid
-    * lists, exact-reranked with graft_dot. The 100 TB shape: assignment
-    * is a narrow map ([[assignTo]]), list probing replaces the full
-    * scan with O(corpus·nProbe/nCentroids) candidates, and the final
-    * rank is a bounded graft_topk partial aggregate. */
   /** Train ONCE, return (assignments, centroids) — the IVF artifact
     * pair: assignments are the slim (vec_id, cid) posting-list keys
     * (12 bytes/vector) and centroids the tiny (cid, cvec) table.
@@ -652,12 +543,48 @@ object Similarity {
     * produced had these vectors been present at training time
     * (assignment at fixed centroids is deterministic — the equality
     * [[graft.streaming.IvfSignedStream]] serves and its spec proves). */
-  def ivfAssignAgainst(emb: DataFrame, cents: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(emb.sparkSession)
-    val e = withNorm(emb)
-      .withColumn("vn", expr("transform(v, x -> x / norm)"))
-      .select("vec_id", "vn")
-    assignTo(e, cents).select("vec_id", "cid")
+  def ivfAssignAgainst(emb: DataFrame, cents: DataFrame): DataFrame =
+    assignTo(normalized(emb), cents).select("vec_id", "cid")
+
+  /** Each query's (vec_id < nQueries) centroid lists ranked by
+    * (sim DESC, cid ASC), the first `nProbe` kept: (query_id, qv, cid,
+    * sim, rn) — the probe every IVF search joins its posting lists
+    * against. */
+  private def probeLists(
+      e: DataFrame, cents: DataFrame, nQueries: Int, nProbe: Int): DataFrame = {
+    val wq = Window.partitionBy("vec_id").orderBy(col("sim").desc, col("cid"))
+    e.filter(col("vec_id") < nQueries)
+      .crossJoin(broadcast(cents))
+      .withColumn("sim", expr("graft_dot(vn, cvec)"))
+      .withColumn("rn", row_number().over(wq))
+      .filter(col("rn") <= nProbe)
+      .select(col("vec_id").as("query_id"), col("vn").as("qv"), col("cid"),
+        col("sim"), col("rn"))
+  }
+
+  /** The rerank pool: each query's `n` best approximate scores
+    * (`acos`) through the bounded graft_topk partial aggregate, as
+    * (query_id, vec_id) rows. */
+  private def survivorPool(scored: DataFrame, n: Int): DataFrame =
+    scored.groupBy("query_id")
+      .agg(expr(s"graft_topk(acos, vec_id, $n)").as("top"))
+      .select(col("query_id"), explode(col("top.id")).as("vec_id"))
+
+  /** IVF (inverted-file) ANN top-k: deterministic seed centroids
+    * (hash-ranked corpus vectors), Lloyd refinement via relational
+    * aggregation (posexplode → per-dimension mean → re-assemble), then
+    * probe: each query searches only the `nProbe` nearest centroid
+    * lists, exact-reranked with graft_dot. The 100 TB shape: assignment
+    * is a narrow map ([[assignTo]]), list probing replaces the full
+    * scan with O(corpus·nProbe/nCentroids) candidates, and the final
+    * rank is a bounded graft_topk partial aggregate. Trains the
+    * [[ivfIndex]] pair and serves it through [[embedIvfTopKFromIndex]]. */
+  def embedIvfTopK(
+      emb: DataFrame, nQueries: Int = 10, k: Int = 5,
+      nCentroids: Int = 16, lloydIters: Int = 2, nProbe: Int = 4,
+      trainFactor: Int = 64): DataFrame = {
+    val (assign, cents) = ivfIndex(emb, nCentroids, lloydIters, trainFactor)
+    embedIvfTopKFromIndex(assign, cents, emb, nQueries, k, nProbe)
   }
 
   /** [[embedIvfTopK]] with BOTH persisted artifacts supplied by the
@@ -671,45 +598,16 @@ object Similarity {
   def embedIvfTopKFromIndex(
       assign: DataFrame, cents: DataFrame, emb: DataFrame,
       nQueries: Int = 10, k: Int = 5, nProbe: Int = 4): DataFrame = {
-    graft.functions.VectorFunctions.register(emb.sparkSession)
-    val e = withNorm(emb)
-      .withColumn("vn", expr("transform(v, x -> x / norm)"))
-      .select("vec_id", "vn")
-    val assigned = e.join(assign.select("vec_id", "cid"), "vec_id")
-    val wq = Window.partitionBy("vec_id").orderBy(col("sim").desc, col("cid"))
-    val probes = e.filter(col("vec_id") < nQueries)
-      .crossJoin(broadcast(cents))
-      .withColumn("sim", expr("graft_dot(vn, cvec)"))
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= nProbe)
-      .select(col("vec_id").as("query_id"), col("vn").as("qv"), col("cid"))
-    assigned.join(broadcast(probes),
-        Seq("cid")).filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cos_r", round(expr("graft_dot(vn, qv)"), 6))
-      .transform(topKByCos(_, k))
-  }
-
-  def embedIvfTopK(
-      emb: DataFrame, nQueries: Int = 10, k: Int = 5,
-      nCentroids: Int = 16, lloydIters: Int = 2, nProbe: Int = 4,
-      trainFactor: Int = 64): DataFrame = {
-    val (e, centroids) = ivfModel(emb, nCentroids, lloydIters, trainFactor)
-    val assigned = assignTo(e, centroids).select("vec_id", "vn", "cid").localCheckpoint()
-    // each query probes its nProbe nearest centroid lists
-    val wq = Window.partitionBy("vec_id").orderBy(col("sim").desc, col("cid"))
-    val probes = e.filter(col("vec_id") < nQueries)
-      .crossJoin(broadcast(centroids))
-      .withColumn("sim", expr("graft_dot(vn, cvec)"))
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= nProbe)
-      .select(col("vec_id").as("query_id"), col("vn").as("qv"), col("cid"))
+    val e = normalized(emb)
+    val probes = probeLists(e, cents, nQueries, nProbe)
+      .select("query_id", "qv", "cid")
     // no dedup needed: each vector carries exactly one cid and a
     // query's probe cids are distinct, so (query_id, vec_id) pairs are
     // unique by construction. Rank via the bounded graft_topk partial
     // aggregate (see embedTopK) — probed candidates never ride a
     // window sort.
-    assigned.join(broadcast(probes),
-        Seq("cid")).filter(col("vec_id") =!= col("query_id"))
+    e.join(assign.select("vec_id", "cid"), "vec_id")
+      .join(broadcast(probes), Seq("cid")).filter(col("vec_id") =!= col("query_id"))
       .withColumn("cos_r", round(expr("graft_dot(vn, qv)"), 6))
       .transform(topKByCos(_, k))
   }
@@ -721,43 +619,19 @@ object Similarity {
     * corpus is touched only for the rerankFactor·k survivors per
     * query. One quantized artifact ([[sqIndex]]) keyed into the IVF
     * lists serves both this and the flat [[embedSqTopK]] — vn never
-    * rides the probe join. */
+    * rides the probe join. Trains the [[ivfIndex]] pair and the int8
+    * index, then serves them through [[embedIvfSqTopKFromIndex]]. */
   def embedIvfSqTopK(
       emb: DataFrame, nQueries: Int = 10, k: Int = 5,
       nCentroids: Int = 16, lloydIters: Int = 2, nProbe: Int = 4,
       rerankFactor: Int = 4, trainFactor: Int = 64): DataFrame = {
-    val (e, centroids) = ivfModel(emb, nCentroids, lloydIters, trainFactor)
+    val (assign, cents) = ivfIndex(emb, nCentroids, lloydIters, trainFactor)
     // ONE quantization pass serves both the posting lists and the
-    // query-side projection (two sqIndex(emb) calls would re-scan and
-    // re-quantize the full corpus — on the path whose point is fewer
-    // bytes scanned)
-    val sq = sqIndex(emb).localCheckpoint()
-    val lists = sq
-      .join(assignTo(e, centroids).select("vec_id", "cid"), "vec_id")
-    val wq = Window.partitionBy("vec_id").orderBy(col("sim").desc, col("cid"))
-    val qSq = sq.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("qv").as("qqv"),
-        col("scale").as("qscale"), col("norm").as("sqn"))
-    val probes = e.filter(col("vec_id") < nQueries)
-      .crossJoin(broadcast(centroids))
-      .withColumn("sim", expr("graft_dot(vn, cvec)"))
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= nProbe)
-      .select(col("vec_id").as("query_id"), col("cid"))
-      .join(qSq, "query_id")
-    val survivors = lists.join(broadcast(probes), Seq("cid"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("acos", round(
-        expr("graft_dot(cast(qv as array<double>), cast(qqv as array<double>))") *
-          col("scale") * col("qscale") / (col("norm") * col("sqn")), 6))
-      .groupBy("query_id")
-      .agg(expr(s"graft_topk(acos, vec_id, ${rerankFactor * k})").as("top"))
-      .select(col("query_id"), explode(col("top.id")).as("vec_id"))
-    val q = e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("vn").as("fqv"))
-    survivors.join(e, "vec_id").join(broadcast(q), "query_id")
-      .withColumn("cos_r", round(expr("graft_dot(vn, fqv)"), 6))
-      .transform(topKByCos(_, k))
+    // query-side projection (the index feeds two consumers, which
+    // would otherwise re-scan and re-quantize the full corpus — on
+    // the path whose point is fewer bytes scanned)
+    embedIvfSqTopKFromIndex(assign, cents, sqIndex(emb).localCheckpoint(),
+      emb, nQueries, k, nProbe, rerankFactor)
   }
 
   /** [[embedIvfSqTopK]] COMPOSED from the persisted artifacts — the
@@ -772,30 +646,21 @@ object Similarity {
       assign: DataFrame, cents: DataFrame, sqIdx: DataFrame,
       emb: DataFrame, nQueries: Int = 10, k: Int = 5, nProbe: Int = 4,
       rerankFactor: Int = 4): DataFrame = {
-    graft.functions.VectorFunctions.register(emb.sparkSession)
-    val e = withNorm(emb)
-      .withColumn("vn", expr("transform(v, x -> x / norm)"))
-      .select("vec_id", "vn")
+    val e = normalized(emb)
     val lists = sqIdx.join(assign.select("vec_id", "cid"), "vec_id")
-    val wq = Window.partitionBy("vec_id").orderBy(col("sim").desc, col("cid"))
     val qSq = sqIdx.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("qv").as("qqv"),
         col("scale").as("qscale"), col("norm").as("sqn"))
-    val probes = e.filter(col("vec_id") < nQueries)
-      .crossJoin(broadcast(cents))
-      .withColumn("sim", expr("graft_dot(vn, cvec)"))
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= nProbe)
-      .select(col("vec_id").as("query_id"), col("cid"))
+    val probes = probeLists(e, cents, nQueries, nProbe)
+      .select("query_id", "cid")
       .join(qSq, "query_id")
-    val survivors = lists.join(broadcast(probes), Seq("cid"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("acos", round(
-        expr("graft_dot(cast(qv as array<double>), cast(qqv as array<double>))") *
-          col("scale") * col("qscale") / (col("norm") * col("sqn")), 6))
-      .groupBy("query_id")
-      .agg(expr(s"graft_topk(acos, vec_id, ${rerankFactor * k})").as("top"))
-      .select(col("query_id"), explode(col("top.id")).as("vec_id"))
+    val survivors = survivorPool(
+      lists.join(broadcast(probes), Seq("cid"))
+        .filter(col("vec_id") =!= col("query_id"))
+        .withColumn("acos", round(
+          expr("graft_dot(cast(qv as array<double>), cast(qqv as array<double>))") *
+            col("scale") * col("qscale") / (col("norm") * col("sqn")), 6)),
+      rerankFactor * k)
     exactRerank(survivors, e, nQueries, k)
   }
 
@@ -889,7 +754,7 @@ object Similarity {
         "s -> s.lrow)").as("lut"))
 
   /** vec_id + the m sub-ordered tinyint codes — the packed scan form
-    * shared by [[pqCodes]] and [[embedPqTopK]]'s scoring pass. */
+    * shared by [[pqIndex]] and the residual [[embedIvfPqTopK]] layout. */
   private def pqEncode(e: DataFrame, m: Int, cents: DataFrame): DataFrame =
     pqAssign(pqSubvectors(e, m), cents)
       .groupBy("vec_id")
@@ -899,8 +764,8 @@ object Similarity {
   /** The packed PQ artifact: vec_id + m tinyint codes — 64-dim fp32
     * collapses to 8 bytes of codes (~32× smaller than the corpus; the
     * compression ratio is spec-asserted against real parquet bytes).
-    * Persist through Sinks; [[embedPqTopK]] trains its own codebooks
-    * inline and scores from the unpacked (vec_id, sub, cid) form. */
+    * Persist through Sinks; [[embedPqTopKFromIndex]] scores from the
+    * [[pqIndex]] pair it is the first half of. */
   def pqCodes(
       emb: DataFrame, m: Int = 8, nCodes: Int = 16,
       lloydIters: Int = 2, trainFactor: Int = 64): DataFrame =
@@ -914,10 +779,7 @@ object Similarity {
   def pqIndex(
       emb: DataFrame, m: Int = 8, nCodes: Int = 16,
       lloydIters: Int = 2, trainFactor: Int = 64): (DataFrame, DataFrame) = {
-    graft.functions.VectorFunctions.register(emb.sparkSession)
-    val e = withNorm(emb)
-      .withColumn("vn", expr("transform(v, x -> x / norm)"))
-      .select("vec_id", "vn")
+    val e = normalized(emb)
     val cents = pqModel(e, m, nCodes, lloydIters, trainFactor)
     (pqEncode(e, m, cents), cents)
   }
@@ -935,18 +797,14 @@ object Similarity {
     * rows per query — never one row per scored (query, vector) pair,
     * which is corpus-sized). At 100 TB the scored pass reads the
     * ~32×-smaller code artifact; no lambda or UDF touches the hot
-    * path. */
+    * path. Trains the [[pqIndex]] pair and serves it through
+    * [[embedPqTopKFromIndex]]. */
   def embedPqTopK(
       emb: DataFrame, nQueries: Int = 10, k: Int = 5,
       m: Int = 8, nCodes: Int = 16, lloydIters: Int = 2,
       rerankFactor: Int = 8, trainFactor: Int = 64): DataFrame = {
-    graft.functions.VectorFunctions.register(emb.sparkSession)
-    val e = withNorm(emb)
-      .withColumn("vn", expr("transform(v, x -> x / norm)"))
-      .select("vec_id", "vn")
-      .localCheckpoint() // feeds training, encoding, LUT, and rerank
-    val cents = pqModel(e, m, nCodes, lloydIters, trainFactor)
-    pqSearch(pqEncode(e, m, cents), cents, e, nQueries, k, m, rerankFactor)
+    val (codes, cents) = pqIndex(emb, m, nCodes, lloydIters, trainFactor)
+    embedPqTopKFromIndex(codes, cents, emb, nQueries, k, m, rerankFactor)
   }
 
   /** [[embedPqTopK]] with BOTH persisted artifacts supplied by the
@@ -960,21 +818,15 @@ object Similarity {
   def embedPqTopKFromIndex(
       codes: DataFrame, cents: DataFrame, emb: DataFrame,
       nQueries: Int = 10, k: Int = 5, m: Int = 8,
-      rerankFactor: Int = 8): DataFrame = {
-    graft.functions.VectorFunctions.register(emb.sparkSession)
-    val e = withNorm(emb)
-      .withColumn("vn", expr("transform(v, x -> x / norm)"))
-      .select("vec_id", "vn")
-    pqSearch(codes, cents, e, nQueries, k, m, rerankFactor)
-  }
+      rerankFactor: Int = 8): DataFrame =
+    pqSearch(codes, cents, normalized(emb), nQueries, k, m, rerankFactor)
 
   /** (vec_id, embedding) with the vectors unit-normalized — the frame
     * [[Opq.opqTrain]] trains on and [[opqRotate]] rotates: for a
     * cosine index, the variance structure OPQ balances must be the
     * quantized (normalized) vectors', not the raw magnitudes'. */
   private def opqNormalized(emb: DataFrame): DataFrame =
-    withNorm(emb)
-      .select(col("vec_id"), expr("transform(v, x -> x / norm)").as("embedding"))
+    normalized(emb).withColumnRenamed("vn", "embedding")
 
   /** The corpus carried into rotated coordinates: (vec_id, embedding)
     * where embedding = R·(x/‖x‖). A NARROW map — one codegen graft_dot
@@ -1009,7 +861,9 @@ object Similarity {
     val model = Opq.opqTrain(opqNormalized(emb), m, maxTrain, outDim)
     val rotated = opqRotate(emb, model)
     if (outDim <= 0)
-      embedPqTopK(rotated, nQueries, k, m, nCodes,
+      // rotate once: the rotated corpus feeds training, encoding, the
+      // LUT and the rerank, and each would re-run the d-wide rotation
+      embedPqTopK(rotated.localCheckpoint(), nQueries, k, m, nCodes,
         lloydIters, rerankFactor, trainFactor)
     else {
       // FAISS OPQ<M>_<outdim>: rotate AND project before quantizing —
@@ -1018,13 +872,8 @@ object Similarity {
       // the survivor pool reranks in ORIGINAL space so the output
       // keeps the true-cosine contract every other family honors
       // (reduced-space cosines drop the tail eigenvalue mass).
-      graft.functions.VectorFunctions.register(emb.sparkSession)
-      val eOrig = withNorm(emb)
-        .withColumn("vn", expr("transform(v, x -> x / norm)"))
-        .select("vec_id", "vn")
-      val eRed = withNorm(rotated)
-        .withColumn("vn", expr("transform(v, x -> x / norm)"))
-        .select("vec_id", "vn")
+      val eOrig = normalized(emb)
+      val eRed = normalized(rotated)
         .localCheckpoint() // feeds training, encoding, and the LUT
       val cents = pqModel(eRed, m, nCodes, lloydIters, trainFactor)
       pqSearch(pqEncode(eRed, m, cents), cents, eRed, nQueries, k, m,
@@ -1083,11 +932,10 @@ object Similarity {
       nQueries: Int, k: Int, m: Int, rerankFactor: Int,
       rerankE: Option[DataFrame] = None): DataFrame = {
     val lut = pqLut(e, m, cents, nQueries)
-    val survivors = codes.join(broadcast(lut), col("vec_id") =!= col("query_id"))
-      .withColumn("acos", round(expr("graft_pq_adc(codes, lut)"), 6))
-      .groupBy("query_id")
-      .agg(expr(s"graft_topk(acos, vec_id, ${rerankFactor * k})").as("top"))
-      .select(col("query_id"), explode(col("top.id")).as("vec_id"))
+    val survivors = survivorPool(
+      codes.join(broadcast(lut), col("vec_id") =!= col("query_id"))
+        .withColumn("acos", round(expr("graft_pq_adc(codes, lut)"), 6)),
+      rerankFactor * k)
     exactRerank(survivors, rerankE.getOrElse(e), nQueries, k)
   }
 
@@ -1116,47 +964,29 @@ object Similarity {
       emb: DataFrame, nQueries: Int = 10, k: Int = 5,
       nCentroids: Int = 16, lloydIters: Int = 2, nProbe: Int = 4,
       m: Int = 8, nCodes: Int = 16, rerankFactor: Int = 8,
-      trainFactor: Int = 64, residual: Boolean = false): DataFrame = {
-    val (e, coarse) = ivfModel(emb, nCentroids, lloydIters, trainFactor)
-    // ONE assignment pass feeds both the posting-list ids and (in
-    // residual mode) the residual construction — checkpointed there
-    // because two consumers branch from it
-    val assigned = assignTo(e, coarse).select("vec_id", "vn", "cid")
-    val assignedCk = if (residual) assigned.localCheckpoint() else assigned
-    // the encoded view: the vectors themselves (flat) or the per-list
-    // residuals (localCheckpoint: feeds PQ training AND encoding)
-    val enc =
-      if (!residual) e
-      else assignedCk
+      trainFactor: Int = 64, residual: Boolean = false): DataFrame =
+    if (!residual) {
+      val (assign, coarse) = ivfIndex(emb, nCentroids, lloydIters, trainFactor)
+      val (codes, cents) = pqIndex(emb, m, nCodes, lloydIters, trainFactor)
+      embedIvfPqTopKFromIndex(assign, coarse, codes, cents, emb,
+        nQueries, k, nProbe, m, rerankFactor)
+    } else {
+      val (e, coarse) = ivfModel(emb, nCentroids, lloydIters, trainFactor)
+      // ONE assignment pass feeds both the posting-list ids and the
+      // residual construction — checkpointed because two consumers
+      // branch from it
+      val assigned = assignTo(e, coarse).select("vec_id", "vn", "cid")
+        .localCheckpoint()
+      // the per-list residuals (localCheckpoint: feeds PQ training AND
+      // encoding)
+      val enc = assigned
         .join(broadcast(coarse), "cid")
         .select(col("vec_id"), expr("zip_with(vn, cvec, (a, b) -> a - b)").as("vn"))
         .localCheckpoint()
-    val cents = pqModel(enc, m, nCodes, lloydIters, trainFactor)
-    // slim int8 posting lists: m tinyint codes + coarse list id per
-    // vector — vn rides neither the probe join nor the scoring scan
-    val lists = pqEncode(enc, m, cents)
-      .join(assignedCk.select("vec_id", "cid"), "vec_id")
-    val wq = Window.partitionBy("vec_id").orderBy(col("sim").desc, col("cid"))
-    // probes keep the exact query-to-centroid dot: the residual score
-    // decomposition needs it as its coarse term (flat ignores it)
-    val probes = e.filter(col("vec_id") < nQueries)
-      .crossJoin(broadcast(coarse))
-      .withColumn("sim", expr("graft_dot(vn, cvec)"))
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= nProbe)
-      .select(col("vec_id").as("query_id"), col("cid"), col("sim"))
-      .join(pqLut(e, m, cents, nQueries), "query_id")
-    val score =
-      if (residual) round(col("sim") + expr("graft_pq_adc(codes, lut)"), 6)
-      else round(expr("graft_pq_adc(codes, lut)"), 6)
-    val survivors = lists.join(broadcast(probes), Seq("cid"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("acos", score)
-      .groupBy("query_id")
-      .agg(expr(s"graft_topk(acos, vec_id, ${rerankFactor * k})").as("top"))
-      .select(col("query_id"), explode(col("top.id")).as("vec_id"))
-    exactRerank(survivors, e, nQueries, k)
-  }
+      val cents = pqModel(enc, m, nCodes, lloydIters, trainFactor)
+      ivfPqSearch(pqEncode(enc, m, cents), assigned, coarse, cents, e,
+        nQueries, k, nProbe, m, rerankFactor, residual = true)
+    }
 
   /** [[embedIvfPqTopK]] (flat codes) COMPOSED from the persisted
     * artifacts: IVF posting lists ([[ivfIndex]]) joined with the
@@ -1171,35 +1001,35 @@ object Similarity {
   def embedIvfPqTopKFromIndex(
       assign: DataFrame, coarse: DataFrame, codes: DataFrame,
       cents: DataFrame, emb: DataFrame, nQueries: Int = 10, k: Int = 5,
-      nProbe: Int = 4, m: Int = 8, rerankFactor: Int = 8): DataFrame = {
-    graft.functions.VectorFunctions.register(emb.sparkSession)
-    val e = withNorm(emb)
-      .withColumn("vn", expr("transform(v, x -> x / norm)"))
-      .select("vec_id", "vn")
+      nProbe: Int = 4, m: Int = 8, rerankFactor: Int = 8): DataFrame =
+    ivfPqSearch(codes, assign, coarse, cents, normalized(emb),
+      nQueries, k, nProbe, m, rerankFactor, residual = false)
+
+  /** Shared IVF-PQ search: the (vec_id, codes) rows keyed into their
+    * (vec_id, cid) posting lists, probed by each query's `nProbe`
+    * nearest coarse lists, scored through `graft_pq_adc` against the
+    * query's LUT (slim int8 lists: vn rides neither the probe join nor
+    * the scoring scan), pooled to rerankFactor·k survivors and exactly
+    * reranked. `residual` codes quantize vn − cvec(list), so the
+    * probe's exact query-to-centroid dot is added as the score's
+    * coarse term. */
+  private def ivfPqSearch(
+      codes: DataFrame, assign: DataFrame, coarse: DataFrame,
+      cents: DataFrame, e: DataFrame, nQueries: Int, k: Int, nProbe: Int,
+      m: Int, rerankFactor: Int, residual: Boolean): DataFrame = {
     val lists = codes.join(assign.select("vec_id", "cid"), "vec_id")
-    val wq = Window.partitionBy("vec_id").orderBy(col("sim").desc, col("cid"))
-    val probes = e.filter(col("vec_id") < nQueries)
-      .crossJoin(broadcast(coarse))
-      .withColumn("sim", expr("graft_dot(vn, cvec)"))
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= nProbe)
-      .select(col("vec_id").as("query_id"), col("cid"), col("sim"))
+    val probes = probeLists(e, coarse, nQueries, nProbe)
+      .select("query_id", "cid", "sim")
       .join(pqLut(e, m, cents, nQueries), "query_id")
-    val survivors = lists.join(broadcast(probes), Seq("cid"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("acos", round(expr("graft_pq_adc(codes, lut)"), 6))
-      .groupBy("query_id")
-      .agg(expr(s"graft_topk(acos, vec_id, ${rerankFactor * k})").as("top"))
-      .select(col("query_id"), explode(col("top.id")).as("vec_id"))
+    val adc = expr("graft_pq_adc(codes, lut)")
+    val survivors = survivorPool(
+      lists.join(broadcast(probes), Seq("cid"))
+        .filter(col("vec_id") =!= col("query_id"))
+        .withColumn("acos", round(if (residual) col("sim") + adc else adc, 6)),
+      rerankFactor * k)
     exactRerank(survivors, e, nQueries, k)
   }
 
-  /** Approximate top-k via multi-table LSH: `tables` independent
-    * hyperplane hashings (seed-offset planes), candidates = union of
-    * per-table bucket matches (equi-join on (table, bucket) — never a
-    * corpus scan per query), exact-rerank with the native graft_dot.
-    * The 100 TB shape: O(corpus·tables) bucketing once, per-query work
-    * bounded by bucket occupancy; recall rises as 1-(1-p)^tables. */
   /** Multi-table bucketing: one row per (vector, table) with the
     * table's hyperplane-sign bucket, via the native codegen
     * `graft_lsh` (one coefficient-table pass per vector instead of
@@ -1212,6 +1042,12 @@ object Similarity {
         posexplode(expr(s"graft_lsh(v, $planes, $tables)")).as(Seq("t", "bucket")))
   }
 
+  /** Approximate top-k via multi-table LSH: `tables` independent
+    * hyperplane hashings (seed-offset planes), candidates = union of
+    * per-table bucket matches (equi-join on (table, bucket) — never a
+    * corpus scan per query), exact-rerank with the native graft_dot.
+    * The 100 TB shape: O(corpus·tables) bucketing once, per-query work
+    * bounded by bucket occupancy; recall rises as 1-(1-p)^tables. */
   def embedLshTopK(
       emb: DataFrame, nQueries: Int = 10, k: Int = 5,
       planes: Int = 8, tables: Int = 4): DataFrame = {
@@ -1236,6 +1072,21 @@ object Similarity {
       .transform(topKByCos(_, k))
   }
 
+  /** Default inline builders for the ANN index families, overridable
+    * per method via `impls` (the persisted-artifact serving hook the
+    * meters share). */
+  private def annBuilders(
+      emb: DataFrame, nQueries: Int, k: Int,
+      impls: Map[String, () => DataFrame]): Map[String, () => DataFrame] =
+    Map(
+      "lsh" -> (() => embedLshTopK(emb, nQueries, k)),
+      "ivf" -> (() => embedIvfTopK(emb, nQueries, k)),
+      "sq" -> (() => embedSqTopK(emb, nQueries, k)),
+      "pq" -> (() => embedPqTopK(emb, nQueries, k)),
+      "ivf_sq" -> (() => embedIvfSqTopK(emb, nQueries, k)),
+      "ivf_pq" -> (() => embedIvfPqTopK(emb, nQueries, k)),
+      "opq" -> (() => embedOpqPqTopK(emb, nQueries, k))) ++ impls
+
   /** ANN index-quality meter: recall@k of each approximate index family
     * against the exact cosine top-k on the SAME queries — the
     * pre-flight report an ANN rollout reads before trusting an index
@@ -1256,21 +1107,6 @@ object Similarity {
     * instead of retraining per call; the indexed forms are spec-
     * asserted bit-equal to the inline forms, so the recall values are
     * identical, only the training cost disappears. */
-  /** Default inline builders for the ANN index families, overridable
-    * per method via `impls` (the persisted-artifact serving hook the
-    * meters share). */
-  private def annBuilders(
-      emb: DataFrame, nQueries: Int, k: Int,
-      impls: Map[String, () => DataFrame]): Map[String, () => DataFrame] =
-    Map(
-      "lsh" -> (() => embedLshTopK(emb, nQueries, k)),
-      "ivf" -> (() => embedIvfTopK(emb, nQueries, k)),
-      "sq" -> (() => embedSqTopK(emb, nQueries, k)),
-      "pq" -> (() => embedPqTopK(emb, nQueries, k)),
-      "ivf_sq" -> (() => embedIvfSqTopK(emb, nQueries, k)),
-      "ivf_pq" -> (() => embedIvfPqTopK(emb, nQueries, k)),
-      "opq" -> (() => embedOpqPqTopK(emb, nQueries, k))) ++ impls
-
   def annRecall(
       emb: DataFrame, nQueries: Int = 10, k: Int = 5,
       methods: Seq[String] = Seq("lsh", "ivf", "sq", "pq"),
@@ -1411,16 +1247,8 @@ object Similarity {
     val probesDf = probes.toDF("n_probe")
     // centroid ranking per query is shared by all sweep points: rank
     // once to max(probes), a point keeps rn <= its n_probe
-    val e = withNorm(emb)
-      .withColumn("vn", expr("transform(v, x -> x / norm)"))
-      .select("vec_id", "vn")
-    val wq = Window.partitionBy("vec_id").orderBy(col("sim").desc, col("cid"))
-    val ranked = e.filter(col("vec_id") < nQueries)
-      .crossJoin(broadcast(cents))
-      .withColumn("sim", expr("graft_dot(vn, cvec)"))
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= probes.max)
-      .select(col("vec_id").as("query_id"), col("cid"), col("rn"))
+    val ranked = probeLists(normalized(emb), cents, nQueries, probes.max)
+      .select("query_id", "cid", "rn")
     val listSizes = assign.groupBy("cid").agg(count(lit(1)).as("sz"))
     val own = assign.select(col("vec_id").as("query_id"), col("cid"),
       lit(1L).as("self"))
@@ -1559,13 +1387,12 @@ object Similarity {
     val qi = idx.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("qv").as("qqv"),
         col("scale").as("qscale"), col("norm").as("qn"))
-    val survivors = idx.join(broadcast(qi), col("vec_id") =!= col("query_id"))
-      .withColumn("acos", round(
-        expr("graft_dot(cast(qv as array<double>), cast(qqv as array<double>))") *
-          col("scale") * col("qscale") / (col("norm") * col("qn")), 6))
-      .groupBy("query_id")
-      .agg(expr(s"graft_topk(acos, vec_id, ${rerankFactor * k})").as("top"))
-      .select(col("query_id"), explode(col("top.id")).as("vec_id"))
+    val survivors = survivorPool(
+      idx.join(broadcast(qi), col("vec_id") =!= col("query_id"))
+        .withColumn("acos", round(
+          expr("graft_dot(cast(qv as array<double>), cast(qqv as array<double>))") *
+            col("scale") * col("qscale") / (col("norm") * col("qn")), 6)),
+      rerankFactor * k)
     val e = withNorm(emb)
     val q = e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("v").as("fqv"), col("norm").as("fqn"))

@@ -92,7 +92,7 @@ class CatalogQueriesSpec extends AnyFunSuite with SparkSessionTestBase {
   test("fuzzySearchIndexed over a persisted index equals the online form") {
     val part = Tables.part(spark, sfDir)
     // round-trip the index through parquet, as production would
-    val idxDir = java.nio.file.Files.createTempDirectory("trgmidx").toString
+    val idxDir = tempRoot("trgmidx").toString
     Catalog.trigramIndex(part).write.mode("overwrite").parquet(idxDir)
     val idx = spark.read.parquet(idxDir)
     for (q <- Seq("smal ring", "red widgit", "blu bolt")) {

@@ -99,7 +99,7 @@ class EmptyDeltaServeSpec extends AnyFunSuite with SparkSessionTestBase {
 
   test("the empty-delta coreness serve is a PLAIN SCAN of the seed " +
       "face — no joins, no aggregation, no fold machinery in the plan") {
-    val root = java.nio.file.Files.createTempDirectory("graft_eds_plan")
+    val root = tempRoot("graft_eds_plan")
     try {
       val seedRoot = root.resolve("seed").toString
       SignedGraphStream.seed(edges, seedRoot, Seq("coreness"))
@@ -134,7 +134,7 @@ class EmptyDeltaServeSpec extends AnyFunSuite with SparkSessionTestBase {
 
   test("a served stream lifecycle takes the fast path after " +
       "compaction and the slow path mid-stream, same rows") {
-    val root = java.nio.file.Files.createTempDirectory("graft_eds_spec")
+    val root = tempRoot("graft_eds_spec")
     try {
       val seedRoot = root.resolve("seed").toString
       val deltaP = root.resolve("delta").toString

@@ -255,7 +255,7 @@ class EmptyInputSpec extends AnyFunSuite with SparkSessionTestBase {
     assert(bpeMerges.count() === 0 && bpeSegs.count() === 0)
     assert(graft.operators.Bpe.bpeTokenize(emptyDocs, bpeSegs).count() === 0)
     // z-ordered write of an empty frame: schema-only parquet, no rows
-    val zDir = java.nio.file.Files.createTempDirectory("zempty").toString + "/z"
+    val zDir = tempRoot("zempty").toString + "/z"
     graft.sources.Sinks.writeZOrdered(emptyLi, zDir, Seq("l_partkey", "l_suppkey"), 4)
     assert(spark.read.parquet(zDir).count() === 0)
   }

@@ -14,12 +14,12 @@ class EtlSpec extends AnyFunSuite with SparkSessionTestBase {
     val baseNanos = 1700000000123456000L // µs-aligned, as the source is
     // old writer: INT64 nanos (TIMESTAMP(NANOS) reads as long under
     // nanosAsLong — indistinguishable from a plain long at the reader)
-    val longDir = java.nio.file.Files.createTempDirectory("ev_long").toString
+    val longDir = tempRoot("ev_long").toString
     Seq((1L, baseNanos, 10L, "view", 1.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$longDir/events.parquet")
     // current writer: plain µs TIMESTAMP_NTZ
-    val ntzDir = java.nio.file.Files.createTempDirectory("ev_ntz").toString
+    val ntzDir = tempRoot("ev_ntz").toString
     Seq((1L, 10L, "view", 1.0, "{}"))
       .toDF("event_id", "user_id", "event_type", "value", "props")
       .withColumn("ts",
@@ -40,7 +40,7 @@ class EtlSpec extends AnyFunSuite with SparkSessionTestBase {
     // each must land on the canonical logical schema with identical
     // values (the r6 events.ts drift generalized; a driver testdata
     // regeneration must never redden a suite again)
-    val root = java.nio.file.Files.createTempDirectory("drift").toString
+    val root = tempRoot("drift").toString
     val docs = Tables.documents(spark, sfDir).limit(20).localCheckpoint()
     docs.withColumn("doc_id", col("doc_id").cast("int"))
       .withColumn("n_chars", col("n_chars").cast("int"))
@@ -159,7 +159,7 @@ class EtlSpec extends AnyFunSuite with SparkSessionTestBase {
 
   test("parseWithQuarantine routes malformed lines without failing the batch") {
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("quarantine").toString
+    val dir = tempRoot("quarantine").toString
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/feed.jsonl"),
       """{"item_code": "100", "price": 5.9}
         |{"item_code": "200", "price": 8.1}
@@ -177,7 +177,7 @@ class EtlSpec extends AnyFunSuite with SparkSessionTestBase {
   }
 
   test("priceItemsFromJson explodes and types the item feed") {
-    val fixture = java.nio.file.Files.createTempDirectory("items").toString
+    val fixture = tempRoot("items").toString
     val json =
       """{"Root": {"ChainId": "7290000000001", "StoreId": "042", "Items": {"Item": [
         |  {"ItemCode": "100", "ItemName": " Milk 1L ", "ManufacturerName": "Tnuva",
@@ -203,7 +203,7 @@ class EtlSpec extends AnyFunSuite with SparkSessionTestBase {
   }
 
   test("priceItemsFromJson fails a malformed feed file instead of dropping it") {
-    val fixture = java.nio.file.Files.createTempDirectory("items_bad").toString
+    val fixture = tempRoot("items_bad").toString
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$fixture/feed.json"),
       """{"Root": {"ChainId": "7290000000001", "StoreId": "042", "Items": {"Item": [""")
     intercept[org.apache.spark.SparkException] {

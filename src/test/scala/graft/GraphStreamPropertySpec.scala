@@ -122,7 +122,7 @@ class GraphStreamPropertySpec extends AnyFunSuite with SparkSessionTestBase {
   }
 
   private def runCase(c: Case): Unit = {
-    val root = java.nio.file.Files.createTempDirectory("graft_gsp_spec")
+    val root = tempRoot("graft_gsp_spec")
     try {
       val src = root.resolve("src").toString
       val seedRoot = root.resolve("seed").toString

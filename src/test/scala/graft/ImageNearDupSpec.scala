@@ -134,7 +134,7 @@ class ImageNearDupSpec extends AnyFunSuite with SparkSessionTestBase {
     val base = fp.filter(col("media_id") < Multimodal.TwinIdBit)
     val twins = media.toDF()
       .filter(col("media_id") >= Multimodal.TwinIdBit).localCheckpoint()
-    val root = java.nio.file.Files.createTempDirectory("graft_img_gate_spec")
+    val root = tempRoot("graft_img_gate_spec")
     try {
       val src = root.resolve("src").toString
       val idxP = root.resolve("index").toString
@@ -178,7 +178,7 @@ class ImageNearDupSpec extends AnyFunSuite with SparkSessionTestBase {
         === batchTwin)
       // growIndex: a LATER exact copy of an earlier stream arrival
       // (fresh id) matches that arrival, not just the seed corpus
-      val root2 = java.nio.file.Files.createTempDirectory("graft_img_grow_spec")
+      val root2 = tempRoot("graft_img_grow_spec")
       try {
         val src2 = root2.resolve("src").toString
         val idx2 = root2.resolve("index").toString

@@ -254,7 +254,7 @@ class LlmOpsSpec extends AnyFunSuite with SparkSessionTestBase {
     val batchDf = batch.toDF("doc_id", "lang", "text")
     val seedDf = seed.toDF("doc_id", "lang", "text")
     // index round-trips through parquet like the persisted artifact
-    val dir = java.nio.file.Files.createTempDirectory("graft_es_idx_spec")
+    val dir = tempRoot("graft_es_idx_spec")
     Dedup.substringHashIndex(seedDf, windowWords = 5)
       .write.mode("overwrite").parquet(dir.toString)
     val served = Dedup.exactSubstringSpansAgainst(
@@ -453,10 +453,9 @@ class LlmOpsSpec extends AnyFunSuite with SparkSessionTestBase {
   }
 
   test("embedSqTopKFromIndex over a parquet round-trip is bit-equal to inline") {
-    import java.nio.file.Files
     val emb = Tables.embeddings(spark, docDir)
     val inline = Similarity.embedSqTopK(emb, nQueries = 10, k = 5).collect()
-    val path = Files.createTempDirectory("sqidx").toString + "/idx"
+    val path = tempRoot("sqidx").toString + "/idx"
     Similarity.sqIndex(emb).write.parquet(path)
     val persisted = spark.read.parquet(path)
     // the persisted artifact keeps the int8 element type
@@ -470,10 +469,9 @@ class LlmOpsSpec extends AnyFunSuite with SparkSessionTestBase {
   }
 
   test("embedIvfTopKFromIndex over a parquet round-trip is bit-equal to inline") {
-    import java.nio.file.Files
     val emb = Tables.embeddings(spark, docDir)
     val inline = Similarity.embedIvfTopK(emb, nQueries = 10, k = 5).collect()
-    val root = Files.createTempDirectory("ivfidx").toString
+    val root = tempRoot("ivfidx").toString
     val (assign, cents) = Similarity.ivfIndex(emb)
     assign.write.parquet(s"$root/assign")
     cents.write.parquet(s"$root/centroids")
@@ -488,9 +486,8 @@ class LlmOpsSpec extends AnyFunSuite with SparkSessionTestBase {
   }
 
   test("composed IVF×SQ / IVF×PQ serving from shared artifacts is bit-equal to inline") {
-    import java.nio.file.Files
     val emb = Tables.embeddings(spark, docDir)
-    val root = Files.createTempDirectory("ivfcomp").toString
+    val root = tempRoot("ivfcomp").toString
     val (assign, cents) = Similarity.ivfIndex(emb)
     assign.write.parquet(s"$root/assign")
     cents.write.parquet(s"$root/centroids")
@@ -529,10 +526,9 @@ class LlmOpsSpec extends AnyFunSuite with SparkSessionTestBase {
   }
 
   test("embedPqTopKFromIndex over a parquet round-trip is bit-equal to inline") {
-    import java.nio.file.Files
     val emb = Tables.embeddings(spark, docDir)
     val inline = Similarity.embedPqTopK(emb, nQueries = 10, k = 5).collect()
-    val root = Files.createTempDirectory("pqidx").toString
+    val root = tempRoot("pqidx").toString
     val (codes, cents) = Similarity.pqIndex(emb)
     codes.write.parquet(s"$root/codes")
     cents.write.parquet(s"$root/codebooks")
@@ -583,7 +579,7 @@ class LlmOpsSpec extends AnyFunSuite with SparkSessionTestBase {
     assert(codes.count() === emb.count())
     assert(codes.select(size(col("codes"))).distinct().collect()
       .map(_.getInt(0)).toSeq === Seq(8))
-    val dir = java.nio.file.Files.createTempDirectory("pq").toString
+    val dir = tempRoot("pq").toString
     codes.write.parquet(s"$dir/codes")
     emb.select("vec_id", "embedding").write.parquet(s"$dir/fp")
     def bytes(p: String) = new java.io.File(p).listFiles()
@@ -684,7 +680,7 @@ class LlmOpsSpec extends AnyFunSuite with SparkSessionTestBase {
 
   test("minhashPairsShared serves the cache until the data dir is rewritten") {
     val docs = Tables.documents(spark, docDir)
-    val tmp = java.nio.file.Files.createTempDirectory("pairscache").toString
+    val tmp = tempRoot("pairscache").toString
     docs.filter(col("doc_id") < 100)
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val first = SparkEntry.minhashPairsShared(spark, tmp)
@@ -761,12 +757,31 @@ class LlmOpsSpec extends AnyFunSuite with SparkSessionTestBase {
     assert(minId === Map(1L -> true, 2L -> false, 3L -> false))
   }
 
-  test("coarse-then-fine centroid assignment is bit-equal to the flat scan") {
+  test("flat centroid assignment is the brute-force argmax, smallest cid on ties") {
     import spark.implicits._
+    // assignTo against a driver-side scan over the collected centroids:
+    // the same left-to-right dot fold graft_dot evaluates (bit-equal,
+    // VectorExpressionsSpec), the first maximum in cid order winning
+    def dot(a: Seq[Double], b: Seq[Double]): Double =
+      a.zip(b).foldLeft(0.0) { case (acc, (x, y)) => acc + x * y }
+    def check(e: org.apache.spark.sql.DataFrame,
+        cents: org.apache.spark.sql.DataFrame): Seq[(Long, Int, Double)] = {
+      val cs = cents.collect()
+        .map(r => r.getInt(0) -> r.getSeq[Double](1)).sortBy(_._1).toSeq
+      val got = Similarity.assignTo(e, cents)
+        .select("vec_id", "cid", "sim").orderBy("vec_id")
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq
+      val brute = e.select("vec_id", "vn").orderBy("vec_id").collect().map { r =>
+        val sims = cs.map { case (cid, c) => cid -> dot(r.getSeq[Double](1), c) }
+        val best = sims.map(_._2).max
+        (r.getLong(0), sims.find(_._2 == best).get._1, best)
+      }.toSeq
+      // EXACT equality, doubles included
+      assert(got === brute)
+      got
+    }
     // clustered-but-messy fixture: 12 loose piles in 8 dims plus
-    // deterministic jitter, k = 12 fine centroids grouped under 4
-    // coarse cells — enough structure that phase 2 prunes cells, and
-    // enough spread that some vectors DO need extra candidate cells
+    // deterministic jitter, k = 12 centroids
     val vecs = (0 until 240).map { i =>
       val pile = i % 12
       i.toLong -> Array.tabulate(8) { j =>
@@ -774,34 +789,25 @@ class LlmOpsSpec extends AnyFunSuite with SparkSessionTestBase {
           math.sin(i * 131 + j * 37) * 0.8
       }
     }
-    val emb = vecs.toDF("vec_id", "embedding")
-    val (e, cents) = Similarity.ivfModel(emb, 12, lloydIters = 2)
-    val ec = e.localCheckpoint()
-    def canon(df: org.apache.spark.sql.DataFrame) = df
-      .select("vec_id", "cid", "sim").orderBy("vec_id")
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq
-    val flat = canon(Similarity.assignTo(ec, cents))
-    val hier = canon(Similarity.assignToHier(ec, cents, kCoarse = 4))
-    // EXACT equality, doubles included: the two paths evaluate the
-    // same graft_dot values and share the smallest-cid tie rule — the
-    // hierarchy only prunes centroids it can prove are beaten
-    assert(hier === flat)
-    assert(flat.map(_._2).distinct.size > 4, "fixture must use many cells")
-    // degenerate corpus (every vector identical): tie storm — the
-    // shared tie rule must still pick identical cids
+    val (e, cents) = Similarity.ivfModel(vecs.toDF("vec_id", "embedding"), 12,
+      lloydIters = 2)
+    assert(check(e.localCheckpoint(), cents).map(_._2).distinct.size > 4,
+      "fixture must use many centroids")
+    // degenerate corpus (every vector identical) against its untrained
+    // seed centroids (six copies of the same vector): a tie storm on
+    // every row, which the smallest cid must win
     val same = (0 until 30).map(i => i.toLong -> Array(1.0, 0.5, 0.25, 0.0))
       .toDF("vec_id", "embedding")
-    val (se, scents) = Similarity.ivfModel(same, 6, lloydIters = 1)
-    val sc = se.localCheckpoint()
-    assert(canon(Similarity.assignToHier(sc, scents, kCoarse = 2))
-      === canon(Similarity.assignTo(sc, scents)))
+    val (se, scents) = Similarity.ivfModel(same, 6, lloydIters = 0)
+    assert(scents.count() === 6)
+    assert(check(se.localCheckpoint(), scents).map(_._2).toSet === Set(1))
   }
 
   test("semDeDup served from the persisted assignment is bit-equal to inline") {
     val emb = Tables.embeddings(spark, docDir)
     val inline = Similarity.semDeDup(emb, tau = 0.35)
       .collect().map(_.toString).toSeq
-    val dir = java.nio.file.Files.createTempDirectory("sd_assign").toString
+    val dir = tempRoot("sd_assign").toString
     Similarity.semDeDupAssign(emb).write.mode("overwrite").parquet(dir)
     val served = Similarity.semDeDupFromIndex(
         emb, spark.read.parquet(dir), tau = 0.35)
@@ -1199,7 +1205,7 @@ class LlmOpsSpec extends AnyFunSuite with SparkSessionTestBase {
     // serving from the persisted type-table artifact is bit-equal to
     // the self-trained form (the whole model derives from that table)
     val modelPath =
-      java.nio.file.Files.createTempDirectory("knmodel").toString + "/model"
+      tempRoot("knmodel").toString + "/model"
     TextAnalysis.knModel(Tables.documents(spark, docDir))
       .write.parquet(modelPath)
     val served = TextAnalysis.knAgainst(
@@ -1395,7 +1401,7 @@ class LlmOpsSpec extends AnyFunSuite with SparkSessionTestBase {
       TextAnalysis.knPerplexity(fb).collect().map(_.toString).toSeq)
     // artifact serving is bit-equal to self-trained (same type table)
     val modelPath =
-      java.nio.file.Files.createTempDirectory("mknmodel").toString + "/model"
+      tempRoot("mknmodel").toString + "/model"
     TextAnalysis.knModel(est).write.parquet(modelPath)
     assert(TextAnalysis.mknAgainst(est, spark.read.parquet(modelPath))
       .collect().map(_.toString).toSeq ===

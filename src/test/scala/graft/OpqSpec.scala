@@ -150,7 +150,7 @@ class OpqSpec extends AnyFunSuite with SparkSessionTestBase {
       .collect().map(_.toString).toSeq
     assert(inline.nonEmpty)
     val (codes, cents, rot) = Similarity.opqPqIndex(emb)
-    val dir = java.nio.file.Files.createTempDirectory("opq").toString
+    val dir = tempRoot("opq").toString
     codes.write.parquet(s"$dir/codes")
     cents.write.parquet(s"$dir/codebooks")
     rot.write.parquet(s"$dir/rotation")

@@ -71,7 +71,7 @@ class PcaSpec extends AnyFunSuite with SparkSessionTestBase {
 
   test("model artifact round-trips; projections identical; sign is fixed") {
     val frame = Pca.pcaModelFrame(spark, model)
-    val dir = java.nio.file.Files.createTempDirectory("pca_idx").toString
+    val dir = tempRoot("pca_idx").toString
     frame.write.mode("overwrite").parquet(dir)
     val back = Pca.pcaModelFromFrame(spark.read.parquet(dir))
     assert(back.mean.sameElements(model.mean))

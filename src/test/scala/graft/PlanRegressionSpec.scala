@@ -778,7 +778,7 @@ class PlanRegressionSpec extends AnyFunSuite with SparkSessionTestBase {
     // state with one streamed batch so the plan contains both scan
     // kinds plus the net-ops joins.
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("plan_pushdown_spec")
+    val root = tempRoot("plan_pushdown_spec")
     def postingsScansPruned(plan: String, who: String): Unit = {
       val scans = plan.linesIterator
         .filter(l => l.contains("Scan parquet") && l.contains("postings"))

@@ -92,7 +92,7 @@ class RetrievalSpec extends AnyFunSuite with SparkSessionTestBase {
   }
 
   test("bm25FromIndex over a parquet round-trip is bit-equal to the online form") {
-    val root = java.nio.file.Files.createTempDirectory("bm25idx").toString
+    val root = tempRoot("bm25idx").toString
     val (postings, meta) = Retrieval.bm25Index(corpusDf)
     graft.sources.Sinks.writeRangePartitioned(postings, s"$root/postings", "term", 2)
     meta.write.mode("overwrite").parquet(s"$root/meta")
@@ -184,7 +184,7 @@ class RetrievalSpec extends AnyFunSuite with SparkSessionTestBase {
     val online = Retrieval.phraseSearch(docs, queries)
       .collect().map(_.toString).toSeq
     assert(online.nonEmpty)
-    val dir = java.nio.file.Files.createTempDirectory("posidx").toString + "/idx"
+    val dir = tempRoot("posidx").toString + "/idx"
     Retrieval.positionalIndex(docs).write.parquet(dir)
     val idx = spark.read.parquet(dir)
     val served = Retrieval.phraseFromIndex(idx, queries)
@@ -296,7 +296,7 @@ class RetrievalSpec extends AnyFunSuite with SparkSessionTestBase {
       (3L, "nothing relevant here"))
       .toDF("doc_id", "text")
     val q = "batch stream"
-    val root = java.nio.file.Files.createTempDirectory("grep_idx").toString
+    val root = tempRoot("grep_idx").toString
     graft.sources.Sinks.writeRangePartitioned(
       Retrieval.grepIndex(docs), root, "g", 2)
     val online = Retrieval.grepSearch(docs, q).collect().map(_.toString).toSeq

@@ -53,7 +53,7 @@ class SemDedupStreamSpec extends AnyFunSuite with SparkSessionTestBase {
   test("stream-maintained verdict == direct full-corpus twin; " +
       "compaction and checkpoint replay change nothing") {
     val emb = Tables.embeddings(spark, sfDir).limit(400).localCheckpoint()
-    val root = java.nio.file.Files.createTempDirectory("semdedup_stream")
+    val root = tempRoot("semdedup_stream")
     val src = root.resolve("src").toString
     val seedP = root.resolve("seed").toString
     val deltaP = root.resolve("delta").toString

@@ -34,7 +34,7 @@ class SignedGraphStreamSpec extends AnyFunSuite with SparkSessionTestBase {
 
   test("signed stream: cross-batch net resolution, bridge split, " +
       "all four faces == full recompute, compaction invariance") {
-    val root = java.nio.file.Files.createTempDirectory("graft_signed_spec")
+    val root = tempRoot("graft_signed_spec")
     try {
       val src = root.resolve("src").toString
       val seedRoot = root.resolve("seed").toString
@@ -110,7 +110,7 @@ class SignedGraphStreamSpec extends AnyFunSuite with SparkSessionTestBase {
   test("landing guards: one pair carrying both ops in a batch raises; " +
       "an unknown op raises") {
     def runBatch(rows: Seq[(Long, Long, String)]): Unit = {
-      val root = java.nio.file.Files.createTempDirectory("graft_signed_guard")
+      val root = tempRoot("graft_signed_guard")
       try {
         val src = root.resolve("src").toString
         val seedRoot = root.resolve("seed").toString

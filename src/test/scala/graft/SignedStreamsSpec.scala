@@ -22,7 +22,7 @@ class SignedStreamsSpec extends AnyFunSuite with SparkSessionTestBase {
       "survivors; a deleted doc's content re-admits instead of being " +
       "suppressed; compaction invariant") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("dedup_signed_spec")
+    val root = tempRoot("dedup_signed_spec")
     try {
       val src = root.resolve("src").toString
       val seedP = root.resolve("seed").toString
@@ -107,7 +107,7 @@ class SignedStreamsSpec extends AnyFunSuite with SparkSessionTestBase {
       "survivors; served verdict == direct twin; compaction carries " +
       "centroids") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("semdedup_signed_spec")
+    val root = tempRoot("semdedup_signed_spec")
     try {
       val src = root.resolve("src").toString
       val seedP = root.resolve("seed").toString
@@ -166,7 +166,7 @@ class SignedStreamsSpec extends AnyFunSuite with SparkSessionTestBase {
     import spark.implicits._
     import graft.sources.Multimodal
     import Multimodal.TwinIdBit
-    val root = java.nio.file.Files.createTempDirectory("image_signed_spec")
+    val root = tempRoot("image_signed_spec")
     try {
       val src = root.resolve("src").toString
       val seedP = root.resolve("seed").toString
@@ -237,7 +237,7 @@ class SignedStreamsSpec extends AnyFunSuite with SparkSessionTestBase {
       "same-checkpoint re-run replays nothing and a fresh-checkpoint " +
       "retry overwrites BOTH faces' partitions") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("dedup_signed_retry")
+    val root = tempRoot("dedup_signed_retry")
     try {
       val src = root.resolve("src").toString
       val seedP = root.resolve("seed").toString
@@ -280,7 +280,7 @@ class SignedStreamsSpec extends AnyFunSuite with SparkSessionTestBase {
       "orphan postings partition (crash between face writes) is " +
       "invisible, not double-served") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("orphan_face_spec")
+    val root = tempRoot("orphan_face_spec")
     try {
       val src = root.resolve("src").toString
       val seedP = root.resolve("seed").toString

@@ -12,7 +12,7 @@ import graft.sources.Sinks
 class SinksSpec extends AnyFunSuite with SparkSessionTestBase {
 
   test("writePartitioned lays out one directory per partition value") {
-    val out = java.nio.file.Files.createTempDirectory("part_sink").toString
+    val out = tempRoot("part_sink").toString
     val li = Tables.lineitem(spark, sfDir)
       .withColumn("ship_year", year(col("l_shipdate")))
     Sinks.writePartitioned(li, out, Seq("ship_year"))
@@ -24,7 +24,7 @@ class SinksSpec extends AnyFunSuite with SparkSessionTestBase {
 
   test("upsertByKey keeps the newest row per key across loads") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("upsert").toString + "/state"
+    val path = tempRoot("upsert").toString + "/state"
     val day1 = Seq((1L, "a", "2024-01-01", 10.0), (2L, "b", "2024-01-01", 20.0))
       .toDF("id", "name", "collected_at", "price")
     Sinks.upsertByKey(spark, day1, path, Seq("id"), "collected_at")
@@ -39,7 +39,7 @@ class SinksSpec extends AnyFunSuite with SparkSessionTestBase {
 
   test("upsertByKey: a key-and-version tie goes to the incoming row") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("upsert_tie").toString + "/state"
+    val path = tempRoot("upsert_tie").toString + "/state"
     def load(price: Double) = Sinks.upsertByKey(spark,
       Seq((1L, "2024-01-01", price), (2L, "2024-01-01", 7.0))
         .toDF("id", "collected_at", "price"),
@@ -61,7 +61,7 @@ class SinksSpec extends AnyFunSuite with SparkSessionTestBase {
     // was adding 3 (its complete output sits in __staging); the next
     // upsert adds 4
     def crashed(at: String): Path = {
-      val base = Files.createTempDirectory("upsert_crash")
+      val base = tempRoot("upsert_crash")
       val live = base.resolve("state")
       val staging = Paths.get(s"${live}__staging")
       val old = Paths.get(s"${live}__old")
@@ -98,7 +98,7 @@ class SinksSpec extends AnyFunSuite with SparkSessionTestBase {
   test("upsertByKey propagates a state read error instead of truncating the state") {
     import spark.implicits._
     import java.nio.file.{Files, Paths}
-    val path = java.nio.file.Files.createTempDirectory("upsert_corrupt").toString + "/state"
+    val path = tempRoot("upsert_corrupt").toString + "/state"
     Sinks.upsertByKey(spark, Seq((1L, "2024-01-01", 10.0)).toDF("id", "collected_at", "price"),
       path, Seq("id"), "collected_at")
     // a corrupt footer on the only data file (its checksum removed, so
@@ -133,7 +133,7 @@ class SinksSpec extends AnyFunSuite with SparkSessionTestBase {
   }
 
   test("compact rewrites a fragmented directory into fewer files, data intact") {
-    val path = java.nio.file.Files.createTempDirectory("compact").toString + "/frag"
+    val path = tempRoot("compact").toString + "/frag"
     val li = Tables.lineitem(spark, sfDir)
     li.repartition(40).write.parquet(path) // simulate incremental-load fragmentation
     def files(p: String) = new java.io.File(p).listFiles()
@@ -155,7 +155,7 @@ class SinksSpec extends AnyFunSuite with SparkSessionTestBase {
   }
 
   test("range-partitioned write produces files with disjoint key ranges") {
-    val path = java.nio.file.Files.createTempDirectory("rangepart").toString + "/bytime"
+    val path = tempRoot("rangepart").toString + "/bytime"
     val li = Tables.lineitem(spark, sfDir)
     Sinks.writeRangePartitioned(li, path, "l_shipdate", partitions = 8)
     val back = spark.read.parquet(path)
@@ -178,7 +178,7 @@ class SinksSpec extends AnyFunSuite with SparkSessionTestBase {
   }
 
   test("z-ordered write shrinks per-file ranges on BOTH clustered columns") {
-    val base = java.nio.file.Files.createTempDirectory("zorder").toString
+    val base = tempRoot("zorder").toString
     val li = Tables.lineitem(spark, sfDir)
       .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey", "l_extendedprice")
     Sinks.writeZOrdered(li, s"$base/z", Seq("l_partkey", "l_suppkey"), partitions = 16)

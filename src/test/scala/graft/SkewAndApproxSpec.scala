@@ -82,7 +82,7 @@ class SkewAndApproxSpec extends AnyFunSuite with SparkSessionTestBase {
     assert(unionEst === directEst)
     // persisted-artifact serving: rollup from parquet-round-tripped
     // partials is IDENTICAL (the sketch blob is the state)
-    val dir = java.nio.file.Files.createTempDirectory("hll_idx").toString
+    val dir = tempRoot("hll_idx").toString
     Sketches.sketchPartials(docs).write.mode("overwrite").parquet(dir)
     val served = Sketches.sketchRollup(spark.read.parquet(dir)).collect()
     assert(served.map(_.toString).toSeq === rollup.map(_.toString).toSeq)
@@ -118,7 +118,7 @@ class SkewAndApproxSpec extends AnyFunSuite with SparkSessionTestBase {
       assert(math.abs(jac / 1e6 - exactI / exactU) < 0.15, s"$a/$b jaccard")
     }
     // serving from parquet-round-tripped partials is identical
-    val dir = java.nio.file.Files.createTempDirectory("hll_ov").toString
+    val dir = tempRoot("hll_ov").toString
     partials.write.mode("overwrite").parquet(dir)
     assert(Sketches.sketchOverlap(spark.read.parquet(dir)).collect()
       .map(_.toString).toSeq === out.map(_.toString).toSeq)
@@ -150,7 +150,7 @@ class SkewAndApproxSpec extends AnyFunSuite with SparkSessionTestBase {
     val e50 = exact(all, 1, 2)
     assert(est <= e50 && e50 < est + w)
     // artifact round trip serves identically
-    val dir2 = java.nio.file.Files.createTempDirectory("histq_idx").toString
+    val dir2 = tempRoot("histq_idx").toString
     Sketches.histPartials(docs).write.mode("overwrite").parquet(dir2)
     val served = Sketches.histQuantiles(spark.read.parquet(dir2)).collect()
     assert(served.map(_.toString).toSeq ===
@@ -185,7 +185,7 @@ class SkewAndApproxSpec extends AnyFunSuite with SparkSessionTestBase {
     val direct = Sketches.cmsPartials(docs).collect().map(_.toString).toSeq
     assert(merged === direct)
     // artifact round trip estimates identically
-    val dir = java.nio.file.Files.createTempDirectory("cms_idx").toString
+    val dir = tempRoot("cms_idx").toString
     Sketches.cmsPartials(docs).write.mode("overwrite").parquet(dir)
     import spark.implicits._
     val terms = Seq("scan", "dup", "never-seen-term").toDF("term")

@@ -9,23 +9,6 @@ import graft.streaming.EventsStream
   * via the memory sink, compared against the batch twin. */
 class StreamingSpec extends AnyFunSuite with SparkSessionTestBase {
 
-  /** Temp roots made by the running test: removed when it ends,
-    * however it ends. */
-  private val roots =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
-
-  /** A private temp root for the running test. */
-  private def tempRoot(prefix: String): java.nio.file.Path = {
-    val root = java.nio.file.Files.createTempDirectory(prefix)
-    roots.add(root)
-    root
-  }
-
-  override def withFixture(test: NoArgTest): org.scalatest.Outcome =
-    try super.withFixture(test)
-    finally while (!roots.isEmpty)
-      graft.streaming.DeltaLayout.rmTree(roots.poll())
-
   test("windowedAgg over a stream matches the batch aggregation") {
     // Stage the events parquet into a clean stream-source dir.
     val dir = tempRoot("evstream").toString

@@ -11,7 +11,7 @@ class StreamingUpsertSpec extends AnyFunSuite with SparkSessionTestBase {
 
   test("upsertStream loads incrementally and keeps newest per key") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("upstream").toString
+    val base = tempRoot("upstream").toString
     val srcDir = s"$base/src"
     val statePath = s"$base/state"
     val checkpoint = s"$base/ckpt"

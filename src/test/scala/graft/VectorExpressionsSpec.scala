@@ -318,7 +318,7 @@ class VectorExpressionsSpec extends AnyFunSuite with SparkSessionTestBase {
     // even when no element is actually null — stored arrays must keep
     // working (this was an analysis-time rejection once; that broke
     // previously-valid SQL over stored data)
-    val dir = java.nio.file.Files.createTempDirectory("winnowparquet").toString
+    val dir = tempRoot("winnowparquet").toString
     import spark.implicits._
     Seq((1L, Seq(3L, 1L, 2L, 5L))).toDF("id", "hs").write.mode("overwrite").parquet(dir)
     val fromParquet = spark.read.parquet(dir)
